@@ -16,24 +16,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
+from ai_pdf_extraction_spark.plans.persist import persist
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _fan_out(df: DataFrame, key_col: str) -> DataFrame:
-    """Rebalance a small-file scan before per-row-HEAVY Column/UDF
-    work (``dedup._ensure_parallel`` rule: repartition below 4×
-    parallelism, no-op on a real many-file crawl layout). The
-    testdata parquets are single-row-group files, so byte-range
-    splitting reports N partitions of which N−1 are EMPTY (CLAUDE.md)
-    — without this, a 32-core bench runs e.g. the whole q63 JSON
-    parse + typed-parser projection on ONE task. Results are
-    order-insensitive (driver sorts before hashing), so the shuffle
-    is semantics-free."""
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    return _ensure_parallel(df, key_col)
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
@@ -679,7 +667,7 @@ def q26_ivf_topk(spark, sf_dir):
     # argmin is an interpreted HOF fold (k·d ops/row) that otherwise
     # runs on the single-row-group scan's one real task
     return ivf_topk(
-        _fan_out(emb, "vec_id"), queries, k=5,
+        ensure_parallel(emb, "vec_id"), queries, k=5,
         centroids=_ivf_centroids(sf_dir),
     )
 
@@ -1069,7 +1057,7 @@ def q52_lang_detect_wide(spark, sf_dir):
     charset/marker interplay on real corpus text."""
     from ai_pdf_extraction_spark.operators.text_analysis import lang_detect
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     m = F.col("doc_id") % (len(_LANG_SAMPLES) + 1)
     sample = F.col("text")
     for idx, (_lang, snippet) in enumerate(_LANG_SAMPLES):
@@ -1219,7 +1207,7 @@ def q59_lang_trigram(spark, sf_dir):
         lang_detect_trigram,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     samples = _LANG_SAMPLES + _TRIGRAM_SAMPLES
     m = F.col("doc_id") % (len(samples) + 1)
     sample = F.col("text")
@@ -1819,7 +1807,7 @@ def q63_schema_registry_apply(spark, sf_dir):
         load_schema,
     )
 
-    o = _fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
+    o = ensure_parallel(_t(spark, sf_dir, "orders"), "o_orderkey")
     doc = o.select(
         "o_orderkey",
         F.to_json(
@@ -2024,7 +2012,7 @@ def q80_url_frontier_delta(spark, sf_dir):
 
     # the staged canonicalizer is ~20 regex ops per url — by far the
     # heaviest per-row leg of every composed frontier plan (q83/q88)
-    e = _fan_out(_t(spark, sf_dir, "events"), "event_id")
+    e = ensure_parallel(_t(spark, sf_dir, "events"), "event_id")
     pages = e.select("event_id", _q80_messy_url().alias("url"))
     # index-build job: one distinct over the historical partition
     # (staged canonicalizer: this leg used to dominate the composed
@@ -2060,7 +2048,7 @@ def _q84_links(spark, sf_dir):
     host one in/out edge, fixed point = scale — so ranks would carry
     no signal); the other half concentrate on hosts 0-2, skewing
     in-degree so the rank vector genuinely differentiates."""
-    e = _fan_out(_t(spark, sf_dir, "events"), "event_id")
+    e = ensure_parallel(_t(spark, sf_dir, "events"), "event_id")
     eid = F.col("event_id")
     dst_hid = F.when(eid % 2 == 0, (eid * 7 + 3) % 13).otherwise(eid % 3)
     # coalesce: non-nullable urls (identity — event_id never nulls), or
@@ -2350,11 +2338,6 @@ def q93_sitemap_recrawl(spark, sf_dir):
     return sitemap_recrawl_delta(parse_sitemap_entries(sitemaps), crawled)
 
 
-# q90's persisted parsed-canon slot (feeds the semi-probe build side
-# AND the flag join)
-_Q90_CANON_CACHE: list = []
-
-
 def q90_sitemap_discovery(spark, sf_dir):
     """Sitemap-driven url discovery — the discovery half of the crawl
     stack composed with the seen-set probe: per-host sitemap XML
@@ -2362,7 +2345,6 @@ def q90_sitemap_discovery(spark, sf_dir):
     padded <loc> whitespace) is parsed, canonicalized, and flagged
     against the already-crawled set via the q80 broadcast semi — the
     seen side is scanned, never shuffled."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.urls import (
         parse_sitemaps,
         with_canonical_url,
@@ -2397,8 +2379,9 @@ def q90_sitemap_discovery(spark, sf_dir):
         ),
         "sitemap_xml",
     )
-    canon = _persist_latest(
-        _Q90_CANON_CACHE,
+    # feeds the semi-probe build side AND the flag join
+    canon = persist(
+        "q90.canon",
         with_canonical_url(parse_sitemaps(sitemaps), "url")
         .select("host", "canon_url")
         .distinct(),
@@ -2427,11 +2410,6 @@ def q90_sitemap_discovery(spark, sf_dir):
     )
 
 
-# q88's persisted-frontier slot (the operators' _persist_latest
-# lifecycle: the next call evicts the previous plan)
-_Q88_FR_CACHE: list = []
-
-
 def q88_frontier_politeness(spark, sf_dir):
     """The full politeness-gated frontier — the crawl-side capstone
     (the curated-corpus discipline applied to scheduling): q80's
@@ -2449,15 +2427,11 @@ def q88_frontier_politeness(spark, sf_dir):
         url_prefilter,
     )
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     # the frontier fans out into four legs (prefilter flags, robots
     # narrow + join-back, host-cap projection): persist it or every
     # leg re-executes the q80 plan — whose synthesized canon
     # expressions are codegen-heavy — once per reference
-    fr = _persist_latest(
-        _Q88_FR_CACHE, q80_url_frontier_delta(spark, sf_dir)
-    )
+    fr = persist("q88.frontier", q80_url_frontier_delta(spark, sf_dir))
     pf = url_prefilter(
         fr,
         url_col="canon_url",
@@ -2911,7 +2885,7 @@ def q68_bpe_token_counts(spark, sf_dir):
         token_count_bpe_exact,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     return d.select(
         "doc_id", token_count_bpe_exact("text").alias("n_tokens_bpe")
     )
@@ -2929,7 +2903,7 @@ def q72_token_budget_bpe(spark, sf_dir):
         token_count_bpe_exact,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     scored = d.select(
         "doc_id",
         "lang",
@@ -2993,7 +2967,7 @@ def q69_lang_trained(spark, sf_dir):
         lang_detect_trained,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     samples = _lid_samples()
     m = F.col("doc_id") % (len(samples) + 1)
     sample = F.col("text")
@@ -3401,7 +3375,7 @@ def _q99_pages(spark, sf_dir):
     fragment link (doc_id%4), a relative or ``mailto:`` link
     (doc_id%5), a ``javascript:`` link on doc_id%6==0, and an
     href-less ``<a name=…>`` that must not match at all."""
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     did = F.col("doc_id")
     src = F.concat(
         F.lit("http://www.site"),
@@ -3466,12 +3440,6 @@ def q99_outlink_extraction(spark, sf_dir):
     return extract_outlinks(_q99_pages(spark, sf_dir))
 
 
-# q100's persisted-edges slot: anchor_stats fans the extraction plan
-# out into two aggregation legs — unpersisted, each leg would splice
-# and re-run the full outlink expression tree (the q88 lesson)
-_Q100_EDGES_CACHE: list = []
-
-
 def q100_anchor_stats(spark, sf_dir):
     """Inbound anchor-text aggregation per link target: total inbound
     links, distinct linking pages, and the most frequent anchor text
@@ -3479,12 +3447,12 @@ def q100_anchor_stats(spark, sf_dir):
     min(struct(-n, anchor)), no window). The abs-link leg fans 500
     docs onto 211 targets and its 'Read k' anchors tie within a
     target, exercising the tie rule at sf0.01."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.links import anchor_stats
 
-    edges = _persist_latest(
-        _Q100_EDGES_CACHE, q99_outlink_extraction(spark, sf_dir)
-    )
+    # anchor_stats fans the extraction plan out into two aggregation
+    # legs — unpersisted, each leg would splice and re-run the full
+    # outlink expression tree (the q88 lesson)
+    edges = persist("q100.edges", q99_outlink_extraction(spark, sf_dir))
     return anchor_stats(edges)
 
 
@@ -4236,7 +4204,6 @@ def q117_trap_filtered_frontier(spark, sf_dir):
     pages pass. The frontier is the same url generator shifted by one
     (event_id+1), so trap urls genuinely recur without being
     byte-identical to the mined log."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.urls import (
         trap_filter,
         url_templates,
@@ -4274,8 +4241,9 @@ def q117_trap_filtered_frontier(spark, sf_dir):
             )
         )
 
-    traps = _persist_latest(
-        _Q117_TRAPS_CACHE,
+    # the trap relation is the broadcast probe — built once
+    traps = persist(
+        "q117.traps",
         url_templates(e.select(gen(0).alias("url")), min_urls=50),
     )
     frontier = (
@@ -4284,10 +4252,6 @@ def q117_trap_filtered_frontier(spark, sf_dir):
         .agg(F.min("event_id").alias("first_id"))
     )
     return trap_filter(frontier, traps)
-
-
-# q117's persisted trap-relation slot (broadcast probe built once)
-_Q117_TRAPS_CACHE: list = []
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

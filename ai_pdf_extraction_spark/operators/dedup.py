@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
+from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
+from ai_pdf_extraction_spark.plans.persist import persist
 
 # Shingles appearing in more docs than this are dropped before any
 # join — a handful of ubiquitous (stopword-ish) shingles would
@@ -87,67 +89,6 @@ def _guard_all_pairs(
         )
     return n
 
-# Most-recently persisted shingle relations. Plan-building functions
-# persist the shingle explode because it feeds several consumers, but
-# they return unmaterialized plans, so they can't unpersist their own
-# cache. Instead each new persist evicts the previous one — queries in
-# a long-lived session run sequentially, so by the time a new plan is
-# built the old result has been materialized. Worst case (two plans
-# built before either runs) is a recompute, never a wrong result.
-_SHINGLE_CACHE: list[DataFrame] = []
-
-# raw (pre-cap) shingle slot — _df_capped's input feeds both anti-join
-# sides; separate from _SHINGLE_CACHE so persisting the capped result
-# doesn't evict the raw relation mid-materialization
-_RAW_SHINGLE_CACHE: list[DataFrame] = []
-
-# per-doc sorted shingle-array slot for the prefix-filtered all-pairs
-# plan: the relation feeds three consumers (prefix explode + both
-# verify sides), so it gets its own persist slot
-_PAIR_ARRAYS_CACHE: list[DataFrame] = []
-
-
-def _persist_latest(cache: list, df: DataFrame) -> DataFrame:
-    """Most-recently-persisted slot: evicts the cache's previous entry
-    (correctness unaffected — an evicted plan just recomputes)."""
-    for old in cache:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    cache.clear()
-    df = df.persist()
-    cache.append(df)
-    return df
-
-
-def _persist_shingles(sh: DataFrame) -> DataFrame:
-    return _persist_latest(_SHINGLE_CACHE, sh)
-
-
-# granule_dedup's projected granule arrays get their OWN slot so a
-# composed plan (curate v2: LSH near-dup ∧ granule stats) keeps both
-# persists live instead of evicting the shingle relation
-_GRANULE_CACHE: list[DataFrame] = []
-
-
-# Same lifecycle pattern for neardup_clusters' final label frontier:
-# the returned plan references the persisted labels, so the call can't
-# unpersist its own cache — the next call evicts the previous one.
-_LABEL_CACHE: list[DataFrame] = []
-
-
-def _register_labels(labels: DataFrame) -> DataFrame:
-    # input arrives already persisted — evict-and-track only
-    for old in _LABEL_CACHE:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    _LABEL_CACHE.clear()
-    _LABEL_CACHE.append(labels)
-    return labels
-
 
 def _df_capped(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
     """Drop shingles whose document frequency exceeds the cap. ``sh``
@@ -166,7 +107,10 @@ def _df_capped(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
     MEMORY_AND_DISK spill story as every other shingle persist."""
     if max_shingle_df is None:
         return sh
-    sh = _persist_latest(_RAW_SHINGLE_CACHE, sh)
+    # raw (pre-cap) slot, separate from the capped shingle slot so
+    # persisting the capped result doesn't evict the raw relation
+    # mid-materialization
+    sh = persist("dedup.raw_shingles", sh)
     return sh.join(hot_shingle_set(sh, max_shingle_df), "shingle", "left_anti")
 
 
@@ -288,9 +232,11 @@ def granule_dedup(
     a dedup pass must never lose doc ids. The granule projection is
     persisted across its two consumers (the stats leg and the winners
     leg) so the text scan + split runs once."""
-    docs = _ensure_parallel(docs, id_col)
-    base = _persist_latest(
-        _GRANULE_CACHE,
+    docs = ensure_parallel(docs, id_col)
+    # own slot so a composed plan (curate v2: LSH near-dup ∧ granule
+    # stats) keeps both persists live instead of evicting the shingles
+    base = persist(
+        "dedup.granules",
         docs.select(
             F.col(id_col),
             F.filter(
@@ -330,50 +276,6 @@ def granule_dedup(
     )
 
 
-# Attribute set by mark_parallel_balanced: the explicit (and only)
-# channel for skipping _ensure_parallel's repartition.
-_BALANCED_ATTR = "_graft_parallel_balanced"
-
-
-def mark_parallel_balanced(df: DataFrame) -> DataFrame:
-    """Mark a DataFrame as ALREADY balanced so ``_ensure_parallel``
-    trusts it and skips its repartition. Only callers that just
-    repartitioned (and typically persisted) the relation themselves may
-    set this — the curation capstones' shared narrow projection is the
-    canonical case: re-shuffling the already-balanced cached relation
-    once per leg measurably dominated capstone wall time at local
-    scale (r6). An explicit marker, NOT a cache-backed heuristic:
-    persisting preserves the child's partitioning, so a cached
-    byte-split parquet scan keeps its empty partitions and a
-    "trust any cached input" rule would reintroduce the one-straggler
-    outage this guard exists to prevent (review r6)."""
-    setattr(df, _BALANCED_ATTR, True)
-    return df
-
-
-def _ensure_parallel(docs: DataFrame, id_col: str) -> DataFrame:
-    """CPU-heavy explodes must not inherit a skewed scan.
-
-    A small corpus arrives as one parquet file → one task → one core;
-    worse, byte-range splitting of a single-row-group file reports many
-    partitions of which all but one are EMPTY (parquet only reads whole
-    row groups), so the partition COUNT can lie. The guard therefore
-    repartitions anything below 4× default parallelism — a shuffle of
-    the raw docs is far cheaper than the explode/join work downstream.
-    A real crawl (thousands of files, ≫4× parallelism partitions)
-    skips this. Never repartitions DOWN: inputs already wider than the
-    2× target keep their width (only empties get rebalanced). Inputs
-    explicitly marked by :func:`mark_parallel_balanced` (the caller
-    just repartitioned them itself) are trusted as-is."""
-    if getattr(docs, _BALANCED_ATTR, False):
-        return docs
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    parts = docs.rdd.getNumPartitions()
-    if parts >= target * 4:
-        return docs
-    return docs.repartition(max(target * 2, parts), F.col(id_col))
-
-
 def _word_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """Distinct word n-gram shingles per doc: (id, shingle).
 
@@ -386,7 +288,7 @@ def _word_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataF
     CSE across HOF lambdas) — O(words²) work per doc, measured ~2×
     on the whole shingle leg. Multi-use of the non-cheap alias keeps
     CollapseProject from re-inlining it."""
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
     base = docs.select(
         F.col(id_col),
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_words"),
@@ -468,7 +370,8 @@ def ngram_jaccard_pairs(
     the exact Bayardo prefix filter instead of the flat self-join
     (identical output, ~2× at 5·10^4 docs — see
     ``PREFIX_FILTER_MIN_DOCS``); pass ``prefix_min_docs=0`` to force
-    that plan on a small corpus (tests do).
+    that plan on a small corpus (tests do). With ``max_docs=None`` a
+    ``limit(prefix_min_docs + 1).count()`` probe picks the plan.
 
     The DF cap is ON by default: at web scale a handful of ubiquitous
     shingles would otherwise create a quadratic hot key in the
@@ -488,13 +391,17 @@ def ngram_jaccard_pairs(
         n_docs = _guard_all_pairs(
             docs, max_docs, "ngram_jaccard_pairs", "minhash_lsh_pairs"
         )
+        if n_docs is None and prefix_min_docs > 0:
+            # unguarded: probe only as far as the plan choice needs
+            n_docs = docs.limit(prefix_min_docs + 1).count()
     if _shingles is not None:
         sh = _shingles
     else:
         # The explode feeds three consumers (sizes + both join sides):
         # materialize it once instead of re-running split/explode per use.
-        sh = _persist_shingles(
-            _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
+        sh = persist(
+            "dedup.shingles",
+            _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df),
         )
     if _candidates is not None:
         # Candidate verify via per-doc shingle ARRAYS + array_intersect
@@ -516,7 +423,7 @@ def ngram_jaccard_pairs(
             F.count("*").alias("n_shingles"),
         )
         return _verify_pairs_by_arrays(_candidates, arrays, id_col, threshold)
-    if prefix_min_docs <= 0 or (n_docs is not None and n_docs >= prefix_min_docs):
+    if prefix_min_docs <= 0 or n_docs >= prefix_min_docs:
         # Exact prefix-filtered all-pairs (Bayardo et al., WWW'07;
         # see PREFIX_FILTER_MIN_DOCS for the crossover measurement).
         # Lemma: under ANY fixed total order on shingles, a pair with
@@ -547,8 +454,10 @@ def ngram_jaccard_pairs(
         # slice length.
         t_eff = max(threshold - 1e-4, 0.0)
         dfc = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        arrays = _persist_latest(
-            _PAIR_ARRAYS_CACHE,
+        # per-doc sorted shingle arrays feed three consumers (prefix
+        # explode + both verify sides), so they get their own slot
+        arrays = persist(
+            "dedup.pair_arrays",
             sh.join(dfc, "shingle")
             .groupBy(id_col)
             .agg(
@@ -696,8 +605,9 @@ def minhash_lsh_pairs(
     and verification all use one DF-capped shingle universe so the
     verified Jaccard matches ``ngram_jaccard_pairs`` exactly.
     """
-    sh = _persist_shingles(
-        _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
+    sh = persist(
+        "dedup.shingles",
+        _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df),
     )
     sig = minhash_signatures(docs, id_col, text_col, n, k, _shingles=sh)
     stacked = band_buckets(sig, id_col, k, bands)
@@ -794,7 +704,9 @@ def neardup_clusters(
             "labels would be silently non-minimal otherwise"
         )
     edges.unpersist()
-    _register_labels(labels)
+    # the returned plan references the persisted labels, so the next
+    # call evicts them; already persisted, the slot only tracks them
+    persist("dedup.labels", labels)
     # cluster sizes via partial-aggregating groupBy + join back — the
     # exact_dedup rule: a giant near-dup cluster (boilerplate family at
     # crawl scale) is a hot label, a window over it funnels one task
@@ -820,7 +732,7 @@ def _simhash_bits(
     words = F.explode(
         F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
     ).alias("word")
-    tok = _ensure_parallel(docs, id_col).select(F.col(id_col), words)
+    tok = ensure_parallel(docs, id_col).select(F.col(id_col), words)
     h = token_hash(F.col("word"))
     bit_sums = [
         F.sum(
@@ -1038,7 +950,7 @@ def embedding_near_dup_pairs_lsh(
     (pinned in pytest alongside a recall measurement)."""
     from ai_pdf_extraction_spark.operators.similarity import lsh_bucket, lsh_planes
 
-    # no _ensure_parallel here (r8, measured): the block-grid shuffle
+    # no ensure_parallel here (r8, measured): the block-grid shuffle
     # redistributes the work anyway, and a rebalance in front costs
     # more than the single-task bucketize it parallelizes (+2.3 s on
     # q64 at sf0.1, ~nothing saved at sf1.0)
@@ -1098,7 +1010,7 @@ def embedding_near_dup_delta(
     raising like the batch twin (review r7)."""
     from ai_pdf_extraction_spark.operators.similarity import lsh_bucket, lsh_planes
 
-    # no _ensure_parallel (see embedding_near_dup_pairs_lsh)
+    # no ensure_parallel (see embedding_near_dup_pairs_lsh)
     planes = lsh_planes(n_planes, dim)
 
     def bucketize(df: DataFrame, is_new: bool) -> DataFrame:

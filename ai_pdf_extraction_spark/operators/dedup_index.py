@@ -78,7 +78,6 @@ from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.dedup import (
     DEFAULT_MAX_SHINGLE_DF,
-    _persist_latest,
     _word_shingles,
     band_buckets,
     hot_shingle_set,
@@ -86,6 +85,7 @@ from ai_pdf_extraction_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
+from ai_pdf_extraction_spark.plans.persist import persist
 
 # Bump when index semantics change (fingerprint expression, signature
 # hash family, banding, frozen-universe rule): an at-rest index built
@@ -93,32 +93,6 @@ from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
 DEDUP_INDEX_VERSION = 1
 
 _MANIFEST = "index.json"
-
-# delta-side shingle persist slot (see dedup._persist_latest): the new
-# batch's capped shingles feed signatures + verification sizes + the
-# verify join — three consumers, one explode.
-_DELTA_SHINGLE_CACHE: list[DataFrame] = []
-
-# new×old bucket-collision slot: feeds both the candidate union and the
-# candidate-old-id semi-join — persist so the index probe runs once.
-_DELTA_CAND_CACHE: list[DataFrame] = []
-
-# new-batch bucket slot: band_buckets(new_sig) feeds THREE consumers
-# (the index probe + both sides of the new×new self-join) — without the
-# persist each re-runs the signature groupBy over the shingle cache.
-_NEW_BUCKETS_CACHE: list[DataFrame] = []
-
-# live-index shingle slot: when the index relations are built in-plan
-# (no at-rest files — contract queries, tests, first build), the hot
-# set and the signatures share ONE persisted shingle explode.
-_INDEX_SHINGLE_CACHE: list[DataFrame] = []
-
-# verification-universe slot: new_sh ∪ candidate-old shingles feeds
-# THREE consumers inside ngram_jaccard_pairs (sizes + both join
-# sides) — the new half is already cached, but the old half re-runs
-# the candidate semi-join + shingle explode + frozen-cap anti join
-# per consumer without this persist.
-_VERIFY_SHINGLE_CACHE: list[DataFrame] = []
 
 
 # ---------------------------------------------------------------------------
@@ -208,8 +182,8 @@ def live_index_relations(
     query, tests, and the first build): the hot-set groupBy and the
     signature aggregation otherwise each re-run the split+explode over
     the whole corpus."""
-    sh = _persist_latest(
-        _INDEX_SHINGLE_CACHE, _word_shingles(docs, id_col, text_col, n)
+    sh = persist(
+        "dedup_index.index_shingles", _word_shingles(docs, id_col, text_col, n)
     )
     hot = (
         hot_shingle_set(sh, max_shingle_df)
@@ -303,19 +277,25 @@ def minhash_lsh_delta(
     the equi-join shuffles both sides and a production deployment
     stores signatures ``bucketBy(bucket)`` to co-locate (module doc).
     """
-    new_sh = _persist_latest(
-        _DELTA_SHINGLE_CACHE,
+    # the new batch's capped shingles feed signatures + verification
+    # sizes + the verify join — three consumers, one explode
+    new_sh = persist(
+        "dedup_index.delta_shingles",
         _frozen_capped(_word_shingles(new_docs, id_col, text_col, n), hot),
     )
     new_sig = minhash_signatures(new_docs, id_col, text_col, n, k, _shingles=new_sh)
-    new_b = _persist_latest(
-        _NEW_BUCKETS_CACHE, band_buckets(new_sig, id_col, k, bands)
+    # three consumers (the index probe + both sides of the new×new
+    # self-join) — unpersisted each re-runs the signature groupBy
+    new_b = persist(
+        "dedup_index.new_buckets", band_buckets(new_sig, id_col, k, bands)
     )
     old_b = band_buckets(index_sigs, id_col, k, bands)
 
     probe = F.broadcast(new_b) if broadcast_new else new_b
-    cand_no = _persist_latest(
-        _DELTA_CAND_CACHE,
+    # feeds both the candidate union and the candidate-old-id
+    # semi-join — persisted so the index probe runs once
+    cand_no = persist(
+        "dedup_index.delta_candidates",
         probe.alias("nw")
         .join(old_b.alias("od"), "bucket")
         .select(
@@ -350,8 +330,12 @@ def minhash_lsh_delta(
     old_cand_sh = _frozen_capped(
         _word_shingles(old_cand, id_col, text_col, n), hot
     )
-    verify_sh = _persist_latest(
-        _VERIFY_SHINGLE_CACHE, new_sh.unionByName(old_cand_sh)
+    # three consumers inside ngram_jaccard_pairs (sizes + both join
+    # sides): the new half is already cached, but the old half would
+    # re-run the candidate semi-join + explode + frozen-cap anti join
+    # per consumer without this persist
+    verify_sh = persist(
+        "dedup_index.verify_shingles", new_sh.unionByName(old_cand_sh)
     )
     return ngram_jaccard_pairs(
         new_docs,  # unused (shingles handed in); keeps the signature

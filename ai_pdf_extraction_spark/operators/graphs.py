@@ -44,16 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.plans.persist import persist
+
 #: bump when the rank semantics (scale, damping form, dangling
 #: convention, truncation rule) change — consumers pin against it
 PAGERANK_VERSION = 1
-
-# the returned final-ranks persist slot (dedup._persist_latest
-# lifecycle): without it every pagerank call would leak one cached
-# host-cardinality relation for the session's lifetime (bench and the
-# contract runner call it repeatedly)
-_PAGERANK_CACHE: list = []
-
 
 # canonical host extraction lives with the other url Column work;
 # re-exported here because the graph operators are its heaviest users
@@ -208,14 +203,13 @@ def pagerank(
                 prev_persisted.unpersist()
             prev_persisted = new_ranks
         ranks = new_ranks
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     # materialize the final frontier WHILE the ew/nodes caches are
     # still live (the chained plan references ew once per round —
     # unpersisting first would recompute the edge join per reference),
     # then release the per-run caches; the next pagerank call evicts
-    # this final relation via the slot
-    final = _persist_latest(_PAGERANK_CACHE, ranks)
+    # this final relation via the slot (without it every call would
+    # leak one cached host-cardinality relation for the session)
+    final = persist("graphs.pagerank", ranks)
     final.count()
     if prev_persisted is not None:
         prev_persisted.unpersist()

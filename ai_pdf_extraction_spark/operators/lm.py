@@ -50,6 +50,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
+
 # Bump when tokenization / smoothing / quantization semantics change;
 # load refuses a mismatched model file (the PQ_CODES_VERSION rule).
 LM_VERSION = 1
@@ -117,9 +119,7 @@ def lm_perplexity(
 
     ``payload`` overrides the committed model (tests pin the bucket
     boundary rule with a hand-built model)."""
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
     spark = docs.sparkSession
     bigram, backoff, payload = lm_model_relations(spark, payload)
     oov_q = int(payload["oov_q"])

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.plans.persist import persist
+
 # Shared Java/RE2 syntax only: no lookaround, no backrefs.
 EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
 IP_RE = r"\b(\d{1,3}\.){3}\d{1,3}\b"
@@ -129,12 +131,6 @@ def token_budget_selection(
     )
 
 
-# sequence_pack's narrow (id, tokens, shard) projection — its own
-# most-recently-persisted slot (the dedup.py:_SHINGLE_CACHE lifecycle)
-# so packing never evicts a capstone's shingle/granule/docs persists
-_PACK_CACHE: list[DataFrame] = []
-
-
 def sequence_pack(
     docs: DataFrame,
     seq_len: int,
@@ -170,10 +166,10 @@ def sequence_pack(
     ``div`` on longs is exact (the DuckDB oracle's ``//``)."""
     from pyspark.sql import Window
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
-    d = _persist_latest(
-        _PACK_CACHE,
+    # own slot so packing never evicts a capstone's shingle/granule/docs
+    # persists
+    d = persist(
+        "scrub.pack",
         docs.select(
             id_col, tokens_col, (F.col(id_col) % n_shards).alias("_shard")
         ),
@@ -218,9 +214,6 @@ def sequence_pack(
             .alias("n_seqs"),
         )
     )
-
-
-_MIX_CACHE: list[DataFrame] = []
 
 
 def mixture_sample(
@@ -271,8 +264,6 @@ def mixture_sample(
     is part of the training-data surface the rebuild adds."""
     from pyspark.sql import SparkSession, Window
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     if not weights or min(weights.values()) < 0 or total_budget < 0:
         raise ValueError("weights must be non-negative ints, budget >= 0")
     sum_w = sum(weights.values())
@@ -284,8 +275,8 @@ def mixture_sample(
 
     spark = docs.sparkSession
     assert isinstance(spark, SparkSession)
-    d = _persist_latest(
-        _MIX_CACHE,
+    d = persist(
+        "scrub.mixture",
         docs.select(
             F.col(id_col).alias("_id"),
             F.col(source_col).alias("_src"),
@@ -358,9 +349,6 @@ def mixture_sample(
     )
 
 
-_CBS_CACHE: list[DataFrame] = []
-
-
 def cluster_balanced_sample(
     emb: DataFrame,
     centroids: list[list[float]],
@@ -394,11 +382,10 @@ def cluster_balanced_sample(
     """
     from pyspark.sql import Window
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.similarity import ivf_assign
 
-    d = _persist_latest(
-        _CBS_CACHE,
+    d = persist(
+        "scrub.cluster_sample",
         emb.select(
             F.col(id_col).alias("_id"),
             ivf_assign(vec_col, centroids).alias("cluster"),

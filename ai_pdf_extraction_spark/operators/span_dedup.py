@@ -55,23 +55,12 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ai_pdf_extraction_spark.operators.dedup import (
-    _ensure_parallel,
-    _persist_latest,
-)
+from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
+from ai_pdf_extraction_spark.plans.persist import persist
 
 DEFAULT_SPAN_K = 8  # words; Lee et al. use 50 BPE tokens ≈ 35 words —
 # the synthetic contract corpus has short docs, so the operator default
 # is small and callers at real scale pass their own.
-
-# persist slots (dedup._persist_latest discipline): the projected
-# words relation feeds the gram stream AND the final reconstruction
-# join; span_dedup's gram-occurrence relation feeds BOTH the
-# first-occurrence groupBy and the occurrence join — each materializes
-# once, evicting the previous operator call's copy.
-_WORDS_CACHE: list[DataFrame] = []
-_OCC_CACHE: list[DataFrame] = []
-
 
 # ONE explicit whitespace class for all three engines. \s is NOT
 # portable here: Java \s and RE2 \s are ASCII but differ on \x0b, and
@@ -154,13 +143,15 @@ def span_dedup(
 ) -> DataFrame:
     """Cross-document duplicated-span removal (module doc). Output one
     row per input doc: (id, n_words, n_removed, surviving_text)."""
-    docs = _ensure_parallel(docs, id_col)
-    words = _persist_latest(
-        _WORDS_CACHE, docs.select(id_col, _words_col(text_col).alias("w"))
+    docs = ensure_parallel(docs, id_col)
+    # the projected words feed the gram stream AND the final
+    # reconstruction join (slot shared with span_decontaminate)
+    words = persist(
+        "span_dedup.words", docs.select(id_col, _words_col(text_col).alias("w"))
     )
     # occ feeds two consumers (the groupBy below and the join back) —
     # without the persist the O(n_words) md5 explode runs twice
-    occ = _persist_latest(_OCC_CACHE, _gram_occurrences(words, id_col, k))
+    occ = persist("span_dedup.occurrences", _gram_occurrences(words, id_col, k))
     firsts = occ.groupBy("g").agg(
         F.min(F.struct(id_col, "start")).alias("first")
     )
@@ -190,9 +181,9 @@ def span_decontaminate(
     stream — no doc-text shuffle, same scale shape as
     ``contamination_flags``. Output: (id, n_words, n_removed,
     surviving_text)."""
-    docs = _ensure_parallel(docs, id_col)
-    words = _persist_latest(
-        _WORDS_CACHE, docs.select(id_col, _words_col(text_col).alias("w"))
+    docs = ensure_parallel(docs, id_col)
+    words = persist(
+        "span_dedup.words", docs.select(id_col, _words_col(text_col).alias("w"))
     )
     bench_words = benchmark.select(
         bench_id_col, _words_col(text_col).alias("w")

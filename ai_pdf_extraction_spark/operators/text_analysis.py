@@ -28,6 +28,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
+from ai_pdf_extraction_spark.plans.persist import persist
+
 
 def _occurrences(text: Column, marker: str) -> Column:
     """Non-overlapping occurrence count via the replace trick —
@@ -317,9 +320,7 @@ def gopher_quality(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     consumed by two+ filters, and inlined expressions recompute per
     element); everything else is single-pass column arithmetic.
     Mirrors the q60 oracle SQL exactly; keep in lockstep."""
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
     c = F.col(text_col)
     base = docs.select(
         F.col(id_col),
@@ -515,9 +516,7 @@ def repetition_signals(
     recomputes the bigram array per distinct bigram — O(n²) per doc
     (same trap as winnowing above). The shuffle form is linear and
     partial-aggregates map-side."""
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
     words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     base = docs.select(
         F.col(id_col),
@@ -579,11 +578,6 @@ def with_text_analysis(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-# distinctive_terms' persisted per-(doc, term) relation (the
-# dedup._persist_latest lifecycle)
-_TERM_CACHE: list = []
-
-
 def distinctive_terms(
     docs: DataFrame,
     k: int = 5,
@@ -614,16 +608,14 @@ def distinctive_terms(
     key, no funnel)."""
     from pyspark.sql import Window
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     tok = docs.select(
         F.col(id_col),
         F.explode(
             F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")
         ).alias("term"),
     ).filter(F.col("term") != "")
-    tf = _persist_latest(
-        _TERM_CACHE,
+    tf = persist(
+        "text_analysis.terms",
         tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -636,9 +628,6 @@ def distinctive_terms(
         .filter(F.col("pick_rank") <= k)
         .select(id_col, "term", "tf", "df", "pick_rank")
     )
-
-
-_BP_LINE_CACHE: list = []
 
 
 def boilerplate_line_removal(
@@ -675,15 +664,10 @@ def boilerplate_line_removal(
     corpus-cardinality key, no funnel, no window. The sorted array is
     projected in its OWN step before the element-wise lambda (the
     HOF no-CSE rule)."""
-    from ai_pdf_extraction_spark.operators.dedup import (
-        _ensure_parallel,
-        _persist_latest,
-    )
-
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
     stripped = F.regexp_replace("line", r"^[ \t\r]+|[ \t\r]+$", "")
-    lines = _persist_latest(
-        _BP_LINE_CACHE,
+    lines = persist(
+        "text_analysis.boilerplate_lines",
         docs.select(
             F.col(id_col),
             F.col(group_col),
@@ -720,9 +704,6 @@ def boilerplate_line_removal(
     )
 
 
-_HOST_Q_CACHE: list = []
-
-
 def host_quality_filter(
     docs: DataFrame,
     min_host_quality_scaled: int = 5500,
@@ -748,14 +729,9 @@ def host_quality_filter(
     the scan; the per-host relation is a partial-agg groupBy at HOST
     cardinality and joins back broadcast — the corpus is scanned
     once more but never shuffled."""
-    from ai_pdf_extraction_spark.operators.dedup import (
-        _ensure_parallel,
-        _persist_latest,
-    )
-
-    docs = _ensure_parallel(docs, id_col)
-    scored = _persist_latest(
-        _HOST_Q_CACHE,
+    docs = ensure_parallel(docs, id_col)
+    scored = persist(
+        "text_analysis.host_quality",
         docs.select(
             F.col(id_col),
             F.col(group_col),
@@ -799,9 +775,7 @@ def paragraph_lang_mix(
     structs — no float, no window). Scale shape: explode → two
     partial-agg groupBys on corpus-cardinality keys; the detector is
     one Column projection per paragraph row, whole-stage codegen."""
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
     paras = docs.select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), r"\n{2,}")).alias("para"),
@@ -864,9 +838,7 @@ def normalize_text(
     Java's ``$`` matches before a final newline, RE2's does not."""
     from pyspark.sql.functions import pandas_udf
 
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    docs = _ensure_parallel(docs, id_col)
+    docs = ensure_parallel(docs, id_col)
 
     @pandas_udf("string")
     def _nfc(s: pd.Series) -> pd.Series:

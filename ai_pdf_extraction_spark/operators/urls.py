@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.plans.persist import persist
+
 
 #: scheme://authority — THE url-structure regex pair (extract form in
 #: :func:`host_of`, strip form in :func:`strip_authority`); every
@@ -146,10 +148,6 @@ def canonicalize_url(col: Column | str = "url") -> Column:
     return u
 
 
-# the collapsed-batch persist slot (the scrub._PACK_CACHE lifecycle)
-_FRONTIER_CACHE: list[DataFrame] = []
-
-
 def url_frontier_delta(
     new_urls: DataFrame,
     seen: DataFrame,
@@ -190,8 +188,6 @@ def url_frontier_delta(
     never shuffled. ``broadcast_new=False`` falls back to a plain
     equi-join (AQE skew-safe) for batches too large to broadcast.
     """
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     # staged canonicalizer: linear expression tree (the Column form is
     # textually exponential — see with_canonical_url), byte-identical
     batch = with_canonical_url(new_urls, url_col).select(
@@ -199,8 +195,8 @@ def url_frontier_delta(
     )
     # the collapsed batch feeds BOTH the semi-join build side and the
     # final left join — persist or the batch scan + agg run twice
-    groups = _persist_latest(
-        _FRONTIER_CACHE,
+    groups = persist(
+        "urls.frontier",
         batch.groupBy("canon_url").agg(
             F.min(id_col).alias("first_id"), F.count("*").alias("n_discovered")
         ),
@@ -318,9 +314,6 @@ def url_prefilter(
     )
 
 
-_HOSTCAP_CACHE: list[DataFrame] = []
-
-
 def frontier_host_cap(
     frontier: DataFrame,
     per_host: int,
@@ -361,10 +354,8 @@ def frontier_host_cap(
     bases leg)."""
     from pyspark.sql import Window
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
-    d = _persist_latest(
-        _HOSTCAP_CACHE,
+    d = persist(
+        "urls.host_cap",
         frontier.filter(F.col("to_crawl"))
         .select(
             F.col(url_col),
@@ -505,10 +496,6 @@ def parse_sitemap_entries(
     )
 
 
-# sitemap_recrawl_delta's collapsed-entry persist slot
-_RECRAWL_CACHE: list[DataFrame] = []
-
-
 def sitemap_recrawl_delta(
     entries: DataFrame,
     crawled: DataFrame,
@@ -541,12 +528,10 @@ def sitemap_recrawl_delta(
     ``crawled_at``) come back to the left join; the history is never
     shuffled. ``broadcast_entries=False`` falls back to a plain
     AQE equi-join for oversized batches."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     canon = with_canonical_url(entries, url_col).groupBy(
         "host", "canon_url"
     ).agg(F.max("lastmod").alias("lastmod"))
-    canon = _persist_latest(_RECRAWL_CACHE, canon)
+    canon = persist("urls.recrawl", canon)
     hist = crawled.select(
         F.col(crawled_url_col).alias("canon_url"),
         F.col(crawled_at_col).alias("crawled_at"),

@@ -30,20 +30,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.dedup import (
-    _persist_latest,
     contamination_flags,
     exact_dedup,
     granule_dedup,
-    mark_parallel_balanced,
     minhash_lsh_pairs,
 )
 from ai_pdf_extraction_spark.operators.text_analysis import quality_score, token_count
-
-# The capstones' shared narrow doc projection gets its own
-# most-recently-persisted slot (same lifecycle as dedup's shingle and
-# granule slots — see operators/dedup.py:_SHINGLE_CACHE) so persisting
-# it never evicts the shingle or granule relations it composes with.
-_DOCS_CACHE: list[DataFrame] = []
+from ai_pdf_extraction_spark.plans.partitioning import (
+    ensure_parallel,
+    mark_parallel_balanced,
+)
+from ai_pdf_extraction_spark.plans.persist import persist
 
 
 def _narrow_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -57,26 +54,19 @@ def _narrow_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     narrow (only the columns curation needs), and ``persist`` defaults
     to MEMORY_AND_DISK, so an oversized corpus spills instead of OOMing.
 
-    The projection is also rebalanced ONCE here under exactly the
-    ``_ensure_parallel`` rule — repartition to ``max(2× parallelism,
-    parts)`` when below 4× parallelism (the byte-split-lie guard;
-    never narrows a wider input) — and then explicitly marked
-    (``dedup.mark_parallel_balanced``) so the per-leg guards skip
-    their own repartition shuffles. A real crawl (≫4× parallelism
-    partitions) skips the rebalance and keeps its layout.
+    The projection is also rebalanced ONCE here by
+    ``partitioning.ensure_parallel`` and then explicitly marked
+    (``partitioning.mark_parallel_balanced``) so the per-leg guards
+    skip their own repartition shuffles. Its own persist slot, so it
+    never evicts the shingle or granule relations it composes with.
     """
     lang = (
         F.col("lang")
         if "lang" in docs.columns
         else F.lit(None).cast("string").alias("lang")
     )
-    narrow = docs.select(id_col, lang, text_col)
-    sc = docs.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    parts = docs.rdd.getNumPartitions()
-    if parts < target * 4:
-        narrow = narrow.repartition(max(target * 2, parts), F.col(id_col))
-    return mark_parallel_balanced(_persist_latest(_DOCS_CACHE, narrow))
+    narrow = ensure_parallel(docs.select(id_col, lang, text_col), id_col)
+    return mark_parallel_balanced(persist("curate.docs", narrow))
 
 
 def curated_corpus(
@@ -205,9 +195,6 @@ def curated_corpus_v3(
     return base.join(emb_losers, id_col, "left_anti")
 
 
-_V4_BASE_CACHE: list[DataFrame] = []
-
-
 def curated_corpus_v4(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -239,8 +226,8 @@ def curated_corpus_v4(
     narrow = _narrow if _narrow is not None else _narrow_docs(docs, id_col, text_col)
     # v3 feeds BOTH the survivor semi-join and the final join — persist
     # or the whole five-leg capstone plan executes twice
-    base = _persist_latest(
-        _V4_BASE_CACHE,
+    base = persist(
+        "curate.v4_base",
         curated_corpus_v3(
             docs, benchmark, emb, id_col=id_col, text_col=text_col,
             _narrow=narrow, **knobs,

@@ -14,6 +14,10 @@ dedup) must salt: ``(host, pmod(xxhash64(url), n_salts))`` spreads one
 hot host over ``n_salts`` reducers, then a second, tiny aggregation
 recombines. AQE skew-join splitting covers *joins*, not custom
 repartitions, hence the explicit salt (SURVEY.md §4 custom-work (b)).
+
+Partition balance: ``ensure_parallel`` is the one rule for fanning a
+narrow scan out ahead of per-row-heavy work, and
+``mark_parallel_balanced`` the one way to skip it.
 """
 
 from __future__ import annotations
@@ -142,3 +146,47 @@ def salted_host_counts(df: DataFrame) -> DataFrame:
     groupBy. Output: (host, n_docs)."""
     partial = df.groupBy("host", "salt").agg(F.count("*").alias("partial_n"))
     return partial.groupBy("host").agg(F.sum("partial_n").alias("n_docs"))
+
+
+# Attribute set by mark_parallel_balanced: the explicit (and only)
+# channel for skipping ensure_parallel's repartition.
+_BALANCED_ATTR = "_graft_parallel_balanced"
+
+
+def mark_parallel_balanced(df: DataFrame) -> DataFrame:
+    """Mark a DataFrame as ALREADY balanced so ``ensure_parallel``
+    trusts it and skips its repartition. Only callers that just
+    repartitioned (and typically persisted) the relation themselves may
+    set this — the curation capstones' shared narrow projection is the
+    canonical case: re-shuffling the already-balanced cached relation
+    once per leg measurably dominated capstone wall time at local
+    scale (r6). An explicit marker, NOT a cache-backed heuristic:
+    persisting preserves the child's partitioning, so a cached
+    byte-split parquet scan keeps its empty partitions and a
+    "trust any cached input" rule would reintroduce the one-straggler
+    outage this guard exists to prevent (review r6)."""
+    setattr(df, _BALANCED_ATTR, True)
+    return df
+
+
+def ensure_parallel(docs: DataFrame, id_col: str) -> DataFrame:
+    """CPU-heavy explodes must not inherit a skewed scan.
+
+    A small corpus arrives as one parquet file → one task → one core;
+    worse, byte-range splitting of a single-row-group file reports many
+    partitions of which all but one are EMPTY (parquet only reads whole
+    row groups), so the partition COUNT can lie. The guard therefore
+    repartitions anything below 4× default parallelism — a shuffle of
+    the raw docs is far cheaper than the explode/join work downstream.
+    A real crawl (thousands of files, ≫4× parallelism partitions)
+    skips this. Never repartitions DOWN: inputs already wider than the
+    2× target keep their width (only empties get rebalanced). Inputs
+    explicitly marked by :func:`mark_parallel_balanced` (the caller
+    just repartitioned them itself) are trusted as-is."""
+    if getattr(docs, _BALANCED_ATTR, False):
+        return docs
+    target = docs.sparkSession.sparkContext.defaultParallelism
+    parts = docs.rdd.getNumPartitions()
+    if parts >= target * 4:
+        return docs
+    return docs.repartition(max(target * 2, parts), F.col(id_col))

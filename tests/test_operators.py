@@ -212,9 +212,10 @@ def test_ngram_allpairs_prefix_round4_boundary(spark):
     round4 = 0.4000, emitted at t = 0.4 by BOTH plans; a t-based size
     filter (nb ≥ 0.4·4003 = 1601.2) would silently drop it from the
     prefix plan. Also pins: prefix_min_docs=0 forces the prefix plan
-    even with max_docs=None (no guard probe), and a nonsense
-    threshold > 1 yields the empty result instead of a negative
-    slice length."""
+    even with max_docs=None (no guard probe), max_docs=None still
+    takes the prefix plan once the corpus reaches prefix_min_docs, and
+    a nonsense threshold > 1 yields the empty result instead of a
+    negative slice length."""
     from ai_pdf_extraction_spark.operators.dedup import ngram_jaccard_pairs
 
     words = [f"u{i}" for i in range(4005)]
@@ -222,14 +223,18 @@ def test_ngram_allpairs_prefix_round4_boundary(spark):
         [(1, " ".join(words)), (2, " ".join(words[:1603]))],
         "doc_id long, text string",
     )  # 4003 vs 1601 distinct shingles, b's a subset of a's
-    for pmd, max_docs in ((10**9, None), (0, None), (0, 100_000)):
-        got = [
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in ngram_jaccard_pairs(
-                docs, threshold=0.4, max_shingle_df=None,
-                max_docs=max_docs, prefix_min_docs=pmd,
-            ).collect()
-        ]
+    for pmd, max_docs, prefix in (
+        (10**9, None, False), (0, None, True), (0, 100_000, True),
+        (2, None, True),
+    ):
+        pairs = ngram_jaccard_pairs(
+            docs, threshold=0.4, max_shingle_df=None,
+            max_docs=max_docs, prefix_min_docs=pmd,
+        )
+        # the prefix plan is the one that slices each doc's shingles
+        plan = pairs._jdf.queryExecution().analyzed().toString()
+        assert ("slice(" in plan) == prefix, (pmd, max_docs)
+        got = [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs.collect()]
         assert got == [(1, 2, 0.4)], (pmd, max_docs, got)
     assert (
         ngram_jaccard_pairs(

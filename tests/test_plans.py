@@ -202,6 +202,101 @@ def test_streaming_schema_matches_batch(spark, corpus_dir):
     assert stream.schema == batch.schema
 
 
+def test_streaming_microbatch_has_no_repartition_exchange(spark, tmp_path):
+    """The extraction stream never fans out: a partition-balance
+    repartition per micro-batch would add a shuffle to every trigger.
+    Asserted on the plan the micro-batch actually executed."""
+    from ai_pdf_extraction_spark.corpus.generate import write_pages_parquet
+    from ai_pdf_extraction_spark.streaming.ingest import extraction_stream
+
+    src = tmp_path / "in"
+    src.mkdir()  # the file-stream source lists a directory's files
+    write_pages_parquet(str(src / "p.parquet"), 20, seed=7)
+    q = (
+        extraction_stream(spark, str(src), "r")
+        .writeStream.foreachBatch(lambda batch, epoch: None)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120) and q.exception() is None
+    plan = q._jsq.explainInternal(False)
+    assert "FileScan parquet" in plan and "ArrowEvalPython" in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_ensure_parallel_balance_rule(spark, tmp_path):
+    """The partition-balance rule, read from partition counts alone
+    (AQE off so a repartition's count is known without running its
+    shuffle): a single-row-group scan fans out to 2× parallelism, an
+    input at 4× or more and a marked input pass through untouched,
+    and a wider input is never narrowed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ai_pdf_extraction_spark.plans.partitioning import (
+        ensure_parallel,
+        mark_parallel_balanced,
+    )
+
+    sc = spark.sparkContext
+    dp = sc.defaultParallelism
+    path = str(tmp_path / "one_group.parquet")
+    pq.write_table(
+        pa.table({"doc_id": list(range(64)), "text": ["x"] * 64}), path
+    )
+    assert pq.ParquetFile(path).num_row_groups == 1
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("ensure_parallel_rule", "partition counts only")
+    try:
+        scan = spark.read.schema("doc_id long, text string").parquet(path)
+        fanned = ensure_parallel(scan, "doc_id")
+        assert fanned.rdd.getNumPartitions() == 2 * dp
+
+        wide = spark.range(0, 64, 1, 4 * dp)
+        assert ensure_parallel(wide, "id") is wide
+
+        wider = spark.range(0, 64, 1, 3 * dp)
+        assert ensure_parallel(wider, "id").rdd.getNumPartitions() == 3 * dp
+
+        marked = mark_parallel_balanced(spark.range(0, 8, 1, 1))
+        assert ensure_parallel(marked, "id") is marked
+
+        assert sc.statusTracker().getJobIdsForGroup("ensure_parallel_rule") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_release_all_isolates_queries(spark):
+    """A persisted slot must not answer a later query: q88 persists
+    q80's frontier, so a q80 built after it reads q88's cached relation
+    instead of its own plan unless ``release_all()`` ran in between
+    (the CacheManager substitutes any cached equal plan)."""
+    import re
+
+    import __spark_entry__ as e
+    from ai_pdf_extraction_spark.plans import persist
+
+    def relations(df) -> list[str]:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(
+            re.sub(r"#\d+L?", "", line.strip())
+            for line in plan.splitlines()
+            if "InMemoryRelation" in line
+        )
+
+    persist.release_all()
+    isolated = relations(e.q80_url_frontier_delta(spark, SF_DIR))
+    assert isolated  # q80 persists its collapsed batch
+    e.q88_frontier_politeness(spark, SF_DIR)
+    persist.release_all()
+    assert not persist._SLOTS
+    assert relations(e.q80_url_frontier_delta(spark, SF_DIR)) == isolated
+
+
 def test_contains_map_walks_type_tree(spark):
     """salted_join's hashable-column filter must exclude exactly the
     columns whose TYPE TREE contains a MapType — not any column whose

@@ -119,6 +119,7 @@ def main() -> int:
     os.environ["SPARK_GRAFT_CONTRACT_SF"] = sf_dir
 
     import __spark_entry__ as entrymod
+    from ai_pdf_extraction_spark.plans.persist import release_all
     from ai_pdf_extraction_spark.session import build_session
 
     spark = build_session(app_name="contract-check", master="local[8]", shuffle_partitions=16)
@@ -143,6 +144,8 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        # no query may be answered from another query's persisted slot
+        release_all()
         t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir).toPandas()
