@@ -17,7 +17,11 @@ repartitions, hence the explicit salt (SURVEY.md §4 custom-work (b)).
 
 Partition balance: ``ensure_parallel`` is the one rule for fanning a
 narrow scan out ahead of per-row-heavy work, and
-``mark_parallel_balanced`` the one way to skip it.
+``mark_parallel_balanced`` the one way to skip it. Ahead of a
+bucket-partitioned write the fan-out is ``cluster_by_bucket`` instead:
+each bucket lands in as few tasks as the balance bound allows, so a
+commit writes about one file per bucket rather than one per bucket per
+task.
 """
 
 from __future__ import annotations
@@ -68,6 +72,45 @@ def salt(col: str = "url", n_salts: int = DEFAULT_N_SALTS):
     return F.pmod(
         F.xxhash64(F.col(col), F.lit("salt")), F.lit(n_salts)
     ).cast("int")
+
+
+# Largest slot skew cluster_by_bucket accepts: the busiest partition
+# holds at most this many times the mean number of (bucket, salt) slots.
+MAX_SLOT_SKEW = 1.25
+
+
+def bucket_salts(n_group: int, target: int) -> int:
+    """Smallest salt count ``k`` (1 ≤ k ≤ target) that spreads
+    ``n_group`` buckets × ``k`` salts over ``target`` partitions with
+    slot skew ``ceil(g·k/target) / (g·k/target)`` ≤ ``MAX_SLOT_SKEW``.
+    ``k = target`` always qualifies (every partition gets ``g`` slots)."""
+    for k in range(1, target + 1):
+        slots = n_group * k
+        if -(-slots // target) * target <= MAX_SLOT_SKEW * slots:
+            return k
+    return target
+
+
+def cluster_by_bucket(
+    df: DataFrame, buckets, n_buckets: int, target: int
+) -> DataFrame:
+    """Fan ``df`` (rows of the bucket group ``buckets`` only) out to
+    ``target`` partitions so each bucket lands in ``k`` tasks
+    (:func:`bucket_salts`): a bucket-partitioned write then emits at
+    most ``g·k`` files for a ``g``-bucket group instead of ``g·target``.
+
+    Row -> partition ``rank(bucket in group) + g·salt(url, k)``, mod
+    ``target``, placed directly by ``repartitionById``: no hash of the
+    id, so no two slots collide onto one task unless the skew bound
+    already counts them. The id is a pure function of the url, so a
+    retried task rebuilds the same partitions without the sort a
+    round-robin repartition needs for that."""
+    group = sorted(buckets)
+    k = bucket_salts(len(group), target)
+    bucket = url_bucket(n_buckets=n_buckets)
+    rank = F.array_position(F.array(*map(F.lit, group)), bucket) - 1
+    pid = rank + len(group) * salt(n_salts=k)
+    return df.repartitionById(target, pid.cast("int"))
 
 
 def with_partition_columns(

@@ -16,16 +16,17 @@ Lifecycle parity with the reference's flagship path
 
 from __future__ import annotations
 
+import os
 import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ai_pdf_extraction_spark.operators.extract import extract_udf
 from ai_pdf_extraction_spark.plans.partitioning import (
     DEFAULT_N_BUCKETS,
+    cluster_by_bucket,
     url_bucket,
     url_host,
 )
@@ -105,8 +106,11 @@ def extraction_plan(
     run_id: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
     min_parallelism: int | None = None,
+    buckets=None,
 ) -> DataFrame:
-    """Build the logical plan for one pass.
+    """Build the logical plan for one pass over the bucket group
+    ``buckets`` (default: every bucket; otherwise the plan keeps only
+    that group's rows).
 
     Only ``(url, html)``-derived columns enter the Python worker; all
     metadata columns ride along JVM-side (SURVEY.md §4: project only
@@ -114,14 +118,26 @@ def extraction_plan(
 
     The kernel UDF is CPU-bound, so the scan must yield at least
     ``min_parallelism`` partitions (default 2× default parallelism =
-    ≥2 task waves). A 100 TB crawl arrives as many files and skips
-    this; a small local corpus is one parquet file → one partition →
-    a single-threaded UDF without the explicit repartition.
+    ≥2 task waves). A 100 TB crawl arrives as many files and gets no
+    new Exchange; a small local corpus is one parquet file → one
+    partition → a single-threaded UDF without a fan-out. The fan-out
+    is bucket-clustered (``partitioning.cluster_by_bucket``): each
+    bucket of the group lands in as few tasks as the balance bound
+    allows, so the bucket-partitioned write that follows emits about
+    one file per bucket, not one per bucket per task.
     """
     spark = pages.sparkSession
     target = min_parallelism or spark.sparkContext.defaultParallelism * 2
-    if pages.rdd.getNumPartitions() < target:
-        pages = pages.repartition(target)
+    # Decided on the caller's `pages`, before the group filter: its
+    # `rdd` is memoized, so run_extraction's groups split the input
+    # once per run.
+    narrow = pages.rdd.getNumPartitions() < target
+    if buckets is None:
+        buckets = range(n_buckets)
+    else:
+        pages = pages.filter(url_bucket(n_buckets=n_buckets).isin(list(buckets)))
+    if narrow:
+        pages = cluster_by_bucket(pages, buckets, n_buckets, target)
     # Payload cap + UDF + projection shared verbatim with the streaming
     # twin (reference's ≤2048px image downscale analogue, SURVEY.md
     # §2.2 P10: bound per-doc bytes so one pathological page can't blow
@@ -192,7 +208,6 @@ def run_extraction(
         pages = read_warc(spark, input_path)
     else:
         pages = spark.read.parquet(input_path)
-    plan = extraction_plan(pages, run_id, n_buckets)
 
     group = len(pending) if buckets_per_commit is None else buckets_per_commit
     committed: list[int] = []
@@ -201,25 +216,29 @@ def run_extraction(
         chunk = pending[i : i + group]
         commit_id = table.new_commit_id()
         t0 = time.monotonic()
-        out = plan.filter(F.col("bucket").isin(chunk)).withColumn(
+        out = extraction_plan(pages, run_id, n_buckets, buckets=chunk).withColumn(
             "commit_id", F.lit(commit_id)
         )
         out.write.partitionBy("bucket", "commit_id").mode("append").parquet(
             table.data_dir
         )
         elapsed = time.monotonic() - t0
-        # Metrics computed from the written data (single extra scan of
-        # the small output, never of the input binary column). An
-        # all-empty chunk writes no files at all — commit an empty
-        # watermark so resume still advances past it.
-        try:
-            written = (
-                spark.read.option("basePath", table.data_dir)
-                .parquet(table.data_dir)
-                .filter(F.col("commit_id") == commit_id)
-            )
+        # Metrics computed from this commit's own directories (one
+        # small scan of the output, never of the input binary column,
+        # nor of earlier commits). An all-empty chunk writes no files
+        # at all — commit an empty watermark so resume still advances
+        # past it.
+        dirs = [
+            os.path.join(table.data_dir, f"bucket={b}", f"commit_id={commit_id}")
+            for b in chunk
+        ]
+        written = [d for d in dirs if os.path.isdir(d)]
+        stats = []
+        if written:
             stats = (
-                written.groupBy("bucket")
+                spark.read.option("basePath", table.data_dir)
+                .parquet(*written)
+                .groupBy("bucket")
                 .agg(
                     F.count("*").alias("n_docs"),
                     F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias(
@@ -230,10 +249,6 @@ def run_extraction(
                 )
                 .collect()
             )
-        except AnalysisException as exc:
-            if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-                raise  # real failure, not the empty-chunk case
-            stats = []
         n_docs = sum(r["n_docs"] for r in stats)
         metrics = [
             {

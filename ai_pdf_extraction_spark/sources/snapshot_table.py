@@ -255,9 +255,12 @@ class SnapshotTable:
         """Rewrite all committed data into one commit (the
         small-files maintenance pass — Iceberg's
         ``rewrite_data_files``). Many incremental commits × buckets
-        leave one file per (bucket, commit); after compaction readers
-        scan one commit dir per bucket. Old files stay on disk for
-        time travel until a GC pass removes them."""
+        leave at least one file per (bucket, commit) — one when
+        ``run_extraction`` fanned a narrow input out by bucket, up to
+        one per input task for an input already wide enough to skip the
+        fan-out; after compaction readers scan one commit dir per
+        bucket. Old files stay on disk for time travel until a GC pass
+        removes them."""
         from pyspark.sql import functions as F
 
         old_ids = sorted(self.committed_commit_ids())

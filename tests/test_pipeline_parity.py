@@ -76,6 +76,64 @@ def test_resume_skips_committed_buckets(spark, corpus_dir, tmp_path):
     assert dupes == 0
     assert final.count() == 300
 
+    # Each commit's lineage metrics equal a groupBy("bucket") over that
+    # commit's own rows (the stats read only the commit's directories).
+    actual = {
+        (r["commit_id"], r["bucket"]): (
+            r["n_docs"], r["n_parse_fail"], r["sum_chars"], r["sum_spans"]
+        )
+        for r in final.groupBy("commit_id", "bucket")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum((~F.col("parse_ok")).cast("int")).alias("n_parse_fail"),
+            F.sum("n_chars").alias("sum_chars"),
+            F.sum("n_spans").alias("sum_spans"),
+        )
+        .collect()
+    }
+    recorded = {
+        (snap["commit_id"], m["bucket"]): (
+            m["n_docs"], m["n_parse_fail"], m["sum_chars"], m["sum_spans"]
+        )
+        for snap in table.snapshots()
+        for m in snap["metrics"]
+    }
+    assert len(table.snapshots()) == 4
+    assert recorded == actual
+
+
+def test_commit_writes_one_file_per_bucket(spark, corpus_dir, tmp_path):
+    """A narrow input is fanned out by bucket, so a commit writes one
+    parquet file per bucket directory (a round-robin fan-out wrote one
+    per bucket per task: 8 buckets x 8 tasks), and a single-bucket
+    commit at most k, the bucket's salt count."""
+    import glob
+
+    from ai_pdf_extraction_spark.plans.partitioning import bucket_salts
+    from ai_pdf_extraction_spark.plans.pipeline import run_extraction
+    from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+
+    pages = os.path.join(corpus_dir, "pages.parquet")
+
+    def files(root: str, pattern: str) -> list[str]:
+        return glob.glob(os.path.join(SnapshotTable(root).data_dir, pattern))
+
+    one = str(tmp_path / "one_commit")
+    run_extraction(spark, pages, one, run_id="c", n_buckets=8)
+    per_bucket = sorted(
+        len(files(one, f"bucket={b}/commit_id=*/*.parquet")) for b in range(8)
+    )
+    assert per_bucket == [1] * 8
+
+    many = str(tmp_path / "bucket_commits")
+    run_extraction(spark, pages, many, run_id="g", n_buckets=4, buckets_per_commit=1)
+    k = bucket_salts(1, 2 * spark.sparkContext.defaultParallelism)
+    snaps = SnapshotTable(many).snapshots()
+    assert len(snaps) == 4
+    for snap in snaps:
+        written = files(many, f"bucket=*/commit_id={snap['commit_id']}/*.parquet")
+        assert 1 <= len(written) <= k, (snap["buckets"], len(written), k)
+
 
 def test_salted_host_counts_match_plain_groupby(spark, corpus_dir):
     from ai_pdf_extraction_spark.plans.partitioning import (
@@ -440,3 +498,21 @@ def test_curated_corpus_v5_lm_leg(spark):
     # docs survive v4 (unique text, fine quality) but score tail
     dropped = v4_ids - set(v5)
     assert any(i >= 100 for i in dropped), (v4_ids, v5, standalone)
+
+
+def test_empty_commit_groups_advance_watermark(spark, tmp_path):
+    """A commit group with no rows writes no directory: its stats read
+    nothing (no schema to infer) and it still commits its buckets."""
+    from ai_pdf_extraction_spark.corpus.generate import write_pages_parquet
+    from ai_pdf_extraction_spark.plans.pipeline import run_extraction
+    from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+
+    pages = str(tmp_path / "two.parquet")
+    write_pages_parquet(pages, 2, seed=5)
+    out = str(tmp_path / "sparse")
+    res = run_extraction(spark, pages, out, run_id="s", n_buckets=16, buckets_per_commit=4)
+    assert res["docs"] == 2 and res["committed"] == list(range(16))
+    snaps = SnapshotTable(out).snapshots()
+    assert len(snaps) == 4
+    assert sum(not s["metrics"] for s in snaps) >= 2  # two docs fill ≤ 2 groups
+    assert sum(m["n_docs"] for s in snaps for m in s["metrics"]) == 2

@@ -270,6 +270,55 @@ def test_ensure_parallel_balance_rule(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def test_cluster_by_bucket_fan_out(spark, corpus_dir):
+    """The bucket-clustered fan-out, with no UDF run: the salt count is
+    the smallest that meets the slot-skew bound for every group size, a
+    single-bucket group spreads over all its k salt slots (not one
+    task), and an input already at the target width gets no Exchange."""
+    import math
+
+    from ai_pdf_extraction_spark.plans.partitioning import (
+        MAX_SLOT_SKEW,
+        bucket_salts,
+        cluster_by_bucket,
+        url_bucket,
+    )
+    from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
+
+    def skew(slots: int, target: int) -> float:
+        return math.ceil(slots / target) / (slots / target)
+
+    for target in (8, 16, 64):
+        for g in range(1, 257):
+            k = bucket_salts(g, target)
+            assert 1 <= k <= target
+            assert skew(g * k, target) <= MAX_SLOT_SKEW, (g, target, k)
+            assert k == 1 or skew(g * (k - 1), target) > MAX_SLOT_SKEW
+    assert bucket_salts(16, 8) == 1  # extract_fresh: one task per bucket
+
+    target = 2 * spark.sparkContext.defaultParallelism
+    urls = spark.range(4000).select(
+        F.concat(F.lit("https://h.example/p"), F.col("id").cast("string")).alias("url")
+    )
+    one = urls.filter(url_bucket(n_buckets=4) == 3)
+    sizes = (
+        cluster_by_bucket(one, [3], 4, target)
+        .groupBy(F.spark_partition_id().alias("p"))
+        .count()
+        .collect()
+    )
+    k = bucket_salts(1, target)
+    assert len(sizes) == k >= target / MAX_SLOT_SKEW, (sizes, k)
+
+    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
+    narrow = _plan(extraction_plan(pages, run_id="x", n_buckets=4, buckets=[1]))
+    assert narrow.count("Exchange") == 1 and "RoundRobinPartitioning" not in narrow
+    wide = _plan(
+        extraction_plan(pages, run_id="x", n_buckets=4, min_parallelism=1, buckets=[1])
+    )
+    assert "Exchange" not in wide, wide
+
+
 def test_release_all_isolates_queries(spark):
     """A persisted slot must not answer a later query: q88 persists
     q80's frontier, so a q80 built after it reads q88's cached relation
