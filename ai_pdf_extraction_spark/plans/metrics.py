@@ -8,52 +8,60 @@ manifests are the durable per-partition lineage (north_rule)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
 
+# The per-bucket counters: each commit records them per bucket in its
+# lineage, and batch_status sums them over the table. All are bigint.
+COUNTERS = {
+    "n_docs": "count(*)",
+    "n_parse_fail": "count_if(NOT parse_ok)",
+    "sum_chars": "sum(n_chars)",
+    "sum_spans": "sum(n_spans)",
+}
+
+
+def counters(*names: str) -> list[Column]:
+    """Aggregate expressions for ``names`` (default: every counter)."""
+    return [F.expr(COUNTERS[n]).alias(n) for n in names or COUNTERS]
+
+
+def commit_metrics(written: DataFrame, elapsed: float) -> list[dict]:
+    """One commit's per-bucket lineage metrics over its rows
+    ``written``, which took ``elapsed`` seconds to extract and write."""
+    stats = written.groupBy("bucket").agg(*counters()).collect()
+    n_docs = sum(r["n_docs"] for r in stats)
+    return [
+        {
+            "bucket": int(r["bucket"]),
+            **{n: int(r[n]) for n in COUNTERS},
+            "parse_fail_rate": round(r["n_parse_fail"] / max(r["n_docs"], 1), 6),
+            "commit_elapsed_sec": round(elapsed, 3),
+            "commit_docs_per_sec": round(n_docs / max(elapsed, 1e-9), 3),
+        }
+        for r in stats
+    ]
+
 
 def batch_status(spark: SparkSession, table: SnapshotTable, n_buckets: int) -> dict:
-    """Progress + counters, one small aggregation (A8/A9/A11)."""
+    """Progress + counters, one small aggregation (A8/A9/A11). A table
+    with no live data directory (nothing committed, or only empty
+    commits) reports zero docs without reading."""
     committed = table.committed_buckets()
-    if not committed:
-        return {
-            "progress_pct": 0.0,
-            "buckets_done": 0,
-            "n_buckets": n_buckets,
-            "n_docs": 0,
-            "n_parse_fail": 0,
-        }
-    try:
-        row = (
-            table.read(spark)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias(
-                    "n_parse_fail"
-                ),
-            )
-            .collect()[0]
-        )
-    except AnalysisException as exc:
-        # committed-but-empty table: buckets were committed (watermark
-        # advanced) but an all-empty input wrote zero parquet files —
-        # UNABLE_TO_INFER_SCHEMA must not crash a successful run's
-        # status poll. Any OTHER analysis error (schema drift, corrupt
-        # path) is a real failure and must surface, not read as 0 docs.
-        if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-            raise
-        row = {"n_docs": 0, "n_parse_fail": 0}
+    dirs = table.data_dirs()
+    row = (
+        table.read_dirs(spark, dirs).agg(*counters("n_docs", "n_parse_fail")).first()
+        if dirs
+        else {"n_docs": 0, "n_parse_fail": 0}
+    )
     return {
         "progress_pct": round(100.0 * len(committed) / n_buckets, 2),
         "buckets_done": len(committed),
         "n_buckets": n_buckets,
-        # `or 0`: zero committed ROWS with orphaned files present reads
-        # as an empty frame where sum() is NULL, not 0
-        "n_docs": int(row["n_docs"] or 0),
-        "n_parse_fail": int(row["n_parse_fail"] or 0),
+        "n_docs": int(row["n_docs"]),
+        "n_parse_fail": int(row["n_parse_fail"]),
     }
 
 
@@ -63,26 +71,24 @@ def per_host_metrics(output: DataFrame) -> DataFrame:
     partition of the data), then combines, so a hot host never lands
     on one reducer in the first shuffle."""
     partial = output.groupBy("host", "bucket").agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("fails"),
-        F.sum("n_spans").alias("spans"),
+        *counters("n_docs", "n_parse_fail", "sum_spans")
     )
     return partial.groupBy("host").agg(
-        F.sum("n").alias("n_docs"),
-        F.round(F.sum("fails") / F.sum("n"), 6).alias("parse_fail_rate"),
-        F.sum("spans").alias("n_spans"),
+        F.sum("n_docs").alias("n_docs"),
+        F.round(F.sum("n_parse_fail") / F.sum("n_docs"), 6).alias("parse_fail_rate"),
+        F.sum("sum_spans").alias("n_spans"),
     )
 
 
 def lineage_df(spark: SparkSession, table: SnapshotTable) -> DataFrame:
     """Per-partition lineage rows from the snapshot chain as a
     DataFrame (run_id, snapshot, bucket, counters, throughput)."""
-    schema = (
-        "snapshot_id string, parent_id string, run_id string, bucket int, "
-        "n_docs long, n_parse_fail long, parse_fail_rate double, "
-        "sum_chars long, sum_spans long, commit_elapsed_sec double, "
-        "commit_docs_per_sec double"
+    fields = (
+        ["snapshot_id string", "parent_id string", "run_id string", "bucket int"]
+        + [f"{n} long" for n in COUNTERS]
+        + ["parse_fail_rate double", "commit_elapsed_sec double",
+           "commit_docs_per_sec double"]
     )
-    fields = [f.split(" ")[0] for f in schema.split(", ")]
-    rows = [tuple(r.get(f) for f in fields) for r in table.lineage()]
-    return spark.createDataFrame(rows, schema)
+    names = [f.split(" ")[0] for f in fields]
+    rows = [tuple(r.get(n) for n in names) for r in table.lineage()]
+    return spark.createDataFrame(rows, ", ".join(fields))

@@ -16,21 +16,23 @@ Lifecycle parity with the reference's flagship path
 
 from __future__ import annotations
 
-import os
-import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.extract import extract_udf
+from ai_pdf_extraction_spark.plans.metrics import commit_metrics
 from ai_pdf_extraction_spark.plans.partitioning import (
     DEFAULT_N_BUCKETS,
     cluster_by_bucket,
     url_bucket,
     url_host,
 )
-from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+from ai_pdf_extraction_spark.sources.snapshot_table import (
+    SnapshotTable,
+    is_catalog_name,
+)
 
 # Per-doc byte budget into the Python worker (P10); generous — the
 # synthetic corpus max is ~50 KB, real CC pages p99 ≈ 500 KB.
@@ -164,21 +166,18 @@ def run_extraction(
     bound recomputation after preemption).
 
     ``output_root`` is a PATH: this chunked-resume writer drives the
-    parquet+manifest ``SnapshotTable`` (its commit-id data layout and
-    manifest chain). An Iceberg deployment instead drives
+    parquet+manifest ``SnapshotTable`` (``write`` per commit group,
+    then ``commit``). An Iceberg deployment instead drives
     ``project_extraction`` + ``make_output_table(...).append`` per
     bucket group — the shared append/read/committed_buckets interface
     (see the seam note in ``sources/snapshot_table.py``). A
-    catalog-style name here fails loud rather than creating a local
-    directory literally named ``catalog.ns.table``. The guard matches
-    dotted word-char identifiers of ANY depth (``ns.table``,
-    ``cat.ns.table``, ``cat.ns1.ns2.table`` — Iceberg namespaces nest,
-    review r6) — a bare ``out.v2`` is inherently ambiguous with
-    ``ns.table`` so it still fails loud, but the error names the escape
-    and ``./out.v2`` (any path with a separator or non-identifier char)
-    always reads as a path (advice r6).
+    catalog-style name (``snapshot_table.is_catalog_name``, the rule
+    ``make_output_table`` routes by) fails loud here rather than
+    creating a local directory literally named ``catalog.ns.table``; a
+    bare ``out.v2`` is inherently ambiguous with ``ns.table``, so the
+    error names the ``./`` escape (advice r6).
     """
-    if re.fullmatch(r"\w+(\.\w+)+", output_root):
+    if is_catalog_name(output_root):
         raise ValueError(
             f"output_root {output_root!r} looks like a catalog table name; "
             "run_extraction writes the parquet SnapshotTable layout — for "
@@ -214,55 +213,19 @@ def run_extraction(
     total_docs = 0
     for i in range(0, len(pending), group):
         chunk = pending[i : i + group]
-        commit_id = table.new_commit_id()
         t0 = time.monotonic()
-        out = extraction_plan(pages, run_id, n_buckets, buckets=chunk).withColumn(
-            "commit_id", F.lit(commit_id)
-        )
-        out.write.partitionBy("bucket", "commit_id").mode("append").parquet(
-            table.data_dir
-        )
+        plan = extraction_plan(pages, run_id, n_buckets, buckets=chunk)
+        commit_id = table.write(plan)
         elapsed = time.monotonic() - t0
         # Metrics computed from this commit's own directories (one
         # small scan of the output, never of the input binary column,
         # nor of earlier commits). An all-empty chunk writes no files
         # at all — commit an empty watermark so resume still advances
         # past it.
-        dirs = [
-            os.path.join(table.data_dir, f"bucket={b}", f"commit_id={commit_id}")
-            for b in chunk
-        ]
-        written = [d for d in dirs if os.path.isdir(d)]
-        stats = []
-        if written:
-            stats = (
-                spark.read.option("basePath", table.data_dir)
-                .parquet(*written)
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias(
-                        "n_parse_fail"
-                    ),
-                    F.sum("n_chars").alias("sum_chars"),
-                    F.sum("n_spans").alias("sum_spans"),
-                )
-                .collect()
-            )
-        n_docs = sum(r["n_docs"] for r in stats)
-        metrics = [
-            {
-                "bucket": int(r["bucket"]),
-                "n_docs": int(r["n_docs"]),
-                "n_parse_fail": int(r["n_parse_fail"]),
-                "parse_fail_rate": round(r["n_parse_fail"] / max(r["n_docs"], 1), 6),
-                "sum_chars": int(r["sum_chars"]),
-                "sum_spans": int(r["sum_spans"]),
-                "commit_elapsed_sec": round(elapsed, 3),
-                "commit_docs_per_sec": round(n_docs / max(elapsed, 1e-9), 3),
-            }
-            for r in stats
-        ]
+        written = table.data_dirs({commit_id: chunk})
+        metrics = (
+            commit_metrics(table.read_dirs(spark, written), elapsed) if written else []
+        )
         # Buckets with zero rows still count as committed (watermark
         # must advance past empty partitions).
         table.commit(
@@ -270,7 +233,7 @@ def run_extraction(
             properties={"n_buckets": n_buckets},
         )
         committed.extend(chunk)
-        total_docs += n_docs
+        total_docs += sum(m["n_docs"] for m in metrics)
     return {
         "run_id": run_id,
         "committed": committed,

@@ -114,6 +114,7 @@ def profile_corpus(spark: SparkSession, input_path: str, max_docs: int = 64) -> 
     """Run the kernels over a representative sample; emit the corpus
     profile and the (fixed) output schema as a discovery report."""
     from ai_pdf_extraction_spark.operators.extract import EXTRACTION_TYPE
+    from ai_pdf_extraction_spark.plans.metrics import counters
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
     pages = spark.read.parquet(input_path)
@@ -126,7 +127,7 @@ def profile_corpus(spark: SparkSession, input_path: str, max_docs: int = 64) -> 
         F.count("*").alias("n_sampled"),
         F.round(F.avg("n_chars"), 1).alias("avg_chars"),
         F.round(F.avg("n_spans"), 2).alias("avg_spans"),
-        F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("n_parse_fail"),
+        *counters("n_parse_fail"),
     ).collect()[0]
     ctype_mix = {
         r["content_type"]: r["n"]

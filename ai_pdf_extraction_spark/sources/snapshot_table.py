@@ -13,8 +13,15 @@ no Iceberg jar (SURVEY.md §7.4), so this module implements the same
   the buckets committed, and per-bucket metrics — the snapshot chain
   IS the lineage (reference's audit trail analogue,
   ``models_db.py:288-306``);
-* readers only trust buckets reachable from the manifest chain, so a
-  killed run leaves no visible partial state and resume is exact.
+* :meth:`SnapshotTable.write` is the single writer: it puts a frame
+  under a fresh commit id (``data/bucket=<b>/commit_id=<id>/``) and
+  returns the id, and nothing else in the package builds those paths;
+* :func:`visible` is the single visibility rule: over a chain prefix,
+  a commit is live from its snapshot until a later one ``replaces`` it
+  (compaction), and data under a commit id no manifest names (a killed
+  run) is never visible. Readers scan exactly the existing directories
+  of the live (bucket, commit) pairs, so resume is exact and orphaned
+  or superseded files are never even listed.
 
 On a real cluster, :func:`make_output_table` routes through a real
 Iceberg catalog when the runtime jar is present (see
@@ -43,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,13 +61,66 @@ class SnapshotConflictError(RuntimeError):
     loser gets this instead of silently overwriting the winner."""
 
 
-class SnapshotTable:
+def is_catalog_name(root: str) -> bool:
+    """Whether ``root`` names a catalog table (``ns.table``,
+    ``cat.ns1.ns2.table``: dotted word-char identifiers of any depth)
+    rather than a path. ``out-v2.final``, ``.hidden`` and ``a..b`` are
+    paths; a bare ``out.v2`` reads as a table, so prefix ``./``."""
+    return re.fullmatch(r"\w+(\.\w+)+", root) is not None
+
+
+def visible(snapshots: list[dict]) -> tuple[set[int], dict[str, list[int]]]:
+    """The visibility rule over a chain prefix (oldest first): the
+    committed buckets, and each live commit id with the buckets its
+    snapshot committed. A commit is live from its snapshot until a
+    later snapshot of the prefix ``replaces`` it. The chain is linear
+    (``commit`` claims sequence numbers exclusively), so the prefix up
+    to a snapshot is exactly its ancestry."""
+    buckets: set[int] = set()
+    live: dict[str, list[int]] = {}
+    for snap in snapshots:
+        buckets.update(snap["buckets"])
+        for cid in snap.get("replaces", []):
+            live.pop(cid, None)
+        if snap.get("commit_id"):
+            live[snap["commit_id"]] = snap["buckets"]
+    return buckets, live
+
+
+class _SnapshotChain:
+    """What both table implementations derive from ``snapshots()``."""
+
+    def snapshots(self) -> list[dict]:
+        raise NotImplementedError
+
+    def current_snapshot(self) -> dict | None:
+        snaps = self.snapshots()
+        return snaps[-1] if snaps else None
+
+    def committed_buckets(self) -> set[int]:
+        return visible(self.snapshots())[0]
+
+    def lineage(self) -> list[dict]:
+        """Flattened per-partition lineage rows (north_rule)."""
+        return [
+            {
+                "snapshot_id": snap["snapshot_id"],
+                "parent_id": snap["parent_id"],
+                "run_id": snap["run_id"],
+                **m,
+            }
+            for snap in self.snapshots()
+            for m in snap["metrics"]
+        ]
+
+
+class SnapshotTable(_SnapshotChain):
     def __init__(self, root: str) -> None:
         # LAZY directory creation (review r5): constructing a handle
         # must not mkdir as a side effect — make_output_table probes
         # routing by constructing one, and an Iceberg-style name
         # ('graft.db.extract_test') left junk dirs in the cwd. Dirs
-        # materialize on first read/write via _ensure_dirs().
+        # materialize on first write via _ensure_dirs().
         #
         # ABSOLUTE root (review r6): a relative root is resolved by
         # Python (manifests, os.listdir) against the PROCESS cwd but by
@@ -77,26 +138,14 @@ class SnapshotTable:
 
     # -- snapshot chain --------------------------------------------------
 
-    def _manifest_paths(self) -> list[str]:
+    def snapshots(self) -> list[dict]:
         if not os.path.isdir(self.manifest_dir):
             return []
-        names = sorted(
-            n for n in os.listdir(self.manifest_dir)
-            if n.startswith("snapshot-") and n.endswith(".json")
-        )
-        return [os.path.join(self.manifest_dir, n) for n in names]
-
-    def snapshots(self) -> list[dict]:
-        return [json.load(open(p)) for p in self._manifest_paths()]
-
-    def current_snapshot(self) -> dict | None:
-        snaps = self.snapshots()
-        return snaps[-1] if snaps else None
-
-    def committed_buckets(self) -> set[int]:
-        out: set[int] = set()
-        for snap in self.snapshots():
-            out.update(snap["buckets"])
+        out = []
+        for n in sorted(os.listdir(self.manifest_dir)):
+            if n.startswith("snapshot-") and n.endswith(".json"):
+                with open(os.path.join(self.manifest_dir, n)) as fh:
+                    out.append(json.load(fh))
         return out
 
     def table_property(self, key: str):
@@ -111,23 +160,29 @@ class SnapshotTable:
         return value
 
     def committed_commit_ids(self) -> set[str]:
-        """Commit ids reachable from the manifest chain, minus commits
-        superseded by a compaction. Data written under a commit id that
-        never got a manifest (crashed run) is orphaned and invisible —
-        Iceberg's uncommitted-file semantics."""
-        live: set[str] = set()
-        replaced: set[str] = set()
-        for snap in self.snapshots():
-            if snap.get("commit_id"):
-                live.add(snap["commit_id"])
-            replaced.update(snap.get("replaces", []))
-        return live - replaced
+        """Live commit ids (see :func:`visible`)."""
+        return set(visible(self.snapshots())[1])
 
     # -- write path --------------------------------------------------------
 
     def new_commit_id(self) -> str:
         self._ensure_dirs()
         return uuid.uuid4().hex
+
+    def write(self, df: DataFrame) -> str:
+        """Write ``df`` (carrying a ``bucket`` column) under a fresh
+        commit id and return the id. The rows stay invisible until
+        :meth:`commit` publishes a snapshot naming that id."""
+        from pyspark.sql import functions as F
+
+        commit_id = self.new_commit_id()
+        (
+            df.withColumn("commit_id", F.lit(commit_id))
+            .write.partitionBy("bucket", "commit_id")
+            .mode("append")
+            .parquet(self.data_dir)
+        )
+        return commit_id
 
     def append(
         self,
@@ -138,15 +193,7 @@ class SnapshotTable:
     ) -> dict:
         """Write ``df`` (must carry a ``bucket`` column restricted to
         ``buckets``) and commit a snapshot manifest atomically."""
-        from pyspark.sql import functions as F
-
-        commit_id = self.new_commit_id()
-        (
-            df.withColumn("commit_id", F.lit(commit_id))
-            .write.partitionBy("bucket", "commit_id")
-            .mode("append")
-            .parquet(self.data_dir)
-        )
+        commit_id = self.write(df)
         return self.commit(buckets, run_id, metrics, commit_id=commit_id)
 
     def commit(
@@ -206,89 +253,76 @@ class SnapshotTable:
 
     # -- read path -----------------------------------------------------
 
+    def data_dirs(self, commits: dict[str, list[int]] | None = None) -> list[str]:
+        """The existing data directories of ``commits`` (commit id →
+        buckets; default: the live ones). A bucket the commit wrote no
+        rows to has no directory."""
+        if commits is None:
+            commits = visible(self.snapshots())[1]
+        paths = (
+            os.path.join(self.data_dir, f"bucket={b}", f"commit_id={cid}")
+            for cid, buckets in commits.items()
+            for b in buckets
+        )
+        return [p for p in paths if os.path.isdir(p)]
+
+    def read_dirs(
+        self, spark: SparkSession, dirs: list[str], merge_schema: bool = False
+    ) -> DataFrame:
+        """Read exactly ``dirs`` (from :meth:`data_dirs`), with
+        ``bucket`` and ``commit_id`` as partition columns. No directory
+        raises Spark's ``UNABLE_TO_INFER_SCHEMA``, like an empty table."""
+        reader = spark.read.option("basePath", self.data_dir)
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*dirs)
+
     def read(self, spark: SparkSession, merge_schema: bool = False) -> DataFrame:
-        """Read only snapshot-committed data. ``(bucket, commit_id)``
-        are hive partition columns, so both filters prune partitions —
-        uncommitted (orphaned) commit dirs are never scanned.
+        """Read only snapshot-committed data: the live commits'
+        directories, nothing else.
 
         ``merge_schema=True`` unions the schemas of all commits —
         needed after the output schema evolves (a column added between
         runs appears as null in pre-evolution commits, Iceberg
         add-column semantics). Off by default: schema merging reads
         every file footer."""
-        self._ensure_dirs()  # fresh-path read keeps the empty-table shape
-        reader = spark.read.option("basePath", self.data_dir)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(self.data_dir)
-        return df.filter(
-            df.bucket.isin(sorted(self.committed_buckets()))
-            & df.commit_id.isin(sorted(self.committed_commit_ids()))
-        )
+        return self.read_dirs(spark, self.data_dirs(), merge_schema)
 
     def read_at(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
-        """Time travel: read the table as of ``snapshot_id`` — only
-        data committed by that snapshot's ancestor chain is visible,
-        minus commits a chain-ancestor compaction superseded (Iceberg
-        ``VERSION AS OF`` semantics)."""
-        by_id = {s["snapshot_id"]: s for s in self.snapshots()}
-        if snapshot_id not in by_id:
+        """Time travel: read the table as of ``snapshot_id`` — what
+        :func:`visible` leaves live over the chain up to and including
+        that snapshot (Iceberg ``VERSION AS OF`` semantics)."""
+        snaps = self.snapshots()
+        ids = [s["snapshot_id"] for s in snaps]
+        if snapshot_id not in ids:
             raise KeyError(f"unknown snapshot {snapshot_id!r}")
-        commit_ids: set[str] = set()
-        replaced: set[str] = set()
-        buckets: set[int] = set()
-        cur: str | None = snapshot_id
-        while cur is not None:
-            snap = by_id[cur]
-            if snap.get("commit_id"):
-                commit_ids.add(snap["commit_id"])
-            replaced.update(snap.get("replaces", []))
-            buckets.update(snap["buckets"])
-            cur = snap["parent_id"]
-        df = spark.read.option("basePath", self.data_dir).parquet(self.data_dir)
-        return df.filter(
-            df.bucket.isin(sorted(buckets))
-            & df.commit_id.isin(sorted(commit_ids - replaced))
-        )
+        live = visible(snaps[: ids.index(snapshot_id) + 1])[1]
+        return self.read_dirs(spark, self.data_dirs(live))
 
     def compact(self, spark: SparkSession) -> dict:
         """Rewrite all committed data into one commit (the
         small-files maintenance pass — Iceberg's
-        ``rewrite_data_files``). Many incremental commits × buckets
-        leave at least one file per (bucket, commit) — one when
-        ``run_extraction`` fanned a narrow input out by bucket, up to
-        one per input task for an input already wide enough to skip the
-        fan-out; after compaction readers scan one commit dir per
-        bucket. Old files stay on disk for time travel until a GC pass
-        removes them."""
+        ``rewrite_data_files``) that holds one parquet file per bucket.
+        Rows are placed by the bucket's rank among the committed
+        buckets with ``repartitionById`` (``cluster_by_bucket`` at one
+        salt): one task per bucket, so no two buckets share a task by
+        hash collision. Old files stay on disk for time travel until
+        :meth:`expire_superseded` removes them."""
         from pyspark.sql import functions as F
 
-        old_ids = sorted(self.committed_commit_ids())
-        if not old_ids:
+        buckets, live = visible(self.snapshots())
+        dirs = self.data_dirs(live)
+        if not dirs:
             return {"compacted": 0, "replaces": []}
-        df = self.read(spark).drop("commit_id")
-        new_id = self.new_commit_id()
-        (
-            df.withColumn("commit_id", F.lit(new_id))
-            .repartition("bucket")
-            .write.partitionBy("bucket", "commit_id")
-            .mode("append")
-            .parquet(self.data_dir)
-        )
+        group = sorted(buckets)
+        rank = F.array_position(F.array(*map(F.lit, group)), F.col("bucket")) - 1
+        df = self.read_dirs(spark, dirs).drop("commit_id")
+        new_id = self.write(df.repartitionById(len(group), rank.cast("int")))
         # row count from the freshly written commit's parquet metadata —
         # a pre-write df.count() would re-read every payload twice
-        n = (
-            spark.read.option("basePath", self.data_dir)
-            .parquet(self.data_dir)
-            .filter(F.col("commit_id") == new_id)
-            .count()
-        )
-        self.commit(
-            sorted(self.committed_buckets()),
-            run_id="compaction",
-            commit_id=new_id,
-            replaces=old_ids,
-        )
+        n = self.read_dirs(spark, self.data_dirs({new_id: group})).count()
+        old_ids = sorted(live)
+        self.commit(group, run_id="compaction", commit_id=new_id, replaces=old_ids)
         return {"compacted": n, "replaces": old_ids, "commit_id": new_id}
 
     def expire_superseded(self) -> list[str]:
@@ -298,38 +332,20 @@ class SnapshotTable:
         call only once older snapshots are out of retention."""
         import shutil
 
-        live = self.committed_commit_ids()
-        replaced: set[str] = set()
-        for snap in self.snapshots():
-            replaced.update(snap.get("replaces", []))
-        removed: list[str] = []
-        if not os.path.isdir(self.data_dir):  # never-written table
-            return removed
-        for cid in sorted(replaced - live):
-            for bucket_dir in os.listdir(self.data_dir):
-                victim = os.path.join(self.data_dir, bucket_dir, f"commit_id={cid}")
-                if os.path.isdir(victim):
-                    shutil.rmtree(victim)
-                    removed.append(victim)
+        snaps = self.snapshots()
+        live = visible(snaps)[1]
+        superseded = {
+            s["commit_id"]: s["buckets"]
+            for s in snaps
+            if s.get("commit_id") and s["commit_id"] not in live
+        }
+        removed = self.data_dirs(superseded)
+        for victim in removed:
+            shutil.rmtree(victim)
         return removed
 
-    def lineage(self) -> list[dict]:
-        """Flattened per-partition lineage rows (north_rule)."""
-        rows = []
-        for snap in self.snapshots():
-            for m in snap["metrics"]:
-                rows.append(
-                    {
-                        "snapshot_id": snap["snapshot_id"],
-                        "parent_id": snap["parent_id"],
-                        "run_id": snap["run_id"],
-                        **m,
-                    }
-                )
-        return rows
 
-
-class IcebergSnapshotTable:
+class IcebergSnapshotTable(_SnapshotChain):
     """The SnapshotTable interface over a REAL Iceberg catalog table
     (see the module docstring's mapping table). Commit bookkeeping
     (buckets, run_id, metrics) rides each write's snapshot summary via
@@ -379,16 +395,6 @@ class IcebergSnapshotTable:
             )
         return out
 
-    def current_snapshot(self) -> dict | None:
-        snaps = self.snapshots()
-        return snaps[-1] if snaps else None
-
-    def committed_buckets(self) -> set[int]:
-        out: set[int] = set()
-        for snap in self.snapshots():
-            out.update(snap["buckets"])
-        return out
-
     def table_property(self, key: str):
         rows = self.spark.sql(f"show tblproperties {self.name}").collect()
         props = {r["key"]: r["value"] for r in rows}
@@ -436,37 +442,22 @@ class IcebergSnapshotTable:
             f"select * from {self.name} version as of {snapshot_id}"
         )
 
-    def lineage(self) -> list[dict]:
-        rows = []
-        for snap in self.snapshots():
-            for m in snap["metrics"]:
-                rows.append(
-                    {
-                        "snapshot_id": snap["snapshot_id"],
-                        "parent_id": snap["parent_id"],
-                        "run_id": snap["run_id"],
-                        **m,
-                    }
-                )
-        return rows
-
 
 def make_output_table(spark: SparkSession, root: str):
     """The output-table seam: an Iceberg table when the session has the
     catalog loaded AND ``root`` names a catalog table
-    (``catalog.namespace.table`` — no path separators), else the
+    (:func:`is_catalog_name`), else the
     parquet+manifest ``SnapshotTable``. The SHARED interface is
     append/read/read_at/committed_buckets/current_snapshot — a
     deployment writes via ``project_extraction`` + ``append`` per
     bucket group in either mode. ``plans.pipeline.run_extraction``'s
     chunked-resume writer is parquet-layout-specific by design (it
-    manages commit-id data dirs and the manifest chain directly) and
+    drives ``SnapshotTable.write`` and ``commit`` separately) and
     rejects catalog names loudly; flipping IT to Iceberg means
     swapping its write loop for ``append`` calls, not a table-name
     change (review r5 corrected the earlier overstated claim here)."""
     from ai_pdf_extraction_spark.session import iceberg_available
 
-    looks_like_table = "/" not in root and "\\" not in root and root.count(".") >= 1
-    if looks_like_table and iceberg_available(spark):
+    if is_catalog_name(root) and iceberg_available(spark):
         return IcebergSnapshotTable(spark, root)
     return SnapshotTable(root)

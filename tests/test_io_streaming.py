@@ -316,14 +316,39 @@ def test_resume_rejects_different_n_buckets(spark, tmp_path, corpus_dir):
 
 def test_batch_status_on_committed_empty_table(spark, tmp_path):
     """A committed-but-empty table (all-empty input shard) must report
-    zero docs, not crash with UNABLE_TO_INFER_SCHEMA."""
+    zero docs, not crash with UNABLE_TO_INFER_SCHEMA — also beside an
+    orphaned write (rows under a commit id no manifest names)."""
     from ai_pdf_extraction_spark.plans.metrics import batch_status
     from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
 
     table = SnapshotTable(str(tmp_path / "empty_tbl"))
     table.commit([0, 1], run_id="r1", commit_id=table.new_commit_id())
+    table.write(
+        spark.createDataFrame(
+            [("u1", 0, False), ("u2", 1, True)],
+            "url string, bucket int, parse_ok boolean",
+        )
+    )
     status = batch_status(spark, table, n_buckets=4)
     assert status["n_docs"] == 0 and status["buckets_done"] == 2
+    assert status["n_parse_fail"] == 0
+
+
+def test_snapshots_close_manifest_files(tmp_path):
+    """Reading the chain closes every manifest it opens."""
+    import gc
+    import warnings
+
+    from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+
+    table = SnapshotTable(str(tmp_path / "chain"))
+    for b in range(3):
+        table.commit([b], run_id=f"r{b}")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert len(table.snapshots()) == 3
+        gc.collect()
+    assert not [w for w in caught if issubclass(w.category, ResourceWarning)]
 
 
 def test_warc_roundtrip_and_extraction(spark, tmp_path):

@@ -281,13 +281,18 @@ def test_compaction_preserves_data_and_time_travel(spark, corpus_dir, tmp_path):
     )
     table = SnapshotTable(out_root)
     before = {r["url"]: r["extracted_text"] for r in table.read(spark).collect()}
-    files_before = len(glob.glob(os.path.join(table.data_dir, "**", "*.parquet"),
-                                 recursive=True))
     pre_snap = table.current_snapshot()["snapshot_id"]
 
     result = table.compact(spark)
     assert result["compacted"] == 300
     assert len(result["replaces"]) == 4
+    # rows placed by bucket rank: one task, so one file, per bucket
+    new_dirs = glob.glob(
+        os.path.join(table.data_dir, "*", f"commit_id={result['commit_id']}")
+    )
+    assert len(new_dirs) == 4
+    for d in new_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
     # live read: identical rows, one commit dir per bucket
     after_df = table.read(spark)
@@ -306,6 +311,39 @@ def test_compaction_preserves_data_and_time_travel(spark, corpus_dir, tmp_path):
     result2 = table.compact(spark)
     assert result2["replaces"] == [result["commit_id"]]
     assert table.read(spark).count() == 300
+
+
+def test_orphan_and_superseded_data_stay_invisible(spark, tmp_path):
+    """After two commits, a compaction and a crashed write (data under a
+    commit id no manifest names), readers list only the live commit's
+    files and count only committed rows."""
+    from ai_pdf_extraction_spark.plans.metrics import batch_status
+    from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+
+    def rows(lo: int, hi: int, first: int, n: int):
+        """Urls lo..hi-1 over buckets first..first+n-1."""
+        return spark.range(lo, hi).select(
+            F.col("id").cast("string").alias("url"),
+            (F.col("id") % 3 == 0).alias("parse_ok"),
+            (first + F.col("id") % n).cast("int").alias("bucket"),
+        )
+
+    table = SnapshotTable(str(tmp_path / "orphans"))
+    table.append(rows(0, 40, 0, 2), buckets=[0, 1], run_id="a")
+    table.append(rows(40, 100, 2, 2), buckets=[2, 3], run_id="b")
+    live_id = table.compact(spark)["commit_id"]
+    orphan_id = table.write(rows(100, 1000, 0, 4))
+
+    assert table.committed_commit_ids() == {live_id}
+    df = table.read(spark)
+    files = df.inputFiles()
+    assert len(files) == 4
+    assert all(f"/commit_id={live_id}/" in f for f in files), files
+    assert orphan_id not in {r["commit_id"] for r in df.select("commit_id").collect()}
+    assert df.count() == 100
+    status = batch_status(spark, table, n_buckets=4)
+    assert status["n_docs"] == 100 and status["buckets_done"] == 4
+    assert status["n_parse_fail"] == sum(1 for i in range(100) if i % 3)
 
 
 def test_salted_join_matches_plain_join(spark, corpus_dir):

@@ -406,6 +406,7 @@ def test_catalog_name_guard_accepts_dotted_relative_paths(
     import pytest
 
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction
+    from ai_pdf_extraction_spark.sources.snapshot_table import is_catalog_name
 
     for bad in (
         "graft.db.tbl",
@@ -413,8 +414,12 @@ def test_catalog_name_guard_accepts_dotted_relative_paths(
         "out.v2",
         "graft.ns1.ns2.extractions",  # nested Iceberg namespace (r6 review)
     ):
+        assert is_catalog_name(bad)
         with pytest.raises(ValueError, match="prefix './'"):
             run_extraction(spark, "x.parquet", bad, run_id="g")
+    # make_output_table routes by the same rule: these are paths
+    for path in ("out-v2.final", ".hidden", "a..b", "./out.v2", "dir/ns.table"):
+        assert not is_catalog_name(path), path
 
     monkeypatch.chdir(tmp_path)
     res = run_extraction(
