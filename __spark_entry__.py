@@ -4497,7 +4497,7 @@ def _pq_sql(codebooks: list, k: int = 5) -> str:
     """q56 oracle: the SAME trained codebook literals as the Spark
     plan — per-subspace distance arrays double as the encode argmin
     (list_position first-match, the ivf rule) and the query-side ADC
-    lookup tables, exactly like ``_slice_d2_array`` on the Spark
+    lookup tables, exactly like ``_sql_d2_array`` on the Spark
     side."""
     m, sub = len(codebooks), len(codebooks[0][0])
 

@@ -22,10 +22,9 @@ operators   Spark operators: extraction UDFs, dedup family, similarity
 sources     table loaders + Iceberg-or-parquet sink abstraction.
 functions   scalar normalizers (currency/date/number/bool/percentage)
             and the validation-rule → Column compiler.
-plans       end-to-end pipeline, partitioning/salting, checkpoint,
-            metrics.
-streaming   incremental/resumable-batch semantics (the reference is
-            not a streaming system — SURVEY.md §2.9).
+plans       end-to-end pipeline (incremental by resumable batch: a
+            per-bucket snapshot watermark, SURVEY.md §2.9),
+            partitioning/salting, checkpoint, metrics.
 """
 
 __version__ = "0.1.0"

@@ -73,10 +73,6 @@ def _sentence(rng: random.Random, vocab: list[str], n_words: int) -> str:
     return " ".join(words) + "."
 
 
-def _paragraph(rng: random.Random, vocab: list[str]) -> str:
-    return " ".join(_sentence(rng, vocab, rng.randint(6, 14)) for _ in range(rng.randint(2, 5)))
-
-
 def _paragraph_html(rng: random.Random, vocab: list[str]) -> str:
     """Content paragraph with realistic inline markup: occasional short
     inline links (low link ratio — must still be kept), emphasis tags,

@@ -14,9 +14,9 @@ two very different-scale phases:
 2. **the merge loop** — operates ONLY on that type table. Each round
    re-counts adjacent symbol pairs over ~10^5 rows; distributing it
    would shuffle kilobytes per round. It stays driver-side in the
-   shared kernel (``kernels.bpe.train_bpe``), which also makes the
-   distributed trainer bit-identical to the committed table by
-   construction.
+   shared kernel (``kernels.bpe.train_bpe``): fed
+   :func:`word_freq_table`'s rows, it reproduces the committed table
+   bit-identically (pinned in pytest).
 
 ``bpe_pair_counts`` is the round-0 pair count as a PURE RELATIONAL
 plan (character bigrams of the word-freq table, weighted by word
@@ -99,43 +99,3 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym")
     )
     return counted.withColumn("rnk", F.row_number().over(w).cast("long"))
-
-
-def train_bpe_distributed(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    min_freq: int = 1,
-    max_word_types: int = 2_000_000,
-) -> list[tuple[str, str]]:
-    """Full BPE training with the corpus pass distributed: Spark
-    aggregates the word-frequency table, the shared kernel runs the
-    merge loop over it. Over the same corpus this reproduces
-    ``tools/train_bpe.py``'s committed table EXACTLY (pinned in
-    pytest) — the driver-side trainer is the oracle twin.
-
-    The collect is bounded by construction: word TYPES, not tokens
-    (and ``max_word_types`` fails loud — the all-pairs-guard
-    discipline — instead of silently OOMing the driver; raise
-    ``min_freq`` to shrink the type table, the subword-nmt knob).
-
-    The type table is persisted across the guard probe and the
-    collect: unlike ``dedup._guard_all_pairs`` (where ``limit`` pushes
-    into the source scan and short-circuits), a limit ON TOP OF the
-    aggregation only emits rows after the full corpus pass — without
-    the persist the probe and the collect would each run the one
-    corpus-scale pass, doubling the only expensive job here."""
-    freqs_df = word_freq_table(docs, text_col, min_freq).persist()
-    try:
-        probe = freqs_df.limit(max_word_types + 1).count()
-        if probe > max_word_types:
-            raise ValueError(
-                f"word-type table exceeds max_word_types={max_word_types}; "
-                "raise min_freq (subword-nmt --min-frequency) or the cap"
-            )
-        from ai_pdf_extraction_spark.kernels.bpe import train_bpe
-
-        word_freqs = {r["word"]: r["freq"] for r in freqs_df.collect()}
-    finally:
-        freqs_df.unpersist()
-    return train_bpe(word_freqs, n_merges)

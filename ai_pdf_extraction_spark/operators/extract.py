@@ -15,7 +15,6 @@ that Python doesn't need.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -111,9 +110,3 @@ def extract_udf(html: pd.Series) -> pd.DataFrame:
             "n_pages": n_pages,
         }
     )
-
-
-def with_extraction(df, html_col: str = "html", out_col: str = "extraction"):
-    """Attach the extraction struct column. Keeps the UDF input narrow
-    (Catalyst prunes everything else out of the Python transfer)."""
-    return df.withColumn(out_col, extract_udf(F.col(html_col)))

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
-Media columns are ``binary`` + a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched
+Media columns are ``binary`` + a typed metadata struct; probe / decode /
+resize / frame-sample run as Arrow-batched
 ``mapInPandas`` stages. Header probes (PNG/JPEG/BMP/WebP dimensions,
 WAV/MP4 duration) and wav (8/16/24/32-bit PCM + 32/64-bit
 IEEE-float) / bmp / PNG (every
@@ -17,8 +17,7 @@ reimplementation; VP8L (lossless webp) hinges on the spec's literal
 120-entry 2D distance-map table, which cannot be independently
 verified in this sandbox (no libwebp, no network), and this repo does
 not ship plausible-but-unverifiable decode paths (the shared-kernel
-blind-spot rule). Their decode raises ``NotImplementedError``
-(deterministic fake features stand in); the Spark-side plumbing
+blind-spot rule). Their decode raises ``NotImplementedError``; the Spark-side plumbing
 (schema, partitioning, UDF signature, batch shape) is real and
 tested, per the task brief, and header probes (dimensions/duration)
 ARE real for both.
@@ -45,10 +44,8 @@ from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.png_codec import resize_png as _resize_png
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -67,20 +64,10 @@ MEDIA_META_TYPE = StructType(
     ]
 )
 
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),
-        StructField("format", StringType(), True),
-        StructField("n_bytes", LongType(), False),
-        StructField("byte_entropy", DoubleType(), False),
-        StructField("histogram", ArrayType(DoubleType()), False),
-    ]
-)
 
 def sniff_bytes(raw: bytes) -> tuple[str, str | None]:
     """(media_type, format) from magic bytes — single source of truth
-    for the Python path; :func:`sniff_media_type` is its Column twin.
+    for every media stage.
     RIFF is a CONTAINER: bytes 8..12 distinguish WAV/WebP/AVI. MP4 is
     detected by the ``ftyp`` box at offset 4 regardless of box size
     (hardcoding 0x18/0x20 missed common isom files)."""
@@ -296,8 +283,8 @@ def decode_media(data: bytes, fmt: str):
         return decode_jpeg(data)
     raise NotImplementedError(
         f"media decode for {fmt!r} requires codec libraries not present "
-        "in this environment; dimension/duration probes (probe_media) and "
-        "extract_media_features cover the pipeline plumbing"
+        "in this environment; dimension/duration probes (probe_media) "
+        "cover the pipeline plumbing"
     )
 
 
@@ -313,58 +300,6 @@ def base64_payload(col: str = "media"):
 def decode_base64_payload(col: str = "media_b64"):
     """Inverse of :func:`base64_payload` (``F.unbase64``)."""
     return F.unbase64(F.col(col))
-
-
-def sniff_media_type(col: str = "media"):
-    """Magic-byte content sniffing as a Column expression (the binary
-    analogue of the reference's ``%PDF`` check,
-    ``pdf_service.py:84-87``). Keep in lockstep with
-    :func:`sniff_bytes` — pinned by test_sniff_column_matches_python."""
-    c = F.col(col)
-    riff_kind = F.substring(c, 9, 4)
-    return (
-        F.when(F.substring(c, 1, 4) == F.lit(b"\x89PNG"), F.lit("png"))
-        .when(F.substring(c, 1, 3) == F.lit(b"\xff\xd8\xff"), F.lit("jpeg"))
-        .when(
-            (F.substring(c, 1, 4) == F.lit(b"RIFF")) & (riff_kind == F.lit(b"WAVE")),
-            F.lit("wav"),
-        )
-        .when(
-            (F.substring(c, 1, 4) == F.lit(b"RIFF")) & (riff_kind == F.lit(b"WEBP")),
-            F.lit("webp"),
-        )
-        .when(
-            (F.substring(c, 1, 4) == F.lit(b"RIFF")) & (riff_kind == F.lit(b"AVI ")),
-            F.lit("avi"),
-        )
-        .when(F.substring(c, 5, 4) == F.lit(b"ftyp"), F.lit("mp4"))
-        .when(F.substring(c, 1, 2) == F.lit(b"BM"), F.lit("bmp"))
-        .when(
-            (F.substring(c, 1, 6) == F.lit(b"GIF87a"))
-            | (F.substring(c, 1, 6) == F.lit(b"GIF89a")),
-            F.lit("gif"),
-        )
-        .otherwise(F.lit("unknown"))
-    )
-
-
-def _fake_features(data: bytes) -> tuple[float, list[float]]:
-    """Deterministic stand-in for a real decoder: byte entropy and a
-    16-bin byte histogram. Replace with PIL/librosa/ffmpeg feature
-    extraction where those libs exist."""
-    import math
-
-    if not data:
-        return 0.0, [0.0] * 16
-    counts = [0] * 16
-    for byte in data:
-        counts[byte >> 4] += 1
-    n = len(data)
-    hist = [round(c / n, 6) for c in counts]
-    entropy = round(
-        -sum(p * math.log2(p) for p in hist if p > 0), 6
-    )
-    return entropy, hist
 
 
 def _bmp_file(w: int, h: int, pixels: bytes) -> bytes:
@@ -687,35 +622,6 @@ def media_decode_features(
     return _payload_stage(
         df, id_col, bytes_col, decode_payload_summary, DECODE_SUMMARY_TYPE
     )
-
-
-def extract_media_features(
-    df: DataFrame, id_col: str = "media_id", bytes_col: str = "media"
-) -> DataFrame:
-    """mapInPandas feature extraction: Arrow batches of (id, bytes) in,
-    feature rows out. The batch shape (Iterator[pd.DataFrame]) is the
-    real production signature — only ``_fake_features`` is a stub."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # ONE bytes() conversion per row (multi-MB payloads; three
-            # separate passes each re-copied the buffer)
-            raws = [bytes(b) if b is not None else b"" for b in pdf[bytes_col]]
-            feats = [_fake_features(raw) for raw in raws]
-            sniffed = [sniff_bytes(raw) for raw in raws]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "media_type": [s[0] for s in sniffed],
-                    "format": [s[1] for s in sniffed],
-                    "n_bytes": [len(raw) for raw in raws],
-                    "byte_entropy": [f[0] for f in feats],
-                    "histogram": [f[1] for f in feats],
-                }
-            )
-
-    narrow = df.select(id_col, bytes_col)  # prune before Python transfer
-    return narrow.mapInPandas(gen, FEATURES_SCHEMA)
 
 
 def frame_sample_plan(

@@ -414,22 +414,6 @@ def train_pq_codebooks(
     ]
 
 
-def _slice_d2_array(vslice, book: list[list[float]]):
-    """Array of rounded squared-L2 distances from a (sub)vector column
-    to every codeword literal — shared by PQ encode (its argmin) and
-    the ADC lookup table (its element_at), so the two can't drift."""
-    dists = []
-    for c in book:
-        lit_c = F.array(*[F.lit(x) for x in c])
-        d2 = F.aggregate(
-            F.zip_with(vslice, lit_c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        dists.append(F.round(d2, 6))
-    return F.array(*dists)
-
-
 def _sliced(df: DataFrame, id_col, id_alias: str, vec_col: str, m: int, sub: int):
     """Project (id, _s0.._s{m-1}) with the double-cast and the
     subspace slices as BOUND COLUMNS — the HOF-projection remedy:
@@ -459,69 +443,6 @@ def _codes_from_slices(codebooks: list[list[list[float]]]):
         d = _sql_d2_array(f"_s{s}", book)
         codes.append(f"cast(array_position({d}, array_min({d})) - 1 as int)")
     return F.expr("array(" + ",".join(codes) + ")")
-
-
-def pq_encode(vec_col, codebooks: list[list[list[float]]]):
-    """PQ code array as a single Column expression (test/interactive
-    convenience — the hot path, :func:`pq_topk`, goes through
-    :func:`_sliced`'s projected form instead so the cast/slices are
-    evaluated once per row, not once per codeword)."""
-    v = vec_col if not isinstance(vec_col, str) else F.col(vec_col)
-    v = F.transform(v, lambda x: x.cast("double"))
-    sub = len(codebooks[0][0])
-    codes = []
-    for s, book in enumerate(codebooks):
-        darr = _slice_d2_array(F.slice(v, s * sub + 1, sub), book)
-        codes.append((F.array_position(darr, F.array_min(darr)) - 1).cast("int"))
-    return F.array(*codes)
-
-
-def pq_encode_udf(
-    codebooks: list[list[list[float]]],
-    centroids: list[list[float]] | None = None,
-):
-    """Arrow-batched pandas-UDF PQ encoder — the documented transport
-    escape hatch for LARGE codebooks: beyond ~(m=16, 64 codes) the
-    plan-literal Column form bloats the expression tree (m·n_codes
-    codeword arrays embedded per reference), while here the codebooks
-    ride the closure ONCE and each batch is one numpy einsum-free
-    argmin per subspace. Bit-identical to :func:`pq_encode` on the
-    same books (distances rounded 6 before argmin, first-match ties)
-    — pinned by test_pq_encode_udf_matches_column_form.
-
-    ``centroids`` switches to RESIDUAL encoding (the
-    :func:`pq_codes(residual=True)` twin at pandas-UDF transport):
-    each vector is first reduced by its coarse centroid — assignment
-    via the same round-6 first-match rule as :func:`ivf_assign` /
-    :func:`assign_coarse`, so the codes match the Column form
-    bit-for-bit; codebooks must be residual-trained."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    sub = books[0].shape[1]
-    C = None if centroids is None else np.asarray(centroids, dtype=np.float64)
-
-    def _encode_fn(vecs):
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if C is not None:
-            d2c = _round_half_away_6(
-                ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            )
-            X = X - C[d2c.argmin(axis=1)]
-        out = np.zeros((len(X), len(books)), dtype=np.int32)
-        for s, B in enumerate(books):
-            sl = X[:, s * sub : (s + 1) * sub]
-            d2 = ((sl[:, None, :] - B[None, :, :]) ** 2).sum(axis=2)
-            # mirror the Column form exactly: round 6 HALF-AWAY (the
-            # F.round rule), then FIRST index attaining the minimum
-            out[:, s] = _round_half_away_6(d2).argmin(axis=1)
-        return pd.Series(list(out))
-
-    # annotation-free form: the signature's pd alias is function-local,
-    # which Spark's type-hint inspection cannot resolve
-    return pandas_udf(_encode_fn, "array<int>")
 
 
 # Bump when the encode semantics change (rounding, tie-break, layout):

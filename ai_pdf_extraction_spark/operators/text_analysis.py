@@ -222,17 +222,6 @@ LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
 MARKER_WEIGHT = 3
 
 
-def trigram_scores(col: Column | str = "text") -> dict[str, Column]:
-    """Per-language trigram occurrence counts over the padded lowered
-    text — identical arithmetic in DuckDB."""
-    c = F.col(col) if isinstance(col, str) else col
-    padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
-    return {
-        lang: sum(_occurrences(padded, t) for t in tris).alias(f"tri_{lang}")
-        for lang, tris in LANG_TRIGRAMS.items()
-    }
-
-
 def lang_detect_trigram(col: Column | str = "text") -> Column:
     """Wide language ID with trigram evidence (round-4 verdict item 7):
     script-charset first (same ranges/threshold as :func:`lang_detect`),
@@ -261,13 +250,6 @@ def lang_detect_trigram(col: Column | str = "text") -> Column:
             counts[lang] * SCRIPT_SHARE_DENOM >= n, F.lit(lang)
         ).otherwise(expr)
     return expr
-
-
-def punct_count(col: Column | str = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?]", ""))
-    ).cast("long")
 
 
 def quality_score(col: Column | str = "text") -> Column:

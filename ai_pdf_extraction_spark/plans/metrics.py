@@ -65,21 +65,6 @@ def batch_status(spark: SparkSession, table: SnapshotTable, n_buckets: int) -> d
     }
 
 
-def per_host_metrics(output: DataFrame) -> DataFrame:
-    """Docs / parse-fail rate / span counts per host — skew-aware:
-    pre-aggregates per (host, bucket) first (bucket is already a
-    partition of the data), then combines, so a hot host never lands
-    on one reducer in the first shuffle."""
-    partial = output.groupBy("host", "bucket").agg(
-        *counters("n_docs", "n_parse_fail", "sum_spans")
-    )
-    return partial.groupBy("host").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.round(F.sum("n_parse_fail") / F.sum("n_docs"), 6).alias("parse_fail_rate"),
-        F.sum("sum_spans").alias("n_spans"),
-    )
-
-
 def lineage_df(spark: SparkSession, table: SnapshotTable) -> DataFrame:
     """Per-partition lineage rows from the snapshot chain as a
     DataFrame (run_id, snapshot, bucket, counters, throughput)."""

@@ -39,8 +39,7 @@ from ai_pdf_extraction_spark.sources.snapshot_table import (
 MAX_DOC_BYTES = 4 * 1024 * 1024
 
 # The output-schema contract, asserted against extraction_plan's
-# actual projection in tests/test_plans.py (a stale copy of this list
-# is how the streaming select drifted in round 1).
+# actual projection in tests/test_plans.py.
 OUTPUT_COLUMNS = (
     "url",
     "warc_ts",
@@ -63,9 +62,11 @@ OUTPUT_COLUMNS = (
 
 
 def project_extraction(pages: DataFrame, run_id: str, n_buckets: int) -> DataFrame:
-    """Payload cap + kernel UDF + output projection — the part of the
-    plan shared VERBATIM by the batch pipeline and the streaming twin
-    (stream-safe: no repartition, no rdd access)."""
+    """Payload cap + kernel UDF + output projection: the part of
+    :func:`extraction_plan` that the Iceberg path
+    (``make_output_table().append``) also calls. A truncated document
+    keeps every kernel warning, in order, followed by the truncation
+    warning."""
     truncated = F.length(F.col("html")) > MAX_DOC_BYTES
     pages = pages.withColumn("_truncated", truncated).withColumn(
         "html",
@@ -85,7 +86,7 @@ def project_extraction(pages: DataFrame, run_id: str, n_buckets: int) -> DataFra
         F.col("extraction.parse_ok").alias("parse_ok"),
         F.when(
             F.col("_truncated"),
-            F.array_union(
+            F.concat(
                 F.col("extraction.warnings"),
                 F.array(F.lit(f"input truncated at {MAX_DOC_BYTES} bytes")),
             ),
@@ -140,10 +141,10 @@ def extraction_plan(
         pages = pages.filter(url_bucket(n_buckets=n_buckets).isin(list(buckets)))
     if narrow:
         pages = cluster_by_bucket(pages, buckets, n_buckets, target)
-    # Payload cap + UDF + projection shared verbatim with the streaming
-    # twin (reference's ≤2048px image downscale analogue, SURVEY.md
-    # §2.2 P10: bound per-doc bytes so one pathological page can't blow
-    # an Arrow batch; capped docs carry a truncation warning).
+    # Payload cap + UDF + projection (the reference's ≤2048px image
+    # downscale analogue, SURVEY.md §2.2 P10: bound per-doc bytes so one
+    # pathological page can't blow an Arrow batch; capped docs carry a
+    # truncation warning).
     return project_extraction(pages, run_id, n_buckets)
 
 

@@ -4,14 +4,15 @@ discovery (SURVEY.md §3.2).
 The reference samples representative pages (first 2 + last 2 + strided
 middle, ``pdf_service.py:203-283``) and asks an LLM to infer a schema
 (``services/ai/discovery.py:256-361``). The deterministic rebuild
-samples the corpus the same way, runs the extraction kernels on the
-sample, and reports the corpus profile + the fixed output schema — a
-one-shot plan-time activity, never a runtime operator (SURVEY.md §1.2).
+samples the corpus the same way (:func:`representative_sample`, q50)
+and profiles it in one scan (:func:`corpus_profile`, q82); the output
+schema is fixed — a plan-time activity, never a runtime operator
+(SURVEY.md §1.2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -108,55 +109,6 @@ def representative_sample(pages: DataFrame, max_docs: int = 64) -> DataFrame:
     finally:
         distinct_urls.unpersist()
     return deduped.filter(F.col("url").isin(picked))
-
-
-def profile_corpus(spark: SparkSession, input_path: str, max_docs: int = 64) -> dict:
-    """Run the kernels over a representative sample; emit the corpus
-    profile and the (fixed) output schema as a discovery report."""
-    from ai_pdf_extraction_spark.operators.extract import EXTRACTION_TYPE
-    from ai_pdf_extraction_spark.plans.metrics import counters
-    from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
-
-    pages = spark.read.parquet(input_path)
-    # the ≤max_docs sample feeds four separate actions below — persist
-    # it so the sort + extraction UDF run once, not four times
-    sample = representative_sample(pages, max_docs).persist()
-    extracted = extraction_plan(sample, run_id="profile", min_parallelism=4).persist()
-
-    stats = extracted.agg(
-        F.count("*").alias("n_sampled"),
-        F.round(F.avg("n_chars"), 1).alias("avg_chars"),
-        F.round(F.avg("n_spans"), 2).alias("avg_spans"),
-        *counters("n_parse_fail"),
-    ).collect()[0]
-    ctype_mix = {
-        r["content_type"]: r["n"]
-        for r in extracted.groupBy("content_type").agg(F.count("*").alias("n")).collect()
-    }
-    kind_mix = {
-        r["kind"]: r["n"]
-        for r in extracted.select(F.explode("spans").alias("s"))
-        .groupBy(F.col("s.kind").alias("kind"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    lang_mix = {
-        r["lang"]: r["n"]
-        for r in sample.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    extracted.unpersist()
-    sample.unpersist()
-    return {
-        "n_sampled": int(stats["n_sampled"]),
-        # empty corpus: avg() is null — report 0.0, don't TypeError
-        "avg_chars": float(stats["avg_chars"] or 0.0),
-        "avg_spans": float(stats["avg_spans"] or 0.0),
-        "parse_fail_rate": round(stats["n_parse_fail"] / max(stats["n_sampled"], 1), 4),
-        "content_type_mix": ctype_mix,
-        "span_kind_mix": kind_mix,
-        "lang_mix": lang_mix,
-        "output_schema": EXTRACTION_TYPE.simpleString(),
-    }
 
 
 def corpus_profile(

@@ -27,8 +27,24 @@ from datetime import datetime, timezone
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BinaryType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
-from ai_pdf_extraction_spark.streaming.ingest import PAGES_SCHEMA
+# The pages schema the extraction pipeline reads.
+PAGES_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("warc_ts", TimestampType(), True),
+        StructField("html", BinaryType(), True),
+        StructField("text", StringType(), True),
+        StructField("lang", StringType(), True),
+    ]
+)
 
 
 def iter_warc_records(stream) -> Iterator[tuple[dict, bytes]]:
@@ -245,8 +261,8 @@ def iter_row_batches(
 
 
 def _paths_to_pages_gen(batch_rows: int):
-    """The mapInPandas generator shared by the batch and streaming
-    readers: path rows in, bounded pages batches out. Driver-side
+    """The mapInPandas generator of :func:`read_warc`: path rows in,
+    bounded pages batches out. Driver-side
     :func:`register_warc_filesystem` registrations snapshot into the
     closure here, so they reach the Python workers (whose fresh module
     import starts with an empty registry); executor-side registrations
@@ -315,41 +331,6 @@ def read_warc(
         [(p,) for p in paths], numSlices=max(len(paths), 1)
     )
     files = spark.createDataFrame(rdd, "path string")
-    return files.mapInPandas(_paths_to_pages_gen(batch_rows), PAGES_SCHEMA)
-
-
-def read_warc_stream(
-    spark: SparkSession,
-    path: str,
-    batch_rows: int = 256,
-    max_files_per_trigger: int = 8,
-) -> DataFrame:
-    """Streaming twin of :func:`read_warc`: a ``binaryFile`` file
-    stream supplies newly-arrived WARC paths (exactly-once via the
-    query's checkpoint WAL), each micro-batch stream-parses its files
-    with the SAME generator as the batch reader, and the result is a
-    streaming pages DataFrame the extraction projection consumes
-    unchanged — continuous crawl ingestion without a distinct code
-    path. ``maxFilesPerTrigger`` bounds micro-batch size (files, and
-    therefore memory, per trigger)."""
-    files = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require an explicit schema; binaryFile's is
-        # fixed by the format (content stays pruned — never selected)
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-        .select("path")
-    )
-    # same fan-out guarantee as the batch reader: without this, the
-    # file-source scan packs small files into byte-sized partitions and
-    # one task parses a whole trigger's files serially. Round-robin
-    # over the session's parallelism spreads the ≤max_files_per_trigger
-    # paths one-ish per task.
-    files = files.repartition(spark.sparkContext.defaultParallelism)
     return files.mapInPandas(_paths_to_pages_gen(batch_rows), PAGES_SCHEMA)
 
 

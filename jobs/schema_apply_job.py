@@ -6,10 +6,7 @@ schema id): read a table carrying a JSON document column, resolve a
 committed schema config by name (+optional version) from the in-repo
 registry, compile it to the typed Catalyst projection
 (``functions/schema_registry.apply_schema``), and write the typed
-table. Because the projection is pure Column expressions it is also
-stream-safe — pass ``--streaming`` to run the identical projection as
-a Structured Streaming availableNow pass over a parquet directory
-(the registry-on-a-stream twin).
+table.
 
 Usage::
 
@@ -17,7 +14,7 @@ Usage::
     spark-submit --master local[32] --py-files /tmp/engine.zip \
         jobs/schema_apply_job.py --input <parquet> --output <dir> \
         --schema invoice [--version 1] [--source-col doc] \
-        [--keys id,url] [--streaming]
+        [--keys id,url]
 
 Same contract as ``extract_job``/``curate_job``: public package API
 only, so the file submits unchanged to a real cluster.
@@ -39,11 +36,6 @@ def main() -> None:
     parser.add_argument("--version", type=int, default=None)
     parser.add_argument("--source-col", default="doc")
     parser.add_argument("--keys", default="", help="comma-separated passthrough columns")
-    parser.add_argument(
-        "--streaming", action="store_true",
-        help="run as a Structured Streaming availableNow pass "
-        "(input is a parquet DIRECTORY; checkpoint under <output>/_checkpoint)",
-    )
     args = parser.parse_args()
 
     from ai_pdf_extraction_spark.functions.schema_registry import (
@@ -56,33 +48,11 @@ def main() -> None:
     schema = load_schema(args.schema, version=args.version)
     keys = [k for k in args.keys.split(",") if k]
 
-    if args.streaming:
-        batch_schema = spark.read.parquet(args.input).schema
-        stream = spark.readStream.schema(batch_schema).parquet(args.input)
-        typed = apply_schema(stream, schema, args.source_col, keys=keys)
-        q = (
-            typed.writeStream.format("parquet")
-            .option("path", args.output)
-            .option("checkpointLocation", f"{args.output}/_checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-        if not finished:
-            # counting partial output as success would be silent data
-            # loss at the job surface (review r6)
-            q.stop()
-            raise SystemExit(
-                "streaming pass did not finish within 600s — rerun (the "
-                "checkpoint resumes) or use the batch mode"
-            )
-        n = spark.read.parquet(args.output).count()
-    else:
-        typed = apply_schema(
-            spark.read.parquet(args.input), schema, args.source_col, keys=keys
-        )
-        typed.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
+    typed = apply_schema(
+        spark.read.parquet(args.input), schema, args.source_col, keys=keys
+    )
+    typed.write.mode("overwrite").parquet(args.output)
+    n = spark.read.parquet(args.output).count()
 
     print(
         json.dumps(
@@ -91,7 +61,6 @@ def main() -> None:
                 "version": schema["version"],
                 "rows": n,
                 "fields": [f["name"] for f in schema["fields"]],
-                "streaming": bool(args.streaming),
             }
         )
     )

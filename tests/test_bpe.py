@@ -126,18 +126,20 @@ def test_naive_twin_single_word_shapes():
 
 
 def test_distributed_trainer_reproduces_committed_table(spark):
-    """train_bpe_distributed (Spark word-freq pass + kernel merge
-    loop) over the SAME corpus must reproduce tools/train_bpe.py's
-    committed table byte-identically — the distributed trainer is
-    exchangeable with the driver-side one."""
-    from ai_pdf_extraction_spark.kernels.bpe import load_merges_payload
-    from ai_pdf_extraction_spark.operators.bpe_train import (
-        train_bpe_distributed,
+    """The Spark word-freq pass (``word_freq_table``) feeding the
+    kernel merge loop over the SAME corpus must reproduce
+    tools/train_bpe.py's committed table byte-identically — the
+    corpus-scale pass is exchangeable with the driver-side count."""
+    from ai_pdf_extraction_spark.kernels.bpe import (
+        load_merges_payload,
+        train_bpe,
     )
+    from ai_pdf_extraction_spark.operators.bpe_train import word_freq_table
 
     payload = load_merges_payload()
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    merges = train_bpe_distributed(docs, payload["n_merges"])
+    freqs = {r["word"]: r["freq"] for r in word_freq_table(docs).collect()}
+    merges = train_bpe(freqs, payload["n_merges"])
     assert [list(p) for p in merges] == payload["merges"]
 
 
@@ -173,21 +175,3 @@ def test_pair_counts_round0_matches_kernel(spark):
     }
     first = min(got.items(), key=lambda kv: kv[1][1])[0]
     assert [first] == train_bpe(dict(freqs), 1)
-
-
-def test_word_type_cap_fails_loud(spark):
-    import pytest as _pytest
-
-    from ai_pdf_extraction_spark.operators.bpe_train import (
-        train_bpe_distributed,
-    )
-
-    df = spark.createDataFrame(
-        [(f"unique{i}word",) for i in range(50)], "text string"
-    )
-    with _pytest.raises(ValueError, match="max_word_types"):
-        train_bpe_distributed(df, 5, max_word_types=10)
-    # min_freq prunes the type table below the cap -> trains fine on
-    # the surviving head ("unique"/"word" at freq 50; digits vary)
-    merges = train_bpe_distributed(df, 5, min_freq=40, max_word_types=10)
-    assert len(merges) == 5

@@ -1,4 +1,5 @@
-"""Export sinks, batch-status metrics, and Structured Streaming ingest."""
+"""Export sinks, batch-status metrics, the output table, and WARC/WET
+ingestion and export."""
 
 from __future__ import annotations
 
@@ -79,11 +80,7 @@ def test_json_export_envelope(spark, tmp_path):
 
 
 def test_batch_status_and_lineage(spark, corpus_dir, tmp_path):
-    from ai_pdf_extraction_spark.plans.metrics import (
-        batch_status,
-        lineage_df,
-        per_host_metrics,
-    )
+    from ai_pdf_extraction_spark.plans.metrics import batch_status, lineage_df
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction
     from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
 
@@ -104,150 +101,6 @@ def test_batch_status_and_lineage(spark, corpus_dir, tmp_path):
     lin = lineage_df(spark, table)
     assert lin.count() == 8
     assert lin.agg(F.sum("n_docs")).collect()[0][0] == 300
-
-    hosts = per_host_metrics(table.read(spark))
-    big = hosts.filter(F.col("host") == "big.example.com").collect()[0]
-    assert big["n_docs"] > 60
-
-
-def test_streaming_ingest_available_now(spark, tmp_path):
-    from ai_pdf_extraction_spark.corpus import write_pages_parquet
-    from ai_pdf_extraction_spark.oracle.run_reference import extract_rows
-    from ai_pdf_extraction_spark.corpus.generate import generate_pages
-    from ai_pdf_extraction_spark.streaming.ingest import run_available_now
-
-    in_dir = str(tmp_path / "stream_in")
-    write_pages_parquet(in_dir, 120, seed=9, n_files=5)
-    out_dir = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "stream_ckpt")
-
-    run_available_now(spark, in_dir, out_dir, ckpt, run_id="s1")
-    got = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert got.count() == 120
-
-    # byte-identical vs the oracle, same as batch
-    golden = {r["url"]: r["extracted_text"] for r in extract_rows(generate_pages(120, seed=9))}
-    for row in got.select("url", "extracted_text").collect():
-        assert row["extracted_text"] == golden[row["url"]]
-
-    # restart with same checkpoint: no reprocessing, count unchanged
-    run_available_now(spark, in_dir, out_dir, ckpt, run_id="s2")
-    assert spark.read.option("basePath", out_dir).parquet(out_dir).count() == 120
-
-
-def test_hourly_counts_stream_plan(spark, tmp_path):
-    """Watermarked windowed agg compiles and runs via availableNow on
-    a memory sink."""
-    from ai_pdf_extraction_spark.corpus import write_pages_parquet
-    from ai_pdf_extraction_spark.streaming.ingest import (
-        PAGES_SCHEMA,
-        hourly_counts_stream,
-    )
-
-    in_dir = str(tmp_path / "wm_in")
-    write_pages_parquet(in_dir, 60, seed=3, n_files=2)
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
-    )
-    q = (
-        hourly_counts_stream(stream)
-        .writeStream.format("memory")
-        .queryName("hourly_counts_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    result = spark.sql("select * from hourly_counts_test")
-    # watermark append-mode emits only closed windows; plan must run clean
-    assert set(result.columns) == {"hour", "lang", "n_pages"}
-
-
-def test_streaming_url_dedup_within_watermark(spark, tmp_path):
-    """Duplicate urls inside one drain collapse to one row; state is
-    watermark-bounded (plan carries dropDuplicatesWithinWatermark)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ai_pdf_extraction_spark.streaming.ingest import (
-        PAGES_SCHEMA,
-        deduped_pages_stream,
-    )
-
-    in_dir = tmp_path / "dd_in"
-    in_dir.mkdir()
-    ts = pa.array([1_700_000_000_000_000 + i * 1_000_000 for i in range(6)],
-                  pa.timestamp("us", tz="UTC"))
-    urls = pa.array([f"https://h{i % 3}.example.org/p" for i in range(6)])
-    pq.write_table(
-        pa.table({
-            "url": urls, "warc_ts": ts,
-            "html": pa.array([b"<p>x</p>"] * 6, pa.binary()),
-            "text": pa.array([None] * 6, pa.string()),
-            "lang": pa.array(["en"] * 6),
-        }),
-        str(in_dir / "part.parquet"),
-    )
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(str(in_dir))
-    q = (
-        deduped_pages_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dd_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select url from dd_test").collect()
-    assert sorted(r["url"] for r in got) == [
-        "https://h0.example.org/p",
-        "https://h1.example.org/p",
-        "https://h2.example.org/p",
-    ]
-
-
-def test_streaming_host_progress_stateful(spark, tmp_path):
-    """applyInPandasWithState running totals: the update-mode latest
-    value per host must account for every input row."""
-    from ai_pdf_extraction_spark.corpus import write_pages_parquet
-    from ai_pdf_extraction_spark.streaming.ingest import (
-        PAGES_SCHEMA,
-        host_progress_stream,
-    )
-
-    in_dir = str(tmp_path / "hp_in")
-    write_pages_parquet(in_dir, 80, seed=5, n_files=4)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
-    q = (
-        host_progress_stream(stream)
-        .writeStream.format("memory")
-        .queryName("hp_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # latest running total per host must sum to the corpus size
-    rows = spark.sql(
-        "select host, max(n_docs) as n from hp_test group by host"
-    ).collect()
-    assert sum(r["n"] for r in rows) == 80
-    assert all(r["n"] >= 1 for r in rows)
-
-
-def test_profile_corpus(spark, corpus_dir):
-    import os
-
-    from ai_pdf_extraction_spark.plans.profiling import profile_corpus
-
-    report = profile_corpus(
-        spark, os.path.join(corpus_dir, "pages.parquet"), max_docs=48
-    )
-    assert report["n_sampled"] == 48
-    assert report["content_type_mix"].get("html", 0) > 0
-    assert "title" in report["span_kind_mix"]
-    assert report["output_schema"].startswith("struct<extracted_text:string")
-    assert 0.0 <= report["parse_fail_rate"] <= 0.2
 
 
 def test_representative_sample_counts_distinct_urls(spark):
@@ -469,58 +322,6 @@ def test_warc_remote_filesystem_seam(spark, tmp_path):
         open_warc_stream("mock://crawl/a.warc.gz")
 
 
-def test_warc_stream_matches_batch_read(spark, tmp_path):
-    """Streaming WARC ingestion (binaryFile file stream + the shared
-    path-parsing generator) drains availableNow to exactly the batch
-    reader's rows, and the extraction projection consumes the stream
-    unchanged (same output schema as the batch plan)."""
-    import datetime
-
-    from ai_pdf_extraction_spark.corpus.generate import generate_pages
-    from ai_pdf_extraction_spark.plans.pipeline import project_extraction
-    from ai_pdf_extraction_spark.sources.warc import (
-        read_warc,
-        read_warc_stream,
-        write_warc,
-    )
-
-    rows = [
-        {
-            "url": r["url"],
-            "warc_ts": r["warc_ts"].replace(tzinfo=datetime.timezone.utc),
-            "html": r["html"],
-        }
-        for r in generate_pages(30, seed=19)
-    ]
-    wdir = tmp_path / "warcs"
-    wdir.mkdir()
-    write_warc(str(wdir / "a.warc.gz"), rows[:15], compress=True)
-    write_warc(str(wdir / "b.warc.gz"), rows[15:], compress=True)
-
-    stream = read_warc_stream(spark, str(wdir), max_files_per_trigger=1)
-    assert stream.isStreaming
-    extracted = project_extraction(stream, run_id="ws", n_buckets=8)
-    out = str(tmp_path / "out")
-    q = (
-        extracted.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    batch = project_extraction(
-        read_warc(spark, str(wdir)), run_id="ws", n_buckets=8
-    )
-    assert sorted(got.columns) == sorted(batch.columns)
-    assert got.count() == batch.count() == len(rows)
-    g = {r["url"]: r["n_chars"] for r in got.select("url", "n_chars").collect()}
-    b = {r["url"]: r["n_chars"] for r in batch.select("url", "n_chars").collect()}
-    assert g == b
-
-
 def test_snapshot_commit_conflict_and_catalog_guard(spark, tmp_path):
     """Review r5: (a) two writers racing for the same snapshot
     sequence must surface SnapshotConflictError (CAS via exclusive
@@ -679,412 +480,6 @@ def test_iceberg_integration_job_skips_cleanly_without_jar(tmp_path):
     assert proc.returncode == 0, proc.stderr
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["skipped"] is True and "jar" in out["reason"]
-
-
-def test_apply_schema_is_stream_safe(spark, tmp_path):
-    """Schema application is a pure projection, so the IDENTICAL
-    config-compiled plan runs under Structured Streaming: an
-    availableNow pass over a parquet dir must produce exactly the
-    batch result (the registry-on-a-stream twin)."""
-    from ai_pdf_extraction_spark.functions.schema_registry import (
-        apply_schema,
-        load_schema,
-    )
-
-    src = str(tmp_path / "docs_in")
-    rows = [
-        (i, '{"invoice_number": "INV-%d", "total": "$%d.50", '
-            '"po_reference": "PO-%d"}' % (i, 100 + i, i))
-        for i in range(40)
-    ]
-    spark.createDataFrame(rows, "id long, doc string").write.parquet(src)
-    schema = load_schema("invoice")  # v2
-
-    batch = apply_schema(spark.read.parquet(src), schema, "doc", keys=["id"])
-    expected = sorted(
-        (r["id"], r["invoice_number"], r["total"], tuple(r["schema_warnings"]))
-        for r in batch.collect()
-    )
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    typed = apply_schema(stream, schema, "doc", keys=["id"])
-    out = str(tmp_path / "docs_out")
-    q = (
-        typed.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r["id"], r["invoice_number"], r["total"], tuple(r["schema_warnings"]))
-        for r in spark.read.parquet(out).collect()
-    )
-    assert got == expected and len(got) == 40
-
-
-def test_streaming_frontier_loop(spark, tmp_path):
-    """Micro-batch N's appended urls are 'seen' for later arrivals: a
-    second drain of a file repeating batch-1 urls emits nothing new,
-    the seen-set converges, and a checkpoint restart is a no-op."""
-    import os
-
-    from ai_pdf_extraction_spark.sources.seen_urls import (
-        load_seen_set,
-        write_seen_set,
-    )
-    from ai_pdf_extraction_spark.streaming.ingest import run_frontier_stream
-
-    in_dir = str(tmp_path / "urls_in")
-    seen_dir = str(tmp_path / "seen")
-    out_dir = str(tmp_path / "frontier_out")
-    ckpt = str(tmp_path / "frontier_ckpt")
-    os.makedirs(in_dir)
-
-    write_seen_set(
-        spark.createDataFrame([("http://old.com/a",)], "canon_url string"),
-        seen_dir,
-    )
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def _url_file(name, rows):
-        # FLAT files: the file-stream source lists files, it does not
-        # descend into non-partition subdirectories
-        ids, urls = zip(*rows)
-        pq.write_table(
-            pa.table({"event_id": pa.array(ids, pa.int64()),
-                      "url": pa.array(urls, pa.string())}),
-            os.path.join(in_dir, name),
-        )
-
-    _url_file("batch1.parquet",
-              [(1, "http://old.com/a#f"), (2, "http://new.com/x"),
-               (3, "http://new.com/x?utm_source=s")])
-
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120)
-    fr = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["canon_url"] for r in fr.collect()} == {"http://new.com/x"}
-    assert {r["canon_url"] for r in load_seen_set(spark, seen_dir).collect()} \
-        == {"http://old.com/a", "http://new.com/x"}
-
-    # a later file repeating the now-seen url + one genuinely new one
-    _url_file("batch2.parquet",
-              [(4, "http://new.com/x"), (5, "http://fresh.com/y")])
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120)
-    fr2 = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["canon_url"] for r in fr2.collect()} == {
-        "http://new.com/x", "http://fresh.com/y"
-    }
-    n_seen = load_seen_set(spark, seen_dir).count()
-    assert n_seen == 3
-
-    # restart on the drained checkpoint: nothing replays, set stable
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120)
-    assert load_seen_set(spark, seen_dir).count() == n_seen
-
-
-def test_streaming_dedup_ingest_loop(spark, tmp_path):
-    """Ingest-time dedup across micro-batches: batch N's accepted docs
-    reject their duplicates arriving in batch N+1; within-batch dups
-    keep only the canonical; checkpoint restart is a no-op."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ai_pdf_extraction_spark.operators.dedup_index import (
-        write_dedup_index,
-    )
-    from ai_pdf_extraction_spark.streaming.ingest import (
-        run_dedup_ingest_stream,
-    )
-
-    in_dir = str(tmp_path / "docs_in")
-    idx_dir = str(tmp_path / "dedup_idx")
-    out_dir = str(tmp_path / "accepted_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    os.makedirs(in_dir)
-
-    write_dedup_index(
-        spark,
-        spark.createDataFrame(
-            [(1, "the original corpus document")], "doc_id long, text string"
-        ),
-        idx_dir,
-    )
-
-    def _doc_file(name, rows):
-        ids, texts = zip(*rows)
-        pq.write_table(
-            pa.table({"doc_id": pa.array(ids, pa.int64()),
-                      "text": pa.array(texts, pa.string())}),
-            os.path.join(in_dir, name),
-        )
-
-    _doc_file("b1.parquet", [
-        (10, "the original corpus document"),   # dup of the index
-        (11, "a brand new document"),            # accepted
-        (12, "a brand new document"),            # within-batch dup of 11
-    ])
-    run_dedup_ingest_stream(spark, in_dir, idx_dir, out_dir, ckpt,
-                            timeout_sec=120)
-    acc = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["doc_id"] for r in acc.collect()} == {11}
-
-    # batch 2: a dup of batch 1's accepted doc + one genuinely new
-    _doc_file("b2.parquet", [
-        (20, "a brand new document"),
-        (21, "another unseen document"),
-    ])
-    run_dedup_ingest_stream(spark, in_dir, idx_dir, out_dir, ckpt,
-                            timeout_sec=120)
-    acc2 = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["doc_id"] for r in acc2.collect()} == {11, 21}
-
-    # drained checkpoint restart: nothing replays
-    run_dedup_ingest_stream(spark, in_dir, idx_dir, out_dir, ckpt,
-                            timeout_sec=120)
-    assert spark.read.option("basePath", out_dir).parquet(out_dir) \
-        .count() == 2
-
-
-def test_streaming_frontier_loop_gated_and_capped(spark, tmp_path):
-    """The politeness seam in the stream: a robots gate blocks
-    /private/ urls WITHOUT appending them (policy resurfaces on
-    rediscovery), and per_host caps each micro-batch's schedule
-    (deferred urls resurface too)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ai_pdf_extraction_spark.operators.robots import (
-        parse_robots,
-        robots_filter,
-    )
-    from ai_pdf_extraction_spark.sources.seen_urls import (
-        load_seen_set,
-        write_seen_set,
-    )
-    from ai_pdf_extraction_spark.streaming.ingest import run_frontier_stream
-
-    in_dir = str(tmp_path / "urls_in")
-    seen_dir = str(tmp_path / "seen")
-    out_dir = str(tmp_path / "frontier_out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    write_seen_set(
-        spark.createDataFrame([("http://old.com/a",)], "canon_url string"),
-        seen_dir,
-    )
-    rules = parse_robots(
-        spark.createDataFrame(
-            [("h.com", "User-agent: *\nDisallow: /private/")],
-            "host string, robots_txt string",
-        )
-    ).persist()
-    rules.count()
-
-    def gate(fr):
-        rb = robots_filter(fr, rules, url_col="canon_url")
-        return rb.withColumn(
-            "to_crawl", F.col("to_crawl") & F.col("robots_allowed")
-        )
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rows = [(i, f"http://h.com/page/{i}") for i in range(5)] + [
-        (9, "http://h.com/private/doc")
-    ]
-    ids, urls = zip(*rows)
-    pq.write_table(
-        pa.table({"event_id": pa.array(ids, pa.int64()),
-                  "url": pa.array(urls, pa.string())}),
-        os.path.join(in_dir, "b1.parquet"),
-    )
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120, gate=gate, per_host=3)
-    fr = spark.read.option("basePath", out_dir).parquet(out_dir)
-    got = {r["canon_url"] for r in fr.collect()}
-    assert len(got) == 3 and all("/page/" in u for u in got)
-    assert all(r["pick_rank"] <= 3 for r in fr.collect())
-    seen = {r["canon_url"] for r in load_seen_set(spark, seen_dir).collect()}
-    # only the SCHEDULED urls were appended: the robots-blocked url and
-    # the two cap-deferred pages resurface on rediscovery
-    assert seen == {"http://old.com/a"} | got
-    rules.unpersist()
-
-
-def test_streaming_frontier_capped_replay_preserves_epoch(spark, tmp_path):
-    """Crash-after-append replay with a per_host cap: the replayed
-    probe is NOT empty (cap-deferred urls resurface), so the old
-    "empty probe => no-op" rule alone would overwrite the committed
-    epoch output with only the deferred urls — permanently losing the
-    scheduled ones. The _SUCCESS-marker branch must re-run only the
-    seen-append (idempotently) and leave the epoch output intact."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ai_pdf_extraction_spark.sources.seen_urls import (
-        load_seen_set,
-        write_seen_set,
-    )
-    from ai_pdf_extraction_spark.streaming.ingest import run_frontier_stream
-
-    in_dir = str(tmp_path / "urls_in")
-    seen_dir = str(tmp_path / "seen")
-    out_dir = str(tmp_path / "frontier_out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    write_seen_set(
-        spark.createDataFrame([("http://old.com/a",)], "canon_url string"),
-        seen_dir,
-    )
-    rows = [(i, f"http://h.com/page/{i}") for i in range(4)]
-    ids, urls = zip(*rows)
-    pq.write_table(
-        pa.table({"event_id": pa.array(ids, pa.int64()),
-                  "url": pa.array(urls, pa.string())}),
-        os.path.join(in_dir, "b1.parquet"),
-    )
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120, per_host=2)
-    fr1 = spark.read.option("basePath", out_dir).parquet(out_dir)
-    scheduled = {r["canon_url"] for r in fr1.collect()}
-    assert len(scheduled) == 2
-    n_seen = load_seen_set(spark, seen_dir).count()
-    assert n_seen == 3  # old + the 2 scheduled
-
-    # simulate a crash AFTER foreachBatch (output written, seen-set
-    # appended) but BEFORE the checkpoint commit: drop the newest
-    # commit marker so the restart replays the epoch with its data
-    commits = sorted(
-        f for f in os.listdir(os.path.join(ckpt, "commits"))
-        if not f.startswith(".")
-    )
-    os.remove(os.path.join(ckpt, "commits", commits[-1]))
-    crc = os.path.join(ckpt, "commits", f".{commits[-1]}.crc")
-    if os.path.exists(crc):  # hadoop checksum twin blocks the rewrite
-        os.remove(crc)
-
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120, per_host=2)
-    fr2 = spark.read.option("basePath", out_dir).parquet(out_dir)
-    # the epoch output still holds the ORIGINALLY scheduled urls,
-    # and the seen-set neither lost nor duplicated anything
-    assert {r["canon_url"] for r in fr2.collect()} == scheduled
-    assert load_seen_set(spark, seen_dir).count() == n_seen
-
-    # the cap-deferred urls are still crawlable: rediscovering them
-    # schedules the remaining two in a later epoch
-    pq.write_table(
-        pa.table({"event_id": pa.array([10, 11], pa.int64()),
-                  "url": pa.array([u for _, u in rows
-                                   if u not in scheduled], pa.string())}),
-        os.path.join(in_dir, "b2.parquet"),
-    )
-    run_frontier_stream(spark, in_dir, seen_dir, out_dir, ckpt,
-                        timeout_sec=120, per_host=2)
-    fr3 = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["canon_url"] for r in fr3.collect()} == {
-        u for _, u in rows
-    }
-    assert load_seen_set(spark, seen_dir).count() == 5
-
-
-def test_streaming_frontier_discover_from_pages(spark, tmp_path):
-    """The discover seam closes the loop from extraction, streaming:
-    page files arrive, outlinks are extracted per micro-batch, and a
-    later page re-linking an already-scheduled url discovers nothing
-    new while a fresh link is scheduled."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ai_pdf_extraction_spark.operators.links import extract_outlinks
-    from ai_pdf_extraction_spark.sources.seen_urls import (
-        load_seen_set,
-        write_seen_set,
-    )
-    from ai_pdf_extraction_spark.streaming.ingest import run_frontier_stream
-
-    in_dir = str(tmp_path / "pages_in")
-    seen_dir = str(tmp_path / "seen")
-    out_dir = str(tmp_path / "frontier_out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    write_seen_set(
-        spark.createDataFrame([("http://h.com/seen",)], "canon_url string"),
-        seen_dir,
-    )
-
-    def _page_file(name, rows):
-        ids, urls, htmls = zip(*rows)
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "url": pa.array(urls, pa.string()),
-                "html": pa.array(htmls, pa.string()),
-            }),
-            os.path.join(in_dir, name),
-        )
-
-    schema = StructType([
-        StructField("doc_id", LongType(), True),
-        StructField("url", StringType(), True),
-        StructField("html", StringType(), True),
-    ])
-
-    def discover(batch):
-        return extract_outlinks(batch, passthrough=("doc_id",)).select(
-            F.col("doc_id").alias("event_id"),
-            F.col("dst_url").alias("url"),
-        )
-
-    _page_file("p1.parquet", [
-        (1, "http://h.com/p1",
-         '<a href="/a">A</a><a href="/seen">old</a><a href="#x">skip</a>'),
-        (2, "http://h.com/p2", '<a href="http://ext.com/b?utm_source=z">B</a>'),
-    ])
-    run_frontier_stream(
-        spark, in_dir, seen_dir, out_dir, ckpt,
-        timeout_sec=120, discover=discover, input_schema=schema,
-    )
-    fr = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["canon_url"] for r in fr.collect()} == {
-        "http://h.com/a", "http://ext.com/b"
-    }
-
-    # a later page re-links /a (now seen) and adds /c
-    _page_file("p2.parquet", [
-        (3, "http://h.com/p3", '<a href="/a">again</a><a href="/c">C</a>'),
-    ])
-    run_frontier_stream(
-        spark, in_dir, seen_dir, out_dir, ckpt,
-        timeout_sec=120, discover=discover, input_schema=schema,
-    )
-    fr2 = spark.read.option("basePath", out_dir).parquet(out_dir)
-    assert {r["canon_url"] for r in fr2.collect()} == {
-        "http://h.com/a", "http://ext.com/b", "http://h.com/c"
-    }
-    assert load_seen_set(spark, seen_dir).count() == 4
 
 
 def test_wet_export_roundtrip_plain_and_gzip(spark, tmp_path):

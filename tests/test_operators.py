@@ -398,7 +398,7 @@ def test_pq_codebooks_and_adc_topk(spark):
     query's own cluster ahead of the other cluster (recall against the
     clustered geometry, the property ADC must preserve)."""
     from ai_pdf_extraction_spark.operators.similarity import (
-        pq_encode,
+        pq_codes,
         pq_topk,
         train_pq_codebooks,
     )
@@ -417,12 +417,7 @@ def test_pq_codebooks_and_adc_topk(spark):
     emb = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
     )
-    codes = {
-        r["vec_id"]: tuple(r["c"])
-        for r in emb.select(
-            "vec_id", pq_encode(F.col("embedding"), b1).alias("c")
-        ).collect()
-    }
+    codes = {r["vec_id"]: tuple(r["codes"]) for r in pq_codes(emb, b1).collect()}
     # cluster members quantize (at least on the first subspace, which
     # carries the separating coordinates) to cluster-consistent codes
     assert {codes[i][0] for i in range(6)}.isdisjoint(
@@ -440,39 +435,9 @@ def test_pq_codebooks_and_adc_topk(spark):
         assert all(n < 6 for n in top), (qid, top)
 
 
-def test_pq_encode_udf_matches_column_form(spark):
-    """The pandas-UDF encoder (large-codebook transport) must produce
-    BIT-IDENTICAL codes to the plan-literal Column form on the same
-    books — same rounding, same first-match ties."""
-    from ai_pdf_extraction_spark.operators.similarity import (
-        load_embedding_sample,
-        pq_encode,
-        pq_encode_udf,
-        train_pq_codebooks,
-    )
-
-    path = "/root/testdata/sf0.001/embeddings.parquet"
-    books = train_pq_codebooks(load_embedding_sample(path), m=8, n_codes=16)
-    emb = spark.read.parquet(path).limit(200)
-    col_codes = {
-        r["vec_id"]: list(r["c"])
-        for r in emb.select(
-            "vec_id", pq_encode(F.col("embedding"), books).alias("c")
-        ).collect()
-    }
-    udf_codes = {
-        r["vec_id"]: list(r["c"])
-        for r in emb.select(
-            "vec_id", pq_encode_udf(books)(F.col("embedding")).alias("c")
-        ).collect()
-    }
-    assert col_codes == udf_codes
-    assert len(col_codes) == 200
-
-
 def test_round_half_away_6_matches_spark_round(spark):
     """The numpy rounding helper used by training/encode twins
-    (assign_coarse, pq_encode_udf) must agree with F.round — Spark
+    (assign_coarse) must agree with F.round — Spark
     rounds HALF-AWAY (HALF_UP on the double's shortest decimal repr)
     while np.round is banker's, so a distance on a .5e-6 boundary
     would otherwise assign a different coarse cluster at training time
@@ -713,12 +678,9 @@ def test_base64_payload_round_trip(spark):
 
 def test_multimodal_features_and_sampling(spark):
     from ai_pdf_extraction_spark.operators.multimodal import (
-        extract_media_features,
         frame_sample_plan,
-        sniff_media_type,
+        sniff_bytes,
     )
-
-    from ai_pdf_extraction_spark.operators.multimodal import sniff_bytes
 
     rows = [
         (1, b"\x89PNG\r\n" + bytes(range(250))),
@@ -730,27 +692,15 @@ def test_multimodal_features_and_sampling(spark):
         (7, b"RIFF" + b"\x00" * 40),  # RIFF with unknown kind → unknown
         (8, b"GIF89a" + b"\x05\x00\x04\x00\x00\x00\x00"),  # gif header
     ]
-    df = spark.createDataFrame(rows, "media_id long, media binary")
-    feats = {r["media_id"]: r for r in extract_media_features(df).collect()}
-    assert feats[1]["format"] == "png" and feats[1]["media_type"] == "image"
-    assert feats[2]["format"] == "jpeg"
-    assert feats[3]["media_type"] == "audio" and feats[3]["format"] == "wav"
-    assert feats[4]["n_bytes"] == 0 and feats[4]["byte_entropy"] == 0.0
-    assert feats[5]["media_type"] == "image" and feats[5]["format"] == "webp"
-    assert feats[6]["media_type"] == "video" and feats[6]["format"] == "mp4"
-    assert feats[7]["media_type"] == "unknown"
-    assert feats[8]["media_type"] == "image" and feats[8]["format"] == "gif"
-    assert len(feats[1]["histogram"]) == 16
-    assert abs(sum(feats[1]["histogram"]) - 1.0) < 1e-4
-
-    # Column sniffing stays in lockstep with the Python sniffer
-    sniffed = {
-        r["media_id"]: r["fmt"]
-        for r in df.select("media_id", sniff_media_type().alias("fmt")).collect()
-    }
-    for mid, raw in rows:
-        expect = sniff_bytes(raw)[1] or "unknown"
-        assert sniffed[mid] == expect, (mid, sniffed[mid], expect)
+    sniffed = {mid: sniff_bytes(raw) for mid, raw in rows}
+    assert sniffed[1] == ("image", "png")
+    assert sniffed[2] == ("image", "jpeg")
+    assert sniffed[3] == ("audio", "wav")
+    assert sniffed[4] == ("unknown", None)
+    assert sniffed[5] == ("image", "webp")
+    assert sniffed[6] == ("video", "mp4")
+    assert sniffed[7][0] == "unknown"
+    assert sniffed[8] == ("image", "gif")
 
     frames = spark.createDataFrame([(1, 20), (2, 3), (3, 100)], "media_id long, n_frames int")
     sampled = {r["media_id"]: r["sample_frames"] for r in frame_sample_plan(frames, n_frames=6).collect()}
@@ -2101,39 +2051,6 @@ def test_load_ann_index_version_and_residual_compat(spark, tmp_path):
     json.dump(manifest, open(mpath, "w"))
     with pytest.raises(ValueError, match="newer than"):
         load_ann_index(spark, out)
-
-
-def test_pq_encode_udf_residual_matches_pq_codes(spark):
-    """The pandas-UDF transport's residual mode must produce
-    BIT-IDENTICAL codes to pq_codes(residual=True) — same coarse
-    assignment (round-6 first-match), same residual, same subspace
-    argmin."""
-    from ai_pdf_extraction_spark.operators.similarity import (
-        load_embedding_sample,
-        pq_codes,
-        pq_encode_udf,
-        train_ivf_centroids,
-        train_pq_codebooks,
-    )
-
-    path = "/root/testdata/sf0.001/embeddings.parquet"
-    sample = load_embedding_sample(path)
-    cents = train_ivf_centroids(sample, n_clusters=4, n_iters=5, seed=13)
-    books = train_pq_codebooks(sample, m=8, n_codes=16, centroids=cents)
-    emb = spark.read.parquet(path).limit(200)
-
-    col_codes = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_codes(emb, books, centroids=cents, residual=True).collect()
-    }
-    udf_codes = {
-        r["vec_id"]: list(r["c"])
-        for r in emb.select(
-            "vec_id",
-            pq_encode_udf(books, centroids=cents)(F.col("embedding")).alias("c"),
-        ).collect()
-    }
-    assert col_codes == udf_codes and len(col_codes) == 200
 
 
 def test_residual_ivfpq_nprobe_recall_monotone(spark):

@@ -554,3 +554,32 @@ def test_empty_commit_groups_advance_watermark(spark, tmp_path):
     assert len(snaps) == 4
     assert sum(not s["metrics"] for s in snaps) >= 2  # two docs fill ≤ 2 groups
     assert sum(m["n_docs"] for s in snaps for m in s["metrics"]) == 2
+
+
+def test_truncated_document_keeps_every_kernel_warning(spark):
+    """A document over MAX_DOC_BYTES is cut to the budget; its stored
+    warnings are the kernel's warnings on the cut bytes, duplicates and
+    order included, then the truncation warning."""
+    import datetime
+
+    from ai_pdf_extraction_spark.kernels import extract_document
+    from ai_pdf_extraction_spark.plans.pipeline import (
+        MAX_DOC_BYTES,
+        extraction_plan,
+    )
+    from ai_pdf_extraction_spark.sources.warc import PAGES_SCHEMA
+
+    bad = b"<< /Length 10 /Filter /FlateDecode >>\nstream\nnot-zlib!!\nendstream\n"
+    pdf = b"%PDF-1.4\n" + bad + bad
+    pdf += b" " * (MAX_DOC_BYTES + 10 - len(pdf))
+    expected = extract_document(pdf[:MAX_DOC_BYTES]).warnings
+    assert expected.count("pdf: FlateDecode stream failed to inflate") == 2
+
+    pages = spark.createDataFrame(
+        [("http://t.example/big.pdf", datetime.datetime(2024, 1, 1), pdf, None, "en")],
+        PAGES_SCHEMA,
+    )
+    row = extraction_plan(pages, "trunc", n_buckets=4, min_parallelism=1).collect()[0]
+    assert row["warnings"] == expected + [
+        f"input truncated at {MAX_DOC_BYTES} bytes"
+    ]

@@ -190,41 +190,6 @@ def test_output_columns_contract(spark, corpus_dir):
     assert tuple(plan.columns) == OUTPUT_COLUMNS
 
 
-def test_streaming_schema_matches_batch(spark, corpus_dir):
-    """The streaming twin shares the batch projection verbatim —
-    identical column names AND types, field_confidences included."""
-    from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
-    from ai_pdf_extraction_spark.streaming.ingest import extraction_stream
-
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    batch = extraction_plan(pages, run_id="r")
-    stream = extraction_stream(spark, os.path.join(corpus_dir, "pages.parquet"), "r")
-    assert stream.schema == batch.schema
-
-
-def test_streaming_microbatch_has_no_repartition_exchange(spark, tmp_path):
-    """The extraction stream never fans out: a partition-balance
-    repartition per micro-batch would add a shuffle to every trigger.
-    Asserted on the plan the micro-batch actually executed."""
-    from ai_pdf_extraction_spark.corpus.generate import write_pages_parquet
-    from ai_pdf_extraction_spark.streaming.ingest import extraction_stream
-
-    src = tmp_path / "in"
-    src.mkdir()  # the file-stream source lists a directory's files
-    write_pages_parquet(str(src / "p.parquet"), 20, seed=7)
-    q = (
-        extraction_stream(spark, str(src), "r")
-        .writeStream.foreachBatch(lambda batch, epoch: None)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120) and q.exception() is None
-    plan = q._jsq.explainInternal(False)
-    assert "FileScan parquet" in plan and "ArrowEvalPython" in plan, plan
-    assert "Exchange" not in plan, plan
-
-
 def test_ensure_parallel_balance_rule(spark, tmp_path):
     """The partition-balance rule, read from partition counts alone
     (AQE off so a repartition's count is known without running its
