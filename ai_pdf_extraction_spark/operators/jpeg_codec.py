@@ -22,7 +22,7 @@ Scope — the honest boundary:
   restart markers, byte stuffing. Chroma upsampling is
   nearest-neighbor (box replication) — a legitimate decoder choice,
   deterministic.
-* **encode**: JFIF for fixtures/resize output — grayscale or YCbCr
+* **encode**: JFIF for fixtures — grayscale or YCbCr
   4:2:0, sequential or spectral-selection progressive, Annex-K
   quantization tables with the classic quality scaling, and
   SELF-DESIGNED fixed-length Huffman tables (all DC categories 4
@@ -977,17 +977,3 @@ def encode_jpeg(
                 out += writer.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
-
-
-def resize_jpeg(data: bytes, out_w: int, out_h: int, quality: int = 90) -> bytes:
-    """REAL nearest-neighbor resize of a baseline JPEG — decode,
-    sample, re-encode (the png_codec/resize_bmp index arithmetic, so
-    all three formats resize identically)."""
-    dec = decode_jpeg(data)
-    w, h, ch = dec["width"], dec["height"], dec["channels"]
-    pix = np.frombuffer(dec["pixels"], dtype=np.uint8).reshape(h, w, ch)
-    ys = np.minimum(np.arange(out_h) * h // out_h, h - 1)
-    xs = np.minimum(np.arange(out_w) * w // out_w, w - 1)
-    return encode_jpeg(
-        out_w, out_h, ch, pix[np.ix_(ys, xs)].tobytes(), quality=quality
-    )

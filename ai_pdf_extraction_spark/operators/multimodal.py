@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
 Media columns are ``binary`` + a typed metadata struct; probe / decode /
-resize / frame-sample run as Arrow-batched
+frame-sample run as Arrow-batched
 ``mapInPandas`` stages. Header probes (PNG/JPEG/BMP/WebP dimensions,
 WAV/MP4 duration) and wav (8/16/24/32-bit PCM + 32/64-bit
 IEEE-float) / bmp / PNG (every
-legal shape) / GIF / JPEG (baseline AND progressive) decode + resize
+legal shape) / GIF / JPEG (baseline AND progressive) decode
 are REAL — stdlib+numpy only (:mod:`png_codec` / :mod:`gif_codec` /
 :mod:`jpeg_codec`).
 
@@ -41,10 +41,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ai_pdf_extraction_spark.operators.png_codec import resize_png as _resize_png
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     IntegerType,
     LongType,
@@ -304,112 +301,12 @@ def decode_base64_payload(col: str = "media_b64"):
 
 def _bmp_file(w: int, h: int, pixels: bytes) -> bytes:
     """Assemble a 24bpp BITMAPINFOHEADER BMP around row-padded pixel
-    bytes — one copy of the header layout for resize_bmp and the
-    fixture generator."""
+    bytes (the fixture generator's header layout)."""
     return (
         struct.pack("<2sIHHI", b"BM", 54 + len(pixels), 0, 0, 54)
         + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 0, 0, 0, 0)
         + pixels
     )
-
-
-def resize_bmp(data: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL nearest-neighbor resize of an uncompressed 24bpp BMP —
-    stdlib only (the resize verb of the task brief, runnable without
-    codec libs). Returns a well-formed BMP of (out_w, out_h)."""
-    dec = decode_media(data, "bmp")
-    if dec["bpp"] != 24:
-        raise NotImplementedError(f"bmp resize supports 24bpp, got {dec['bpp']}")
-    w, h, pixels = dec["width"], dec["height"], dec["pixels"]
-    src_stride = (3 * w + 3) & ~3
-    if w <= 0 or h <= 0 or len(pixels) < h * src_stride:
-        # a truncated pixel buffer must FAIL (resize_media passes the
-        # original through), never emit a header/payload-mismatched BMP
-        raise ValueError(
-            f"bmp pixel buffer truncated: {len(pixels)} < {h * src_stride}"
-        )
-    dst_stride = (3 * out_w + 3) & ~3
-    rows = bytearray()
-    for oy in range(out_h):
-        sy = min(oy * h // out_h, h - 1)
-        src_row = pixels[sy * src_stride : sy * src_stride + 3 * w]
-        row = bytearray(dst_stride)
-        for ox in range(out_w):
-            sx = min(ox * w // out_w, w - 1)
-            row[3 * ox : 3 * ox + 3] = src_row[3 * sx : 3 * sx + 3]
-        rows += row
-    if struct.unpack("<i", data[22:26])[0] < 0:
-        # top-down source: storage was copied top-down, but _bmp_file
-        # declares bottom-up — reverse the row blocks so orientation
-        # survives instead of mirroring vertically
-        rows = bytearray().join(
-            rows[i * dst_stride : (i + 1) * dst_stride]
-            for i in range(out_h - 1, -1, -1)
-        )
-    return _bmp_file(out_w, out_h, bytes(rows))
-
-
-def resize_media(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    id_col: str = "media_id",
-    bytes_col: str = "media",
-) -> DataFrame:
-    """mapInPandas resize stage: bmp, png AND baseline jpeg payloads
-    resize for REAL (nearest-neighbor — png via :mod:`png_codec`, jpeg
-    via :mod:`jpeg_codec`); other formats pass through with
-    ``resized=false`` (their decoders are the documented codec seam).
-    Media bytes stay narrow — no shuffle."""
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("media", BinaryType(), True),
-            StructField("resized", BooleanType(), False),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_bytes: list[bytes | None] = []
-            flags: list[bool] = []
-            for b in pdf[bytes_col]:
-                # passthrough preserves null AS null and empty AS empty
-                # (b'' is a present-but-empty payload, not a missing one)
-                if b is None:
-                    out_bytes.append(None)
-                    flags.append(False)
-                    continue
-                raw = bytes(b)
-                fmt = sniff_bytes(raw)[1]
-                if fmt in ("bmp", "png", "jpeg"):
-                    try:
-                        if fmt == "bmp":
-                            resizer = resize_bmp
-                        elif fmt == "png":
-                            resizer = _resize_png
-                        else:
-                            from ai_pdf_extraction_spark.operators.jpeg_codec import (
-                                resize_jpeg,
-                            )
-
-                            resizer = resize_jpeg
-                        out_bytes.append(resizer(raw, out_w, out_h))
-                        flags.append(True)
-                        continue
-                    except Exception:
-                        pass
-                out_bytes.append(raw)
-                flags.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "media": out_bytes,
-                    "resized": flags,
-                }
-            )
-
-    return df.select(id_col, bytes_col).mapInPandas(gen, out_schema)
 
 
 def media_metadata(

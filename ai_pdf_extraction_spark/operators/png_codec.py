@@ -9,8 +9,8 @@ tRNS chunk is present). This closes the largest slice of the
 documented codec seam (round-3 verdict item 3): the reference
 genuinely rasterizes and resizes images (poppler rasterize,
 ``app/backend/services/pdf_service.py:40-128``; PIL LANCZOS resize,
-``services/ai/extraction.py:74-86``); here the stdlib does the same
-verbs for PNG end-to-end. Round-5 closed the remaining shapes: Adam7
+``services/ai/extraction.py:74-86``); here the stdlib decodes and
+encodes PNG end-to-end. Round-5 closed the remaining shapes: Adam7
 interlace (seven independently-filtered sub-images scattered onto the
 full grid, truecolor and palette alike) and 16-bit samples (decoded
 at full byte geometry, stripped to 8 bits via the high byte — the
@@ -119,8 +119,8 @@ def decode_png(data: bytes) -> dict:
     # 16-bit samples: filters operate on BYTES with bpp = 2·channels;
     # output strips to 8 bits by keeping each sample's HIGH byte (the
     # standard strip-16 reduction — libpng's png_set_strip_16 /
-    # png_set_scale_16-high-byte behavior; the pipeline's feature and
-    # resize stages are 8-bit)
+    # png_set_scale_16-high-byte behavior; the pipeline's feature
+    # stages are 8-bit)
     spb = depth // 8  # bytes per sample
     if interlace:
         out = _deinterlace(bytes(idat), w, h, 8, channels * spb)
@@ -352,24 +352,3 @@ def encode_png_palette(
     if trns is not None:
         out += chunk(b"tRNS", trns)
     return out + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b"")
-
-
-def resize_png(data: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL nearest-neighbor resize of a supported PNG — decode,
-    sample, re-encode. Mirrors :func:`multimodal.resize_bmp`'s index
-    arithmetic so the two formats resize identically."""
-    dec = decode_png(data)
-    w, h, ch, pixels = dec["width"], dec["height"], dec["channels"], dec["pixels"]
-    src_stride = w * ch
-    dst_stride = out_w * ch
-    rows = bytearray(out_h * dst_stride)
-    for oy in range(out_h):
-        sy = min(oy * h // out_h, h - 1)
-        src_row = pixels[sy * src_stride : (sy + 1) * src_stride]
-        base = oy * dst_stride
-        for ox in range(out_w):
-            sx = min(ox * w // out_w, w - 1)
-            rows[base + ch * ox : base + ch * (ox + 1)] = src_row[
-                ch * sx : ch * (sx + 1)
-            ]
-    return encode_png(out_w, out_h, ch, bytes(rows))

@@ -1,67 +1,81 @@
-"""Read-side status/metrics queries over the output table + snapshot
-lineage (SURVEY.md §2.4 A8-A11, §3.3 batch status).
+"""Status/metrics over the snapshot chain (SURVEY.md §2.4 A8-A11,
+§3.3 batch status).
 
 The reference recomputes batch progress on every ``GET
-/batches/{id}/status`` poll (``routers/batches.py:430-542``); here the
-same aggregation runs over the committed output table and the snapshot
-manifests are the durable per-partition lineage (north_rule)."""
+/batches/{id}/status`` poll (``routers/batches.py:430-542``); here each
+commit's per-bucket counters are observed on the frame the commit
+writes and recorded in its snapshot manifest, the durable
+per-partition lineage (north_rule). Status sums the manifests, the way
+an Iceberg snapshot summary answers it: no read of committed data."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+from ai_pdf_extraction_spark.sources.snapshot_table import (
+    SnapshotTable,
+    live_metrics,
+    visible,
+)
 
-# The per-bucket counters: each commit records them per bucket in its
-# lineage, and batch_status sums them over the table. All are bigint.
+# The per-bucket counters, as the per-row value each one sums: each
+# commit records them per bucket in its lineage, and batch_status sums
+# n_docs and n_parse_fail over the live commits. All are bigint.
 COUNTERS = {
-    "n_docs": "count(*)",
-    "n_parse_fail": "count_if(NOT parse_ok)",
-    "sum_chars": "sum(n_chars)",
-    "sum_spans": "sum(n_spans)",
+    "n_docs": "1",
+    "n_parse_fail": "CAST(NOT parse_ok AS INT)",
+    "sum_chars": "n_chars",
+    "sum_spans": "n_spans",
 }
 
 
-def counters(*names: str) -> list[Column]:
-    """Aggregate expressions for ``names`` (default: every counter)."""
-    return [F.expr(COUNTERS[n]).alias(n) for n in names or COUNTERS]
+def bucket_counters(buckets) -> list[Column]:
+    """One aggregate per (bucket, counter), named ``<counter>_<bucket>``,
+    for ``DataFrame.observe`` on the frame a commit writes. Observed
+    metrics reject ``FILTER (WHERE …)``, hence the ``if``."""
+    return [
+        F.expr(f"sum(if(bucket = {b}, {value}, 0))").alias(f"{n}_{b}")
+        for b in buckets
+        for n, value in COUNTERS.items()
+    ]
 
 
-def commit_metrics(written: DataFrame, elapsed: float) -> list[dict]:
-    """One commit's per-bucket lineage metrics over its rows
-    ``written``, which took ``elapsed`` seconds to extract and write."""
-    stats = written.groupBy("bucket").agg(*counters()).collect()
-    n_docs = sum(r["n_docs"] for r in stats)
+def commit_metrics(observed: dict, buckets, elapsed: float) -> list[dict]:
+    """One commit's per-bucket lineage metrics from the row ``observed``
+    over :func:`bucket_counters` ``(buckets)`` while the commit was
+    extracted and written in ``elapsed`` seconds. Buckets without docs
+    are left out; a frame with no rows sums to null, i.e. no docs."""
+    stats = [
+        {"bucket": b, **{n: int(observed[f"{n}_{b}"] or 0) for n in COUNTERS}}
+        for b in buckets
+    ]
+    stats = [s for s in stats if s["n_docs"]]
+    n_docs = sum(s["n_docs"] for s in stats)
     return [
         {
-            "bucket": int(r["bucket"]),
-            **{n: int(r[n]) for n in COUNTERS},
-            "parse_fail_rate": round(r["n_parse_fail"] / max(r["n_docs"], 1), 6),
+            **s,
+            "parse_fail_rate": round(s["n_parse_fail"] / s["n_docs"], 6),
             "commit_elapsed_sec": round(elapsed, 3),
             "commit_docs_per_sec": round(n_docs / max(elapsed, 1e-9), 3),
         }
-        for r in stats
+        for s in stats
     ]
 
 
 def batch_status(spark: SparkSession, table: SnapshotTable, n_buckets: int) -> dict:
-    """Progress + counters, one small aggregation (A8/A9/A11). A table
-    with no live data directory (nothing committed, or only empty
-    commits) reports zero docs without reading."""
-    committed = table.committed_buckets()
-    dirs = table.data_dirs()
-    row = (
-        table.read_dirs(spark, dirs).agg(*counters("n_docs", "n_parse_fail")).first()
-        if dirs
-        else {"n_docs": 0, "n_parse_fail": 0}
-    )
+    """Progress + counters (A8/A9/A11), summed over the manifest
+    metrics of the live commits: no Spark job runs and ``spark`` goes
+    unused. A commit that recorded no metrics contributes no docs."""
+    snaps = table.snapshots()
+    committed = visible(snaps)[0]
+    metrics = live_metrics(snaps)
     return {
         "progress_pct": round(100.0 * len(committed) / n_buckets, 2),
         "buckets_done": len(committed),
         "n_buckets": n_buckets,
-        "n_docs": int(row["n_docs"]),
-        "n_parse_fail": int(row["n_parse_fail"]),
+        "n_docs": sum(m.get("n_docs", 0) for m in metrics),
+        "n_parse_fail": sum(m.get("n_parse_fail", 0) for m in metrics),
     }
 
 

@@ -11,18 +11,18 @@ Lifecycle parity with the reference's flagship path
 | per-doc status rows (``PENDING→…``) | per-bucket checkpoint = snapshot manifest |
 | extraction LLM call per chunk | pandas UDF batch per Arrow slice |
 | Postgres insert per doc | bucket-partitioned parquet/Iceberg append |
-| batch counters (``batches.py:221-241``) | per-bucket metrics in the snapshot |
+| batch counters (``batches.py:221-241``) | per-bucket counters observed on the write, in the snapshot |
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.extract import extract_udf
-from ai_pdf_extraction_spark.plans.metrics import commit_metrics
+from ai_pdf_extraction_spark.plans.metrics import bucket_counters, commit_metrics
 from ai_pdf_extraction_spark.plans.partitioning import (
     DEFAULT_N_BUCKETS,
     cluster_by_bucket,
@@ -216,17 +216,14 @@ def run_extraction(
         chunk = pending[i : i + group]
         t0 = time.monotonic()
         plan = extraction_plan(pages, run_id, n_buckets, buckets=chunk)
-        commit_id = table.write(plan)
+        # The counters are observed on the frame the write consumes,
+        # above cluster_by_bucket's Exchange: in the write's result
+        # stage, whose accumulator updates Spark applies once per
+        # partition (a shuffle-map stage retry could apply them twice).
+        observed = Observation()
+        commit_id = table.write(plan.observe(observed, *bucket_counters(chunk)))
         elapsed = time.monotonic() - t0
-        # Metrics computed from this commit's own directories (one
-        # small scan of the output, never of the input binary column,
-        # nor of earlier commits). An all-empty chunk writes no files
-        # at all — commit an empty watermark so resume still advances
-        # past it.
-        written = table.data_dirs({commit_id: chunk})
-        metrics = (
-            commit_metrics(table.read_dirs(spark, written), elapsed) if written else []
-        )
+        metrics = commit_metrics(observed.get, chunk, elapsed)
         # Buckets with zero rows still count as committed (watermark
         # must advance past empty partitions).
         table.commit(

@@ -87,6 +87,13 @@ def visible(snapshots: list[dict]) -> tuple[set[int], dict[str, list[int]]]:
     return buckets, live
 
 
+def live_metrics(snapshots: list[dict]) -> list[dict]:
+    """The per-bucket metrics recorded by the commits :func:`visible`
+    leaves live over ``snapshots``."""
+    live = visible(snapshots)[1]
+    return [m for s in snapshots if s.get("commit_id") in live for m in s["metrics"]]
+
+
 class _SnapshotChain:
     """What both table implementations derive from ``snapshots()``."""
 
@@ -142,11 +149,12 @@ class SnapshotTable(_SnapshotChain):
         if not os.path.isdir(self.manifest_dir):
             return []
         out = []
-        for n in sorted(os.listdir(self.manifest_dir)):
+        for n in os.listdir(self.manifest_dir):
             if n.startswith("snapshot-") and n.endswith(".json"):
                 with open(os.path.join(self.manifest_dir, n)) as fh:
                     out.append(json.load(fh))
-        return out
+        # by sequence, not file name: past 999,999 the name grows a digit
+        return sorted(out, key=lambda snap: snap["sequence"])
 
     def table_property(self, key: str):
         """Latest non-null value of a manifest property along the
@@ -192,7 +200,9 @@ class SnapshotTable(_SnapshotChain):
         metrics: list[dict] | None = None,
     ) -> dict:
         """Write ``df`` (must carry a ``bucket`` column restricted to
-        ``buckets``) and commit a snapshot manifest atomically."""
+        ``buckets``) and commit a snapshot manifest atomically.
+        ``metrics`` are the per-bucket counters status sums over the
+        chain; a commit without them adds no docs to it."""
         commit_id = self.write(df)
         return self.commit(buckets, run_id, metrics, commit_id=commit_id)
 
@@ -306,11 +316,14 @@ class SnapshotTable(_SnapshotChain):
         Rows are placed by the bucket's rank among the committed
         buckets with ``repartitionById`` (``cluster_by_bucket`` at one
         salt): one task per bucket, so no two buckets share a task by
-        hash collision. Old files stay on disk for time travel until
-        :meth:`expire_superseded` removes them."""
+        hash collision. The new commit records, per bucket, the sum of
+        every integer counter of the commits it replaces, so status
+        summed over the chain is unchanged. Old files stay on disk for
+        time travel until :meth:`expire_superseded` removes them."""
         from pyspark.sql import functions as F
 
-        buckets, live = visible(self.snapshots())
+        snaps = self.snapshots()
+        buckets, live = visible(snaps)
         dirs = self.data_dirs(live)
         if not dirs:
             return {"compacted": 0, "replaces": []}
@@ -321,8 +334,17 @@ class SnapshotTable(_SnapshotChain):
         # row count from the freshly written commit's parquet metadata —
         # a pre-write df.count() would re-read every payload twice
         n = self.read_dirs(spark, self.data_dirs({new_id: group})).count()
+        totals: dict[int, dict] = {}
+        for m in live_metrics(snaps):
+            t = totals.setdefault(m["bucket"], {"bucket": m["bucket"]})
+            for k, v in m.items():
+                if k != "bucket" and type(v) is int:
+                    t[k] = t.get(k, 0) + v
         old_ids = sorted(live)
-        self.commit(group, run_id="compaction", commit_id=new_id, replaces=old_ids)
+        self.commit(
+            group, run_id="compaction", metrics=[totals[b] for b in sorted(totals)],
+            commit_id=new_id, replaces=old_ids,
+        )
         return {"compacted": n, "replaces": old_ids, "commit_id": new_id}
 
     def expire_superseded(self) -> list[str]:

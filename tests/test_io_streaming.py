@@ -204,6 +204,32 @@ def test_snapshots_close_manifest_files(tmp_path):
     assert not [w for w in caught if issubclass(w.category, ResourceWarning)]
 
 
+def test_chain_orders_by_sequence_past_six_digits(tmp_path):
+    """Manifest names grow a seventh digit at sequence 1,000,000, which
+    sorts first as text; the chain stays in sequence order, so commits
+    keep advancing it and visibility walks it oldest first."""
+    import json
+
+    from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+
+    table = SnapshotTable(str(tmp_path / "long_chain"))
+    os.makedirs(table.manifest_dir)
+    old = {
+        "snapshot_id": "s999998", "sequence": 999_998, "parent_id": None,
+        "run_id": "r0", "commit_id": "c0", "buckets": [0], "metrics": [],
+        "replaces": [], "properties": {},
+    }
+    with open(os.path.join(table.manifest_dir, "snapshot-999998.json"), "w") as fh:
+        json.dump(old, fh)
+    for b in (1, 2, 3):
+        table.commit([b], run_id=f"r{b}", commit_id=f"c{b}")
+    snaps = table.snapshots()
+    assert [s["sequence"] for s in snaps] == [999_998, 999_999, 1_000_000, 1_000_001]
+    assert [s["parent_id"] for s in snaps[1:]] == [s["snapshot_id"] for s in snaps[:-1]]
+    table.commit([0], run_id="compaction", commit_id="c4", replaces=["c0", "c3"])
+    assert table.committed_commit_ids() == {"c1", "c2", "c4"}
+
+
 def test_warc_roundtrip_and_extraction(spark, tmp_path):
     """WARC source: gzip and plain files parse to the pages schema and
     feed the extraction pipeline unchanged; non-response records and

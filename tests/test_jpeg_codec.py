@@ -11,11 +11,7 @@ import struct
 import numpy as np
 import pytest
 
-from ai_pdf_extraction_spark.operators.jpeg_codec import (
-    decode_jpeg,
-    encode_jpeg,
-    resize_jpeg,
-)
+from ai_pdf_extraction_spark.operators.jpeg_codec import decode_jpeg, encode_jpeg
 
 # The fixed-length tables the literals below assume (written out as
 # independent literals, NOT imported from the module): DC categories
@@ -306,13 +302,7 @@ def test_roundtrip_solid_and_gradient():
     assert np.abs(got.astype(int) - g.astype(int)).max() <= 2
 
 
-def test_resize_and_malformed():
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(17, 19, 3), dtype=np.uint8)
-    small = resize_jpeg(encode_jpeg(19, 17, 3, img.tobytes(), quality=90), 6, 5)
-    dec = decode_jpeg(small)
-    assert (dec["width"], dec["height"], dec["channels"]) == (6, 5, 3)
-
+def test_malformed_jpeg_raises():
     with pytest.raises(ValueError):
         decode_jpeg(b"")
     with pytest.raises(ValueError):

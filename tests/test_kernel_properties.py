@@ -328,7 +328,7 @@ def test_deep_nesting_never_recurses_out():
 def test_decode_png_exception_taxonomy(data):
     """Untrusted-media contract: decode_png raises ONLY ValueError /
     NotImplementedError on garbage — anything else (struct.error,
-    zlib.error, IndexError, MemoryError) would escape resize_media's
+    zlib.error, IndexError, MemoryError) would escape decode_media's
     documented failure modes."""
     import pytest as _pytest
 

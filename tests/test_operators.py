@@ -892,30 +892,8 @@ def test_media_probe_and_stdlib_decode(spark):
     assert got[3]["height"] == 480
     assert got[4]["media_type"] == "unknown" and got[4]["width"] is None
 
-    # REAL resize: bmp shrinks to 2x1 and round-trips the probe;
-    # non-bmp formats pass through unresized
-    from ai_pdf_extraction_spark.operators.multimodal import (
-        resize_bmp,
-        resize_media,
-    )
-
-    small = resize_bmp(bmp, 2, 1)
-    m = probe_media(small)
-    assert (m["format"], m["width"], m["height"]) == ("bmp", 2, 1)
-    rs = {r["media_id"]: r for r in resize_media(df, 2, 1).collect()}
-    assert rs[2]["resized"] and probe_media(bytes(rs[2]["media"]))["width"] == 2
-    assert not rs[1]["resized"] and bytes(rs[1]["media"]) == wav
-
-    # truncated pixel buffer: resize must FAIL (passthrough unresized),
-    # never emit a header/payload-mismatched BMP
-    truncated = bmp[: 54 + 10]
-    with pytest.raises(ValueError):
-        resize_bmp(truncated, 2, 2)
-    df_t = spark.createDataFrame([(9, truncated)], "media_id long, media binary")
-    rt = resize_media(df_t, 2, 2).collect()[0]
-    assert not rt["resized"] and bytes(rt["media"]) == truncated
-
-    # top-down source (negative height): orientation survives resize
+    # top-down source (negative height): decode reports the absolute
+    # height and the stored rows as they are
     import struct as _struct
 
     # 1x2 bottom-up: storage row0=RED(bottom), row1=BLUE(top)
@@ -931,9 +909,10 @@ def test_media_probe_and_stdlib_decode(spark):
         + _struct.pack("<IiiHHIIiiII", 40, 1, -2, 1, 24, 0, 8, 0, 0, 0, 0)
         + blue + red
     )
-    out_bu = decode_media(resize_bmp(bottom_up, 1, 2), "bmp")["pixels"]
-    out_td = decode_media(resize_bmp(top_down, 1, 2), "bmp")["pixels"]
-    assert out_bu == out_td == red + blue, (out_bu, out_td)
+    for data, stored in ((bottom_up, red + blue), (top_down, blue + red)):
+        dec = decode_media(data, "bmp")
+        assert (dec["width"], dec["height"], dec["bpp"]) == (1, 2, 24)
+        assert dec["pixels"] == stored
 
 
 def _png_raw(width, height, color_type, scanlines):
@@ -1432,48 +1411,17 @@ def test_media_decode_features_stage(spark):
     assert decode_payload_summary(bomb)["decode_ok"] is False
 
 
-def test_png_encode_resize_roundtrip(spark):
-    """encode→decode round-trips pixels exactly; nearest-neighbor
-    resize duplicates pixels by hand-checkable index arithmetic; the
-    distributed resize stage now really resizes PNG payloads."""
-    from ai_pdf_extraction_spark.operators.multimodal import (
-        decode_media,
-        probe_media,
-        resize_media,
-    )
-    from ai_pdf_extraction_spark.operators.png_codec import (
-        decode_png,
-        encode_png,
-        resize_png,
-    )
+def test_png_encode_roundtrip():
+    """encode→decode round-trips pixels exactly, also through
+    decode_media."""
+    from ai_pdf_extraction_spark.operators.multimodal import decode_media
+    from ai_pdf_extraction_spark.operators.png_codec import decode_png, encode_png
 
     # 2x2 RGB: distinct corner colors
     px = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 9, 9, 9])
     data = encode_png(2, 2, 3, px)
     assert decode_png(data)["pixels"] == px
     assert decode_media(data, "png")["width"] == 2  # wired into decode_media
-
-    # upscale 2x2 → 4x4: each source pixel becomes a 2x2 block
-    up = decode_png(resize_png(data, 4, 4))
-    assert (up["width"], up["height"]) == (4, 4)
-    row0 = up["pixels"][:12]
-    assert row0 == bytes([255, 0, 0, 255, 0, 0, 0, 255, 0, 0, 255, 0])
-    row3 = up["pixels"][36:48]
-    assert row3 == bytes([0, 0, 255, 0, 0, 255, 9, 9, 9, 9, 9, 9])
-
-    # downscale picks the top-left sample of each block back out
-    down = decode_png(resize_png(resize_png(data, 4, 4), 2, 2))
-    assert down["pixels"] == px
-
-    # distributed: png rows resize for real, junk passes through
-    df = spark.createDataFrame(
-        [(1, data), (2, b"junk")], "media_id long, media binary"
-    )
-    rs = {r["media_id"]: r for r in resize_media(df, 4, 4).collect()}
-    assert rs[1]["resized"]
-    m = probe_media(bytes(rs[1]["media"]))
-    assert (m["format"], m["width"], m["height"]) == ("png", 4, 4)
-    assert not rs[2]["resized"]
 
 
 def test_lang_detect_wide(spark):

@@ -76,8 +76,8 @@ def test_resume_skips_committed_buckets(spark, corpus_dir, tmp_path):
     assert dupes == 0
     assert final.count() == 300
 
-    # Each commit's lineage metrics equal a groupBy("bucket") over that
-    # commit's own rows (the stats read only the commit's directories).
+    # Each commit's lineage metrics, counted while the commit was
+    # written, equal a groupBy("bucket") over that commit's own rows.
     actual = {
         (r["commit_id"], r["bucket"]): (
             r["n_docs"], r["n_parse_fail"], r["sum_chars"], r["sum_spans"]
@@ -314,9 +314,11 @@ def test_compaction_preserves_data_and_time_travel(spark, corpus_dir, tmp_path):
 
 
 def test_orphan_and_superseded_data_stay_invisible(spark, tmp_path):
-    """After two commits, a compaction and a crashed write (data under a
-    commit id no manifest names), readers list only the live commit's
-    files and count only committed rows."""
+    """After two commits that carry counters, a compaction and a crashed
+    write (data under a commit id no manifest names), readers list only
+    the live commit's files and count only committed rows, and status
+    summed over the manifests, with no Spark job, equals an aggregate
+    over the committed rows."""
     from ai_pdf_extraction_spark.plans.metrics import batch_status
     from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
 
@@ -328,9 +330,21 @@ def test_orphan_and_superseded_data_stay_invisible(spark, tmp_path):
             (first + F.col("id") % n).cast("int").alias("bucket"),
         )
 
+    def counters(lo: int, hi: int, first: int, n: int) -> list[dict]:
+        """The per-bucket counters a writer records for rows(lo, hi, ...)."""
+        out: dict[int, dict] = {}
+        for i in range(lo, hi):
+            m = out.setdefault(first + i % n, {"bucket": first + i % n})
+            m["n_docs"] = m.get("n_docs", 0) + 1
+            m["n_parse_fail"] = m.get("n_parse_fail", 0) + int(i % 3 != 0)
+        return list(out.values())
+
     table = SnapshotTable(str(tmp_path / "orphans"))
-    table.append(rows(0, 40, 0, 2), buckets=[0, 1], run_id="a")
-    table.append(rows(40, 100, 2, 2), buckets=[2, 3], run_id="b")
+    for lo, hi, first, run_id in ((0, 40, 0, "a"), (40, 100, 2, "b")):
+        table.append(
+            rows(lo, hi, first, 2), buckets=[first, first + 1], run_id=run_id,
+            metrics=counters(lo, hi, first, 2),
+        )
     live_id = table.compact(spark)["commit_id"]
     orphan_id = table.write(rows(100, 1000, 0, 4))
 
@@ -341,9 +355,25 @@ def test_orphan_and_superseded_data_stay_invisible(spark, tmp_path):
     assert all(f"/commit_id={live_id}/" in f for f in files), files
     assert orphan_id not in {r["commit_id"] for r in df.select("commit_id").collect()}
     assert df.count() == 100
-    status = batch_status(spark, table, n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("batch_status_jobs", "status from the manifests")
+    try:
+        status = batch_status(spark, table, n_buckets=4)
+        assert sc.statusTracker().getJobIdsForGroup("batch_status_jobs") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    scanned = df.agg(
+        F.count("*").alias("n_docs"),
+        F.sum((~F.col("parse_ok")).cast("int")).alias("n_parse_fail"),
+    ).first()
+    assert (status["n_docs"], status["n_parse_fail"]) == tuple(scanned)
     assert status["n_docs"] == 100 and status["buckets_done"] == 4
     assert status["n_parse_fail"] == sum(1 for i in range(100) if i % 3)
+    # the compaction recorded the replaced commits' counters, per bucket
+    assert table.current_snapshot()["metrics"] == sorted(
+        counters(0, 40, 0, 2) + counters(40, 100, 2, 2), key=lambda m: m["bucket"]
+    )
 
 
 def test_salted_join_matches_plain_join(spark, corpus_dir):
@@ -539,8 +569,8 @@ def test_curated_corpus_v5_lm_leg(spark):
 
 
 def test_empty_commit_groups_advance_watermark(spark, tmp_path):
-    """A commit group with no rows writes no directory: its stats read
-    nothing (no schema to infer) and it still commits its buckets."""
+    """A commit group with no rows writes no directory: it observes
+    zeros, records no metrics, and still commits its buckets."""
     from ai_pdf_extraction_spark.corpus.generate import write_pages_parquet
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction
     from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable

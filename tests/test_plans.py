@@ -284,6 +284,43 @@ def test_cluster_by_bucket_fan_out(spark, corpus_dir):
     assert "Exchange" not in wide, wide
 
 
+def test_commit_counters_observed_in_the_write_result_stage(
+    spark, corpus_dir, tmp_path
+):
+    """A narrow input's commit counts its rows where Spark applies
+    accumulator updates once per partition: in the executed write plan,
+    CollectMetrics sits above cluster_by_bucket's Exchange with no
+    Exchange above it (a shuffle-map stage retry could count twice)."""
+    import time
+
+    from ai_pdf_extraction_spark.plans.pipeline import run_extraction
+    from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+
+    root = str(tmp_path / "observed")
+    run_extraction(
+        spark, os.path.join(corpus_dir, "pages.parquet"), root, run_id="o", n_buckets=4
+    )
+    data_dir = SnapshotTable(root).data_dir
+    store = spark._jsparkSession.sharedState().statusStore()
+    final = None
+    # the SQL listener records the final adaptive plan asynchronously
+    for _ in range(50):
+        execs = store.executionsList()
+        plans = (
+            execs.apply(i).physicalPlanDescription()
+            for i in reversed(range(execs.size()))
+        )
+        write = next((p for p in plans if data_dir in p), "")
+        if "== Final Plan ==" in write:
+            final = write.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+            break
+        time.sleep(0.2)
+    assert final is not None, "write execution not found"
+    above, found, below = final.partition("CollectMetrics")
+    assert found and "Exchange" in below, final
+    assert "Exchange" not in above and "ShuffleQueryStage" not in above, final
+
+
 def test_release_all_isolates_queries(spark):
     """A persisted slot must not answer a later query: q88 persists
     q80's frontier, so a q80 built after it reads q88's cached relation
