@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
 from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
 from ai_pdf_extraction_spark.plans.persist import persist
+from ai_pdf_extraction_spark.worker import prepare_worker
 
 # Shingles appearing in more docs than this are dropped before any
 # join — a handful of ubiquitous (stopword-ish) shingles would
@@ -845,6 +846,7 @@ def _block_pair_search(
     out_schema = "id_a long, id_b long, cos double"
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        prepare_worker()
         ba = int(pdf["bp"].iloc[0]["ba"])
         bb = int(pdf["bp"].iloc[0]["bb"])
         ids = pdf["_id"].to_numpy()

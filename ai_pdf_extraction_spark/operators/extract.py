@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ai_pdf_extraction_spark.worker import prepare_worker
+
 SPAN_TYPE = StructType(
     [
         StructField("start", LongType(), False),
@@ -68,8 +70,11 @@ def extract_udf(html: pd.Series) -> pd.DataFrame:
     """Vectorized wrapper: one Arrow batch of raw bytes in, one batch
     of extraction structs out. Imports the kernel lazily so the module
     is initialized once per Python worker (the reference's lazy
-    singleton pattern, ``pdf_service.py:286-295``)."""
+    singleton pattern, ``pdf_service.py:286-295``); the worker's
+    once-per-process set-up runs after it, with the kernels loaded."""
     from ai_pdf_extraction_spark.kernels import extract_document
+
+    prepare_worker()
 
     texts: list[str] = []
     spans: list[list[dict]] = []

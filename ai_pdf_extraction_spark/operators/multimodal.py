@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ai_pdf_extraction_spark.worker import prepare_worker
+
 MEDIA_META_TYPE = StructType(
     [
         StructField("media_type", StringType(), False),  # image|audio|video
@@ -491,6 +493,7 @@ def _payload_stage(
     id_out = schema.fields[0].name  # id field = schema's first field
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         for pdf in batches:
             raws = [bytes(b) if b is not None else b"" for b in pdf[bytes_col]]
             rows = [kernel(raw) for raw in raws]

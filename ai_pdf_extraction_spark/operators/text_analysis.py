@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.plans.partitioning import ensure_parallel
 from ai_pdf_extraction_spark.plans.persist import persist
+from ai_pdf_extraction_spark.worker import prepare_worker
 
 
 def _occurrences(text: Column, marker: str) -> Column:
@@ -400,6 +401,7 @@ def _bpe_singleton():
         from ai_pdf_extraction_spark.kernels.bpe import BpeTokenizer
 
         _BPE_SINGLETON = BpeTokenizer()
+        prepare_worker()
     return _BPE_SINGLETON
 
 
@@ -437,6 +439,7 @@ def _lid_singleton():
         from ai_pdf_extraction_spark.kernels.lid import LidModel
 
         _LID_SINGLETON = LidModel()
+        prepare_worker()
     return _LID_SINGLETON
 
 
@@ -476,6 +479,7 @@ def winnowing_fingerprints(
 
     @pandas_udf("array<string>")
     def _winnow(texts: pd.Series) -> pd.Series:
+        prepare_worker()
         return texts.map(
             lambda t: winnowing_fingerprints_py(t if t is not None else "", k, window)
         )
@@ -825,6 +829,8 @@ def normalize_text(
     @pandas_udf("string")
     def _nfc(s: pd.Series) -> pd.Series:
         import unicodedata
+
+        prepare_worker()
 
         return s.map(
             lambda t: None

@@ -320,6 +320,7 @@ class SnapshotTable(_SnapshotChain):
         every integer counter of the commits it replaces, so status
         summed over the chain is unchanged. Old files stay on disk for
         time travel until :meth:`expire_superseded` removes them."""
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         snaps = self.snapshots()
@@ -330,10 +331,14 @@ class SnapshotTable(_SnapshotChain):
         group = sorted(buckets)
         rank = F.array_position(F.array(*map(F.lit, group)), F.col("bucket")) - 1
         df = self.read_dirs(spark, dirs).drop("commit_id")
-        new_id = self.write(df.repartitionById(len(group), rank.cast("int")))
-        # row count from the freshly written commit's parquet metadata —
-        # a pre-write df.count() would re-read every payload twice
-        n = self.read_dirs(spark, self.data_dirs({new_id: group})).count()
+        # rows counted while the write runs, not by a read after it
+        observed = Observation()
+        new_id = self.write(
+            df.repartitionById(len(group), rank.cast("int")).observe(
+                observed, F.count(F.lit(1)).alias("n")
+            )
+        )
+        n = observed.get["n"]
         totals: dict[int, dict] = {}
         for m in live_metrics(snaps):
             t = totals.setdefault(m["bucket"], {"bucket": m["bucket"]})

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ai_pdf_extraction_spark.worker import prepare_worker
+
 # The pages schema the extraction pipeline reads.
 PAGES_SCHEMA = StructType(
     [
@@ -272,6 +274,7 @@ def _paths_to_pages_gen(batch_rows: int):
     openers = dict(_FS_OPENERS)  # driver snapshot rides the closure
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         for pdf in batches:
             for name in pdf["path"]:
                 for rows in iter_row_batches(name, batch_rows, openers=openers):

@@ -33,6 +33,9 @@ import io
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.worker import prepare_worker
+
+
 def warc_record(
     url_col: Column | str,
     ts_col: Column | str,
@@ -270,6 +273,7 @@ def _read_records(
     files = spark.read.format("binaryFile").load(path)
 
     def _parse(batches):
+        prepare_worker()
         for pdf in batches:
             for raw in pdf["content"]:
                 rows = wet_bytes_to_rows(bytes(raw), warc_type)

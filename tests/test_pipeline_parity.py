@@ -268,7 +268,9 @@ def test_snapshot_time_travel(spark, corpus_dir, tmp_path):
         table.read_at(spark, "nope")
 
 
-def test_compaction_preserves_data_and_time_travel(spark, corpus_dir, tmp_path):
+def test_compaction_preserves_data_and_time_travel(
+    spark, corpus_dir, tmp_path, monkeypatch
+):
     import glob
 
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction
@@ -283,7 +285,24 @@ def test_compaction_preserves_data_and_time_travel(spark, corpus_dir, tmp_path):
     before = {r["url"]: r["extracted_text"] for r in table.read(spark).collect()}
     pre_snap = table.current_snapshot()["snapshot_id"]
 
-    result = table.compact(spark)
+    # the rewrite's row count is observed on the write, so no job
+    # (no read of the new commit) runs after it
+    sc = spark.sparkContext
+    write = SnapshotTable.write
+
+    def write_then_mark(self, df):
+        commit_id = write(self, df)
+        sc.setJobGroup("after_compaction_write", "nothing may run here")
+        return commit_id
+
+    monkeypatch.setattr(SnapshotTable, "write", write_then_mark)
+    try:
+        result = table.compact(spark)
+        assert sc.statusTracker().getJobIdsForGroup("after_compaction_write") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    monkeypatch.undo()
     assert result["compacted"] == 300
     assert len(result["replaces"]) == 4
     # rows placed by bucket rank: one task, so one file, per bucket
