@@ -459,7 +459,7 @@ def write_pages_parquet(path: str, n_docs: int, seed: int = 42, n_files: int = 1
 
     ``n_files > 1`` writes a directory of part files — the local
     emulation of how a crawl actually arrives (many WARC-derived
-    files), so Spark's scan parallelizes without a repartition shuffle.
+    files), so Spark's scan is parallel from its first stage.
 
     Writes are ATOMIC (temp path + rename): bench/contract tools treat
     "path exists" as cache-valid, so an interrupted generation must

@@ -18,10 +18,10 @@ repartitions, hence the explicit salt (SURVEY.md §4 custom-work (b)).
 Partition balance: ``ensure_parallel`` is the one rule for fanning a
 narrow scan out ahead of per-row-heavy work, and
 ``mark_parallel_balanced`` the one way to skip it. Ahead of a
-bucket-partitioned write the fan-out is ``cluster_by_bucket`` instead:
-each bucket lands in as few tasks as the balance bound allows, so a
-commit writes about one file per bucket rather than one per bucket per
-task.
+bucket-partitioned write, whatever the input's width, rows are placed
+by ``cluster_by_bucket`` instead: each bucket lands in as few tasks as
+the balance bound allows, so a commit writes about one file per bucket
+rather than one per bucket per task.
 """
 
 from __future__ import annotations
@@ -91,13 +91,12 @@ def bucket_salts(n_group: int, target: int) -> int:
     return target
 
 
-def cluster_by_bucket(
-    df: DataFrame, buckets, n_buckets: int, target: int
-) -> DataFrame:
-    """Fan ``df`` (rows of the bucket group ``buckets`` only) out to
-    ``target`` partitions so each bucket lands in ``k`` tasks
-    (:func:`bucket_salts`): a bucket-partitioned write then emits at
-    most ``g·k`` files for a ``g``-bucket group instead of ``g·target``.
+def cluster_by_bucket(df: DataFrame, buckets, target: int) -> DataFrame:
+    """Place the rows of ``df`` (its ``bucket`` column within the group
+    ``buckets``) on ``target`` partitions so each bucket lands in ``k``
+    tasks (:func:`bucket_salts`): a bucket-partitioned write then emits
+    at most ``g·k`` files for a ``g``-bucket group instead of one per
+    bucket per task. With ``target = g``, ``k = 1``: one task per bucket.
 
     Row -> partition ``rank(bucket in group) + g·salt(url, k)``, mod
     ``target``, placed directly by ``repartitionById``: no hash of the
@@ -107,8 +106,7 @@ def cluster_by_bucket(
     round-robin repartition needs for that."""
     group = sorted(buckets)
     k = bucket_salts(len(group), target)
-    bucket = url_bucket(n_buckets=n_buckets)
-    rank = F.array_position(F.array(*map(F.lit, group)), bucket) - 1
+    rank = F.array_position(F.array(*map(F.lit, group)), F.col("bucket")) - 1
     pid = rank + len(group) * salt(n_salts=k)
     return df.repartitionById(target, pid.cast("int"))
 

@@ -108,7 +108,6 @@ def extraction_plan(
     pages: DataFrame,
     run_id: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    min_parallelism: int | None = None,
     buckets=None,
 ) -> DataFrame:
     """Build the logical plan for one pass over the bucket group
@@ -119,28 +118,28 @@ def extraction_plan(
     metadata columns ride along JVM-side (SURVEY.md §4: project only
     what the black-box UDF needs).
 
-    The kernel UDF is CPU-bound, so the scan must yield at least
-    ``min_parallelism`` partitions (default 2× default parallelism =
-    ≥2 task waves). A 100 TB crawl arrives as many files and gets no
-    new Exchange; a small local corpus is one parquet file → one
-    partition → a single-threaded UDF without a fan-out. The fan-out
-    is bucket-clustered (``partitioning.cluster_by_bucket``): each
-    bucket of the group lands in as few tasks as the balance bound
-    allows, so the bucket-partitioned write that follows emits about
-    one file per bucket, not one per bucket per task.
+    Every input is placed by bucket (``partitioning.cluster_by_bucket``)
+    on ``max(2 × default parallelism, input partitions)`` partitions:
+    the CPU-bound UDF gets at least two task waves, an input is never
+    repartitioned down, and a partition count that lies (N−1 empty
+    byte-range splits) cannot serialize the work. Each bucket of the
+    group lands in as few tasks as the balance bound allows, so the
+    bucket-partitioned write that follows emits about one file per
+    bucket, not one per bucket per input task, for a small local corpus
+    and a crawl of many WARC files alike.
     """
-    spark = pages.sparkSession
-    target = min_parallelism or spark.sparkContext.defaultParallelism * 2
-    # Decided on the caller's `pages`, before the group filter: its
-    # `rdd` is memoized, so run_extraction's groups split the input
-    # once per run.
-    narrow = pages.rdd.getNumPartitions() < target
+    # the caller's `rdd` is memoized, so run_extraction's commit
+    # groups split the input once per run
+    target = max(
+        2 * pages.sparkSession.sparkContext.defaultParallelism,
+        pages.rdd.getNumPartitions(),
+    )
+    pages = pages.withColumn("bucket", url_bucket(n_buckets=n_buckets))
     if buckets is None:
         buckets = range(n_buckets)
     else:
-        pages = pages.filter(url_bucket(n_buckets=n_buckets).isin(list(buckets)))
-    if narrow:
-        pages = cluster_by_bucket(pages, buckets, n_buckets, target)
+        pages = pages.filter(F.col("bucket").isin(list(buckets)))
+    pages = cluster_by_bucket(pages, buckets, target)
     # Payload cap + UDF + projection (the reference's ≤2048px image
     # downscale analogue, SURVEY.md §2.2 P10: bound per-doc bytes so one
     # pathological page can't blow an Arrow batch; capped docs carry a

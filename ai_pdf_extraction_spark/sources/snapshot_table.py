@@ -55,6 +55,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ai_pdf_extraction_spark.plans.partitioning import cluster_by_bucket
+
 
 class SnapshotConflictError(RuntimeError):
     """Two writers raced for the same snapshot sequence number; the
@@ -313,12 +315,12 @@ class SnapshotTable(_SnapshotChain):
         """Rewrite all committed data into one commit (the
         small-files maintenance pass — Iceberg's
         ``rewrite_data_files``) that holds one parquet file per bucket.
-        Rows are placed by the bucket's rank among the committed
-        buckets with ``repartitionById`` (``cluster_by_bucket`` at one
-        salt): one task per bucket, so no two buckets share a task by
-        hash collision. The new commit records, per bucket, the sum of
-        every integer counter of the commits it replaces, so status
-        summed over the chain is unchanged. Old files stay on disk for
+        Rows are placed by ``cluster_by_bucket`` on one partition per
+        committed bucket, which gives each bucket one salt: one task per
+        bucket, so no two buckets share a task by hash collision. The
+        new commit records, per bucket, the sum of every integer
+        counter of the commits it replaces, so status summed over the
+        chain is unchanged. Old files stay on disk for
         time travel until :meth:`expire_superseded` removes them."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
@@ -329,12 +331,11 @@ class SnapshotTable(_SnapshotChain):
         if not dirs:
             return {"compacted": 0, "replaces": []}
         group = sorted(buckets)
-        rank = F.array_position(F.array(*map(F.lit, group)), F.col("bucket")) - 1
         df = self.read_dirs(spark, dirs).drop("commit_id")
         # rows counted while the write runs, not by a read after it
         observed = Observation()
         new_id = self.write(
-            df.repartitionById(len(group), rank.cast("int")).observe(
+            cluster_by_bucket(df, group, len(group)).observe(
                 observed, F.count(F.lit(1)).alias("n")
             )
         )

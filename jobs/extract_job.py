@@ -9,8 +9,10 @@ Usage::
         --run-id run1 [--n-buckets 64] [--buckets-per-commit 16]
 
 The script only touches the package's public API, so the same file
-submits unchanged to a real cluster (YARN/K8s master + Iceberg
-catalog configs on the command line).
+submits unchanged to a real cluster (a YARN/K8s master on the command
+line). ``--output`` is a path: the job writes the parquet+manifest
+``SnapshotTable``; an Iceberg table is written by
+``jobs/iceberg_integration_job.py``.
 """
 
 from __future__ import annotations
@@ -33,14 +35,6 @@ def main() -> None:
         help="warc reads Common-Crawl .warc/.warc.gz files directly "
         "(one crawl file per task)",
     )
-    parser.add_argument(
-        "--iceberg-warehouse",
-        default=None,
-        help="register a hadoop-type Iceberg catalog at this warehouse "
-        "path when an iceberg-spark-runtime jar is on the classpath "
-        "(no jar: the session comes up unchanged and the output table "
-        "stays the parquet+manifest fallback)",
-    )
     args = parser.parse_args()
 
     # Under spark-submit a SparkSession config is provided by the
@@ -51,10 +45,7 @@ def main() -> None:
     from ai_pdf_extraction_spark.session import build_session
     from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
 
-    spark = build_session(
-        app_name=f"extract-{args.run_id}",
-        iceberg_warehouse=args.iceberg_warehouse,
-    )
+    spark = build_session(app_name=f"extract-{args.run_id}")
     result = run_extraction(
         spark,
         args.input,

@@ -263,7 +263,7 @@ def test_warc_roundtrip_and_extraction(spark, tmp_path):
     assert got[sample["url"]]["warc_ts"] is not None
 
     # pipeline consumes the WARC-sourced pages unchanged
-    plan = extraction_plan(df, run_id="warc", min_parallelism=2)
+    plan = extraction_plan(df, run_id="warc")
     n_ok = plan.filter("parse_ok").count()
     assert n_ok > len(rows) * 0.8
 
@@ -556,9 +556,7 @@ def test_warc_to_wet_end_to_end(spark, tmp_path):
     wdir.mkdir()
     write_warc(str(wdir / "a.warc.gz"), rows, compress=True)
 
-    plan = extraction_plan(
-        read_warc(spark, str(wdir)), run_id="w2w", min_parallelism=2
-    )
+    plan = extraction_plan(read_warc(spark, str(wdir)), run_id="w2w")
     ok = plan.filter("parse_ok").select(
         "url", "warc_ts", "extracted_text"
     ).persist()

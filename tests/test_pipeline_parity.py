@@ -102,16 +102,22 @@ def test_resume_skips_committed_buckets(spark, corpus_dir, tmp_path):
     assert recorded == actual
 
 
-def test_commit_writes_one_file_per_bucket(spark, corpus_dir, tmp_path):
-    """A narrow input is fanned out by bucket, so a commit writes one
-    parquet file per bucket directory (a round-robin fan-out wrote one
-    per bucket per task: 8 buckets x 8 tasks), and a single-bucket
-    commit at most k, the bucket's salt count."""
+def test_commit_writes_one_file_per_bucket(
+    spark, corpus_dir, pages_rows, tmp_path
+):
+    """Every input is placed by bucket, so a narrow input's commit
+    writes one parquet file per bucket directory (a round-robin fan-out
+    wrote one per bucket per task: 8 buckets x 8 tasks), a single-bucket
+    commit at most k, the bucket's salt count, and a commit of g buckets
+    over a wide input (one partition per WARC file) at most g·k files,
+    not one per bucket per file."""
+    import datetime
     import glob
 
     from ai_pdf_extraction_spark.plans.partitioning import bucket_salts
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction
     from ai_pdf_extraction_spark.sources.snapshot_table import SnapshotTable
+    from ai_pdf_extraction_spark.sources.warc import write_warc
 
     pages = os.path.join(corpus_dir, "pages.parquet")
 
@@ -133,6 +139,35 @@ def test_commit_writes_one_file_per_bucket(spark, corpus_dir, tmp_path):
     for snap in snaps:
         written = files(many, f"bucket=*/commit_id={snap['commit_id']}/*.parquet")
         assert 1 <= len(written) <= k, (snap["buckets"], len(written), k)
+
+    par = spark.sparkContext.defaultParallelism
+    n_files = 2 * par + 1
+    rows = [
+        {"url": r["url"],
+         "warc_ts": r["warc_ts"].replace(tzinfo=datetime.timezone.utc),
+         "html": r["html"]}
+        for r in pages_rows
+        if r["html"]
+    ]
+    wdir = tmp_path / "wide_warcs"
+    wdir.mkdir()
+    for i in range(n_files):
+        write_warc(str(wdir / f"part-{i:03d}.warc.gz"), rows[i::n_files])
+    wide = str(tmp_path / "wide")
+    g = 2
+    result = run_extraction(
+        spark, str(wdir), wide, run_id="w", n_buckets=4,
+        buckets_per_commit=g, input_format="warc",
+    )
+    assert result["docs"] == len(rows)
+    k = bucket_salts(g, max(2 * par, n_files))
+    snaps = SnapshotTable(wide).snapshots()
+    assert len(snaps) == 2
+    for snap in snaps:
+        written = files(wide, f"bucket=*/commit_id={snap['commit_id']}/*.parquet")
+        assert 1 <= len(written) <= g * k < n_files * g, (
+            snap["buckets"], len(written), g * k
+        )
 
 
 def test_salted_host_counts_match_plain_groupby(spark, corpus_dir):
@@ -628,7 +663,7 @@ def test_truncated_document_keeps_every_kernel_warning(spark):
         [("http://t.example/big.pdf", datetime.datetime(2024, 1, 1), pdf, None, "en")],
         PAGES_SCHEMA,
     )
-    row = extraction_plan(pages, "trunc", n_buckets=4, min_parallelism=1).collect()[0]
+    row = extraction_plan(pages, "trunc", n_buckets=4).collect()[0]
     assert row["warnings"] == expected + [
         f"input truncated at {MAX_DOC_BYTES} bytes"
     ]

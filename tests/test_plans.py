@@ -93,7 +93,7 @@ def test_extraction_udf_input_is_pruned(spark, corpus_dir):
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
     pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    plan = _plan(extraction_plan(pages, run_id="x", min_parallelism=2))
+    plan = _plan(extraction_plan(pages, run_id="x"))
     assert "ArrowEvalPython" in plan, "extraction must be an Arrow-batched UDF"
     arrow_node = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln][0]
     assert "text" not in arrow_node.replace("extracted_text", "")
@@ -239,7 +239,9 @@ def test_cluster_by_bucket_fan_out(spark, corpus_dir):
     """The bucket-clustered fan-out, with no UDF run: the salt count is
     the smallest that meets the slot-skew bound for every group size, a
     single-bucket group spreads over all its k salt slots (not one
-    task), and an input already at the target width gets no Exchange."""
+    task), every input width gets exactly one id-placed Exchange, and an
+    input whose partition count lies (all rows in one of its
+    partitions) is still spread over several tasks."""
     import math
 
     from ai_pdf_extraction_spark.plans.partitioning import (
@@ -249,6 +251,7 @@ def test_cluster_by_bucket_fan_out(spark, corpus_dir):
         url_bucket,
     )
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
+    from ai_pdf_extraction_spark.sources.warc import PAGES_SCHEMA
 
     def skew(slots: int, target: int) -> float:
         return math.ceil(slots / target) / (slots / target)
@@ -265,9 +268,9 @@ def test_cluster_by_bucket_fan_out(spark, corpus_dir):
     urls = spark.range(4000).select(
         F.concat(F.lit("https://h.example/p"), F.col("id").cast("string")).alias("url")
     )
-    one = urls.filter(url_bucket(n_buckets=4) == 3)
+    one = urls.withColumn("bucket", url_bucket(n_buckets=4)).filter("bucket = 3")
     sizes = (
-        cluster_by_bucket(one, [3], 4, target)
+        cluster_by_bucket(one, [3], target)
         .groupBy(F.spark_partition_id().alias("p"))
         .count()
         .collect()
@@ -275,22 +278,36 @@ def test_cluster_by_bucket_fan_out(spark, corpus_dir):
     k = bucket_salts(1, target)
     assert len(sizes) == k >= target / MAX_SLOT_SKEW, (sizes, k)
 
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    narrow = _plan(extraction_plan(pages, run_id="x", n_buckets=4, buckets=[1]))
-    assert narrow.count("Exchange") == 1 and "RoundRobinPartitioning" not in narrow
-    wide = _plan(
-        extraction_plan(pages, run_id="x", n_buckets=4, min_parallelism=1, buckets=[1])
+    # wider than the target, and every row in the first partition
+    sc = spark.sparkContext
+    rows = [
+        (f"https://h.example/p{i}", None, b"<p>x</p>", None, "en")
+        for i in range(400)
+    ]
+    lying = spark.createDataFrame(
+        sc.parallelize(rows, 1).union(sc.parallelize([], target)), PAGES_SCHEMA
     )
-    assert "Exchange" not in wide, wide
+    assert lying.rdd.getNumPartitions() > target
+    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
+    for df in (pages, lying):
+        plan = _plan(extraction_plan(df, run_id="x", n_buckets=4, buckets=[1]))
+        assert plan.count("Exchange") == 1 and "RoundRobinPartitioning" not in plan
+    placed = {
+        r.p
+        for r in extraction_plan(lying, run_id="x", n_buckets=4)
+        .select(F.spark_partition_id().alias("p"))
+        .collect()
+    }
+    assert len(placed) > 1, placed
 
 
 def test_commit_counters_observed_in_the_write_result_stage(
     spark, corpus_dir, tmp_path
 ):
-    """A narrow input's commit counts its rows where Spark applies
-    accumulator updates once per partition: in the executed write plan,
-    CollectMetrics sits above cluster_by_bucket's Exchange with no
-    Exchange above it (a shuffle-map stage retry could count twice)."""
+    """A commit counts its rows where Spark applies accumulator updates
+    once per partition: in the executed write plan, CollectMetrics sits
+    above cluster_by_bucket's Exchange with no Exchange above it (a
+    shuffle-map stage retry could count twice)."""
     import time
 
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction

@@ -8,8 +8,9 @@ CPU-bound multiprocessing saturates near ~9× single-core throughput
 (measured curve written into the report), so pairs above ~8 cores
 measure host contention, not the job. Efficiency =
 (throughput_4N / throughput_N) / 4, best-of-3 per level, warm JVM and
-Python workers, input pre-split into 64 parquet files so the scan
-parallelizes without a repartition (how a crawl actually arrives).
+Python workers, input pre-split into 64 parquet files (how a crawl
+actually arrives); like every extraction input, the scan then gets one
+bucket-placing Exchange (``cluster_by_bucket``) ahead of the UDF.
 
 Results land in ``BENCH/BASELINE.md`` + ``BENCH/scaling.json``.
 """
