@@ -410,31 +410,45 @@ def _q23_golden_path() -> str:
     """Golden parquet for the 64-bit SimHash oracle: DuckDB has no
     xxhash64, so the oracle is an independent pure-Python XXH64 +
     SimHash computed single-process from the contract documents table
-    (``oracle/xxh64.py``), pinned against Spark in pytest.
-
-    The sf dir comes from ``SPARK_GRAFT_CONTRACT_SF`` (set by
-    ``tools/check_contract.py``) and defaults to the driver's sf0.01.
-    The cache key covers the twin's semantics version AND the source
-    table's (mtime_ns, size) digest — a regenerated documents.parquet
-    must never be compared against a stale golden."""
-    import hashlib
-
+    (``oracle/xxh64.py``), pinned against Spark in pytest. The cache
+    key covers the twin's semantics version AND the source table
+    digest (``_sf_documents_golden``)."""
     from ai_pdf_extraction_spark.oracle.xxh64 import (
         TWIN_VERSION,
         write_simhash_golden,
     )
+
+    return _sf_documents_golden(
+        f"/tmp/spark_graft_simhash64_golden_t{TWIN_VERSION}",
+        "",
+        write_simhash_golden,
+    )
+
+
+def _sf_documents_golden(prefix: str, salt: str, write) -> str:
+    """Golden parquet computed single-process from the contract sf
+    dir's documents table: ``{prefix}_{sf tag}_{digest}.parquet``,
+    written once by ``write(src, out)``. The sf dir comes from
+    ``SPARK_GRAFT_CONTRACT_SF`` (set by ``tools/check_contract.py``)
+    and defaults to the driver's sf0.01. The digest covers the source
+    table's (mtime_ns, size) plus ``salt`` (the oracle's own model or
+    table digest, ``|``-prefixed), so a regenerated parquet or a
+    retrained model never compares against a stale golden."""
+    import hashlib
 
     sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
     src = os.path.join(sf_dir, "documents.parquet")
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     if os.path.exists(src):
         st = os.stat(src)
-        digest = hashlib.md5(f"{st.st_mtime_ns}|{st.st_size}".encode()).hexdigest()[:12]
+        digest = hashlib.md5(
+            f"{st.st_mtime_ns}|{st.st_size}{salt}".encode()
+        ).hexdigest()[:12]
     else:
         digest = "missing"
-    out = f"/tmp/spark_graft_simhash64_golden_t{TWIN_VERSION}_{tag}_{digest}.parquet"
+    out = f"{prefix}_{tag}_{digest}.parquet"
     if not os.path.exists(out) and os.path.exists(src):
-        write_simhash_golden(src, out)
+        write(src, out)
     return out
 
 
@@ -2849,31 +2863,17 @@ def _q68_golden_path() -> str:
     kernel version, twin version, the merge-table digest, AND the
     source table's (mtime_ns, size) digest — a retrained table or
     regenerated parquet can never compare against a stale golden."""
-    import hashlib
-
     from ai_pdf_extraction_spark.kernels.bpe import BPE_VERSION, merges_digest
     from ai_pdf_extraction_spark.oracle.bpe_naive import (
         TWIN_VERSION,
         write_bpe_golden,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    if os.path.exists(src):
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{st.st_mtime_ns}|{st.st_size}|{merges_digest()}".encode()
-        ).hexdigest()[:12]
-    else:
-        digest = "missing"
-    out = (
-        f"/tmp/spark_graft_bpe_golden_k{BPE_VERSION}_t{TWIN_VERSION}"
-        f"_{tag}_{digest}.parquet"
+    return _sf_documents_golden(
+        f"/tmp/spark_graft_bpe_golden_k{BPE_VERSION}_t{TWIN_VERSION}",
+        f"|{merges_digest()}",
+        write_bpe_golden,
     )
-    if not os.path.exists(out) and os.path.exists(src):
-        write_bpe_golden(src, out)
-    return out
 
 
 def q68_bpe_token_counts(spark, sf_dir):
@@ -2929,31 +2929,17 @@ def _q69_golden_path() -> str:
     the model-file contract) over the q69 sample substitution. Cache
     key covers kernel + twin versions, the model digest, and the
     source table digest."""
-    import hashlib
-
     from ai_pdf_extraction_spark.kernels.lid import LID_VERSION, model_digest
     from ai_pdf_extraction_spark.oracle.lid_naive import (
         TWIN_VERSION,
         write_lid_golden,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    if os.path.exists(src):
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{st.st_mtime_ns}|{st.st_size}|{model_digest()}".encode()
-        ).hexdigest()[:12]
-    else:
-        digest = "missing"
-    out = (
-        f"/tmp/spark_graft_lid_golden_k{LID_VERSION}_t{TWIN_VERSION}"
-        f"_{tag}_{digest}.parquet"
+    return _sf_documents_golden(
+        f"/tmp/spark_graft_lid_golden_k{LID_VERSION}_t{TWIN_VERSION}",
+        f"|{model_digest()}",
+        lambda src, out: write_lid_golden(src, _lid_samples(), out),
     )
-    if not os.path.exists(out) and os.path.exists(src):
-        write_lid_golden(src, _lid_samples(), out)
-    return out
 
 
 def q69_lang_trained(spark, sf_dir):

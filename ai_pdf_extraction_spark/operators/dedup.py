@@ -45,9 +45,9 @@ from ai_pdf_extraction_spark.worker import prepare_worker
 # denominator agree.  The DuckDB oracles embed the same constant.
 DEFAULT_MAX_SHINGLE_DF = 1000
 
-# The two all-pairs CORRECTNESS BASELINES (ngram_jaccard_pairs without
-# a candidate set, embedding_near_dup_pairs) refuse corpora above this
-# size: their docstrings have always designated the bucketed twins
+# The two all-pairs CORRECTNESS BASELINES (ngram_jaccard_pairs,
+# embedding_near_dup_pairs) refuse corpora above this size: their
+# docstrings have always designated the bucketed twins
 # (minhash_lsh_pairs; LSH/IVF pre-filter) as the plans to run at scale,
 # and a guard is the cheap enforcement — a silent quadratic plan on a
 # 10^8-doc corpus is an outage, not a slow query (verdict r5 #7). The
@@ -355,21 +355,19 @@ def ngram_jaccard_pairs(
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
     max_docs: int | None = ALL_PAIRS_MAX_DOCS,
     prefix_min_docs: int = PREFIX_FILTER_MIN_DOCS,
-    _shingles: DataFrame | None = None,
-    _candidates: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs with n-gram Jaccard ≥ threshold over the rare-shingle
     universe (DF ≤ ``max_shingle_df``). Output: (id_a, id_b, jaccard)
     with id_a < id_b, jaccard rounded to 4.
 
-    Without a candidate set this is the all-pairs CORRECTNESS BASELINE
-    — quadratic in shared-shingle pairs — and it refuses corpora above
-    ``max_docs`` (see ``ALL_PAIRS_MAX_DOCS``): ``minhash_lsh_pairs`` is
-    the plan to run at scale. The guard does not apply on the LSH
-    verify path (``_candidates`` given), which is linear in candidates.
-    From ``prefix_min_docs`` docs up, candidate pairs are generated by
-    the exact Bayardo prefix filter instead of the flat self-join
-    (identical output, ~2× at 5·10^4 docs — see
+    This is the all-pairs CORRECTNESS BASELINE — quadratic in
+    shared-shingle pairs — and it refuses corpora above ``max_docs``
+    (see ``ALL_PAIRS_MAX_DOCS``): ``minhash_lsh_pairs`` is the plan to
+    run at scale. The LSH paths verify their bucket candidates with
+    ``verify_candidates``, which is linear in candidates and has no
+    guard. From ``prefix_min_docs`` docs up, candidate pairs are
+    generated by the exact Bayardo prefix filter instead of the flat
+    self-join (identical output, ~2× at 5·10^4 docs — see
     ``PREFIX_FILTER_MIN_DOCS``); pass ``prefix_min_docs=0`` to force
     that plan on a small corpus (tests do). With ``max_docs=None`` a
     ``limit(prefix_min_docs + 1).count()`` probe picks the plan.
@@ -379,51 +377,19 @@ def ngram_jaccard_pairs(
     self-join (the same skew class the salted-host repartition handles
     for hosts). Sizes are computed AFTER the cap so Jaccard's
     numerator and denominator use the same shingle universe.
-
-    ``_shingles`` hands in a pre-built (and pre-capped, pre-persisted)
-    shingle relation — the caller then owns both the universe and the
-    persist lifecycle. ``_candidates`` (id_a, id_b) restricts the pair
-    computation to a candidate set (the LSH verify path) —
-    shared-shingle counting then touches only candidate docs instead
-    of the full self-join.
     """
-    n_docs: int | None = None
-    if _candidates is None:
-        n_docs = _guard_all_pairs(
-            docs, max_docs, "ngram_jaccard_pairs", "minhash_lsh_pairs"
-        )
-        if n_docs is None and prefix_min_docs > 0:
-            # unguarded: probe only as far as the plan choice needs
-            n_docs = docs.limit(prefix_min_docs + 1).count()
-    if _shingles is not None:
-        sh = _shingles
-    else:
-        # The explode feeds three consumers (sizes + both join sides):
-        # materialize it once instead of re-running split/explode per use.
-        sh = persist(
-            "dedup.shingles",
-            _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df),
-        )
-    if _candidates is not None:
-        # Candidate verify via per-doc shingle ARRAYS + array_intersect
-        # instead of the exploded (pair, shingle) match join: the old
-        # shape shuffled |candidates|·|shingles per doc| intermediate
-        # rows through a second join and a pair group-by; this shape
-        # aggregates the shingle relation ONCE to (id, sorted set,
-        # size) and probes it twice by id (AQE skew-splittable — a hot
-        # doc in many candidate pairs is a join key, not a window).
-        # Identical output: sh is distinct per (doc, shingle), so
-        # |array_intersect| = the old shared count; a pair with zero
-        # shared shingles (previously dropped by the inner match join)
-        # now carries jaccard 0 and drops at the threshold filter
-        # (every caller's threshold is > 0 — the registry pins 0.4/0.8).
-        # Array rows are doc-length-bounded — the granule/boilerplate
-        # collect_list precedent.
-        arrays = sh.groupBy(id_col).agg(
-            F.collect_list("shingle").alias("_shs"),
-            F.count("*").alias("n_shingles"),
-        )
-        return _verify_pairs_by_arrays(_candidates, arrays, id_col, threshold)
+    n_docs = _guard_all_pairs(
+        docs, max_docs, "ngram_jaccard_pairs", "minhash_lsh_pairs"
+    )
+    if n_docs is None and prefix_min_docs > 0:
+        # unguarded: probe only as far as the plan choice needs
+        n_docs = docs.limit(prefix_min_docs + 1).count()
+    # The explode feeds three consumers (sizes + both join sides):
+    # materialize it once instead of re-running split/explode per use.
+    sh = persist(
+        "dedup.shingles",
+        _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df),
+    )
     if prefix_min_docs <= 0 or n_docs >= prefix_min_docs:
         # Exact prefix-filtered all-pairs (Bayardo et al., WWW'07;
         # see PREFIX_FILTER_MIN_DOCS for the crossover measurement).
@@ -533,23 +499,14 @@ def ngram_jaccard_pairs(
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 12,
-    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    _shingles: DataFrame | None = None,
+    sh: DataFrame, id_col: str = "doc_id", k: int = 12
 ) -> DataFrame:
-    """k-permutation MinHash signature per doc over the rare-shingle
-    universe (see ``ngram_jaccard_pairs``). Permutation i is
-    ``min(md5(i || ':' || shingle))`` — md5 exists verbatim in DuckDB,
-    making the whole signature oracle-checkable. Output: (id, h0..h{k-1})."""
-    sh = (
-        _shingles
-        if _shingles is not None
-        else _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
-    )
+    """k-permutation MinHash signature per doc over a shingle relation
+    (id, shingle) — the caller picks the universe (``_df_capped`` for a
+    batch, the frozen hot set for the incremental index). Permutation i
+    is ``min(md5(i || ':' || shingle))`` — md5 exists verbatim in
+    DuckDB, making the whole signature oracle-checkable. Output:
+    (id, h0..h{k-1})."""
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
         for i in range(k)
@@ -587,6 +544,69 @@ def band_buckets(
     )
 
 
+def bucket_candidates(
+    new_b: DataFrame, old_b: DataFrame | None, id_col: str
+) -> DataFrame:
+    """Distinct LSH candidate pairs from ONE bucket equi-join: every
+    ``new_b`` row (id, bucket) probes ``new_b ∪ old_b``, each side
+    tagged. Output: (id_a, id_b, old_id), id_a < id_b; ``old_id`` is
+    the pair's ``old_b`` member, NULL for a new×new pair.
+
+    A new×new collision keeps only probe id < build id (each pair once,
+    never a self-pair). Ids must be unique across the two sides (crawl
+    ids are), so (probe id, build id) names the pair and the one
+    ``distinct`` — on the probe id first, which keeps a probe side
+    already hashed by id from re-shuffling — dedups pairs that collide
+    in several bands before a new×old pair is ordered by least /
+    greatest. With ``old_b=None`` (the batch plan) the tag is a
+    constant false that the optimizer folds out of the join filter."""
+    build = new_b.withColumn("_old", F.lit(False))
+    if old_b is not None:
+        build = build.unionByName(old_b.withColumn("_old", F.lit(True)))
+    pairs = (
+        new_b.alias("a")
+        .join(build.alias("b"), "bucket")
+        .filter(F.col("_old") | (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .select(
+            F.col(f"a.{id_col}").alias("_new"),
+            F.col(f"b.{id_col}").alias("_other"),
+            "_old",
+        )
+        .distinct()
+    )
+    return pairs.select(
+        F.least("_new", "_other").alias("id_a"),
+        F.greatest("_new", "_other").alias("id_b"),
+        F.when(F.col("_old"), F.col("_other")).alias("old_id"),
+    )
+
+
+def verify_candidates(
+    sh: DataFrame, candidates: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact n-gram Jaccard of LSH candidate pairs: the shingle relation
+    ``sh`` (id, shingle — distinct per pair, already capped) scored
+    over a candidate set (id_a, id_b, ...). Output: (id_a, id_b,
+    jaccard) ≥ threshold. Linear in candidates, so unlike the
+    all-pairs baseline it has no size guard.
+
+    Per-doc shingle ARRAYS + ``array_intersect`` instead of an exploded
+    (pair, shingle) match join: that shape shuffled |candidates|·
+    |shingles per doc| intermediate rows through a second join and a
+    pair group-by; this one aggregates the shingle relation ONCE to
+    (id, set, size) and probes it twice by id (AQE skew-splittable — a
+    hot doc in many candidate pairs is a join key, not a window). A
+    pair with zero shared shingles carries jaccard 0 and drops at the
+    threshold filter (every caller's threshold is > 0 — the registry
+    pins 0.4/0.8). Array rows are doc-length-bounded — the
+    granule/boilerplate collect_list precedent."""
+    arrays = sh.groupBy(id_col).agg(
+        F.collect_list("shingle").alias("_shs"),
+        F.count("*").alias("n_shingles"),
+    )
+    return _verify_pairs_by_arrays(candidates, arrays, id_col, threshold)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -604,31 +624,22 @@ def minhash_lsh_pairs(
     j≈0.55; candidates are a superset of real pairs near the threshold
     and the verify join removes false positives. Signatures, buckets,
     and verification all use one DF-capped shingle universe so the
-    verified Jaccard matches ``ngram_jaccard_pairs`` exactly.
+    verified Jaccard matches ``ngram_jaccard_pairs`` exactly. The
+    incremental twin (``dedup_index.minhash_lsh_delta``) runs the same
+    signature → band → ``bucket_candidates`` → ``verify_candidates``
+    steps with an index side.
     """
+    # two consumers (signatures + verification): one explode
     sh = persist(
         "dedup.shingles",
         _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df),
     )
-    sig = minhash_signatures(docs, id_col, text_col, n, k, _shingles=sh)
-    stacked = band_buckets(sig, id_col, k, bands)
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    candidates = (
-        a.join(b, "bucket")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    stacked = band_buckets(minhash_signatures(sh, id_col, k), id_col, k, bands)
+    # Verify ONLY the candidate pairs — never the all-pairs product;
+    # this is the whole point of LSH at 10^12-doc scale.
+    return verify_candidates(
+        sh, bucket_candidates(stacked, None, id_col), id_col, threshold
     )
-    # Verify ONLY the candidate pairs (reusing the materialized shingle
-    # relation) — never the all-pairs product; this is the whole point
-    # of LSH at 10^12-doc scale.
-    return ngram_jaccard_pairs(
-        docs, id_col, text_col, n, threshold,
-        _shingles=sh, _candidates=candidates,
-    ).select("id_a", "id_b", "jaccard")
 
 
 def neardup_clusters(

@@ -18,10 +18,12 @@ and this module is that check at corpus scale, for both families:
 * **MinHash-LSH delta** — the index keeps each indexed doc's k-hash
   MinHash signature; new docs compute signatures over the SAME frozen
   shingle universe, band into buckets (:func:`dedup.band_buckets`,
-  shared with the batch path so banding can't drift), and probe the
-  index's buckets. Candidates = new×old bucket collisions ∪ new×new;
-  verification (true n-gram Jaccard) touches ONLY candidate old docs
-  — a semi-join pulls their text back through the shingler; the rest
+  shared with the batch path so banding can't drift), and probe new ∪
+  index buckets in one bucket equi-join (:func:`dedup.bucket_candidates`,
+  the batch path's candidate step) for the new×new and new×old
+  candidates; verification (true n-gram Jaccard,
+  :func:`dedup.verify_candidates`) touches ONLY candidate old docs —
+  a semi-join pulls their text back through the shingler; the rest
   of the old corpus is never read. With an unrestricted shingle
   universe the result is EXACTLY ``minhash_lsh_pairs(old ∪ new)``
   restricted to pairs touching a new id (signatures and per-pair
@@ -63,8 +65,8 @@ Scale notes (10^12-doc index, 10^9-doc crawl batch):
   catalog table so the probe is co-located (no index shuffle); the
   sandbox has no catalog, so the join is a plain equi-join here and
   the derivation (band md5 over k columns) is narrow column work over
-  the index scan. ``broadcast_new=True`` map-side-probes the index
-  scan when the new batch is small enough to broadcast.
+  the index scan. When the new batch is small, AQE turns the probe
+  into a broadcast join at runtime.
 * Verification cost is O(candidates), never O(new × old).
 """
 
@@ -73,16 +75,17 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.dedup import (
     DEFAULT_MAX_SHINGLE_DF,
     _word_shingles,
     band_buckets,
+    bucket_candidates,
     hot_shingle_set,
     minhash_signatures,
-    ngram_jaccard_pairs,
+    verify_candidates,
 )
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
 from ai_pdf_extraction_spark.plans.persist import persist
@@ -155,18 +158,12 @@ def index_signatures(
     n: int = 3,
     k: int = 12,
     hot: DataFrame | None = None,
-    _shingles: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signatures over the frozen universe: (id, h0..h{k-1}).
     Docs with zero surviving shingles get no row — same as the batch
     path, where they can never collide in any bucket."""
-    raw = (
-        _shingles
-        if _shingles is not None
-        else _word_shingles(docs, id_col, text_col, n)
-    )
-    sh = _frozen_capped(raw, hot)
-    return minhash_signatures(docs, id_col, text_col, n, k, _shingles=sh)
+    sh = _frozen_capped(_word_shingles(docs, id_col, text_col, n), hot)
+    return minhash_signatures(sh, id_col, k)
 
 
 def live_index_relations(
@@ -190,8 +187,7 @@ def live_index_relations(
         if max_shingle_df is not None
         else None
     )
-    sigs = index_signatures(docs, id_col, text_col, n, k, hot, _shingles=sh)
-    return sigs, hot
+    return minhash_signatures(_frozen_capped(sh, hot), id_col, k), hot
 
 
 def exact_dedup_delta(
@@ -255,71 +251,48 @@ def minhash_lsh_delta(
     bands: int = 4,
     threshold: float = 0.4,
     hot: DataFrame | None = None,
-    broadcast_new: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs touching a NEW batch, against an at-rest
     MinHash-signature index. Output: (id_a, id_b, jaccard), id_a <
     id_b, at least one id from the new batch. Ids must be globally
     unique across batches (crawl ids are).
 
-    Candidates = new-batch buckets ⋈ index buckets (new×old) ∪
-    new-batch self-join (new×new); verification is true n-gram Jaccard
+    The batch plan's steps (``dedup.minhash_lsh_pairs``) with an index
+    side: the new batch's buckets probe new ∪ index buckets in ONE
+    bucket equi-join (``dedup.bucket_candidates``), which yields the
+    new×new and new×old candidates and the candidate old ids at once.
+    Verification (``dedup.verify_candidates``) is true n-gram Jaccard
     over the frozen universe, computed from the new batch's shingles
     plus the shingles of ONLY the candidate old docs (``old_docs``
-    semi-joined on the candidate id set — the corpus relation is the
+    semi-joined on the candidate old ids — the corpus relation is the
     text store; the index never duplicates text). With ``hot=None``
     and an uncapped batch run this equals ``minhash_lsh_pairs(old ∪
     new)`` restricted to new-touching pairs (pinned in pytest).
 
-    ``broadcast_new`` broadcasts the new batch's bucket relation so
-    the index-side probe is map-side over the index scan (no index
-    shuffle) — use when the crawl batch is broadcast-sized; otherwise
-    the equi-join shuffles both sides and a production deployment
-    stores signatures ``bucketBy(bucket)`` to co-locate (module doc).
+    The bucket equi-join shuffles both sides; AQE turns it into a
+    broadcast at runtime when the new side is small, and a production
+    deployment stores signatures ``bucketBy(bucket)`` to co-locate the
+    index side (module doc).
     """
     # the new batch's capped shingles feed signatures + verification
-    # sizes + the verify join — three consumers, one explode
     new_sh = persist(
         "dedup_index.delta_shingles",
         _frozen_capped(_word_shingles(new_docs, id_col, text_col, n), hot),
     )
-    new_sig = minhash_signatures(new_docs, id_col, text_col, n, k, _shingles=new_sh)
-    # three consumers (the index probe + both sides of the new×new
-    # self-join) — unpersisted each re-runs the signature groupBy
+    # two consumers (the probe and the build side's new half) —
+    # unpersisted each re-runs the signature groupBy
     new_b = persist(
-        "dedup_index.new_buckets", band_buckets(new_sig, id_col, k, bands)
+        "dedup_index.new_buckets",
+        band_buckets(minhash_signatures(new_sh, id_col, k), id_col, k, bands),
     )
     old_b = band_buckets(index_sigs, id_col, k, bands)
-
-    probe = F.broadcast(new_b) if broadcast_new else new_b
-    # feeds both the candidate union and the candidate-old-id
-    # semi-join — persisted so the index probe runs once
-    cand_no = persist(
-        "dedup_index.delta_candidates",
-        probe.alias("nw")
-        .join(old_b.alias("od"), "bucket")
-        .select(
-            F.least(F.col(f"nw.{id_col}"), F.col(f"od.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"nw.{id_col}"), F.col(f"od.{id_col}")).alias("id_b"),
-        )
-        .distinct(),
+    # feeds both verification and the candidate-old-id semi-join —
+    # persisted so the index probe runs once
+    candidates = persist(
+        "dedup_index.delta_candidates", bucket_candidates(new_b, old_b, id_col)
     )
-    cand_nn = (
-        new_b.alias("a")
-        .join(new_b.alias("b"), "bucket")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-    )
-    candidates = cand_no.union(cand_nn).distinct()
-
-    # shingles for verification: the new batch + ONLY candidate olds
     old_cand_ids = (
-        cand_no.select(F.col("id_a").alias(id_col))
-        .union(cand_no.select(F.col("id_b").alias(id_col)))
-        .distinct()
+        candidates.select(F.col("old_id").alias(id_col)).dropna().distinct()
     )
     # plain semi-join — the candidate-id set is data-dependent and
     # unbounded (boilerplate-heavy corpora amplify bucket collisions),
@@ -330,22 +303,13 @@ def minhash_lsh_delta(
     old_cand_sh = _frozen_capped(
         _word_shingles(old_cand, id_col, text_col, n), hot
     )
-    # three consumers inside ngram_jaccard_pairs (sizes + both join
-    # sides): the new half is already cached, but the old half would
-    # re-run the candidate semi-join + explode + frozen-cap anti join
-    # per consumer without this persist
+    # verify_candidates aggregates this into per-doc arrays that it
+    # probes twice (id_a, id_b): unpersisted, each side re-runs the
+    # candidate semi-join + explode + frozen-cap anti join
     verify_sh = persist(
         "dedup_index.verify_shingles", new_sh.unionByName(old_cand_sh)
     )
-    return ngram_jaccard_pairs(
-        new_docs,  # unused (shingles handed in); keeps the signature
-        id_col,
-        text_col,
-        n,
-        threshold,
-        _shingles=verify_sh,
-        _candidates=candidates,
-    )
+    return verify_candidates(verify_sh, candidates, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -388,12 +352,14 @@ def _write_batch(
     sigs: DataFrame | None = None,
 ) -> int:
     """Write one batch's fingerprint + signature relations; returns the
-    batch doc count, read back from the just-written (tiny, aggregated)
-    fingerprint relation instead of a third full scan of the batch."""
-    fp_path = os.path.join(index_dir, "fingerprints", batch)
-    index_fingerprints(docs, params["id_col"], params["text_col"]).write.mode(
-        "overwrite"
-    ).parquet(fp_path)
+    batch doc count, observed on the fingerprint write (the summed
+    ``n_docs`` of its rows), so no job runs after the writes."""
+    observed = Observation()
+    index_fingerprints(docs, params["id_col"], params["text_col"]).observe(
+        observed, F.sum("n_docs").alias("n")
+    ).write.mode("overwrite").parquet(
+        os.path.join(index_dir, "fingerprints", batch)
+    )
     if sigs is None:
         sigs = index_signatures(
             docs,
@@ -404,12 +370,7 @@ def _write_batch(
             hot=hot,
         )
     sigs.write.mode("overwrite").parquet(os.path.join(index_dir, "signatures", batch))
-    n = (
-        docs.sparkSession.read.parquet(fp_path)
-        .agg(F.sum("n_docs"))
-        .collect()[0][0]
-    )
-    return int(n or 0)
+    return int(observed.get["n"] or 0)
 
 
 def write_dedup_index(
@@ -449,10 +410,15 @@ def write_dedup_index(
     )
     hot_dir = None
     if hot is not None:
+        # persisted for the signature write's frozen-cap anti join; the
+        # manifest stat is observed on this write, which fills the cache
         hot = hot.persist()
-        n_hot = hot.count()  # materialize before reuse; also manifest stat
         hot_dir = f"hot_{token}"
-        hot.write.mode("overwrite").parquet(os.path.join(index_dir, hot_dir))
+        hot_obs = Observation()
+        hot.observe(hot_obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(index_dir, hot_dir))
+        n_hot = int(hot_obs.get["n"])
     else:
         n_hot = 0
     batch = f"b0_{token}"
@@ -545,7 +511,6 @@ def lsh_delta_from_index(
     new_docs: DataFrame,
     old_docs: DataFrame,
     threshold: float = 0.4,
-    broadcast_new: bool = False,
 ) -> DataFrame:
     """``minhash_lsh_delta`` wired from a loaded index (params from the
     manifest)."""
@@ -561,5 +526,4 @@ def lsh_delta_from_index(
         bands=p["bands"],
         threshold=threshold,
         hot=index["hot"],
-        broadcast_new=broadcast_new,
     )

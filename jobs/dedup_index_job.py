@@ -55,6 +55,9 @@ def main() -> None:
     d.add_argument("--append", action="store_true")
     args = parser.parse_args()
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from ai_pdf_extraction_spark.operators.dedup_index import (
         append_dedup_index,
         exact_delta_from_index,
@@ -79,19 +82,19 @@ def main() -> None:
         idx = load_dedup_index(spark, args.index)
         new = spark.read.parquet(args.new)
         old = spark.read.parquet(args.docs)
-        exact = exact_delta_from_index(idx, new)
-        exact.write.mode("overwrite").parquet(args.output + "/exact")
-        pairs = lsh_delta_from_index(idx, new, old, threshold=args.threshold)
-        pairs.write.mode("overwrite").parquet(args.output + "/pairs")
-        # counts read back the just-written parquet — recounting the
-        # lazy `exact`/`pairs` plans would re-run the whole delta
-        summary = {
-            "new_docs": new.count(),
-            "already_in_index": spark.read.parquet(args.output + "/exact")
-            .filter("in_index")
-            .count(),
-            "near_dup_pairs": spark.read.parquet(args.output + "/pairs").count(),
-        }
+        # the summary is observed on the two writes — a count of the
+        # lazy `exact`/`pairs` plans would re-run the whole delta, and
+        # a read-back would re-scan what was just written
+        exact_obs, pairs_obs = Observation(), Observation()
+        exact_delta_from_index(idx, new).observe(
+            exact_obs,
+            F.count(F.lit(1)).alias("new_docs"),
+            F.count_if(F.col("in_index")).alias("already_in_index"),
+        ).write.mode("overwrite").parquet(args.output + "/exact")
+        lsh_delta_from_index(idx, new, old, threshold=args.threshold).observe(
+            pairs_obs, F.count(F.lit(1)).alias("near_dup_pairs")
+        ).write.mode("overwrite").parquet(args.output + "/pairs")
+        summary = {**exact_obs.get, **pairs_obs.get}
         if args.append:
             manifest = append_dedup_index(spark, args.index, new)
             summary["index_n_docs"] = manifest["n_docs"]

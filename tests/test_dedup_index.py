@@ -112,13 +112,6 @@ def test_lsh_delta_matches_batch_restriction_uncapped(spark):
     assert got == batch_restricted
     # non-vacuous: the planted exact dup collides in every band
     assert (10, 110, 1.0) in got and (130, 131, 1.0) in got
-    # broadcast-probe variant is plan-only — identical result
-    bc = minhash_lsh_delta(
-        new, sigs, old, threshold=0.4, hot=None, broadcast_new=True
-    )
-    assert sorted(
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in bc.collect()
-    ) == batch_restricted
 
 
 def test_index_roundtrip_append_delta_and_orphan_resume(spark, tmp_path):
@@ -168,6 +161,39 @@ def test_index_roundtrip_append_delta_and_orphan_resume(spark, tmp_path):
         ).collect()
     )
     assert got == expect and (11, 211, 1.0) in got
+
+
+def test_index_writes_count_while_they_run(spark, tmp_path, monkeypatch):
+    """The manifest's doc and hot-shingle counts are observed on the
+    index writes: a job group opened after the last parquet write of a
+    build or an append sees no job (no read-back of what was written)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    old, new, _ = _corpus(spark)
+    n_hot = hot_shingles(old, max_shingle_df=1).count()
+    idx_dir = str(tmp_path / "idx")
+    sc = spark.sparkContext
+    write = DataFrameWriter.parquet
+    groups = []
+
+    def write_then_mark(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        groups.append(f"after_index_write_{len(groups)}")
+        sc.setJobGroup(groups[-1], "nothing may run here")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_mark)
+    try:
+        m0 = write_dedup_index(spark, old, idx_dir, max_shingle_df=1)
+        assert sc.statusTracker().getJobIdsForGroup(groups[-1]) == []
+        m1 = append_dedup_index(spark, idx_dir, new)
+        assert sc.statusTracker().getJobIdsForGroup(groups[-1]) == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    monkeypatch.undo()
+    assert n_hot > 0 and m0["n_hot_shingles"] == n_hot
+    assert m0["n_docs"] == old.count()
+    assert m1["n_docs"] == old.count() + new.count()
 
 
 def test_version_mismatch_fails_loud(spark, tmp_path):

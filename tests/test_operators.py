@@ -1804,14 +1804,16 @@ def test_all_pairs_guard_refuses_large_corpora(spark, docs):
     """The two all-pairs correctness baselines must refuse corpora
     above max_docs (their docstrings designate the bucketed twins as
     the scale plans; the guard is the enforcement — verdict r5 #7).
-    The LSH verify path is candidate-restricted, not all-pairs, so the
-    guard must NOT fire there."""
+    The LSH verify helper is candidate-restricted, not all-pairs, so it
+    has no guard."""
     import pytest
 
     from ai_pdf_extraction_spark.operators.dedup import (
+        _word_shingles,
         embedding_near_dup_pairs,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
+        verify_candidates,
     )
 
     with pytest.raises(ValueError, match="minhash_lsh_pairs"):
@@ -1828,15 +1830,14 @@ def test_all_pairs_guard_refuses_large_corpora(spark, docs):
     assert embedding_near_dup_pairs(emb, threshold=0.999, max_docs=None).count() == 0
 
     # candidate-restricted verify (the LSH path) is linear in
-    # candidates, not all-pairs — the guard must not fire even at
-    # max_docs=0 when _candidates is given
+    # candidates, not all-pairs — it runs no guard
     cands = spark.createDataFrame([(1, 4)], "id_a long, id_b long")
-    verified = ngram_jaccard_pairs(
-        docs, threshold=0.5, max_docs=0, _candidates=cands
+    verified = verify_candidates(
+        _word_shingles(docs, "doc_id", "text", 3), cands, "doc_id", 0.5
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in verified} == {(1, 4)}
     # ... and the composed LSH operator (which routes through that
-    # path) still runs on a corpus the baseline would refuse
+    # helper) still runs on a corpus the baseline would refuse
     assert minhash_lsh_pairs(docs, threshold=0.5).count() > 0
 
 

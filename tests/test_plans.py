@@ -608,14 +608,23 @@ def test_exact_dedup_delta_is_partial_agg_no_window(spark):
 
 
 def test_minhash_lsh_delta_no_cartesian_and_semi_probe(spark):
-    """q71's delta: bucket equi-joins only (no cartesian product), and
-    the old-corpus text store is touched through a LEFT SEMI join on
-    the candidate ids — never scanned into the verification wholesale."""
+    """q71's delta: bucket equi-joins only (no cartesian product), the
+    new×new and new×old candidates come from ONE join on ``bucket``
+    (new buckets probing new ∪ index buckets), and the old-corpus text
+    store is touched through a LEFT SEMI join on the candidate ids —
+    never scanned into the verification wholesale."""
+    import re
+
     import __spark_entry__ as e
 
     plan = _plan(e.q71_minhash_lsh_delta(spark, SF_DIR))
     assert "CartesianProduct" not in plan
     assert "LeftSemi" in plan
+    # a persisted subplan prints once per scan: count joins by key ids
+    bucket_joins = set(
+        re.findall(r"Join \[(bucket#\d+)\], \[(bucket#\d+)\]", plan)
+    )
+    assert len(bucket_joins) == 1, bucket_joins
 
 
 def test_lm_perplexity_model_joins_broadcast_no_window(spark):
