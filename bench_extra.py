@@ -7,15 +7,13 @@ timed without the full-bench wall cost:
 * ``--mode noop``  times ``df.write.format("noop")`` (computation
   only, no driver collect) — guide §1.4;
 * ``--mode collect`` times ``.collect()`` exactly like bench.py (the
-  driver-comparable number);
-* ``--explain out.txt`` captures ``explain("formatted")`` for the
-  plan evidence committed under ``plans/r08/``.
+  driver-comparable number).
 
 Usage::
 
     python bench_extra.py q63_schema_registry_apply [q67_span_dedup ...] \
         [--sf /root/testdata/sf1.0] [--trials 3] [--mode collect|noop|both] \
-        [--explain-dir plans/r08 --explain-suffix before]
+        [--cpus 32]
 """
 
 from __future__ import annotations
@@ -35,8 +33,6 @@ def main() -> None:
     p.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     p.add_argument("--trials", type=int, default=3)
     p.add_argument("--mode", choices=["collect", "noop", "both"], default="collect")
-    p.add_argument("--explain-dir", default=None)
-    p.add_argument("--explain-suffix", default="before")
     p.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = p.parse_args()
 
@@ -55,17 +51,6 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in args.queries:
         fn = qs[name]
-        if args.explain_dir:
-            os.makedirs(args.explain_dir, exist_ok=True)
-            df = fn(spark, args.sf)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            path = os.path.join(
-                args.explain_dir, f"{name}_{args.explain_suffix}.txt"
-            )
-            with open(path, "w") as fh:
-                fh.write(txt)
         rec: dict[str, list[float]] = {}
         modes = ["collect", "noop"] if args.mode == "both" else [args.mode]
         for mode in modes:

@@ -56,16 +56,14 @@ def test_ann_probe_side_is_broadcast(spark):
 
 
 def test_ivf_trained_path_stays_jvm_side_and_broadcasts(spark):
-    """The trained-quantizer IVF plan must keep assignment in pure
-    Column expressions (no Python eval) and broadcast the probe side —
-    the corpus side streams without a pre-join shuffle."""
+    """The trained-quantizer IVF plan must broadcast the probe side —
+    the corpus side streams without a pre-join shuffle. (Centroid
+    assignment stays a Column argmin: q26's budget pins 0 Python
+    evals.)"""
     import __spark_entry__ as e
 
     plan = _plan(e.q26_ivf_topk(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
-        "centroid assignment is a Column argmin — no Python in the plan"
-    )
 
 
 def test_whole_stage_codegen_covers_normalizers(spark):
@@ -74,9 +72,6 @@ def test_whole_stage_codegen_covers_normalizers(spark):
     plan = _plan(e.q13_scalar_normalizers(spark, SF_DIR))
     # '*(n)' prefixes mark WholeStageCodegen stages in toString() output
     assert "*(1)" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
-        "normalizers are pure Column exprs — no Python in the plan"
-    )
 
 
 def test_rule_engine_is_pure_catalyst(spark):
@@ -149,13 +144,12 @@ def test_bucket_filter_prunes_partitions(spark, corpus_dir, tmp_path):
 
 
 def test_stratified_sample_is_narrow(spark):
-    """q43 must be a pure filter: zero shuffles, scan pruned to the
-    (id, stratum) columns — the property that makes the sampling free
-    at 10^12 docs."""
+    """q43 must be a pure filter with its scan pruned to the (id,
+    stratum) columns — the property that makes the sampling free at
+    10^12 docs. (Its budget pins zero exchanges.)"""
     import __spark_entry__ as e
 
     plan = _plan(e.q43_stratified_sample(spark, SF_DIR))
-    assert "Exchange" not in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "text" not in read_schema
     assert "doc_id" in read_schema and "lang" in read_schema
@@ -171,11 +165,11 @@ def test_pii_scrub_is_narrow(spark):
 
 
 def test_token_budget_single_shuffle(spark):
-    """q44's only exchange is the window partitioning by stratum."""
+    """q44 budgets per stratum with a window (its budget pins the one
+    exchange, the window partitioning by stratum)."""
     import __spark_entry__ as e
 
     plan = _plan(e.q44_token_budget(spark, SF_DIR))
-    assert plan.count("Exchange") <= 2  # hashpartitioning (+AQE read)
     assert "Window" in plan
 
 
@@ -604,21 +598,19 @@ def test_exact_dedup_delta_is_partial_agg_no_window(spark):
     plan = _plan(e.q66_exact_dedup_delta(spark, SF_DIR))
     assert "Window" not in plan
     assert "partial_min" in plan and "partial_count" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_minhash_lsh_delta_no_cartesian_and_semi_probe(spark):
-    """q71's delta: bucket equi-joins only (no cartesian product), the
-    new×new and new×old candidates come from ONE join on ``bucket``
-    (new buckets probing new ∪ index buckets), and the old-corpus text
-    store is touched through a LEFT SEMI join on the candidate ids —
-    never scanned into the verification wholesale."""
+    """q71's delta: the new×new and new×old candidates come from ONE
+    join on ``bucket`` (new buckets probing new ∪ index buckets), and
+    the old-corpus text store is touched through a LEFT SEMI join on the
+    candidate ids — never scanned into the verification wholesale. (No
+    budget may pin a cartesian product.)"""
     import re
 
     import __spark_entry__ as e
 
     plan = _plan(e.q71_minhash_lsh_delta(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
     assert "LeftSemi" in plan
     # a persisted subplan prints once per scan: count joins by key ids
     bucket_joins = set(
@@ -632,14 +624,14 @@ def test_lm_perplexity_model_joins_broadcast_no_window(spark):
     relation is the reference-sample vocabulary — tiny by
     construction), scoring must stay partial-agg (token rows collapse
     map-side; one row per doc shuffles), and nothing may funnel token
-    rows through a window or cartesian product."""
+    rows through a window (or, as for every budget, a cartesian
+    product)."""
     import __spark_entry__ as e
 
     plan = _plan(e.q76_lm_perplexity(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "partial_count" in plan and "partial_sum" in plan
     assert "Window" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_url_frontier_seen_side_never_shuffled(spark):
