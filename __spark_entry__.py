@@ -2,15 +2,20 @@
 
 ``queries()`` exposes the engine's operator inventory (SURVEY.md §2 +
 the training-data curation ops) over the driver testdata tables;
-``oracle_sql()`` holds the DuckDB-equivalent ANSI SQL. Column names
-and rounding are kept in lockstep between the two — the driver's
-compare hashes values after sorting columns by name.
+``oracle_sql()`` holds the DuckDB-equivalent ANSI SQL. Each query is
+registered once, by ``@contract(oracle)`` on its definition, so its
+oracle sits beside it. Column names and rounding are kept in lockstep
+between the two — the driver's compare hashes values after sorting
+columns by name.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,6 +27,81 @@ from ai_pdf_extraction_spark.plans.persist import persist
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# ---------------------------------------------------------------------------
+# the contract: every query registered once, with its oracle beside it
+# ---------------------------------------------------------------------------
+
+_CONTRACT: dict[str, tuple[Callable[[SparkSession, str], DataFrame], Callable[[], str]]] = {}
+
+
+def contract(oracle: Callable[[], str]):
+    """Register the decorated query with ``oracle``, a zero-argument
+    callable returning its DuckDB oracle SQL. Oracles render only when
+    ``oracle_sql()`` runs, never at import (some build golden files),
+    and they call the golden-path helpers by their module-global names.
+    The query function is returned unchanged."""
+
+    def register(query):
+        if query.__name__ in _CONTRACT:
+            raise ValueError(f"{query.__name__} is registered twice")
+        _CONTRACT[query.__name__] = (query, oracle)
+        return query
+
+    return register
+
+
+def _contract_names() -> list[str]:
+    return sorted(_CONTRACT, key=lambda name: int(name[1:name.index("_")]))
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every contract query by name, in query-number order."""
+    return {name: _CONTRACT[name][0] for name in _contract_names()}
+
+
+def oracle_sql() -> dict[str, str]:
+    """DuckDB oracle SQL per query key, rendered now.
+
+    CONTRACT: two oracles are sf-dependent at build time — q23 embeds
+    a golden-parquet path materialized from the documents table in
+    ``$SPARK_GRAFT_CONTRACT_SF`` (default ``/root/testdata/sf0.01``,
+    the driver's compare scale), and q26 embeds k-means centroids
+    trained from that dir's embeddings table — both resolved at the
+    moment this function is called. A driver comparing at any OTHER sf
+    dir must export ``SPARK_GRAFT_CONTRACT_SF=<sf_dir>`` *before*
+    calling ``oracle_sql()`` (``tools/check_contract.py`` does) —
+    otherwise q23/q26 compare against artifacts built from the wrong
+    tables and mismatch loudly. (The q34/q39/q46/q48 goldens are
+    sf-independent: they derive from the fixed 600-doc fixture corpus,
+    keyed on CORPUS_VERSION + KERNEL_VERSION.)"""
+    return {name: _CONTRACT[name][1]() for name in _contract_names()}
+
+
+def _build_once(path: str, write: Callable[[str], None]) -> str:
+    """Build a fixture or golden file (or directory) at ``path`` unless
+    it exists: ``write(tmp)`` fills a fresh temp path beside it, which
+    is renamed onto ``path`` only after ``write`` returns, so a killed
+    or failed build never leaves a partial file for a later call to
+    trust. A failed build warns and returns ``path`` with nothing
+    there: only the query or oracle reading it fails, loudly, and the
+    next call builds it again."""
+    if os.path.exists(path):
+        return path
+    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    try:
+        write(tmp)
+        os.rename(tmp, path)
+    except Exception as exc:
+        if not os.path.exists(path):  # else a concurrent build won
+            warnings.warn(f"could not build {path}: {exc!r}", stacklevel=2)
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+        elif os.path.exists(tmp):
+            os.remove(tmp)
+    return path
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
@@ -40,8 +120,6 @@ def _ensure_shipped(spark: SparkSession) -> None:
         # (unwritable /tmp, zip build failure) must not be silent —
         # executors would later die with a bare ModuleNotFoundError.
         if "added already" not in str(exc):
-            import warnings
-
             warnings.warn(f"package shipping failed: {exc!r}", stacklevel=2)
 
 
@@ -93,6 +171,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@contract(lambda: """
+select l_returnflag, l_linestatus,
+  sum(cast(l_quantity as decimal(18,6)))::double as sum_qty,
+  sum(cast(l_extendedprice as decimal(18,6)))::double as sum_base_price,
+  sum(cast(l_extendedprice * (1 - l_discount) as decimal(18,6)))::double
+    as sum_disc_price,
+  round(avg(l_quantity), 4) as avg_qty,
+  round(avg(l_discount), 4) as avg_disc,
+  count(*) as count_order
+from lineitem
+where l_shipdate <= timestamp '1998-09-02'
+group by l_returnflag, l_linestatus
+""")
 def q01_pricing_summary(spark, sf_dir):
     """Hash aggregation with partial/final combine (SURVEY.md §2.4)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -118,6 +209,14 @@ def q01_pricing_summary(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select sum(cast(l_extendedprice * l_discount as decimal(18,6)))::double as revenue
+from lineitem
+where l_shipdate >= timestamp '1995-01-01'
+  and l_shipdate < timestamp '1996-01-01'
+  and l_discount between 0.05 and 0.07
+  and l_quantity < 24
+""")
 def q02_filtered_revenue(spark, sf_dir):
     """Predicate-pushdown scan + single global agg (§2.2 P1/P2 analogue)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -134,6 +233,14 @@ def q02_filtered_revenue(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select r.r_name as region, n.n_name as nation,
+  count(*) as n_customers, round(sum(c.c_acctbal), 2) as sum_acctbal
+from customer c
+join nation n on c.c_nationkey = n.n_nationkey
+join region r on n.n_regionkey = r.r_regionkey
+group by 1, 2
+""")
 def q03_region_nation_rollup(spark, sf_dir):
     """Broadcast dimension joins (§2.3 J1/J3): customer⋈nation⋈region."""
     c = _t(spark, sf_dir, "customer")
@@ -150,6 +257,13 @@ def q03_region_nation_rollup(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select o_orderpriority, count(*) as order_count
+from orders
+where o_orderdate >= timestamp '1996-01-01'
+  and o_orderdate < timestamp '1997-01-01'
+group by o_orderpriority
+""")
 def q04_order_priority_counts(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     return (
@@ -162,6 +276,12 @@ def q04_order_priority_counts(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select c_custkey, c_name, c_mktsegment
+from customer
+where c_custkey not in
+  (select o_custkey from orders where o_orderpriority = '1-URGENT')
+""")
 def q05_customers_without_orders(spark, sf_dir):
     """Left-anti join (§2.3 J4 missing-set semantics): customers with
     no URGENT order (every customer has some order in this corpus, so
@@ -173,6 +293,14 @@ def q05_customers_without_orders(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select n.n_name as nation, count(*) as n_suppliers
+from supplier s
+join nation n on s.s_nationkey = n.n_nationkey
+where exists (select 1 from lineitem li
+              where li.l_suppkey = s.s_suppkey and li.l_quantity >= 48)
+group by 1
+""")
 def q06_supplier_big_items(spark, sf_dir):
     """Left-semi join + dimension rollup."""
     s = _t(spark, sf_dir, "supplier")
@@ -187,6 +315,16 @@ def q06_supplier_big_items(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select o_custkey, o_orderkey, round(o_totalprice, 2) as totalprice, rn
+from (
+  select o_custkey, o_orderkey, o_totalprice,
+    row_number() over (partition by o_custkey
+                       order by o_totalprice desc, o_orderkey asc) as rn
+  from orders
+)
+where rn <= 3
+""")
 def q07_top_orders_per_customer(spark, sf_dir):
     """Ranking window: top-3 orders per customer by totalprice."""
     from pyspark.sql import Window
@@ -202,6 +340,11 @@ def q07_top_orders_per_customer(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select distinct o_custkey as custkey from orders
+except
+select distinct o_custkey as custkey from orders where o_orderpriority = '1-URGENT'
+""")
 def q08_active_minus_urgent(spark, sf_dir):
     """Set op (§2.6): customers with orders EXCEPT customers with
     urgent orders."""
@@ -215,6 +358,14 @@ def q08_active_minus_urgent(spark, sf_dir):
     return active.exceptAll(urgent)
 
 
+@contract(lambda: """
+select o_orderstatus,
+  count(*) as n_items,
+  round(avg(l_extendedprice), 4) as avg_price,
+  sum(cast(l_quantity * (1 - l_discount) as decimal(18,6)))::double as eff_qty
+from orders join lineitem on o_orderkey = l_orderkey
+group by o_orderstatus
+""")
 def q09_order_lineitem_stats(spark, sf_dir):
     """Fact-fact equi-join + multi-agg (§2.3 J2 analogue)."""
     o = _t(spark, sf_dir, "orders")
@@ -232,6 +383,12 @@ def q09_order_lineitem_stats(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select o_orderkey, o_orderdate, round(o_totalprice, 2) as totalprice
+from orders
+order by o_orderdate desc, o_orderkey asc
+limit 50
+""")
 def q10_latest_orders(spark, sf_dir):
     """Sort + limit — the reference's history pagination
     (``routers/history.py:44-68``, §2.5 O1)."""
@@ -243,6 +400,15 @@ def q10_latest_orders(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select count(*) as total,
+  sum(case when o_orderstatus = 'F' then 1 else 0 end)::bigint as n_finished,
+  sum(case when o_orderstatus = 'O' then 1 else 0 end)::bigint as n_open,
+  sum(case when o_orderstatus = 'P' then 1 else 0 end)::bigint as n_pending,
+  sum(cast(case when o_orderstatus = 'F' then o_totalprice else 0.0 end
+           as decimal(18,6)))::double as finished_value
+from orders
+""")
 def q11_status_rollup(spark, sf_dir):
     """Conditional counters — the reference's batch success/fail
     counters (``routers/batches.py:221-241``, §2.4 A8)."""
@@ -260,6 +426,10 @@ def q11_status_rollup(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select substr(sha256(text), 1, 1) as bucket, count(*) as n_docs
+from documents group by 1
+""")
 def q12_sha_bucketing(spark, sf_dir):
     """Content-hash bucketing — sha256 dedup/partition key
     (``routers/batches.py:381-382``, §2.2 P3 / §4 X7)."""
@@ -271,6 +441,16 @@ def q12_sha_bucketing(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select o_orderkey,
+  try_strptime(strftime(o_orderdate, '%m/%d/%Y'), '%m/%d/%Y')::date as order_date,
+  case when o_orderstatus = 'O' then true
+       when o_orderstatus = 'F' then false
+       else null end as is_open,
+  try_cast(replace(cast(cast(round(o_totalprice / 1000.0, 0) as int) as varchar)
+                   || '%', '%', '') as double) as kprice_pct
+from orders
+""")
 def q13_scalar_normalizers(spark, sf_dir):
     """Typed-value normalizers (§2.7 F2/F4/F6) applied cross-engine:
     date round-trip, boolean coercion, percentage parse."""
@@ -298,6 +478,17 @@ def q13_scalar_normalizers(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with sums as (
+  select l_orderkey,
+    sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) as gross_sum
+  from lineitem group by 1
+)
+select o_orderkey,
+  abs(o_totalprice - gross_sum)
+    <= greatest(0.01 * abs(o_totalprice), 0.01 * abs(gross_sum), 0.02) as rule_ok
+from orders join sums on o_orderkey = l_orderkey
+""")
 def q14_order_total_rule(spark, sf_dir):
     """Rule engine (§2.7 F8): ``o_totalprice == sum(lineitem gross)``
     within the reference tolerance max(1%·l, 1%·r, 0.02)."""
@@ -323,6 +514,13 @@ def q14_order_total_rule(spark, sf_dir):
     return joined.select("o_orderkey", rule_ok.alias("rule_ok"))
 
 
+@contract(lambda: """
+select o_custkey,
+  replace(array_to_string(list_sort(list(o_orderpriority)), ' | '), ',', '; ')
+    as priorities_csv,
+  count(*) as n_orders
+from orders group by o_custkey
+""")
 def q15_csv_export_rows(spark, sf_dir):
     """CSV-export array flattening — the reference's
     ``' | '``-join with ``','→'; '`` (``EditableResultsTable.tsx:202-265``,
@@ -343,6 +541,12 @@ def q15_csv_export_rows(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@contract(lambda: """
+select doc_id,
+  case when length(trim(text)) = 0 then 0
+       else len(regexp_split_to_array(trim(text), '\\s+')) end as n_tokens
+from documents
+""")
 def q16_token_counts(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.text_analysis import token_count
 
@@ -350,6 +554,38 @@ def q16_token_counts(spark, sf_dir):
     return d.select("doc_id", token_count("text").alias("n_tokens"))
 
 
+_LANG_SCORE_EXPRS = {
+    lang: " + ".join(
+        f"cast((length(padded) - length(replace(padded, '{m}', ''))) / {len(m)} as bigint)"
+        for m in markers
+    )
+    for lang, markers in {
+        "en": (" the ", " and ", " of ", " to "),
+        "de": (" der ", " die ", " und ", " das "),
+        "fr": (" le ", " la ", " et ", " les "),
+        "es": (" el ", " los ", " que ", " y "),
+    }.items()
+}
+_LANG_SQL = f"""
+with scored as (
+  select doc_id,
+    {_LANG_SCORE_EXPRS['en']} as score_en,
+    {_LANG_SCORE_EXPRS['de']} as score_de,
+    {_LANG_SCORE_EXPRS['fr']} as score_fr,
+    {_LANG_SCORE_EXPRS['es']} as score_es
+  from (select doc_id, ' ' || lower(text) || ' ' as padded from documents)
+)
+select doc_id, score_en, score_de, score_fr, score_es,
+  case when greatest(score_en, score_de, score_fr, score_es) = 0 then 'und'
+       when score_en = greatest(score_en, score_de, score_fr, score_es) then 'en'
+       when score_de = greatest(score_en, score_de, score_fr, score_es) then 'de'
+       when score_fr = greatest(score_en, score_de, score_fr, score_es) then 'fr'
+       else 'es' end as lang_guess
+from scored
+"""
+
+
+@contract(lambda: _LANG_SQL)
 def q17_lang_marker_profile(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.text_analysis import lang_guess, lang_scores
 
@@ -365,6 +601,7 @@ def q17_lang_marker_profile(spark, sf_dir):
     )
 
 
+@contract(lambda: _QUALITY_SQL)
 def q18_quality_scores(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.text_analysis import quality_score
 
@@ -372,6 +609,7 @@ def q18_quality_scores(spark, sf_dir):
     return d.select("doc_id", quality_score("text").alias("quality"))
 
 
+@contract(lambda: f"select doc_id, {_FINGERPRINT_EXPR} as fingerprint from documents")
 def q19_fingerprints(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
 
@@ -384,12 +622,24 @@ def q19_fingerprints(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@contract(lambda: f"""
+with fp as (select doc_id, coalesce({_FINGERPRINT_EXPR}, 'null-text') as fp
+            from documents),
+groups as (select fp, min(doc_id) as canonical_id, count(*) as group_size
+           from fp group by fp)
+select doc_id, canonical_id, group_size, doc_id != canonical_id as is_dup
+from fp join groups using (fp)
+""")
 def q20_exact_dedup(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.dedup import exact_dedup
 
     return exact_dedup(_t(spark, sf_dir, "documents"))
 
 
+@contract(lambda: f"""
+with {_SHINGLES_CTE}
+select id_a, id_b, jaccard from jacc where jaccard >= 0.8
+""")
 def q21_ngram_jaccard_pairs(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -398,6 +648,16 @@ def q21_ngram_jaccard_pairs(spark, sf_dir):
     )
 
 
+def _minhash_sql(k: int = 12, bands: int = 4) -> str:
+    return f"""
+with {_minhash_cte(k, bands)}
+select cand.id_a, cand.id_b, jacc.jaccard
+from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
+where jacc.jaccard >= 0.8
+"""
+
+
+@contract(_minhash_sql)
 def q22_minhash_lsh_pairs(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.dedup import minhash_lsh_pairs
 
@@ -428,7 +688,7 @@ def _q23_golden_path() -> str:
 def _sf_documents_golden(prefix: str, salt: str, write) -> str:
     """Golden parquet computed single-process from the contract sf
     dir's documents table: ``{prefix}_{sf tag}_{digest}.parquet``,
-    written once by ``write(src, out)``. The sf dir comes from
+    built once by ``write(src, tmp)``. The sf dir comes from
     ``SPARK_GRAFT_CONTRACT_SF`` (set by ``tools/check_contract.py``)
     and defaults to the driver's sf0.01. The digest covers the source
     table's (mtime_ns, size) plus ``salt`` (the oracle's own model or
@@ -447,25 +707,67 @@ def _sf_documents_golden(prefix: str, salt: str, write) -> str:
     else:
         digest = "missing"
     out = f"{prefix}_{tag}_{digest}.parquet"
-    if not os.path.exists(out) and os.path.exists(src):
-        write(src, out)
+    if os.path.exists(src):
+        _build_once(out, lambda tmp: write(src, tmp))
     return out
 
 
+# q23: xxhash64 has no DuckDB twin — oracle is a golden parquet
+# from an independent pure-Python XXH64+SimHash (oracle/xxh64.py)
+@contract(lambda: f"""
+select doc_id, simhash, band0, band1, band2, band3
+from read_parquet('{_q23_golden_path()}')
+""")
 def q23_simhash_sketch(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.dedup import simhash_sketch
 
     return simhash_sketch(_t(spark, sf_dir, "documents"))
 
 
+@contract(lambda: """
+with tok as (
+  select doc_id,
+         unnest(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) as w
+  from documents
+), h as (
+  select doc_id, ('0x' || substr(md5(w), 1, 4))::int as hv from tok
+), b as (
+  select doc_id,
+    sum(case when (hv >> 0) & 1 = 1 then 1 else -1 end) as s0,
+    sum(case when (hv >> 1) & 1 = 1 then 1 else -1 end) as s1,
+    sum(case when (hv >> 2) & 1 = 1 then 1 else -1 end) as s2,
+    sum(case when (hv >> 3) & 1 = 1 then 1 else -1 end) as s3,
+    sum(case when (hv >> 4) & 1 = 1 then 1 else -1 end) as s4,
+    sum(case when (hv >> 5) & 1 = 1 then 1 else -1 end) as s5,
+    sum(case when (hv >> 6) & 1 = 1 then 1 else -1 end) as s6,
+    sum(case when (hv >> 7) & 1 = 1 then 1 else -1 end) as s7,
+    sum(case when (hv >> 8) & 1 = 1 then 1 else -1 end) as s8,
+    sum(case when (hv >> 9) & 1 = 1 then 1 else -1 end) as s9,
+    sum(case when (hv >> 10) & 1 = 1 then 1 else -1 end) as s10,
+    sum(case when (hv >> 11) & 1 = 1 then 1 else -1 end) as s11,
+    sum(case when (hv >> 12) & 1 = 1 then 1 else -1 end) as s12,
+    sum(case when (hv >> 13) & 1 = 1 then 1 else -1 end) as s13,
+    sum(case when (hv >> 14) & 1 = 1 then 1 else -1 end) as s14,
+    sum(case when (hv >> 15) & 1 = 1 then 1 else -1 end) as s15
+  from h group by doc_id
+)
+select doc_id, ((case when s0 > 0 then 1 else 0 end) + (case when s1 > 0 then 2 else 0 end) + (case when s2 > 0 then 4 else 0 end) + (case when s3 > 0 then 8 else 0 end) + (case when s4 > 0 then 16 else 0 end) + (case when s5 > 0 then 32 else 0 end) + (case when s6 > 0 then 64 else 0 end) + (case when s7 > 0 then 128 else 0 end) + (case when s8 > 0 then 256 else 0 end) + (case when s9 > 0 then 512 else 0 end) + (case when s10 > 0 then 1024 else 0 end) + (case when s11 > 0 then 2048 else 0 end) + (case when s12 > 0 then 4096 else 0 end) + (case when s13 > 0 then 8192 else 0 end) + (case when s14 > 0 then 16384 else 0 end) + (case when s15 > 0 then 32768 else 0 end))::int as simhash16 from b
+""")
 def q35_simhash16(spark, sf_dir):
     """Oracle-checked 16-bit SimHash (md5-based); q23 is the 64-bit
-    xxhash64 production variant (rows-only)."""
+    xxhash64 production variant (checked against a golden parquet)."""
     from ai_pdf_extraction_spark.operators.dedup import simhash16_sketch
 
     return simhash16_sketch(_t(spark, sf_dir, "documents"))
 
 
+@contract(lambda: f"""
+select * from (
+  select a.vec_id as id_a, b.vec_id as id_b,
+    {_COS_EXPR.format(r=4)} as cos
+  from embeddings a join embeddings b on a.vec_id < b.vec_id
+) where cos >= 0.45
+""")
 def q24_embedding_near_dup(spark, sf_dir):
     _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.dedup import embedding_near_dup_pairs
@@ -478,6 +780,19 @@ def q24_embedding_near_dup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@contract(lambda: f"""
+with scored as (
+  select b.vec_id as query_id, a.vec_id as neighbor_id,
+    {_COS_EXPR.format(r=6)} as cos
+  from embeddings a
+  join embeddings b on b.vec_id < 5 and a.vec_id != b.vec_id
+)
+select query_id, neighbor_id, cos, rank from (
+  select *, row_number() over (partition by query_id
+                               order by cos desc, neighbor_id asc) as rank
+  from scored
+) where rank <= 5
+""")
 def q25_ann_topk(spark, sf_dir):
     from ai_pdf_extraction_spark.operators.similarity import cosine_topk
 
@@ -564,10 +879,9 @@ def _ensure_pq_codes(spark, sf_dir, residual: bool = False) -> str:
     production shape (encode on ingest, store codes, scan codes per
     query). ONE cache protocol for both modes (review r6): keyed on
     PQ_CODES_VERSION + training params + the source path + a ``_res``
-    suffix so raw and residual codes can never silently mix; atomic
-    temp+rename like every other fixture cache."""
+    suffix so raw and residual codes can never silently mix; built by
+    ``_build_once`` like every other fixture cache."""
     import hashlib
-    import uuid
 
     from ai_pdf_extraction_spark.operators.similarity import (
         PQ_CODES_VERSION,
@@ -581,27 +895,80 @@ def _ensure_pq_codes(spark, sf_dir, residual: bool = False) -> str:
         f"/tmp/spark_graft_pq_codes_v{PQ_CODES_VERSION}"
         f"_m8c16s17_ivf8s13_{suffix}{key}"
     )
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+
+    def write(tmp: str) -> None:
         books = (
             _pq_codebooks_residual(sf_dir) if residual else _pq_codebooks(sf_dir)
         )
-        codes = pq_codes(
+        pq_codes(
             _t(spark, sf_dir, "embeddings"),
             books,
             centroids=_ivf_centroids(sf_dir),
             residual=residual,
+        ).write.parquet(tmp)
+
+    return _build_once(path, write)
+
+
+def _pq_sql(codebooks: list, k: int = 5) -> str:
+    """q56 oracle: the SAME trained codebook literals as the Spark
+    plan — per-subspace distance arrays double as the encode argmin
+    (list_position first-match, the ivf rule) and the query-side ADC
+    lookup tables, exactly like ``_sql_d2_array`` on the Spark
+    side."""
+    m, sub = len(codebooks), len(codebooks[0][0])
+
+    def dist(slice_expr: str, c: list) -> str:
+        lit = "[" + ", ".join(repr(x) for x in c) + "]"
+        return (
+            f"round(list_sum(list_transform(list_zip({slice_expr}, {lit}), "
+            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
         )
-        codes.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return path
+    cols = ["vec_id"]
+    for s, book in enumerate(codebooks):
+        sl = f"embedding[{s * sub + 1}:{(s + 1) * sub}]"
+        dlist = ", ".join(dist(sl, c) for c in book)
+        cols.append(f"[{dlist}] as dl{s}")
+        cols.append(f"list_position(dl{s}, list_min(dl{s})) - 1 as code{s}")
+    enc_cols = ",\n    ".join(cols)
+    approx = " + ".join(f"b.dl{s}[a.code{s} + 1]" for s in range(m))
+    return f"""
+with enc as (
+  select {enc_cols}
+  from embeddings
+),
+scored as (
+  select b.vec_id as query_id, a.vec_id as neighbor_id,
+    round({approx}, 6) as approx_d2
+  from enc a
+  join enc b on b.vec_id < 5 and a.vec_id != b.vec_id
+)
+select query_id, neighbor_id, approx_d2, rank from (
+  select *, row_number() over (partition by query_id
+                               order by approx_d2 asc, neighbor_id asc) as rank
+  from scored
+) where rank <= {k}
+"""
 
 
+def _q56_oracle_sql() -> str:
+    """q56 oracle with the q26 degradation contract: codebook-training
+    failure breaks only q56, loudly, at execution."""
+    try:
+        return _pq_sql(
+            _pq_codebooks(
+                os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
+            )
+        )
+    except Exception:
+        return (
+            "select * from read_parquet("
+            "'/nonexistent/q56_pq_codebook_training_failed')"
+        )
+
+
+@contract(_q56_oracle_sql)
 def q56_pq_topk(spark, sf_dir):
     """Product-quantization ANN (ADC): trained per-subspace codebooks
     as plan-time literals, corpus rows reduced to code arrays, query
@@ -619,6 +986,68 @@ def q56_pq_topk(spark, sf_dir):
     return pq_topk(None, queries, _pq_codebooks(sf_dir), k=5, codes=codes)
 
 
+def _ivfpq_sql(centroids: list, codebooks: list, k: int = 5) -> str:
+    """q58 oracle: the q26 cluster-argmin CTE composed with the q56
+    code/LUT CTE — at nprobe=1 the probe set is the query's own
+    cluster, so the join predicate is plain cluster equality."""
+    m, sub = len(codebooks), len(codebooks[0][0])
+
+    def cdist(c: list) -> str:
+        lit = "[" + ", ".join(repr(x) for x in c) + "]"
+        return (
+            "round(list_sum(list_transform(list_zip(embedding, " + lit + "), "
+            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
+        )
+
+    def sdist(slice_expr: str, c: list) -> str:
+        lit = "[" + ", ".join(repr(x) for x in c) + "]"
+        return (
+            f"round(list_sum(list_transform(list_zip({slice_expr}, {lit}), "
+            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
+        )
+
+    cols = ["vec_id", "[" + ", ".join(cdist(c) for c in centroids) + "] as cdl",
+            "list_position(cdl, list_min(cdl)) - 1 as cluster"]
+    for s, book in enumerate(codebooks):
+        sl = f"embedding[{s * sub + 1}:{(s + 1) * sub}]"
+        dlist = ", ".join(sdist(sl, c) for c in book)
+        cols.append(f"[{dlist}] as dl{s}")
+        cols.append(f"list_position(dl{s}, list_min(dl{s})) - 1 as code{s}")
+    enc_cols = ",\n    ".join(cols)
+    approx = " + ".join(f"b.dl{s}[a.code{s} + 1]" for s in range(m))
+    return f"""
+with enc as (
+  select {enc_cols}
+  from embeddings
+),
+scored as (
+  select b.vec_id as query_id, a.vec_id as neighbor_id,
+    round({approx}, 6) as approx_d2
+  from enc a
+  join enc b on b.vec_id < 5 and a.vec_id != b.vec_id
+            and a.cluster = b.cluster
+)
+select query_id, neighbor_id, approx_d2, rank from (
+  select *, row_number() over (partition by query_id
+                               order by approx_d2 asc, neighbor_id asc) as rank
+  from scored
+) where rank <= {k}
+"""
+
+
+def _q58_oracle_sql() -> str:
+    """q58 oracle with the q26/q56 degradation contract."""
+    try:
+        sf = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
+        return _ivfpq_sql(_ivf_centroids(sf), _pq_codebooks(sf))
+    except Exception:
+        return (
+            "select * from read_parquet("
+            "'/nonexistent/q58_ivfpq_training_failed')"
+        )
+
+
+@contract(_q58_oracle_sql)
 def q58_ivfpq_topk(spark, sf_dir):
     """IVF-PQ (FAISS's 10^12-vector index shape): coarse-cluster
     candidate restriction composed with ADC-over-codes scoring — both
@@ -642,6 +1071,92 @@ def q58_ivfpq_topk(spark, sf_dir):
     )
 
 
+def _ivfpq_residual_sql(centroids: list, codebooks: list, k: int = 5) -> str:
+    """q61 oracle: the q58 shape with RESIDUAL encoding — each vector's
+    residual against its own cluster's centroid (nested-list literal
+    indexed by the cluster argmin) feeds both the code argmin and the
+    query-side LUTs; at nprobe=1 the probed cluster IS the query's own,
+    so cluster equality keeps LUT and codes referring to the same
+    centroid."""
+    m, sub = len(codebooks), len(codebooks[0][0])
+
+    def cdist(c: list) -> str:
+        lit = "[" + ", ".join(repr(x) for x in c) + "]"
+        return (
+            "round(list_sum(list_transform(list_zip(embedding, " + lit + "), "
+            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
+        )
+
+    def sdist(slice_expr: str, c: list) -> str:
+        lit = "[" + ", ".join(repr(x) for x in c) + "]"
+        return (
+            f"round(list_sum(list_transform(list_zip({slice_expr}, {lit}), "
+            "x -> (x[1] - x[2]) * (x[1] - x[2]))), 6)"
+        )
+
+    cents_lit = (
+        "[" + ", ".join("[" + ", ".join(repr(x) for x in c) + "]" for c in centroids) + "]"
+    )
+    enc_cols = []
+    for s, book in enumerate(codebooks):
+        sl = f"r[{s * sub + 1}:{(s + 1) * sub}]"
+        dlist = ", ".join(sdist(sl, c) for c in book)
+        enc_cols.append(f"[{dlist}] as dl{s}")
+        enc_cols.append(f"list_position(dl{s}, list_min(dl{s})) - 1 as code{s}")
+    enc_sql = ",\n    ".join(enc_cols)
+    approx = " + ".join(f"b.dl{s}[a.code{s} + 1]" for s in range(m))
+    return f"""
+with darr as (
+  select vec_id, embedding,
+    [{", ".join(cdist(c) for c in centroids)}] as cdl
+  from embeddings
+),
+assign as (
+  select vec_id, embedding,
+    list_position(cdl, list_min(cdl)) - 1 as cluster
+  from darr
+),
+res as (
+  select vec_id, cluster,
+    list_transform(list_zip(embedding, ({cents_lit})[cluster + 1]),
+                   x -> x[1]::DOUBLE - x[2]) as r
+  from assign
+),
+enc as (
+  select vec_id, cluster,
+    {enc_sql}
+  from res
+),
+scored as (
+  select b.vec_id as query_id, a.vec_id as neighbor_id,
+    round({approx}, 6) as approx_d2
+  from enc a
+  join enc b on b.vec_id < 5 and a.vec_id != b.vec_id
+            and a.cluster = b.cluster
+)
+select query_id, neighbor_id, approx_d2, rank from (
+  select *, row_number() over (partition by query_id
+                               order by approx_d2 asc, neighbor_id asc) as rank
+  from scored
+) where rank <= {k}
+"""
+
+
+def _q61_oracle_sql() -> str:
+    """q61 oracle with the q26/q56 degradation contract."""
+    try:
+        sf = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
+        return _ivfpq_residual_sql(
+            _ivf_centroids(sf), _pq_codebooks_residual(sf)
+        )
+    except Exception:
+        return (
+            "select * from read_parquet("
+            "'/nonexistent/q61_residual_training_failed')"
+        )
+
+
+@contract(_q61_oracle_sql)
 def q61_ivfpq_residual_topk(spark, sf_dir):
     """Residual-encoding IVF-PQ (Jégou 2011 §III — the FAISS IVFPQ
     default, and the r5 verdict's #2): codes quantize x − centroid
@@ -668,6 +1183,54 @@ def q61_ivfpq_residual_topk(spark, sf_dir):
     )
 
 
+def _ivf_sql(centroids: list, k: int = 5) -> str:
+    """q26 oracle: the SAME trained centroid literals as the Spark
+    plan, assignment = first-index argmin of rounded squared-L2
+    (list_position mirrors array_position's first-match rule), then
+    in-cluster cosine top-k."""
+    dlist = _d2_dlist_sql(centroids)
+    return f"""
+with darr as (
+  select vec_id, embedding, [{dlist}] as dl from embeddings
+),
+assign as (
+  select vec_id, embedding, list_position(dl, list_min(dl)) - 1 as cluster
+  from darr
+),
+scored as (
+  select b.vec_id as query_id, a.vec_id as neighbor_id,
+    {_COS_EXPR.format(r=6)} as cos
+  from assign a
+  join assign b on b.vec_id < 5 and a.vec_id != b.vec_id
+                and a.cluster = b.cluster
+)
+select query_id, neighbor_id, cos, rank from (
+  select *, row_number() over (partition by query_id
+                               order by cos desc, neighbor_id asc) as rank
+  from scored
+) where rank <= {k}
+"""
+
+
+def _q26_oracle_sql() -> str:
+    """q26 oracle, degrading per-query like the other golden-backed
+    oracles: if centroid training fails (missing embeddings.parquet,
+    bad env dir), only q26 errors loudly at execution — the rest of
+    the oracle dict stays usable."""
+    try:
+        return _ivf_sql(
+            _ivf_centroids(
+                os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
+            )
+        )
+    except Exception:
+        return (
+            "select * from read_parquet("
+            "'/nonexistent/q26_ivf_centroid_training_failed')"
+        )
+
+
+@contract(_q26_oracle_sql)
 def q26_ivf_topk(spark, sf_dir):
     """IVF ANN with a REAL trained coarse quantizer: deterministic
     k-means centroids (offline, on a bounded pyarrow sample) embedded
@@ -691,6 +1254,11 @@ def q26_ivf_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@contract(lambda: """
+select date_trunc('hour', ts) as hour, event_type,
+  count(*) as n_events, round(sum(value), 2) as sum_value
+from events group by 1, 2
+""")
 def q27_hourly_event_counts(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     return (
@@ -702,6 +1270,14 @@ def q27_hourly_event_counts(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select event_type, count(*) as n_events,
+  count(distinct user_id) as n_users,
+  round(avg(value), 4) as avg_value,
+  round(min(value), 4) as min_value,
+  round(max(value), 4) as max_value
+from events group by event_type
+""")
 def q28_event_type_stats(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
@@ -715,6 +1291,20 @@ def q28_event_type_stats(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with chunks as (
+  select source, doc_id, text, (n_chars % 100) / 100.0 as conf
+  from documents
+)
+select source,
+  substr(string_agg(text, ' ' order by doc_id), 1, 80) as merged_text_prefix,
+  substr(arg_min(text, doc_id), 1, 20) as first_text_prefix,
+  round(avg(conf), 3) as mean_conf,
+  round(least(1.0, exp(avg(greatest(ln(greatest(conf, 1e-12)), -10.0)))), 3)
+    as geo_conf,
+  count(*) as n_chunks
+from chunks group by source
+""")
 def q29_chunk_merge(spark, sf_dir):
     """The reference's per-document chunk-merge semantics
     (``services/ai/extraction.py:337-434``, SURVEY.md §2.4 A1/A2/A5/A6)
@@ -762,6 +1352,14 @@ def q29_chunk_merge(spark, sf_dir):
     )
 
 
+@contract(lambda: r"""
+select doc_id,
+  case when length(trim(text)) = 0 then 0
+       else len(regexp_split_to_array(trim(text), '\s+')) end as n_tokens_ws,
+  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))
+    as n_tokens_bpe
+from documents
+""")
 def q30_token_counts_bpe(spark, sf_dir):
     """Whitespace + BPE-ish regex token counting side by side."""
     from ai_pdf_extraction_spark.operators.text_analysis import (
@@ -777,6 +1375,29 @@ def q30_token_counts_bpe(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with g as (
+  select doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') as norm
+  from documents
+), h as (
+  select doc_id,
+    case when length(norm) < 8 then []
+         else [md5(substr(norm, i, 8))
+               for i in range(1, greatest(length(norm) - 7, 1) + 1)]
+    end as hashes
+  from g
+), w as (
+  select doc_id,
+    case when len(hashes) = 0 then []
+         else list_sort(list_distinct(
+                [list_min(hashes[i:i+3])
+                 for i in range(1, greatest(len(hashes) - 3, 1) + 1)]))
+    end as fps
+  from h
+)
+select doc_id, len(fps) as n_fp, md5(array_to_string(fps, '')) as sketch
+from w
+""")
 def q31_winnowing_fingerprints(spark, sf_dir):
     """Rolling-hash winnowing fingerprint sketch per document."""
     _ensure_shipped(spark)
@@ -793,6 +1414,25 @@ def q31_winnowing_fingerprints(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with marked as (
+  select user_id, ts, event_id,
+    case when lag(ts) over (partition by user_id order by ts, event_id) is null
+           or epoch(ts) - epoch(lag(ts) over (partition by user_id
+                                              order by ts, event_id)) > 1800.0
+         then 1 else 0 end as new_session
+  from events
+), sessions as (
+  select user_id, ts,
+    sum(new_session) over (partition by user_id order by ts, event_id
+                           rows unbounded preceding)::bigint as session_id
+  from marked
+)
+select user_id, session_id, count(*) as n_events,
+  min(ts) as session_start,
+  floor(epoch(max(ts)) - epoch(min(ts)))::bigint as session_len_sec
+from sessions group by user_id, session_id
+""")
 def q32_user_sessions(spark, sf_dir):
     """Sessionization via lag/windowed running sum (30-min inactivity
     gap) — lead/lag + frame coverage beyond row_number."""
@@ -820,6 +1460,13 @@ def q32_user_sessions(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select event_id,
+  array_to_string(list_sort(json_keys(props)), ',') as prop_keys,
+  try_cast(json_extract_string(props, '$.k') as bigint) as k_value,
+  len(json_keys(props)) as n_props
+from events
+""")
 def q33_json_props(spark, sf_dir):
     """JSON parse/serialize + map ops (SURVEY.md §2.7 F13, §2.6 U3):
     the reference's ``extracted_data`` dict payload round-trip
@@ -838,15 +1485,17 @@ def q33_json_props(spark, sf_dir):
 
 
 def _q34_golden_path() -> str:
-    """Golden parquet path for the q34/q39 oracles; generates the
-    fixtures on first use (pure pyarrow — safe to call from
-    ``oracle_sql()``). Generation failure (read-only /tmp, missing
-    deps) degrades to the q34/q39 oracles failing at execution with a
-    clear read_parquet error instead of poisoning the whole dict."""
-    try:
-        return _ensure_q34_fixtures()[1]
-    except Exception:
-        return _q34_fixture_paths()[1]
+    """Golden parquet for the q34/q39/q51 oracles: the single-process
+    oracle-kernel run over the fixture corpus (the analogue of the
+    reference's stored ``extraction_results.json`` corpora). Pure
+    pyarrow, no Spark, so ``oracle_sql()`` builds it."""
+    from ai_pdf_extraction_spark.corpus.generate import generate_pages
+    from ai_pdf_extraction_spark.oracle.run_reference import write_golden_parquet
+
+    _, golden_path = _q34_fixture_paths()
+    return _build_once(
+        golden_path, lambda tmp: write_golden_parquet(tmp, generate_pages(600, seed=13))
+    )
 
 
 def _q34_fixture_paths() -> tuple[str, str]:
@@ -859,40 +1508,29 @@ def _q34_fixture_paths() -> tuple[str, str]:
     return base, base + f"_golden_k{KERNEL_VERSION}.parquet"
 
 
-def _ensure_q34_fixtures() -> tuple[str, str]:
-    """Generate (once) the deterministic page corpus AND its golden
-    parquet — the single-process oracle-kernel run (the analogue of the
-    reference's stored ``extraction_results.json`` corpora). Pure
-    pyarrow, no Spark, so ``oracle_sql()`` can build it too."""
+def _ensure_q34_fixtures() -> str:
+    """The deterministic 600-page fixture corpus (4 parquet files) the
+    q34/q39/q46 extraction queries read."""
     from ai_pdf_extraction_spark.corpus import write_pages_parquet
-    from ai_pdf_extraction_spark.corpus.generate import generate_pages
-    from ai_pdf_extraction_spark.oracle.run_reference import write_golden_parquet
 
-    pages_path, golden_path = _q34_fixture_paths()
-    if not os.path.exists(pages_path):
-        write_pages_parquet(pages_path, 600, seed=13, n_files=4)
-    if not os.path.exists(golden_path):
-        write_golden_parquet(golden_path, generate_pages(600, seed=13))
-    return pages_path, golden_path
+    pages_path, _ = _q34_fixture_paths()
+    return _build_once(
+        pages_path, lambda tmp: write_pages_parquet(tmp, 600, seed=13, n_files=4)
+    )
 
 
 def _q46_golden_path() -> str:
     """Exploded structured-table-rows golden (q46): one row per
     (url, t_idx, r_idx, key). Same corpus/kernel cache keying as q34."""
+    from ai_pdf_extraction_spark.corpus.generate import generate_pages
+    from ai_pdf_extraction_spark.kernels import KERNEL_VERSION
     from ai_pdf_extraction_spark.oracle.run_reference import write_table_rows_golden
 
     base, _ = _q34_fixture_paths()
-    from ai_pdf_extraction_spark.kernels import KERNEL_VERSION
-
-    path = base + f"_tables_k{KERNEL_VERSION}.parquet"
-    if not os.path.exists(path):
-        from ai_pdf_extraction_spark.corpus.generate import generate_pages
-
-        try:
-            write_table_rows_golden(path, generate_pages(600, seed=13))
-        except Exception:
-            pass  # degrade to a loud read_parquet error at oracle time
-    return path
+    return _build_once(
+        base + f"_tables_k{KERNEL_VERSION}.parquet",
+        lambda tmp: write_table_rows_golden(tmp, generate_pages(600, seed=13)),
+    )
 
 
 def _sig_escape_col(c):
@@ -971,6 +1609,16 @@ def _signature_cols(df: DataFrame) -> DataFrame:
     )
 
 
+@contract(lambda: f"""
+select url, content_type, parse_ok, confidence, n_chars, n_spans,
+  md5(extracted_text) as text_md5,
+  coalesce(array_to_string(list_transform(spans,
+    s -> s['start']::varchar || ':' || s['end']::varchar || ':' || s['kind']),
+    ';'), '') as spans_sig,
+  coalesce(array_to_string(warnings, '|'), '') as warnings_sig,
+  fc_sig, n_pages, n_tables, tables_sig
+from read_parquet('{_q34_golden_path()}')
+""")
 def q34_extract_pages(spark, sf_dir):
     """The extraction hot path itself (kernel pandas UDF end-to-end)
     over a deterministic synthetic corpus, checked against the golden
@@ -980,7 +1628,7 @@ def q34_extract_pages(spark, sf_dir):
     _ensure_shipped(spark)
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
-    pages_path, _ = _ensure_q34_fixtures()
+    pages_path = _ensure_q34_fixtures()
     plan = extraction_plan(spark.read.parquet(pages_path), run_id="contract")
     return _signature_cols(plan)
 
@@ -990,10 +1638,7 @@ def _ensure_warc_fixtures() -> str:
     ``generate_pages`` rows written as 8 ``.warc.gz`` shards (one gzip
     member per record — the Common Crawl layout). The html payloads
     ride the WARC/HTTP envelope byte-identically, so extraction over
-    ``read_warc`` must hash-match the q34 golden exactly. Atomic
-    temp+rename like every other fixture cache."""
-    import uuid
-
+    ``read_warc`` must hash-match the q34 golden exactly."""
     from ai_pdf_extraction_spark.corpus.generate import (
         CORPUS_VERSION,
         generate_pages,
@@ -1003,12 +1648,7 @@ def _ensure_warc_fixtures() -> str:
         write_warc,
     )
 
-    path = (
-        f"/tmp/spark_graft_contract_warc_v{CORPUS_VERSION}"
-        f"w{WARC_FORMAT_VERSION}_600_13"
-    )
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    def write(tmp: str) -> None:
         os.makedirs(tmp)
         rows = generate_pages(600, seed=13)
         n_shards = 8
@@ -1018,15 +1658,24 @@ def _ensure_warc_fixtures() -> str:
                 rows[s::n_shards],
                 compress=True,
             )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return path
+    return _build_once(
+        f"/tmp/spark_graft_contract_warc_v{CORPUS_VERSION}"
+        f"w{WARC_FORMAT_VERSION}_600_13",
+        write,
+    )
 
 
+@contract(lambda: f"""
+select url, content_type, parse_ok, confidence, n_chars, n_spans,
+  md5(extracted_text) as text_md5,
+  coalesce(array_to_string(list_transform(spans,
+    s -> s['start']::varchar || ':' || s['end']::varchar || ':' || s['kind']),
+    ';'), '') as spans_sig,
+  coalesce(array_to_string(warnings, '|'), '') as warnings_sig,
+  fc_sig, n_pages, n_tables, tables_sig
+from read_parquet('{_q34_golden_path()}')
+""")
 def q51_warc_extract(spark, sf_dir):
     """WARC ingestion end-to-end (the crawl-native source, round-3
     verdict item 2a): the q34 corpus round-tripped through spec-shaped
@@ -1063,6 +1712,33 @@ _LANG_SAMPLES: tuple[tuple[str, str], ...] = (
 )
 
 
+def _q52_oracle_sql() -> str:
+    """DuckDB twin of q52, REBUILT from the operator's own constants
+    (markers, script ranges, share threshold, snippet list) so the two
+    sides cannot silently desync."""
+    score_cols, decide_case = _lang_detect_sql_parts("sample_text")
+    snippet_case = "case (doc_id % " + str(len(_LANG_SAMPLES) + 1) + ")\n"
+    for idx, (_lang, snippet) in enumerate(_LANG_SAMPLES):
+        snippet_case += f"      when {idx} then '{snippet}'\n"
+    snippet_case += "      else text end"
+    return f"""
+with base as (
+  select doc_id, {snippet_case} as sample_text
+  from documents
+),
+scored as (
+  select doc_id, sample_text,
+    {score_cols}
+  from (select doc_id, sample_text,
+               ' ' || lower(sample_text) || ' ' as padded from base)
+)
+select doc_id,
+  {decide_case} as lang_detected
+from scored
+"""
+
+
+@contract(_q52_oracle_sql)
 def q52_lang_detect_wide(spark, sf_dir):
     """Wide language ID (script charsets + 8 Latin marker sets, round-3
     verdict item 4): every 14th doc keeps its real text, the rest cycle
@@ -1119,81 +1795,6 @@ def _lang_detect_sql_parts(text_col: str) -> tuple[str, str]:
     return score_cols, decide_case
 
 
-def _q97_oracle_sql() -> str:
-    """DuckDB twin of q97: the q52 wide detector applied per blank-
-    line paragraph, aggregated to the per-doc language mix with the
-    exact (count desc, lang asc) tie rule."""
-    score_cols, decide_case = _lang_detect_sql_parts("para")
-    return f"""
-with base as (
-  select doc_id,
-    text || case when doc_id % 4 = 0
-               then chr(10) || chr(10) || '{_Q97_DE}'
-             when doc_id % 4 = 1
-               then chr(10) || chr(10) || '{_Q97_FR}'
-             else '' end as text
-  from documents
-),
-paras as (
-  select doc_id, para from (
-    select doc_id,
-      unnest(regexp_split_to_array(text, '\\n{{2,}}')) as para
-    from base
-  ) where regexp_replace(para, '^[ \\t\\r\\n\\f]+|[ \\t\\r\\n\\f]+$', '', 'g') != ''
-),
-scored as (
-  select doc_id, para,
-    {score_cols}
-  from (select doc_id, para,
-               ' ' || lower(para) || ' ' as padded from paras)
-),
-langed as (
-  select doc_id, {decide_case} as plang from scored
-),
-cnt as (
-  select doc_id, plang, count(*)::bigint as n
-  from langed group by doc_id, plang
-),
-ranked as (
-  select doc_id, plang, n,
-    row_number() over (partition by doc_id
-                       order by n desc, plang) as rn,
-    sum(n) over (partition by doc_id) as tot
-  from cnt
-)
-select doc_id, tot::bigint as n_paras, plang as dominant_lang,
-  n as n_dominant, (tot - n)::bigint as n_foreign,
-  (tot - n) > 0 as is_mixed
-from ranked where rn = 1
-"""
-
-
-def _q52_oracle_sql() -> str:
-    """DuckDB twin of q52, REBUILT from the operator's own constants
-    (markers, script ranges, share threshold, snippet list) so the two
-    sides cannot silently desync."""
-    score_cols, decide_case = _lang_detect_sql_parts("sample_text")
-    snippet_case = "case (doc_id % " + str(len(_LANG_SAMPLES) + 1) + ")\n"
-    for idx, (_lang, snippet) in enumerate(_LANG_SAMPLES):
-        snippet_case += f"      when {idx} then '{snippet}'\n"
-    snippet_case += "      else text end"
-    return f"""
-with base as (
-  select doc_id, {snippet_case} as sample_text
-  from documents
-),
-scored as (
-  select doc_id, sample_text,
-    {score_cols}
-  from (select doc_id, sample_text,
-               ' ' || lower(sample_text) || ' ' as padded from base)
-)
-select doc_id,
-  {decide_case} as lang_detected
-from scored
-"""
-
-
 # Trigram-hard snippets for q59: NO whole-word stopword markers (the
 # q52 model scores these 'und' or by accident); the char-trigram
 # profiles must carry the decision. Expected language first — pinned
@@ -1208,28 +1809,6 @@ _TRIGRAM_SAMPLES: tuple[tuple[str, str], ...] = (
     ("nl", "waarschijnlijk vrijheid medewerkers voorbeelden"),
     ("sv", "försäkringsbolag åtgärder möjligheter"),
 )
-
-
-def q59_lang_trigram(spark, sf_dir):
-    """Char-trigram language ID (Cavnar–Trenkle evidence, round-4
-    verdict item 7): every 22nd doc keeps its real text, the rest cycle
-    through the 13 q52 snippets AND 8 trigram-hard snippets (no
-    whole-word markers — sub-word trigrams must decide), so the
-    contract hash covers the script branches, the marker+trigram
-    interplay, and the trigram-only path."""
-    from ai_pdf_extraction_spark.operators.text_analysis import (
-        lang_detect_trigram,
-    )
-
-    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
-    samples = _LANG_SAMPLES + _TRIGRAM_SAMPLES
-    m = F.col("doc_id") % (len(samples) + 1)
-    sample = F.col("text")
-    for idx, (_lang, snippet) in enumerate(samples):
-        sample = F.when(m == idx, F.lit(snippet)).otherwise(sample)
-    return d.select("doc_id", sample.alias("sample_text")).select(
-        "doc_id", lang_detect_trigram(F.col("sample_text")).alias("lang_detected")
-    )
 
 
 def _q59_oracle_sql() -> str:
@@ -1291,6 +1870,29 @@ from scored
 """
 
 
+@contract(_q59_oracle_sql)
+def q59_lang_trigram(spark, sf_dir):
+    """Char-trigram language ID (Cavnar–Trenkle evidence, round-4
+    verdict item 7): every 22nd doc keeps its real text, the rest cycle
+    through the 13 q52 snippets AND 8 trigram-hard snippets (no
+    whole-word markers — sub-word trigrams must decide), so the
+    contract hash covers the script branches, the marker+trigram
+    interplay, and the trigram-only path."""
+    from ai_pdf_extraction_spark.operators.text_analysis import (
+        lang_detect_trigram,
+    )
+
+    d = ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
+    samples = _LANG_SAMPLES + _TRIGRAM_SAMPLES
+    m = F.col("doc_id") % (len(samples) + 1)
+    sample = F.col("text")
+    for idx, (_lang, snippet) in enumerate(samples):
+        sample = F.when(m == idx, F.lit(snippet)).otherwise(sample)
+    return d.select("doc_id", sample.alias("sample_text")).select(
+        "doc_id", lang_detect_trigram(F.col("sample_text")).alias("lang_detected")
+    )
+
+
 # Edge-case snippets for q60 — each crafted to trip exactly one Gopher
 # rule (or pass them all); doc_id % 7 ∈ {0..4} injects, 5-6 keep real
 # corpus text.
@@ -1301,23 +1903,6 @@ _GOPHER_SAMPLES: tuple[str, ...] = (
     "# # # # # # tag soup with hashes",  # symbol ratio
     "12345 67890 00000 11111 22222",  # no alphabetic words
 )
-
-
-def q60_gopher_quality(spark, sf_dir):
-    """Gopher/MassiveText quality rules (Rae et al. 2021 A1.1): the
-    full public filter set over the documents table, with crafted
-    snippets cycled in so every rule's fail branch AND the all-pass
-    branch land in the contract hash."""
-    from ai_pdf_extraction_spark.operators.text_analysis import gopher_quality
-
-    d = _t(spark, sf_dir, "documents")
-    m = F.col("doc_id") % 7
-    sample = F.col("text")
-    for idx, snippet in enumerate(_GOPHER_SAMPLES):
-        sample = F.when(m == idx, F.lit(snippet)).otherwise(sample)
-    return gopher_quality(
-        d.select("doc_id", sample.alias("text"))
-    )
 
 
 def _q60_oracle_sql() -> str:
@@ -1390,6 +1975,28 @@ from sig
 """
 
 
+@contract(_q60_oracle_sql)
+def q60_gopher_quality(spark, sf_dir):
+    """Gopher/MassiveText quality rules (Rae et al. 2021 A1.1): the
+    full public filter set over the documents table, with crafted
+    snippets cycled in so every rule's fail branch AND the all-pass
+    branch land in the contract hash."""
+    from ai_pdf_extraction_spark.operators.text_analysis import gopher_quality
+
+    d = _t(spark, sf_dir, "documents")
+    m = F.col("doc_id") % 7
+    sample = F.col("text")
+    for idx, snippet in enumerate(_GOPHER_SAMPLES):
+        sample = F.when(m == idx, F.lit(snippet)).otherwise(sample)
+    return gopher_quality(
+        d.select("doc_id", sample.alias("text"))
+    )
+
+
+@contract(lambda: f"""
+select url, conf_title, conf_paragraph, conf_list_item, conf_table_text
+from read_parquet('{_q34_golden_path()}')
+""")
 def q39_field_confidences(spark, sf_dir):
     """Per-field confidences (reference ``field_confidences`` dict,
     ``models.py:186-199``) surfaced as one column per span kind via map
@@ -1398,7 +2005,7 @@ def q39_field_confidences(spark, sf_dir):
     from ai_pdf_extraction_spark.oracle.run_reference import FIELD_KINDS
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
-    pages_path, _ = _ensure_q34_fixtures()
+    pages_path = _ensure_q34_fixtures()
     plan = extraction_plan(spark.read.parquet(pages_path), run_id="contract")
     return plan.select(
         "url",
@@ -1414,7 +2021,7 @@ def _exploded_table_rows(spark) -> DataFrame:
     row per (url, t_idx, r_idx, key, value) — shared by q46/q48."""
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
-    pages_path, _ = _ensure_q34_fixtures()
+    pages_path = _ensure_q34_fixtures()
     plan = extraction_plan(spark.read.parquet(pages_path), run_id="contract")
     return (
         plan.select("url", F.posexplode("tables").alias("t_idx", "tbl"))
@@ -1428,6 +2035,10 @@ def _exploded_table_rows(spark) -> DataFrame:
     )
 
 
+@contract(lambda: f"""
+select url, t_idx, r_idx, key, value
+from read_parquet('{_q46_golden_path()}')
+""")
 def q46_table_rows(spark, sf_dir):
     """Structured table-row extraction — the reference's ``array``
     FieldType (array-of-objects rows, e.g. SEC 8-K
@@ -1440,6 +2051,47 @@ def q46_table_rows(spark, sf_dir):
     return _exploded_table_rows(spark)
 
 
+def _pii_scrub_sql() -> str:
+    """q41 oracle, built by placeholder substitution (the regexes carry
+    ``{m,n}`` quantifiers that fight f-strings). DuckDB regexp_replace
+    needs the explicit 'g' flag Spark applies implicitly; counts use
+    len(regexp_extract_all) — DuckDB has no regexp_count."""
+    from ai_pdf_extraction_spark.operators.scrub import EMAIL_RE, IP_RE, PHONE_RE
+
+    sql = """
+with seeded as (
+  select doc_id,
+    text || ' contact: user' || doc_id || '@example.com or +1 555-01'
+         || lpad((doc_id % 100)::varchar, 2, '0')
+         || ' from 10.0.' || (doc_id % 256)::varchar || '.7' as text
+  from documents
+), e_scrubbed as (
+  select doc_id,
+    regexp_replace(text, '@EMAIL@', '<EMAIL>', 'g') as e_text,
+    len(regexp_extract_all(text, '@EMAIL@')) as n_emails
+  from seeded
+), partial as (
+  -- each class counted with all EARLIER scrub steps applied (disjoint
+  -- classes) — mirrors operators/scrub.pii_counts' fold over the steps
+  select doc_id, n_emails,
+    regexp_replace(e_text, '@IP@', '<IP>', 'g') as ei_scrubbed,
+    len(regexp_extract_all(e_text, '@IP@')) as n_ips
+  from e_scrubbed
+)
+select doc_id,
+  md5(regexp_replace(ei_scrubbed, '@PHONE@', '<PHONE>', 'g')) as scrubbed_md5,
+  n_emails, n_ips,
+  len(regexp_extract_all(ei_scrubbed, '@PHONE@')) as n_phones
+from partial
+"""
+    return (
+        sql.replace("@EMAIL@", EMAIL_RE)
+        .replace("@IP@", IP_RE)
+        .replace("@PHONE@", PHONE_RE)
+    )
+
+
+@contract(_pii_scrub_sql)
 def q41_pii_scrub(spark, sf_dir):
     """PII redaction (emails → <EMAIL>, IPs → <IP>, phone runs →
     <PHONE>) — C4/Dolma-style training-data scrubbing. PII-bearing text
@@ -1472,6 +2124,32 @@ def q41_pii_scrub(spark, sf_dir):
     )
 
 
+_REPETITION_SQL = r"""
+with words as (
+  select doc_id,
+    case when length(trim(text)) = 0 then []::varchar[]
+         else regexp_split_to_array(lower(trim(text)), '\s+') end as w
+  from documents
+), per_row as (
+  select doc_id, len(w) as n_words, len(list_distinct(w)) as n_distinct from words
+), bigrams as (
+  select doc_id,
+    unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) as bigram
+  from words
+), counts as (
+  select doc_id, bigram, count(*) as cnt from bigrams group by 1, 2
+), shares as (
+  select doc_id, max(cnt) * 1.0 / sum(cnt) as share from counts group by 1
+)
+select p.doc_id,
+  round(case when n_words > 1 then 1.0 - n_distinct * 1.0 / n_words
+             else 0.0 end, 4) as dup_word_ratio,
+  round(coalesce(share, 0.0), 4) as top_bigram_share
+from per_row p left join shares using (doc_id)
+"""
+
+
+@contract(lambda: _REPETITION_SQL)
 def q42_repetition_signals(spark, sf_dir):
     """Gopher-style repetition quality signals (dup-word ratio,
     top-bigram share) — explode → groupBy, not per-row HOF counting
@@ -1481,6 +2159,17 @@ def q42_repetition_signals(spark, sf_dir):
     return repetition_signals(_t(spark, sf_dir, "documents"))
 
 
+_STRATIFIED_SAMPLE_SQL = """
+select doc_id, lang from documents
+where ('0x' || substr(md5(coalesce(lang, '__null__') || ':' || doc_id), 1, 4))::int
+        / 65536.0
+      < case when lang = 'de' then 1.0
+             when lang = 'en' then 0.5
+             else 0.1 end
+"""
+
+
+@contract(lambda: _STRATIFIED_SAMPLE_SQL)
 def q43_stratified_sample(spark, sf_dir):
     """Deterministic hash-based stratified sampling for corpus mixing:
     md5-derived uniform per (lang, doc_id) under per-language rates —
@@ -1493,6 +2182,17 @@ def q43_stratified_sample(spark, sf_dir):
     ).select("doc_id", "lang")
 
 
+@contract(lambda: f"""
+with {_SCORED_CTE},
+c as (
+  select doc_id, lang, quality, n_tokens,
+    (sum(n_tokens) over (partition by lang order by quality desc, doc_id
+                         rows unbounded preceding))::bigint as cum_tokens
+  from scored
+)
+select doc_id, lang, quality, n_tokens, cum_tokens from c
+where cum_tokens <= 3000
+""")
 def q44_token_budget(spark, sf_dir):
     """Token-budget corpus selection: fill a per-language token budget
     from the highest-quality docs first (windowed running sum)."""
@@ -1512,6 +2212,36 @@ def q44_token_budget(spark, sf_dir):
     return token_budget_selection(scored, budget_per_stratum=3000)
 
 
+def _neardup_clusters_sql() -> str:
+    """q45 oracle: LSH-verified pairs → symmetric edge list → recursive
+    transitive closure (UNION dedups, so it terminates) → per-node min
+    label = connected component id."""
+    return f"""
+with recursive {_minhash_cte()},
+vpairs as (
+  select cand.id_a, cand.id_b
+  from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
+  where jacc.jaccard >= 0.8
+),
+edges as (
+  select id_a as src, id_b as dst from vpairs
+  union all
+  select id_b as src, id_a as dst from vpairs
+),
+reach(node, lab) as (
+  select doc_id, doc_id from documents
+  union
+  select e.dst, r.lab from edges e join reach r on r.node = e.src
+),
+lab as (select node, min(lab) as cluster_id from reach group by node),
+sz as (select cluster_id, count(*) as cluster_size from lab group by cluster_id)
+select node as doc_id, cluster_id, cluster_size,
+       node = cluster_id as is_canonical
+from lab join sz using (cluster_id)
+"""
+
+
+@contract(_neardup_clusters_sql)
 def q45_neardup_clusters(spark, sf_dir):
     """Near-duplicate clustering: connected components (min-label
     propagation) over the LSH-verified Jaccard≥0.8 pair graph — the
@@ -1522,6 +2252,13 @@ def q45_neardup_clusters(spark, sf_dir):
     return neardup_clusters(_t(spark, sf_dir, "documents"), threshold=0.8)
 
 
+@contract(lambda: """
+select doc_id,
+  md5(to_base64(encode(text))) as b64_md5,
+  length(to_base64(encode(text))) as b64_len,
+  from_base64(to_base64(encode(text))) = encode(text) as roundtrip_ok
+from documents
+""")
 def q40_base64_payload(spark, sf_dir):
     """Base64 payload encode/decode round-trip (§2.7 F11 — the
     reference's image→base64 request payload, ``extraction.py:74-86``)
@@ -1544,6 +2281,26 @@ def q40_base64_payload(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_minhash_cte()},
+fp as (select doc_id, {_FINGERPRINT_EXPR} as fp from documents),
+canon as (
+  select doc_id from (
+    select doc_id, min(doc_id) over (partition by fp) as canonical_id from fp
+  ) where doc_id = canonical_id
+),
+near_losers as (
+  select distinct cand.id_b as doc_id
+  from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
+  where jacc.jaccard >= 0.8
+),
+{_SCORED_CTE}
+select s.doc_id, s.lang, s.quality, s.n_tokens
+from scored s
+join canon using (doc_id)
+where s.doc_id not in (select doc_id from near_losers)
+  and s.quality >= 0.5
+""")
 def q36_curated_corpus(spark, sf_dir):
     """Capstone curation pass — what a training-data pipeline actually
     emits: documents that (a) clear the quality threshold, (b) are the
@@ -1557,6 +2314,42 @@ def q36_curated_corpus(spark, sf_dir):
     return curated_corpus(_t(spark, sf_dir, "documents"))
 
 
+@contract(lambda: """
+with base as (
+  select doc_id, doc_id % 10 as m,
+    (doc_id % 900 + 100) as i,
+    (doc_id % 900 + 100)::varchar as istr,
+    lpad((doc_id % 100)::varchar, 2, '0') as cc,
+    (doc_id % 100) / 100.0 as frac
+  from documents
+)
+select doc_id,
+  case m when 0 then '$' || istr || '.' || cc
+         when 1 then '€' || istr || ',' || cc
+         when 2 then '£' || istr
+         when 3 then istr || ' USD'
+         when 4 then 'US$ ' || istr
+         when 5 then istr || ',' || cc || ' €'
+         when 6 then '¥' || istr
+         when 7 then 'R$ ' || istr || ',' || cc
+         when 8 then istr || '.' || cc
+         else '1.' || istr || ',' || cc || ' EUR' end as raw,
+  case m when 0 then '$' when 1 then '€' when 2 then '£'
+         when 3 then 'USD' when 4 then 'US$' when 5 then '€'
+         when 6 then '¥' when 7 then 'R$' when 8 then null
+         else 'EUR' end as token,
+  case m when 0 then 'USD' when 1 then 'EUR' when 2 then 'GBP'
+         when 3 then 'USD' when 4 then 'USD' when 5 then 'EUR'
+         when 6 then 'JPY' when 7 then 'BRL' when 8 then null
+         else 'EUR' end as code,
+  round(case m when 0 then i + frac when 1 then i + frac
+               when 2 then i + 0.0 when 3 then i + 0.0
+               when 4 then i + 0.0 when 5 then i + frac
+               when 6 then i + 0.0 when 7 then i + frac
+               when 8 then i + frac
+               else 1000 + i + frac end, 2) as amount
+from base
+""")
 def q47_currency_codes(spark, sf_dir):
     """Currency symbol/ISO detection + numeric parse (§2.7 F1 — the
     price-parser ``currency`` half, ``validation.py:34-82``) over ten
@@ -1595,6 +2388,14 @@ def q47_currency_codes(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+select url, count(*) as n_rows,
+  cast(sum(try_cast(regexp_replace(value, '[^0-9.]', '', 'g') as double))
+       as bigint) as total_units
+from read_parquet('{_q46_golden_path()}')
+where key = 'amount'
+group by url
+""")
 def q48_table_field_rollup(spark, sf_dir):
     """Typed consumption of the structured table payload — the
     reference's invoice line-items shape (array rows → typed values →
@@ -1648,17 +2449,21 @@ def _ensure_media_fixtures() -> tuple[str, str]:
     """Deterministic media corpus (wav/bmp/png/jpeg/junk bytes built
     with struct/wave — no codec libs) + its probe golden, both pure
     pyarrow so ``oracle_sql()`` can build them (the q34 pattern)."""
-    from ai_pdf_extraction_spark.operators.multimodal import write_media_fixtures
+    from ai_pdf_extraction_spark.operators.multimodal import (
+        write_media_table,
+        write_probe_golden,
+    )
 
     media_path, golden_path = _media_fixture_paths()
-    if not (os.path.exists(media_path) and os.path.exists(golden_path)):
-        try:
-            write_media_fixtures(media_path, golden_path, _media_fixture_rows())
-        except Exception:
-            pass  # degrade to a loud read_parquet error at exec time
+    _build_once(media_path, lambda tmp: write_media_table(tmp, _media_fixture_rows()))
+    _build_once(golden_path, lambda tmp: write_probe_golden(tmp, _media_fixture_rows()))
     return media_path, golden_path
 
 
+@contract(lambda: f"""
+select media_id, media_type, format, n_bytes, width, height, duration_ms
+from read_parquet('{_ensure_media_fixtures()[1]}')
+""")
 def q49_media_metadata(spark, sf_dir):
     """Multimodal metadata probe: deterministic media bytes
     (wav/bmp/png/jpeg/junk) through the distributed mapInPandas probe,
@@ -1687,15 +2492,16 @@ def _decode_golden_path() -> str:
         write_decode_golden,
     )
 
-    path = _media_fixture_base() + f"_decode_d{MEDIA_DECODE_VERSION}.parquet"
-    if not os.path.exists(path):
-        try:
-            write_decode_golden(path, _media_fixture_rows())
-        except Exception:
-            pass  # degrade to a loud read_parquet error at oracle time
-    return path
+    return _build_once(
+        _media_fixture_base() + f"_decode_d{MEDIA_DECODE_VERSION}.parquet",
+        lambda tmp: write_decode_golden(tmp, _media_fixture_rows()),
+    )
 
 
+@contract(lambda: f"""
+select media_id, format, decode_ok, width, height, n_decoded, payload_md5
+from read_parquet('{_decode_golden_path()}')
+""")
 def q53_media_decode(spark, sf_dir):
     """Real media DECODE end-to-end (wav PCM, bmp pixels, png
     zlib+filters, gif LZW — all stdlib): the distributed mapInPandas
@@ -1711,6 +2517,41 @@ def q53_media_decode(spark, sf_dir):
     return media_decode_features(df)
 
 
+@contract(lambda: """
+with base as (
+  select doc_id,
+    string_split('Boiler notice ' || (doc_id % 7) || '. ' || text
+                 || '. Footer text common', '. ') as arr
+  from documents
+),
+g as (
+  select doc_id,
+    unnest(arr) as granule,
+    unnest(range(1, len(arr) + 1)) as pos
+  from base
+),
+gn as (select * from g where length(granule) > 0),
+kept as (
+  select doc_id, granule, pos,
+    row_number() over (partition by granule order by doc_id, pos) as rn
+  from gn
+),
+per_doc as (
+  -- from the ARRAY side, not the exploded side: docs with zero
+  -- non-empty granules must stay in the output (n_granules = 0)
+  select doc_id, len(list_filter(arr, x -> length(x) > 0)) as n_granules
+  from base
+),
+survivors as (
+  select doc_id, count(*) as n_kept,
+    md5(string_agg(granule, '. ' order by pos)) as dedup_md5
+  from kept where rn = 1 group by doc_id
+)
+select p.doc_id, p.n_granules,
+  coalesce(s.n_kept, 0) as n_kept,
+  coalesce(s.dedup_md5, md5('')) as dedup_md5
+from per_doc p left join survivors s using (doc_id)
+""")
 def q54_granule_dedup(spark, sf_dir):
     """Corpus-level exact sentence dedup (the C4/Dolma paragraph-dedup
     family): first corpus-wide occurrence of each '. '-granule wins
@@ -1742,6 +2583,28 @@ def q54_granule_dedup(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with w as (
+  select doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') as words
+  from documents
+),
+doc_sh as (
+  select doc_id,
+    unnest(list_distinct([array_to_string(words[i:i+2], ' ')
+                          for i in range(1, len(words) - 1)])) as shingle
+  from w
+),
+bench_sh as (select distinct shingle from doc_sh where doc_id % 50 = 0),
+hits as (
+  select d.doc_id, count(*) as n_hits
+  from doc_sh d join bench_sh using (shingle)
+  group by d.doc_id
+)
+select doc_id,
+  coalesce(n_hits, 0) as n_hits,
+  coalesce(n_hits, 0) >= 1 as contaminated
+from documents left join hits using (doc_id)
+""")
 def q55_contamination(spark, sf_dir):
     """Benchmark decontamination (GPT-3 appendix-C / Dolma): every
     50th doc plays the benchmark set; docs sharing any word trigram
@@ -1757,6 +2620,7 @@ def q55_contamination(spark, sf_dir):
     return contamination_flags(d, bench, n=3, min_hits=1)
 
 
+@contract(lambda: _curate_v2_sql(_FINGERPRINT_EXPR))
 def q57_curated_corpus_v2(spark, sf_dir):
     """The full-curation capstone: quality ∧ exact-canonical ∧
     ¬LSH-near-dup ∧ ¬benchmark-contaminated, granule-dedup stats on
@@ -1772,6 +2636,13 @@ def q57_curated_corpus_v2(spark, sf_dir):
     return curated_corpus_v2(d, bench, contamination_n=3)
 
 
+@contract(lambda: """
+select case when doc_id % 10 < 3 then 'hot.example.com'
+            else 'host-' || (doc_id % 97)::VARCHAR || '.example.org' end as host,
+       count(*) as n_docs
+from documents
+group by 1
+""")
 def q62_salted_host_counts(spark, sf_dir):
     """Salted skewed-host aggregation (the north rule's "salted
     repartition of skewed hosts", ``plans/partitioning.py:44-129`` —
@@ -1806,6 +2677,23 @@ def q62_salted_host_counts(spark, sf_dir):
     return salted_host_counts(with_partition_columns(pages_like))
 
 
+@contract(lambda: """
+select o_orderkey,
+  'INV-' || o_orderkey::varchar as invoice_number,
+  round(o_totalprice, 2) as total,
+  o_orderdate::date as issued_on,
+  (o_orderstatus = 'F') as paid,
+  (o_orderkey % 50)::double as discount_pct,
+  case when o_orderkey % 3 = 0 then 'PO-' || o_custkey::varchar end as po_reference,
+  case when o_orderkey % 7 = 0 then null
+       else 'c' || o_custkey::varchar || '@example.com' end as contact_email,
+  'invoice' as schema_name,
+  2 as schema_version,
+  case when o_orderkey % 3 = 1
+       then 'Required field ''po_reference'' is empty'
+       else '' end as schema_warnings
+from orders
+""")
 def q63_schema_registry_apply(spark, sf_dir):
     """Versioned schema-registry application (the reference's saved
     FieldDefinition schemas, ``routers/schemas.py:42-209`` /
@@ -1867,6 +2755,11 @@ def q63_schema_registry_apply(spark, sf_dir):
     )
 
 
+@contract(lambda: _curate_v2_sql(
+    _FINGERPRINT_EXPR,
+    extra_cte=_emb_losers_cte(),
+    extra_where="  and s.doc_id not in (select id_b from emb_losers)\n",
+))
 def q65_curated_corpus_v3(spark, sf_dir):
     """The EVERY-family curation capstone: v2 (quality ∧
     exact-canonical ∧ ¬LSH-near-dup ∧ ¬contaminated + granule stats)
@@ -1889,6 +2782,29 @@ def q65_curated_corpus_v3(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with urls as (select distinct 'doc://' || lpad(doc_id::varchar, 8, '0') as url
+              from documents),
+nn as (select count(*) as n from urls),
+params as (select greatest(((select n from nn) - 4) // 48, 1) as stride),
+firsts as (select url from urls order by url limit 2),
+lasts as (select url from urls order by url desc limit 2),
+ends as (select url from firsts union all select url from lasts),
+mids as (select url
+         from (select url, ('0x' || substr(md5(url), 1, 8))::bigint as h
+               from urls
+               where url not in (select url from ends))
+         where h % (select stride from params) = 0
+         order by h, url
+         limit 12)
+select url from urls where (select n from nn) <= 16
+union
+select url from (
+  select url from firsts
+  union all select url from lasts
+  union all select url from mids
+) where (select n from nn) > 16
+""")
 def q50_representative_sample(spark, sf_dir):
     """Representative sampling (S4 — the reference's first2 + last2 +
     strided-middle page policy, ``pdf_service.py:203-283``, lifted to
@@ -2012,6 +2928,10 @@ def _q80_messy_url_raw() -> F.Column:
     )
 
 
+@contract(lambda: f"""
+with {_q80_frontier_ctes()}
+select canon_url, first_id, n_discovered, in_seen, to_crawl from fr
+""")
 def q80_url_frontier_delta(spark, sf_dir):
     """Crawl-frontier delta: the new batch's discovered urls (events
     with id % 4 == 0) are canonicalized, collapsed within the batch,
@@ -2040,6 +2960,24 @@ def q80_url_frontier_delta(spark, sf_dir):
     return url_frontier_delta(new, seen)
 
 
+@contract(lambda: f"""
+with {_q80_frontier_ctes()},
+hosted as (
+  select canon_url, first_id,
+    regexp_extract(canon_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
+      as host
+  from fr where to_crawl
+),
+ranked as (
+  select canon_url, host, first_id,
+    row_number() over (partition by host
+                       order by first_id % 64, md5(canon_url), canon_url)
+      as pick_rank
+  from hosted
+)
+select canon_url, host, first_id, pick_rank::bigint as pick_rank
+from ranked where pick_rank <= 20
+""")
 def q83_frontier_host_cap(spark, sf_dir):
     """Per-host crawl politeness over the q80 frontier: each host's
     to-crawl urls capped at 20 for the cycle, ranked in the
@@ -2090,6 +3028,15 @@ def _q84_links(spark, sf_dir):
     )
 
 
+def _q84_pagerank_sql(iterations: int = 3) -> str:
+    return (
+        "with "
+        + _q84_pagerank_ctes(iterations)
+        + f'\nselect host, r as "rank" from r{iterations}'
+    )
+
+
+@contract(lambda: _q84_pagerank_sql(3))
 def q84_host_pagerank(spark, sf_dir):
     """Host-graph PageRank (3 damped iterations, integer micro-units):
     the Common-Crawl-style host centrality a frontier scheduler and
@@ -2111,6 +3058,25 @@ def q84_host_pagerank(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_q84_graph_ctes()},
+outs as (
+  select src as host, count(*)::bigint as out_hosts,
+    sum(weight)::bigint as out_weight
+  from edges group by src
+),
+ins as (
+  select dst as host, count(*)::bigint as in_hosts,
+    sum(weight)::bigint as in_weight
+  from edges group by dst
+)
+select coalesce(o.host, i.host) as host,
+  coalesce(o.out_hosts, 0) as out_hosts,
+  coalesce(o.out_weight, 0) as out_weight,
+  coalesce(i.in_hosts, 0) as in_hosts,
+  coalesce(i.in_weight, 0) as in_weight
+from outs o full outer join ins i on o.host = i.host
+""")
 def q85_link_degree_stats(spark, sf_dir):
     """Webgraph degree marginals per host (in/out distinct-host and
     weight totals) — the dataset-card companion to q84, two
@@ -2123,6 +3089,59 @@ def q85_link_degree_stats(spark, sf_dir):
     return link_degree_stats(host_edges(_q84_links(spark, sf_dir)))
 
 
+# q86: robots parse (windows partition by host) + longest-match
+# apply (conditional maxes) — keep in lockstep with
+# operators/robots.py
+@contract(lambda: f"""
+with lurls as (
+  select 'http://host' || (event_id % 13)::varchar || '.example.com/p/'
+           || event_id::varchar as url
+  from events
+  union
+  select 'http://host' || (case when event_id % 2 = 0
+             then (event_id * 7 + 3) % 13
+             else event_id % 3 end)::varchar
+           || '.example.com/q/' || (event_id % 211)::varchar
+  from events
+),
+robots as (
+  select 'host' || i::varchar || '.example.com' as host,
+    case when i % 3 = 0
+      then 'User-agent: *' || chr(10) || 'Disallow: /p/' || chr(10)
+           || 'Allow: /p/1'
+      else 'User-agent: BadBot' || chr(10) || 'Disallow: /' || chr(10)
+           || chr(10) || 'User-agent: *' || chr(10) || 'Disallow: /q/'
+    end as txt
+  from generate_series(0, 12) t(i) where i % 3 != 2
+),
+{_robots_parse_ctes()},
+u as (
+  select url,
+    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host,
+    case when regexp_replace(url,
+            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') = '' then '/'
+      else regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '')
+    end as tgt
+  from (select distinct url from lurls)
+),
+j as (
+  select u.url, u.host, r.prefix, r.is_allow, r.prefix_len,
+    (r.prefix is not null
+     and substr(u.tgt, 1, r.prefix_len::int) = r.prefix) as hit
+  from u left join rules2 r using (host)
+),
+agg as (
+  select url, host,
+    coalesce(max(case when is_allow and hit then prefix_len end), -1)
+      ::bigint as robots_allow_len,
+    coalesce(max(case when not is_allow and hit then prefix_len end), -1)
+      ::bigint as robots_dis_len
+  from j group by url, host
+)
+select url, host, robots_allow_len, robots_dis_len,
+  (robots_allow_len >= robots_dis_len) as robots_allowed
+from agg
+""")
 def q86_robots_filter(spark, sf_dir):
     """robots.txt admission control over the synthesized link corpus:
     per-host robots bodies (only ``User-agent: *`` groups bind; the
@@ -2165,6 +3184,62 @@ def q86_robots_filter(spark, sf_dir):
     return robots_filter(urls, parse_robots(robots))
 
 
+# q87: the asset-extension regex is injected verbatim from
+# operators/urls._ASSET_EXT_RE (plain alternation — identical
+# semantics in Java regex and RE2); regexp_replace needs the
+# explicit 'g' flag in DuckDB (Spark replaces all by default)
+@contract(lambda: """
+with raw as (
+  select 'http://'
+    || case when event_id % 2 = 0 then 'www.' else '' end
+    || 'host' || (event_id % 13)::varchar || '.example.com'
+    || case
+         when event_id % 5 = 0
+           then '/img/' || event_id::varchar || '.jpg'
+         when event_id % 5 = 1
+           then '/session/' || (event_id * 987654321)::varchar
+         when event_id % 5 = 2
+           then '/l/' || repeat('x', (event_id % 90)::int)
+         else '/article/x' || (event_id % 50)::varchar
+       end as url
+  from events
+),
+u as (
+  select url,
+    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host,
+    regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') as after
+  from (select distinct url from raw)
+),
+p as (
+  select url, host,
+    case when instr(after, '?') > 0
+      then substr(after, 1, instr(after, '?') - 1) else after end as path0
+  from u
+),
+f as (
+  select url, host,
+    case when path0 = '' then '/' else path0 end as path,
+    list_transform(
+      range(1, len(string_split(host, '.')) + 1),
+      i -> array_to_string(string_split(host, '.')[i:], '.')
+    ) as sufs
+  from p
+)
+select url, host,
+  regexp_matches(lower(path), '{asset_re}') as is_asset,
+  (2 * length(regexp_replace(path, '[^0-9]', '', 'g')) > length(path))
+    as digit_heavy,
+  (length(url) > 60) as too_long,
+  list_has_any(sufs, ['host3.example.com', 'spam.test'])
+    as blocked_domain,
+  not (regexp_matches(lower(path), '{asset_re}')
+       or (2 * length(regexp_replace(path, '[^0-9]', '', 'g'))
+           > length(path))
+       or (length(url) > 60)
+       or list_has_any(sufs, ['host3.example.com', 'spam.test']))
+    as keep
+from f
+""".replace("{asset_re}", _ASSET_EXT_RE))
 def q87_url_prefilter(spark, sf_dir):
     """Pre-fetch URL quality gate (C4/RefinedWeb first stage) over a
     deliberately messy synthesized frontier: asset extensions,
@@ -2209,6 +3284,27 @@ def q87_url_prefilter(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+with tok as (
+  select doc_id,
+    unnest(string_split_regex(lower(text), '[^a-z0-9]+')) as term
+  from documents
+),
+tf as (
+  select doc_id, term, count(*)::bigint as tf
+  from tok where term != '' group by doc_id, term
+),
+df as (select term, count(*)::bigint as df from tf group by term),
+ranked as (
+  select tf.doc_id, tf.term, tf.tf, df.df,
+    row_number() over (partition by tf.doc_id
+                       order by (tf.tf::double / df.df) desc, tf.term)
+      as pick_rank
+  from tf join df using (term)
+)
+select doc_id, term, tf, df, pick_rank::bigint as pick_rank
+from ranked where pick_rank <= 5
+""")
 def q89_distinctive_terms(spark, sf_dir):
     """Top-5 distinctive terms per document by exact tf/df ranking
     (monotone-equivalent to tf-idf, no libm log): one tokenization
@@ -2221,6 +3317,25 @@ def q89_distinctive_terms(spark, sf_dir):
     return distinctive_terms(_t(spark, sf_dir, "documents"), k=5)
 
 
+# q91: q80 frontier ⋈ q84 ranks, global top-budget in the
+# exact total order (set compare — the driver sorts rows)
+@contract(lambda: f"""
+with {_q80_frontier_ctes()},
+{_q84_pagerank_ctes(3)},
+f as (
+  select canon_url,
+    regexp_extract(canon_url,
+                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host
+  from fr where to_crawl
+),
+j as (
+  select f.canon_url, f.host, coalesce(r.r, 0)::bigint as host_rank
+  from f left join r3 r on r.host = f.host
+)
+select canon_url, host, host_rank from j
+order by host_rank desc, md5(canon_url), canon_url
+limit 150
+""")
 def q91_priority_frontier(spark, sf_dir):
     """Centrality-prioritized crawl budgeting: the q80 frontier's
     to-crawl urls scheduled by q84 host PageRank under a 150-fetch
@@ -2241,6 +3356,60 @@ def q91_priority_frontier(spark, sf_dir):
     return frontier_priority_budget(fr, ranks, budget=150)
 
 
+# q92: group front half + crawl-delay tail; caps override the
+# scalar 15 via coalesce
+@contract(lambda: f"""
+with {_q80_frontier_ctes()},
+robots as (
+  select 'host' || i::varchar || '.example.com' as host,
+    case when i % 2 = 0
+      then 'User-agent: *' || chr(10) || 'Crawl-delay: '
+           || (i + 2)::varchar || chr(10) || 'Disallow: /u/9'
+      else 'User-agent: BadBot' || chr(10) || 'Crawl-delay: 1'
+           || chr(10) || chr(10) || 'User-agent: *' || chr(10)
+           || 'Crawl-delay: fast'
+    end as txt
+  from generate_series(0, 6) t(i)
+),
+{_robots_group_ctes()},
+dvals as (
+  select g.host,
+    regexp_replace(
+      regexp_extract(g.l, '(?i)^crawl-delay[ \t]*:([^\r\n]*)', 1),
+      '^[ \t\r]+|[ \t\r]+$', '', 'g') as v
+  from grouped g join star s using (host, grp)
+  where regexp_matches(g.l, '(?i)^crawl-delay[ \t]*:') and g.grp > 0
+),
+delays as (
+  select host, max(try_cast(v as bigint)) as crawl_delay
+  from dvals
+  where regexp_matches(v, '^[0-9]+$')
+    and try_cast(v as bigint) is not null
+  group by host
+),
+caps as (
+  select host,
+    least(25, case when crawl_delay > 0 then 60 // crawl_delay
+                   else 25 end)::bigint as cap
+  from delays
+),
+hosted as (
+  select canon_url, first_id,
+    regexp_extract(canon_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
+      as host
+  from fr where to_crawl
+),
+ranked as (
+  select canon_url, host, first_id,
+    row_number() over (partition by host
+                       order by first_id % 64, md5(canon_url), canon_url)
+      as pick_rank
+  from hosted
+)
+select r.canon_url, r.host, r.first_id, r.pick_rank::bigint as pick_rank
+from ranked r left join caps c using (host)
+where r.pick_rank <= coalesce(c.cap, 15)
+""")
 def q92_crawl_delay_caps(spark, sf_dir):
     """Crawl-delay-scaled politeness: per-host ``Crawl-delay``
     directives (the Bing/Yandex convention; max wins when several
@@ -2285,6 +3454,69 @@ def q92_crawl_delay_caps(spark, sf_dir):
     )
 
 
+# q93: block-scoped sitemap entries (loc paired with ITS
+# lastmod) → canon → crawl-history probe; ISO text dates
+@contract(lambda: f"""
+with ent0 as (
+  select (event_id % 7) as hid,
+    '<url>' || chr(10) || '  <loc>https://Host'
+      || (event_id % 7)::varchar || '.example.com/s/'
+      || (event_id % 509)::varchar || '</loc>' || chr(10) || '  '
+      || case when (event_id % 509) % 4 != 0
+           then '<lastmod>2026-01-'
+                || lpad(((event_id % 28) + 1)::varchar, 2, '0')
+                || '</lastmod>'
+           else '' end
+      || chr(10) || '</url>' as entry
+  from events
+),
+xml as (
+  select hid,
+    '<urlset>' || string_agg(entry, '' order by entry) || '</urlset>'
+      as sitemap_xml
+  from ent0 group by hid
+),
+sm as (
+  select 'host' || hid::varchar || '.example.com' as host, sitemap_xml
+  from xml
+),
+blocks as (
+  select host,
+    unnest(regexp_extract_all(sitemap_xml, '(?s)<url>(.*?)</url>', 1))
+      as b
+  from sm
+),
+parsed as (
+  select host,
+    replace(replace(replace(replace(replace(
+      regexp_extract(b, '(?s)<loc>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</loc>', 1),
+      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', chr(39)),
+      '&amp;', '&') as raw_url,
+    nullif(regexp_extract(b, '(?s)<lastmod>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</lastmod>', 1),
+           '') as lastmod
+  from blocks
+  where regexp_extract(b, '(?s)<loc>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</loc>', 1) != ''
+),
+raw as (select distinct 0::bigint as event_id, raw_url from parsed),
+{_URL_CANON_CHAIN_SQL},
+cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5),
+canon as (
+  select p.host, c.canon_url, max(p.lastmod) as lastmod
+  from parsed p join cmap c using (raw_url)
+  group by p.host, c.canon_url
+),
+crawled as (
+  select distinct 'https://host' || (event_id % 7)::varchar
+      || '.example.com/s/' || (event_id % 509)::varchar as canon_url,
+    '2026-01-15' as crawled_at
+  from events where event_id % 3 = 0
+)
+select c.host, c.canon_url, c.lastmod, h.crawled_at,
+  (h.crawled_at is null
+   or (c.lastmod is not null and c.lastmod > h.crawled_at))
+    as needs_fetch
+from canon c left join crawled h using (canon_url)
+""")
 def q93_sitemap_recrawl(spark, sf_dir):
     """Freshness-aware recrawl frontier: block-scoped sitemap entries
     (each <loc> paired with ITS sibling <lastmod>; pretty-printed
@@ -2352,6 +3584,60 @@ def q93_sitemap_recrawl(spark, sf_dir):
     return sitemap_recrawl_delta(parse_sitemap_entries(sitemaps), crawled)
 
 
+# q90: sitemap parse (regexp_extract_all + entity decode) →
+# canon chain (distinct raw urls, joined back) → seen probe
+@contract(lambda: f"""
+with ent as (
+  select (event_id % 7) as hid,
+    '<url><loc> https://Host' || (event_id % 7)::varchar
+      || '.example.com/s/' || (event_id % 509)::varchar
+      || case when event_id % 4 = 0
+           then '?x=1&amp;utm_source=z' else '' end
+      || ' </loc></url>' as entry
+  from events
+),
+xml as (
+  select hid,
+    '<urlset>' || string_agg(entry, '' order by entry) || '</urlset>'
+      as sitemap_xml
+  from ent group by hid
+),
+sm as (
+  select 'host' || hid::varchar || '.example.com' as host, sitemap_xml
+  from xml
+),
+locs as (
+  select host,
+    unnest(regexp_extract_all(sitemap_xml, '<loc>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</loc>', 1))
+      as loc_url
+  from sm
+),
+dec as (
+  select host, dec_url from (
+    select host,
+      replace(replace(replace(replace(replace(loc_url,
+        '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', chr(39)),
+        '&amp;', '&') as dec_url
+    from locs
+  ) where dec_url != ''
+),
+raw as (select distinct 0::bigint as event_id, dec_url as raw_url from dec),
+{_URL_CANON_CHAIN_SQL},
+cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5),
+canon as (
+  select distinct d.host, c.canon_url
+  from dec d join cmap c on d.dec_url = c.raw_url
+),
+seen as (
+  select distinct 'https://host' || (event_id % 7)::varchar
+    || '.example.com/s/' || (event_id % 509)::varchar as canon_url
+  from events where event_id % 3 != 0
+)
+select c.host, c.canon_url,
+  (s.canon_url is not null) as in_seen,
+  (s.canon_url is null) as to_crawl
+from canon c left join seen s using (canon_url)
+""")
 def q90_sitemap_discovery(spark, sf_dir):
     """Sitemap-driven url discovery — the discovery half of the crawl
     stack composed with the seen-set probe: per-host sitemap XML
@@ -2424,6 +3710,85 @@ def q90_sitemap_discovery(spark, sf_dir):
     )
 
 
+# q88: q80 frontier → prefilter → robots → host cap, one chain.
+# The robots match target is path+QUERY (tgt), the prefilter's
+# asset/digit tests use the query-stripped path — keep both in
+# lockstep with url_prefilter/robots_filter.
+@contract(lambda: f"""
+with {_q80_frontier_ctes()},
+pfu as (
+  select fr.*,
+    regexp_extract(canon_url,
+                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host,
+    regexp_replace(canon_url,
+                   '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') as after
+  from fr
+),
+pff as (
+  select *,
+    case when after = '' then '/' else after end as tgt,
+    case when instr(after, '?') > 0
+      then (case when substr(after, 1, instr(after, '?') - 1) = ''
+              then '/' else substr(after, 1, instr(after, '?') - 1) end)
+      else (case when after = '' then '/' else after end)
+    end as path,
+    list_transform(
+      range(1, len(string_split(host, '.')) + 1),
+      i -> array_to_string(string_split(host, '.')[i:], '.')
+    ) as sufs
+  from pfu
+),
+pf as (
+  select canon_url, first_id, to_crawl, host, tgt,
+    (regexp_matches(lower(path), '{{asset_re}}')
+     or (5 * length(regexp_replace(path, '[^0-9]', '', 'g'))
+         > 3 * length(path))
+     or (length(canon_url) > 32)
+     or list_has_any(sufs, ['host5.example.com'])) as filtered
+  from pff
+),
+robots as (
+  select 'host' || i::varchar || '.example.com' as host,
+    case when i % 2 = 0
+      then 'User-agent: *' || chr(10) || 'Disallow: /u/' || chr(10)
+           || 'Allow: /u/2'
+      else 'User-agent: OtherBot' || chr(10) || 'Disallow: /'
+           || chr(10) || chr(10) || 'User-agent: *' || chr(10)
+           || 'Disallow: /p/9'
+    end as txt
+  from generate_series(0, 6) t(i)
+),
+{_robots_parse_ctes()},
+rj as (
+  select pf.canon_url, pf.first_id, pf.host, pf.to_crawl, pf.filtered,
+    r.is_allow, r.prefix_len,
+    (r.prefix is not null
+     and substr(pf.tgt, 1, r.prefix_len::int) = r.prefix) as hit
+  from pf left join rules2 r using (host)
+),
+rag as (
+  select canon_url, first_id, host, to_crawl, filtered,
+    coalesce(max(case when is_allow and hit then prefix_len end), -1)
+      as al,
+    coalesce(max(case when not is_allow and hit then prefix_len end), -1)
+      as dl
+  from rj
+  group by canon_url, first_id, host, to_crawl, filtered
+),
+decided as (
+  select canon_url, first_id, host from rag
+  where to_crawl and not filtered and al >= dl
+),
+ranked as (
+  select canon_url, host, first_id,
+    row_number() over (partition by host
+                       order by first_id % 64, md5(canon_url), canon_url)
+      as pick_rank
+  from decided
+)
+select canon_url, host, first_id, pick_rank::bigint as pick_rank
+from ranked where pick_rank <= 10
+""".replace("{asset_re}", _ASSET_EXT_RE))
 def q88_frontier_politeness(spark, sf_dir):
     """The full politeness-gated frontier — the crawl-side capstone
     (the curated-corpus discipline applied to scheduling): q80's
@@ -2593,14 +3958,6 @@ r{i} as (
     return ",\n".join(parts)
 
 
-def _q84_pagerank_sql(iterations: int = 3) -> str:
-    return (
-        "with "
-        + _q84_pagerank_ctes(iterations)
-        + f'\nselect host, r as "rank" from r{iterations}'
-    )
-
-
 def _q80_frontier_ctes() -> str:
     """The q80 oracle as reusable CTE text ending in ``fr(canon_url,
     first_id, n_discovered, in_seen, to_crawl)`` — shared by the q80
@@ -2625,6 +3982,52 @@ fr as (
 )"""
 
 
+def _cluster_sample_sql(centroids: list, per_cluster: int) -> str:
+    """q81 oracle: same centroid literals, first-match argmin, then a
+    per-cluster row_number in the operator's deterministic global
+    order (shard = id % 64, md5 of the decimal id, id) — DuckDB runs
+    the single-window form; the Spark plan's two-phase sharded rank
+    must equal it exactly."""
+    dlist = _d2_dlist_sql(centroids)
+    return f"""
+with darr as (
+  select vec_id, [{dlist}] as dl from embeddings
+),
+assign as (
+  select vec_id, (list_position(dl, list_min(dl)) - 1)::int as cluster
+  from darr
+),
+ranked as (
+  select vec_id, cluster,
+    row_number() over (partition by cluster
+                       order by vec_id % 64, md5(vec_id::varchar), vec_id)
+      as pick_rank,
+    count(*) over (partition by cluster) as cluster_size
+  from assign
+)
+select vec_id, cluster, pick_rank::bigint as pick_rank,
+       cluster_size::bigint as cluster_size
+from ranked where pick_rank <= {per_cluster}
+"""
+
+
+def _q81_oracle_sql() -> str:
+    """Degrades per-query like _q26_oracle_sql if training fails."""
+    try:
+        return _cluster_sample_sql(
+            _ivf_centroids(
+                os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
+            ),
+            per_cluster=40,
+        )
+    except Exception:
+        return (
+            "select * from read_parquet("
+            "'/nonexistent/q81_ivf_centroid_training_failed')"
+        )
+
+
+@contract(_q81_oracle_sql)
 def q81_cluster_balanced_sample(spark, sf_dir):
     """Semantic cluster-balanced sampling: the trained IVF coarse
     quantizer doubles as a domain clusterer (SemDeDup-style), and each
@@ -2641,6 +4044,12 @@ def q81_cluster_balanced_sample(spark, sf_dir):
     )
 
 
+@contract(lambda: """
+select lang, source, grouping(lang, source)::bigint as gid,
+  count(*) as n_docs, sum(n_chars)::bigint as total_chars,
+  round(avg(n_chars), 2) as avg_chars
+from documents group by cube(lang, source)
+""")
 def q82_corpus_profile(spark, sf_dir):
     """One-scan dataset-card profile: CUBE(lang, source) — per-cell,
     both marginals, and the corpus total in a single partial-agg pass
@@ -2651,6 +4060,23 @@ def q82_corpus_profile(spark, sf_dir):
     return corpus_profile(_t(spark, sf_dir, "documents"))
 
 
+@contract(lambda: r"""
+with raw as (
+  select event_id,
+    case (event_id % 23)
+""" + "".join(
+    f"      when {i} then '{u}'\n" for i, u in enumerate(_URL_SAMPLES)
+) + r"""      else
+    'HTTPS://Src' || (event_id % 20) || '.Example.COM:443/Path//' || event_id ||
+    (case when event_id % 3 = 0 then '/?utm_source=x&q=1'
+          when event_id % 3 = 1 then '/#frag' else '/' end)
+    end as raw_url
+  from events
+), """ + _URL_CANON_CHAIN_SQL + f"""
+select event_id, raw_url,
+  {_URL_CANON_FINAL_SQL} as canonical_url
+from s5
+""")
 def q37_url_canonicalize(spark, sf_dir):
     """URL canonicalization (crawl-dedup key normalization): messy
     urls deterministically synthesized from events rows — plus the
@@ -2681,6 +4107,24 @@ def q37_url_canonicalize(spark, sf_dir):
     ).select("event_id", "raw_url", "canonical_url")
 
 
+def _q64_oracle_sql() -> str:
+    """q64 oracle: the q24 all-pairs cosine restricted to same
+    sign-LSH bucket; cosine/rounding shared via ``_COS_EXPR``."""
+    bucket = _lsh_bucket_duck()
+    return f"""
+with bucketed as (
+  select vec_id, embedding, {bucket} as bucket from embeddings
+)
+select * from (
+  select a.vec_id as id_a, b.vec_id as id_b,
+    {_COS_EXPR.format(r=4)} as cos
+  from bucketed a join bucketed b
+    on a.vec_id < b.vec_id and a.bucket = b.bucket
+) where cos >= 0.45
+"""
+
+
+@contract(_q64_oracle_sql)
 def q64_embedding_near_dup_lsh(spark, sf_dir):
     """Sign-LSH-bucketed embedding near-dup pairs — the SCALE TWIN of
     q24 (whose all-pairs plan is the flagged-weak-by-design baseline):
@@ -2731,6 +4175,20 @@ new as (
 )"""
 
 
+@contract(lambda: f"""
+with {_DELTA_SPLIT_CTE},
+fpo as (select doc_id, coalesce({_FINGERPRINT_EXPR}, 'null-text') as fp from old),
+fpn as (select doc_id, coalesce({_FINGERPRINT_EXPR}, 'null-text') as fp from new),
+groups as (
+  select fp, min(doc_id) as canonical_id, count(*) as group_size
+  from (select * from fpo union all select * from fpn) group by fp
+),
+idx as (select distinct fp from fpo)
+select f.doc_id, g.canonical_id, g.group_size,
+       f.doc_id != g.canonical_id as is_dup,
+       exists (select 1 from idx where idx.fp = f.fp) as in_index
+from fpn f join groups g using (fp)
+""")
 def q66_exact_dedup_delta(spark, sf_dir):
     """Incremental exact dedup: the NEW batch against an at-rest
     fingerprint index built over the OLD corpus (the reference's
@@ -2827,6 +4285,7 @@ docs2 as (
 )"""
 
 
+@contract(lambda: _span_sql(_SPAN_DEDUP_MARKED))
 def q67_span_dedup(spark, sf_dir):
     """Substring-level (span) dedup — the Lee et al. (2107.06499)
     duplicated-substring family at word-gram granularity: every
@@ -2839,6 +4298,12 @@ def q67_span_dedup(spark, sf_dir):
     return span_dedup(_span_docs(spark, sf_dir), k=8)
 
 
+_SPAN_DECON_MARKED = """
+bench as (select distinct g from occ where doc_id % 50 = 0),
+marked as (select doc_id, start from occ where g in (select g from bench))"""
+
+
+@contract(lambda: _span_sql(_SPAN_DECON_MARKED))
 def q70_span_decontaminate(spark, sf_dir):
     """Span-level benchmark decontamination: docs sharing an 8-word
     gram with the benchmark set (every 50th doc, the q55 split) get
@@ -2876,6 +4341,9 @@ def _q68_golden_path() -> str:
     )
 
 
+@contract(lambda: f"""
+select doc_id, n_tokens_bpe from read_parquet('{_q68_golden_path()}')
+""")
 def q68_bpe_token_counts(spark, sf_dir):
     """EXACT merge-table BPE token counts (repo-trained table, public
     Sennrich algorithm) — upgrading the q30 regex proxy to real token
@@ -2891,6 +4359,21 @@ def q68_bpe_token_counts(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_SCORED_CTE},
+bpe as (select doc_id, n_tokens_bpe
+        from read_parquet('{_q68_golden_path()}')),
+j as (select s.doc_id, s.lang, s.quality, b.n_tokens_bpe as n_tokens
+      from scored s join bpe b using (doc_id)),
+c as (
+  select doc_id, lang, quality, n_tokens,
+    (sum(n_tokens) over (partition by lang order by quality desc, doc_id
+                         rows unbounded preceding))::bigint as cum_tokens
+  from j
+)
+select doc_id, lang, quality, n_tokens, cum_tokens from c
+where cum_tokens <= 3000
+""")
 def q72_token_budget_bpe(spark, sf_dir):
     """q44's token-budget selection twinned to EXACT BPE counts — the
     budget now prices documents in real tokens (a long-word doc costs
@@ -2942,6 +4425,9 @@ def _q69_golden_path() -> str:
     )
 
 
+@contract(lambda: f"""
+select doc_id, lang_pred from read_parquet('{_q69_golden_path()}')
+""")
 def q69_lang_trained(spark, sf_dir):
     """TRAINED hashed-ngram language ID (fastText-style linear model,
     repo-trained integer-quantized weights) — the production-model
@@ -2973,6 +4459,9 @@ def _lm_model_parquets() -> tuple[str, str, dict]:
     model file's bytes digest."""
     import hashlib
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from ai_pdf_extraction_spark.operators.lm import LM_VERSION, load_lm_payload
 
     payload = load_lm_payload()
@@ -2980,13 +4469,10 @@ def _lm_model_parquets() -> tuple[str, str, dict]:
         json.dumps(payload, sort_keys=True).encode()
     ).hexdigest()[:12]
     base = f"/tmp/spark_graft_lm_v{LM_VERSION}_{digest}"
-    bi_path, back_path = base + "_bigrams.parquet", base + "_backoff.parquet"
-    if not (os.path.exists(bi_path) and os.path.exists(back_path)):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        bi = payload["bigrams"]
-        pq.write_table(
+    bi, back = payload["bigrams"], payload["backoff"]
+    bi_path = _build_once(
+        base + "_bigrams.parquet",
+        lambda tmp: pq.write_table(
             pa.table(
                 {
                     "v": [r[0] for r in bi],
@@ -2994,18 +4480,40 @@ def _lm_model_parquets() -> tuple[str, str, dict]:
                     "q": [int(r[2]) for r in bi],
                 }
             ),
-            bi_path,
-        )
-        back = payload["backoff"]
-        pq.write_table(
-            pa.table(
-                {"w": [r[0] for r in back], "q": [int(r[1]) for r in back]}
-            ),
-            back_path,
-        )
+            tmp,
+        ),
+    )
+    back_path = _build_once(
+        base + "_backoff.parquet",
+        lambda tmp: pq.write_table(
+            pa.table({"w": [r[0] for r in back], "q": [int(r[1]) for r in back]}),
+            tmp,
+        ),
+    )
     return bi_path, back_path, payload
 
 
+def _q76_oracle_sql() -> str:
+    """q76 oracle: the bigram-LM scoring pipeline in pure DuckDB SQL
+    over the committed model exported to parquet — tokenization
+    (ascii runs, per-token lower), predecessor pairing (list_zip with
+    a '<s>' prepend), two model joins, one group-by, and the same
+    no-division integer bucket comparison as the Spark plan."""
+    ctes, cut_head, cut_mid = _lm_agg_ctes("documents")
+    return f"""
+with {ctes}
+select d.doc_id,
+  coalesce(a.n_tokens, 0)::bigint as n_tokens,
+  coalesce(a.lm_q_sum, 0)::bigint as lm_q_sum,
+  case when a.doc_id is null then 'empty'
+       when a.lm_q_sum >= {cut_head} * a.n_tokens then 'head'
+       when a.lm_q_sum >= {cut_mid} * a.n_tokens then 'middle'
+       else 'tail' end as ppl_bucket
+from documents d left join lm_agg a using (doc_id)
+"""
+
+
+@contract(_q76_oracle_sql)
 def q76_lm_perplexity(spark, sf_dir):
     """CCNet-style LM quality bucketing (Wenzek et al. 1911.00359):
     every doc scored by the repo-trained integer-quantized bigram LM
@@ -3038,6 +4546,59 @@ MIXTURE_BUDGET = 12_000
 MIXTURE_MAX_EPOCHS = 3
 
 
+def _q77_oracle_sql() -> str:
+    """q77 oracle: the full mixture pipeline relationally in DuckDB —
+    q16 whitespace token counts, integer targets embedded from the
+    SAME driver-side `budget*w div sum(w)` arithmetic the operator
+    uses, ceil-division epoch counts, epoch-keyed md5 permutation, and
+    one per-source running-sum window whose ORDER (epoch, shard, hash,
+    id) equals the Spark plan's sharded two-phase global order."""
+    sum_w = sum(MIXTURE_WEIGHTS.values())
+    values = ", ".join(
+        f"('{s}', {(MIXTURE_BUDGET * w) // sum_w})"
+        for s, w in sorted(MIXTURE_WEIGHTS.items())
+    )
+    return f"""
+with d as (
+  select doc_id, source,
+    case when length(trim(text)) = 0 then 0
+         else len(regexp_split_to_array(trim(text), '\\s+')) end as n_tokens
+  from documents
+),
+d2 as (
+  select * from d
+  where n_tokens > 0 and source in (select src from (values {values}) t(src, tgt))
+),
+ep as (
+  select a.source, t.tgt as target_q,
+         least({MIXTURE_MAX_EPOCHS}, (t.tgt + a.avail - 1) // a.avail)::bigint
+           as n_epochs
+  from (select source, sum(n_tokens) as avail from d2 group by source) a
+  join (values {values}) t(src, tgt) on t.src = a.source
+  where (t.tgt + a.avail - 1) // a.avail > 0
+),
+rep as (
+  select d2.doc_id, d2.source, d2.n_tokens, ep.target_q,
+         unnest(generate_series(0::bigint, ep.n_epochs - 1)) as epoch
+  from d2 join ep using (source)
+),
+c as (
+  select *,
+    sum(n_tokens) over (
+      partition by source
+      order by epoch, doc_id % 64,
+               md5(cast(epoch as varchar) || ':' || cast(doc_id as varchar)),
+               doc_id
+      rows between unbounded preceding and current row) as cum
+  from rep
+)
+select doc_id, source, epoch, n_tokens::bigint as n_tokens,
+       cum::bigint as cum_source_tokens
+from c where cum <= target_q
+"""
+
+
+@contract(_q77_oracle_sql)
 def q77_mixture_sample(spark, sf_dir):
     """Source-weighted data-mixture builder (The Pile 2101.00027 §2.1
     / LLaMA 2302.13971 tbl-1): every source gets `budget*w div sum(w)`
@@ -3060,6 +4621,26 @@ def q77_mixture_sample(spark, sf_dir):
     )
 
 
+@contract(lambda: r"""
+with words as (
+  select unnest(regexp_extract_all(text,
+                '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) as word
+  from documents where text is not null
+),
+freqs as (select word, count(*) as freq from words group by word),
+pairs as (
+  select substr(word, i, 1) as left_sym, substr(word, i + 1, 1) as right_sym,
+         freq
+  from freqs, unnest(generate_series(1::bigint, length(word) - 1)) g(i)
+),
+counted as (
+  select left_sym, right_sym, sum(freq)::bigint as pair_count
+  from pairs group by 1, 2 having sum(freq) >= 2
+)
+select left_sym, right_sym, pair_count,
+  row_number() over (order by pair_count desc, left_sym, right_sym) as rnk
+from counted
+""")
 def q78_bpe_pair_counts(spark, sf_dir):
     """Distributed BPE training, round-0 pair counts (Sennrich
     1508.07909 alg. 1): the corpus collapses to a word-TYPE frequency
@@ -3074,6 +4655,38 @@ def q78_bpe_pair_counts(spark, sf_dir):
     return bpe_pair_counts(_t(spark, sf_dir, "documents"))
 
 
+def _q75_oracle_sql() -> str:
+    """q75 oracle: same-bucket all-pairs cosine over old ∪ new (the
+    embedding delta split), restricted to new-touching pairs; bucket
+    and cosine expressions shared with the q64/q65 generators."""
+    bucket = _lsh_bucket_duck()
+    return f"""
+with eold as (select vec_id, embedding from embeddings where vec_id % 4 != 0),
+enew as (
+  select vec_id, embedding from embeddings where vec_id % 4 = 0
+  union all
+  select vec_id + {_DELTA_ID_OFFSET} as vec_id, embedding
+  from (select * from eold where vec_id % 10 = 1)
+),
+allb as (
+  select vec_id, embedding, false as is_new from eold
+  union all
+  select vec_id, embedding, true as is_new from enew
+),
+bucketed as (
+  select vec_id, embedding, is_new, {bucket} as bucket from allb
+)
+select * from (
+  select a.vec_id as id_a, b.vec_id as id_b,
+    {_COS_EXPR.format(r=4)} as cos
+  from bucketed a join bucketed b
+    on a.vec_id < b.vec_id and a.bucket = b.bucket
+  where a.is_new or b.is_new
+) where cos >= 0.45
+"""
+
+
+@contract(_q75_oracle_sql)
 def q75_embedding_near_dup_delta(spark, sf_dir):
     """Incremental embedding near-dup: the semantic-family delta (the
     q66/q71 split rule applied to embeddings — old = vec_id%4 != 0,
@@ -3101,6 +4714,29 @@ def q75_embedding_near_dup_delta(spark, sf_dir):
     return embedding_near_dup_delta(new, old, threshold=0.45)
 
 
+@contract(lambda: f"""
+with toks as (
+  select doc_id, doc_id % 64 as shard, n_tokens_bpe
+  from read_parquet('{_q68_golden_path()}')
+),
+c as (
+  select doc_id, n_tokens_bpe,
+         sum(n_tokens_bpe) over (order by shard, doc_id
+                                 rows unbounded preceding) as end_offset
+  from toks
+)
+select doc_id, n_tokens_bpe as n_tokens,
+       (end_offset - n_tokens_bpe)::bigint as start_offset,
+       end_offset::bigint as end_offset,
+       ((end_offset - n_tokens_bpe) // 256)::bigint as first_seq,
+       (case when n_tokens_bpe > 0 then (end_offset - 1) // 256
+             else (end_offset - n_tokens_bpe) // 256 end)::bigint as last_seq,
+       (case when n_tokens_bpe > 0
+             then (end_offset - 1) // 256
+                  - (end_offset - n_tokens_bpe) // 256 + 1
+             else 0 end)::bigint as n_seqs
+from c
+""")
 def q74_sequence_pack(spark, sf_dir):
     """Training-sequence packing over EXACT BPE counts: every doc's
     (start, end) offsets and chunk span in the concatenated 256-token
@@ -3121,6 +4757,7 @@ def q74_sequence_pack(spark, sf_dir):
     return sequence_pack(toks, seq_len=256)
 
 
+@contract(lambda: _curate_v4_sql(_FINGERPRINT_EXPR))
 def q73_curated_corpus_v4(spark, sf_dir):
     """The v4 capstone: v3 (quality ∧ exact-canonical ∧ ¬LSH-near-dup
     ∧ ¬contaminated ∧ ¬embedding-near-dup + granule stats) with the
@@ -3145,6 +4782,38 @@ def q73_curated_corpus_v4(spark, sf_dir):
     )
 
 
+def _curate_v5_sql(fingerprint_expr: str) -> str:
+    """q79 oracle: the v4 template's final select becomes a ``v4``
+    CTE, the q76 LM chain (``_lm_agg_ctes`` — literally the same SQL
+    text) runs over docs2 restricted to v4 survivors, and the final
+    select keeps head/middle only; docs2 is re-rooted on the RAW
+    documents (see q79_curated_corpus_v5's vacuity note). Same
+    composition as ``plans.curate.curated_corpus_v5``."""
+    v4sql = _curate_v4_sql(fingerprint_expr).replace(
+        _q73_docs_cte().strip(),
+        "docs2 as (\n  select doc_id, lang, text from documents\n)",
+    )
+    head, sep, tail = v4sql.rpartition("\nselect v3.doc_id")
+    assert sep, "v4 template final-select shape changed"
+    ctes = head.strip()
+    assert ctes.startswith("with ")
+    lm_ctes, cut_head, cut_mid = _lm_agg_ctes(
+        "(select d2.doc_id, d2.text from docs2 d2 "
+        "join v4 on v4.doc_id = d2.doc_id)"
+    )
+    return f"""
+{ctes},
+v4 as (select v3.doc_id{tail.rstrip()}),
+{lm_ctes}
+select v4.*,
+  case when a.lm_q_sum >= {cut_head} * a.n_tokens then 'head'
+       else 'middle' end as ppl_bucket
+from v4 join lm_agg a using (doc_id)
+where a.lm_q_sum >= {cut_mid} * a.n_tokens
+"""
+
+
+@contract(lambda: _curate_v5_sql(_FINGERPRINT_EXPR))
 def q79_curated_corpus_v5(spark, sf_dir):
     """The v5 capstone: v4 (quality ∧ exact-canonical ∧ ¬LSH-near-dup
     ∧ ¬contaminated ∧ ¬embedding-near-dup ∧ span-deduped) with the
@@ -3174,6 +4843,75 @@ def q79_curated_corpus_v5(spark, sf_dir):
     )
 
 
+def _minhash_delta_sql(k: int = 12, bands: int = 4) -> str:
+    """q71 oracle: banded LSH over old ∪ new under the FROZEN universe
+    (hot shingles = DF over the OLD corpus only > cap — the index-build
+    rule in ``dedup_index.hot_shingles``), candidates restricted to
+    pairs touching a new id. Batch equivalence makes this exactly the
+    delta's result (pinned independently in ``tests/test_dedup_index``
+    for the uncapped case; this oracle covers the frozen-capped one)."""
+    r = k // bands
+    hashes = ", ".join(f"min(md5('{i}:' || shingle)) as h{i}" for i in range(k))
+    band_exprs = ", ".join(
+        "md5(" + " || '|' || ".join(f"h{b * r + j}" for j in range(r)) + f") as band{b}"
+        for b in range(bands)
+    )
+    bucket_list = ", ".join(f"'{b}#' || band{b}" for b in range(bands))
+    return f"""
+with {_DELTA_SPLIT_CTE},
+allb as (
+  select doc_id, text, false as is_new from old
+  union all
+  select doc_id, text, true as is_new from new
+),
+sh_all as (
+  select doc_id,
+         unnest(list_distinct([array_to_string(words[i:i+2], ' ')
+                               for i in range(1, len(words) - 1)])) as shingle
+  from (select doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') as words
+        from allb)
+),
+hot as (
+  select shingle from sh_all
+  join (select doc_id from allb where not is_new) using (doc_id)
+  group by shingle having count(*) > {DEFAULT_MAX_SHINGLE_DF}
+),
+sh as (
+  select doc_id, shingle from sh_all
+  where shingle not in (select shingle from hot)
+),
+sig as (select doc_id, {hashes} from sh group by doc_id),
+banded as (select doc_id, {band_exprs} from sig),
+stacked as (select doc_id, unnest([{bucket_list}]) as bucket from banded),
+newids as (select doc_id from allb where is_new),
+cand as (
+  select distinct a.doc_id as id_a, b.doc_id as id_b
+  from stacked a join stacked b using (bucket)
+  where a.doc_id < b.doc_id
+    and (a.doc_id in (select doc_id from newids)
+         or b.doc_id in (select doc_id from newids))
+),
+sizes as (select doc_id, count(*) as n from sh group by 1),
+shared as (
+  select sh_a.doc_id as id_a, sh_b.doc_id as id_b, count(*) as shared
+  from sh sh_a join sh sh_b using (shingle)
+  where sh_a.doc_id < sh_b.doc_id
+  group by 1, 2
+),
+jacc as (
+  select id_a, id_b,
+         round(shared * 1.0 / (sa.n + sb.n - shared), 4) as jaccard
+  from shared
+  join sizes sa on sa.doc_id = id_a
+  join sizes sb on sb.doc_id = id_b
+)
+select cand.id_a, cand.id_b, jacc.jaccard
+from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
+where jacc.jaccard >= 0.8
+"""
+
+
+@contract(_minhash_delta_sql)
 def q71_minhash_lsh_delta(spark, sf_dir):
     """Incremental MinHash-LSH near-dup: the NEW batch probes an
     at-rest signature index (frozen hot-shingle universe computed over
@@ -3190,6 +4928,27 @@ def q71_minhash_lsh_delta(spark, sf_dir):
     return minhash_lsh_delta(new, sigs, old, threshold=0.8, hot=hot)
 
 
+@contract(lambda: """
+with bucketed as (
+  select vec_id, embedding,
+    ((case when list_sum(list_transform(list_zip(embedding, [1.690526, -0.465937, 0.03282, 0.407516, -0.788923, 0.002066, -0.00089, -1.754724, 1.017658, 0.600499, -0.625429, -0.171548, 0.505299, -0.261356, -0.242749, -1.453241, 0.55458, 0.123881, 0.27446, -1.526525, 1.6507, 0.154336, -0.38714, 2.029072, -0.045386, -1.450679, -0.405228, -2.288315, 1.049397, -0.416474, -0.742554, 1.07247, -1.651076, 0.535429, -2.064415, -0.662159, -1.20422, 1.461976, 1.766161, -0.329414, 0.840733, -0.179986, 0.568062, -0.752837, -1.708339, -1.803099, 0.383122, 2.247595, 0.269412, -0.524605, 1.912019, 0.237302, 0.101434, 0.252578, -0.132377, -0.309476, -1.434963, 0.501624, -0.094775, 1.193086, -0.368818, -1.90637, -0.099611, 1.699537]), x -> x[1]::DOUBLE * x[2])) > 0 then 1 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [-0.383423, -0.889857, -1.193592, -1.050017, -0.300194, -1.179982, 1.497639, -0.282635, 0.108648, 1.43824, 1.503319, -0.212733, 0.331974, 0.735027, -0.192855, -1.778013, 0.654706, 0.894352, 0.415503, -0.923545, -0.196027, -0.59077, -0.299711, 1.296885, 1.52958, 0.669418, 0.548745, 0.676629, -0.012242, -0.075663, -0.673645, -0.055867, 2.259947, 0.869039, -0.342117, -0.471927, -0.86449, 0.37437, 0.391546, -1.443122, 0.486335, -0.569472, 1.426721, 0.156844, 1.71773, -0.458127, -0.287984, 0.299808, 1.055948, 0.565882, -1.233524, 0.182901, 0.022245, -0.429069, -0.648105, 1.747577, -0.390386, -0.845923, 0.637113, 0.130623, -0.075814, 0.781302, 0.488625, 0.36219]), x -> x[1]::DOUBLE * x[2])) > 0 then 2 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [0.9642, 0.283636, -0.616922, -0.362282, -0.520972, 0.209722, -1.077985, -1.832426, 0.088155, -1.336521, -1.951978, 0.373331, -0.711053, 0.496125, -0.530854, -1.121962, -1.243518, -0.514927, -0.273383, -0.82346, -0.281108, -1.536102, 0.014489, -1.793649, -0.193856, 0.697294, 1.091939, 1.71438, -1.556288, 0.758725, 1.206282, 0.980557, -0.929324, 0.411797, 1.860056, -1.497274, 0.476338, 1.11229, -0.696591, 0.58297, -1.070893, -0.812209, -0.81708, 0.192308, -0.090981, 0.954115, -0.940279, -0.131276, 0.961076, 0.560777, -1.324641, 0.665204, -0.478418, 0.385387, 0.30068, 1.219319, 0.11656, -1.853806, -1.36986, 0.731154, -0.258316, 1.137979, 0.273439, -0.749066]), x -> x[1]::DOUBLE * x[2])) > 0 then 4 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [1.082407, -0.807398, -2.052636, 2.063796, -1.910749, 0.636413, 0.938852, 0.147066, -1.683397, 1.015015, -1.441544, -1.343629, -0.361668, 0.788505, 0.300114, 0.810768, -0.443644, -0.172183, -1.137137, -0.316865, 0.593128, -0.299828, 0.47546, -0.573274, -0.592392, 0.039169, -0.194882, 0.592385, 0.17829, 1.740346, -0.219495, -0.227253, -1.040131, 0.022778, 0.682829, -0.740296, -0.049672, 0.718557, -0.126909, -0.519137, 0.973093, 0.09702, 0.396565, 1.171393, 1.145316, -0.347204, -0.52543, 0.284309, -0.132788, -1.899861, 1.275362, 0.019361, 0.736378, -1.172917, 1.288204, -0.588263, -0.107667, -1.401425, -0.16695, -0.229804, -0.185361, 0.438505, 0.060346, 0.975783]), x -> x[1]::DOUBLE * x[2])) > 0 then 8 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [-0.468158, -0.996016, -0.019106, 0.628368, 1.244642, 0.813921, -1.765441, 0.377058, 1.460372, 0.062576, -0.516043, 0.309161, -0.503242, 0.639113, -0.012994, 1.393, 0.499503, -0.723885, 0.604631, 0.936012, -0.568456, -0.425794, -2.305183, 0.903406, -0.587754, -2.122349, -1.768772, -0.22295, 0.76066, -0.089065, 0.471778, -1.1015, -1.341366, 0.885721, 0.492144, -0.030509, 1.282093, -0.95119, -0.420266, 1.026371, 1.837794, 0.008426, 1.679519, -0.602511, 0.32975, -0.173824, -1.588248, 0.257973, 0.93275, -0.148267, -0.070455, 1.392927, -1.249714, -1.497588, -0.654039, -1.196623, 1.346289, 0.309689, -0.864093, -0.614479, 2.861067, -0.61009, -0.762025, 0.304307]), x -> x[1]::DOUBLE * x[2])) > 0 then 16 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [0.638252, 0.221682, -0.908626, -1.159187, 0.596141, -0.05419, -1.641433, 1.171001, 0.775329, -0.240954, -0.260264, 0.23146, -0.687009, -1.348312, 0.322518, -1.439087, 0.390727, -1.441207, -0.099209, -0.135645, 1.782629, -1.064383, -1.414946, -0.646177, -1.123732, -0.589762, 0.420801, 0.771977, 1.659561, -0.736674, 2.638539, 1.982185, -0.203527, -2.29142, -0.083112, 0.072508, -2.299249, 0.073832, -0.200154, -0.785711, 0.626629, 1.005348, -0.486177, 0.22948, -0.654792, -0.786606, 0.079497, 0.523422, -0.563293, -2.21367, 0.585785, -1.596558, 0.121999, 1.779026, -0.01683, -1.18975, -1.461179, 1.170462, -0.016948, 0.539738, 0.926302, -0.049002, -0.308604, -0.947348]), x -> x[1]::DOUBLE * x[2])) > 0 then 32 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [-3.082505, -1.518, -0.069594, -0.175262, 0.40356, -0.126687, 0.159358, 0.787799, -0.885045, -0.287158, -1.607213, 0.972893, 0.038418, 0.489822, 1.542483, 1.079546, -0.060001, 0.787685, -1.431704, 0.433909, 0.13891, -1.618269, 1.33732, -0.704077, 0.683229, -0.419935, 0.993543, 1.312262, -0.830049, -1.530399, -0.13141, 0.848917, -0.371312, -0.613524, 0.488282, -2.761517, -0.664716, -1.383796, 0.294814, -0.736249, -1.115168, -0.353831, -1.468408, -0.013124, -0.682372, -0.377419, -0.717138, 0.912263, -0.108854, 0.524512, 0.479785, -0.806151, 0.569973, 0.349108, 0.313649, -0.398693, -0.426844, 0.785552, 2.18196, -0.830127, 0.534448, -0.366253, 0.784857, 0.438313]), x -> x[1]::DOUBLE * x[2])) > 0 then 64 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [1.060126, -2.794785, -0.601083, -0.988185, -0.107988, -0.723866, -0.640976, 0.68186, 1.901928, -2.823831, -0.31045, 0.312054, 0.004733, -0.345135, -1.353468, -0.942672, 0.724982, 1.075762, 0.096675, -0.836172, 0.095711, -0.24004, 0.545605, 0.118299, -0.62179, 0.190673, -1.179405, 0.820012, 1.182335, -1.178504, 0.421047, -0.991262, 1.071684, 0.904119, -0.230178, 0.994934, -0.431091, -0.64301, -0.56872, -0.140851, -0.323412, 0.154345, -0.615059, 0.764696, 1.020969, -0.495862, -1.427175, 0.723873, 1.138557, -0.163248, -1.286517, 0.266761, 1.524668, -1.876327, 0.477926, -0.313635, -0.855674, 0.4982, -1.29883, 0.296945, 1.313259, 0.176689, -0.876322, -1.779309]), x -> x[1]::DOUBLE * x[2])) > 0 then 128 else 0 end)) as bucket
+  from embeddings
+), scored as (
+  select b.vec_id as query_id, a.vec_id as neighbor_id,
+    round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                                  x -> x[1]::DOUBLE * x[2]::DOUBLE))
+      / (sqrt(list_sum(list_transform(a.embedding, x -> x::DOUBLE * x::DOUBLE)))
+       * sqrt(list_sum(list_transform(b.embedding, x -> x::DOUBLE * x::DOUBLE)))), 6) as cos
+  from bucketed a
+  join bucketed b on b.vec_id < 5 and a.vec_id != b.vec_id
+                  and a.bucket = b.bucket
+)
+select query_id, neighbor_id, cos, rank from (
+  select *, row_number() over (partition by query_id
+                               order by cos desc, neighbor_id asc) as rank
+  from scored
+) where rank <= 5
+""")
 def q38_lsh_topk(spark, sf_dir):
     """Sign-LSH-bucketed ANN (random hyperplanes, single probe) — the
     LSH twin of the IVF variant, oracle-checked with the identical
@@ -3201,6 +4960,44 @@ def q38_lsh_topk(spark, sf_dir):
     return lsh_topk(emb, queries_df, k=5)
 
 
+# q94: per-site boilerplate line removal — line identity is
+# the [ \t\r]-stripped form; blank lines never boilerplate;
+# reassembly ordered by original position
+@contract(lambda: """
+with aug as (
+  select doc_id, source,
+    'NAV ' || source || ' HOME | ABOUT' || chr(10)
+      || 'PROMO ' || (doc_id % 97)::varchar || chr(10) || text
+      || case when doc_id % 3 != 0
+           then chr(10) || 'COPYRIGHT ' || source else '' end as text
+  from documents
+),
+lines as (
+  select doc_id, source,
+    generate_subscripts(l, 1) as pos, unnest(l) as line
+  from (select doc_id, source, string_split(text, chr(10)) as l from aug)
+),
+t as (
+  select doc_id, source, pos, line,
+    regexp_replace(line, '^[ \t\r]+|[ \t\r]+$', '', 'g') as lt
+  from lines
+),
+freq as (
+  select source, lt, count(distinct doc_id) as line_docs
+  from t where lt != '' group by source, lt
+),
+fl as (
+  select t.doc_id, t.source, t.pos, t.line,
+    coalesce(f.line_docs >= 5, false) as bp
+  from t left join freq f on t.source = f.source and t.lt = f.lt
+)
+select doc_id, source,
+  coalesce(string_agg(case when not bp then line end, chr(10)
+                      order by pos), '') as clean_text,
+  count(*)::bigint as n_lines,
+  sum(bp::int)::bigint as n_removed
+from fl group by doc_id, source
+""")
 def q94_boilerplate_lines(spark, sf_dir):
     """Per-site template-line removal (the CCNet line-dedup family):
     documents are augmented with deterministic site chrome — a nav
@@ -3236,6 +5033,35 @@ def q94_boilerplate_lines(spark, sf_dir):
     return boilerplate_line_removal(aug, min_docs=5)
 
 
+# q95: revisit collapse — latest capture per url + changed-
+# vs-previous digest; (ts desc, id desc) total order
+@contract(lambda: """
+with caps as (
+  select event_id, ts,
+    'http://h' || (k % 13)::varchar || '.example.com/p/' || k::varchar
+      as canon_url,
+    md5('c' || (event_id % 3)::varchar || '-' || k::varchar) as digest
+  from (
+    select event_id, ts,
+      case when event_id % 11 = 0 then event_id + 100000
+           else event_id % 997 end as k
+    from events
+  )
+),
+w as (
+  select canon_url, ts, event_id, digest,
+    row_number() over (partition by canon_url
+                       order by ts desc, event_id desc) as rn,
+    lead(digest) over (partition by canon_url
+                       order by ts desc, event_id desc) as prev_digest,
+    count(*) over (partition by canon_url) as n_captures
+  from caps
+)
+select canon_url, n_captures::bigint as n_captures, ts as latest_ts,
+  event_id as latest_id, digest, prev_digest,
+  (prev_digest is null or digest != prev_digest) as changed
+from w where rn = 1
+""")
 def q95_capture_delta(spark, sf_dir):
     """Revisit collapse over a synthesized capture log: urls keyed by
     event_id%997 accrue ~10 captures each (ids ≡0 mod 11 get a unique
@@ -3273,6 +5099,23 @@ def q95_capture_delta(spark, sf_dir):
     return capture_delta(caps)
 
 
+# q96: host-reputation gate — scaled-int mean quality per
+# source (exact at any parallelism), threshold 0.67
+@contract(lambda: f"""
+with {_SCORED_CTE},
+qs as (
+  select s.doc_id, d.source, s.quality,
+    cast(round(s.quality * 10000) as bigint) as qsc
+  from scored s join documents d using (doc_id)
+),
+host as (
+  select source, (sum(qsc) // count(1))::bigint as host_q_scaled
+  from qs group by source
+)
+select q.doc_id, q.source, q.quality, h.host_q_scaled,
+  h.host_q_scaled >= 6700 as keep
+from qs q join host h using (source)
+""")
 def q96_host_quality_filter(spark, sf_dir):
     """Host-reputation gate: per-source mean document quality in
     scaled int64 (sum of quality×10⁴ floor-divided by doc count —
@@ -3294,6 +5137,58 @@ _Q97_DE = "der hund und die katze und das haus und der garten sind alt"
 _Q97_FR = "le chat et la maison et les arbres et le jardin et la mer"
 
 
+def _q97_oracle_sql() -> str:
+    """DuckDB twin of q97: the q52 wide detector applied per blank-
+    line paragraph, aggregated to the per-doc language mix with the
+    exact (count desc, lang asc) tie rule."""
+    score_cols, decide_case = _lang_detect_sql_parts("para")
+    return f"""
+with base as (
+  select doc_id,
+    text || case when doc_id % 4 = 0
+               then chr(10) || chr(10) || '{_Q97_DE}'
+             when doc_id % 4 = 1
+               then chr(10) || chr(10) || '{_Q97_FR}'
+             else '' end as text
+  from documents
+),
+paras as (
+  select doc_id, para from (
+    select doc_id,
+      unnest(regexp_split_to_array(text, '\\n{{2,}}')) as para
+    from base
+  ) where regexp_replace(para, '^[ \\t\\r\\n\\f]+|[ \\t\\r\\n\\f]+$', '', 'g') != ''
+),
+scored as (
+  select doc_id, para,
+    {score_cols}
+  from (select doc_id, para,
+               ' ' || lower(para) || ' ' as padded from paras)
+),
+langed as (
+  select doc_id, {decide_case} as plang from scored
+),
+cnt as (
+  select doc_id, plang, count(*)::bigint as n
+  from langed group by doc_id, plang
+),
+ranked as (
+  select doc_id, plang, n,
+    row_number() over (partition by doc_id
+                       order by n desc, plang) as rn,
+    sum(n) over (partition by doc_id) as tot
+  from cnt
+)
+select doc_id, tot::bigint as n_paras, plang as dominant_lang,
+  n as n_dominant, (tot - n)::bigint as n_foreign,
+  (tot - n) > 0 as is_mixed
+from ranked where rn = 1
+"""
+
+
+# q97: blank-line paragraph explode → per-paragraph wide
+# detector (shared SQL parts with q52) → exact argmax per doc
+@contract(_q97_oracle_sql)
 def q97_paragraph_lang_mix(spark, sf_dir):
     """Mixed-language page detection: docs ≡0/≡1 (mod 4) gain a
     German/French second paragraph, the rest stay single-language;
@@ -3319,6 +5214,45 @@ def q97_paragraph_lang_mix(spark, sf_dir):
     return paragraph_lang_mix(aug)
 
 
+# q98: DuckDB's nfc_normalize is an INDEPENDENT Unicode NFC
+# implementation — a genuine cross-check of the Arrow UDF;
+# regex steps mirror the operator byte for byte
+@contract(lambda: r"""
+with aug as (
+  select doc_id,
+    case (doc_id % 5)
+      when 0 then 'Cafe' || chr(769) || ': ' || text
+      when 1 then 'A' || chr(8203) || 'B' || chr(65279) || ' ' || text
+      when 2 then chr(7) || 'bell ' || chr(31) || text
+      when 3 then 'line one  ' || chr(13) || chr(10) || 'line two'
+               || chr(13) || chr(10) || text
+      else text end as text
+  from documents
+),
+cleaned as (
+  select doc_id, text,
+    regexp_replace(
+      regexp_replace(
+        regexp_replace(
+          regexp_replace(
+            regexp_replace(
+              regexp_replace(
+                regexp_replace(nfc_normalize(text),
+                  '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g'),
+                '\r\n', chr(10), 'g'),
+              '\r', chr(10), 'g'),
+            '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
+          '[ \t]+\n', chr(10), 'g'),
+        '[ \t]+\z', '', 'g'),
+      '\n{3,}', chr(10) || chr(10), 'g') as clean_text
+  from aug
+)
+select doc_id, clean_text,
+  length(text)::bigint as n_chars_raw,
+  length(clean_text)::bigint as n_chars_clean,
+  (clean_text != text) as changed
+from cleaned
+""")
 def q98_normalize_text(spark, sf_dir):
     """Webtext normalization: docs cycle through five corruption
     classes (combining-acute café, zero-width joiners, a BEL control,
@@ -3411,6 +5345,10 @@ def _q99_pages(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_q99_outlink_ctes()}
+select src_url, dst_url, anchor from olinks
+""")
 def q99_outlink_extraction(spark, sf_dir):
     """HTML outlink extraction — the extraction→webgraph bridge the
     reference's anchor-density pass never emits (it only measures
@@ -3426,6 +5364,20 @@ def q99_outlink_extraction(spark, sf_dir):
     return extract_outlinks(_q99_pages(spark, sf_dir))
 
 
+@contract(lambda: f"""
+with {_q99_outlink_ctes()},
+pa as (select dst_url, anchor, count(*)::bigint as n
+       from olinks group by dst_url, anchor),
+ranked as (select dst_url, anchor, n,
+    row_number() over (partition by dst_url
+                       order by n desc, anchor) as rn,
+    sum(n) over (partition by dst_url) as tot from pa),
+srcs as (select dst_url, count(distinct src_url)::bigint as n_srcs
+         from olinks group by dst_url)
+select r.dst_url, r.tot::bigint as n_links, s.n_srcs,
+  r.anchor as top_anchor, r.n as top_anchor_links
+from ranked r join srcs s using (dst_url) where r.rn = 1
+""")
 def q100_anchor_stats(spark, sf_dir):
     """Inbound anchor-text aggregation per link target: total inbound
     links, distinct linking pages, and the most frequent anchor text
@@ -3488,6 +5440,16 @@ def _q101_host_col() -> F.Column:
     )
 
 
+@contract(lambda: f"""
+with hosts as (
+  select doc_id, {_Q101_HOST_SQL} as host from documents
+),
+rd as (select host, {_regdomain_sql("host")} as registered_domain
+       from hosts)
+select registered_domain, count(distinct host)::bigint as n_hosts,
+  count(*)::bigint as n_docs
+from rd group by registered_domain
+""")
 def q101_registered_domains(spark, sf_dir):
     """Public-suffix-aware site grouping: hosts synthesized across
     five shapes — www./blog. subdomains of a ``.co.uk`` domain (ONE
@@ -3514,6 +5476,87 @@ def q101_registered_domains(spark, sf_dir):
     )
 
 
+def _q102_oracle_sql() -> str:
+    """DuckDB twin of q102: head-metadata regexes shared with
+    ``operators.links``, the canonical href resolved and gated on
+    registered-domain equality, the winner canonicalized through the
+    shared chain."""
+    from ai_pdf_extraction_spark.operators.links import (
+        CANONICAL_RE,
+        META_DESC_RE,
+        OG_TITLE_RE,
+        TITLE_RE,
+    )
+
+    title_clean = (
+        "trim(regexp_replace("
+        + _dec5_sql(
+            f"regexp_replace(regexp_extract(html, '{TITLE_RE}', 1), "
+            "'<[^>]*>', '', 'g')"
+        )
+        + r", '[ \t\r\n\f]+', ' ', 'g'))"
+    )
+    host_canon = f"regexp_extract(canon_abs, {_HOST_EXTRACT_SQL})"
+    host_page = f"regexp_extract(url, {_HOST_EXTRACT_SQL})"
+    return f"""
+with pages as (
+  select doc_id,
+    'http://www.site' || (doc_id % 13)::varchar
+      || '.example.co.uk/p/' || doc_id::varchar as url,
+    '<head><title> Doc &amp; ' || doc_id::varchar || ' </title>'
+    || case when doc_id % 2 = 0
+         then '<meta name="description" content="Desc &quot;'
+              || (doc_id % 7)::varchar || '&quot;">' else '' end
+    || case when doc_id % 4 = 0
+         then '<meta property="og:title" content="OG '
+              || (doc_id % 5)::varchar || '">' else '' end
+    || case when doc_id % 6 = 0
+         then '<link rel="canonical" href="http://amp.site'
+              || (doc_id % 13)::varchar || '.example.co.uk/canon/'
+              || (doc_id % 211)::varchar || '">'
+       when doc_id % 3 = 0
+         then '<link rel="canonical" href="/canon/'
+              || (doc_id % 211)::varchar || '">'
+       when doc_id % 3 = 1
+         then '<link rel="canonical" href="http://mirror'
+              || (doc_id % 5)::varchar || '.example.org/c/'
+              || doc_id::varchar || '">'
+       else '' end
+    || '</head><body><p>x</p></body>' as html
+  from documents
+),
+ext as (
+  select doc_id, url,
+    {title_clean} as title,
+    nullif({_dec5_sql(f"regexp_extract(html, '{META_DESC_RE}', 1)")},
+           '') as meta_desc,
+    nullif({_dec5_sql(f"regexp_extract(html, '{OG_TITLE_RE}', 1)")},
+           '') as og_title,
+    nullif({_dec5_sql(f"regexp_extract(html, '{CANONICAL_RE}', 1)")},
+           '') as canonical_href
+  from pages
+),
+resv as (select *,
+         {_resolve_href_sql("url", "canonical_href")} as canon_abs
+         from ext),
+acc as (select *,
+    (canon_abs is not null
+     and {_regdomain_sql(host_canon)} = {_regdomain_sql(host_page)})
+      as canonical_accepted
+  from resv),
+eff as (select *,
+        case when canonical_accepted then canon_abs else url end as eraw
+        from acc),
+raw as (select distinct 0::bigint as event_id, eraw as raw_url from eff),
+{_URL_CANON_CHAIN_SQL},
+cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5)
+select e.doc_id, e.title, e.meta_desc, e.og_title, e.canonical_href,
+  e.canonical_accepted, c.canon_url as effective_url
+from eff e join cmap c on e.eraw = c.raw_url
+"""
+
+
+@contract(_q102_oracle_sql)
 def q102_page_metadata(spark, sf_dir):
     """Head-metadata extraction + the cross-domain canonical-hijack
     guard: titles with entities, optional meta description / og:title,
@@ -3596,6 +5639,26 @@ def q102_page_metadata(spark, sf_dir):
     )
 
 
+def _q103_oracle_sql() -> str:
+    """q99's extracted olinks collapsed to the host graph, fed through
+    the SAME chained-CTE integer-PageRank algebra as q84."""
+    graph = (
+        _q99_outlink_ctes()
+        + f""",
+hl as (select regexp_extract(src_url, {_HOST_EXTRACT_SQL}) as src,
+              regexp_extract(dst_url, {_HOST_EXTRACT_SQL}) as dst
+       from olinks),
+edges as (select src, dst, count(*)::bigint as weight from hl
+          where src <> dst group by src, dst)"""
+    )
+    return (
+        "with "
+        + _q84_pagerank_ctes(3, graph_ctes=graph)
+        + '\nselect host, r as "rank" from r3'
+    )
+
+
+@contract(_q103_oracle_sql)
 def q103_extracted_pagerank(spark, sf_dir):
     """The extraction→webgraph capstone: outlinks extracted from raw
     HTML (q99) collapse to the weighted host graph and feed the
@@ -3630,6 +5693,37 @@ def q103_extracted_pagerank(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with fr as (
+  select
+    'http://s' || (event_id % 41)::varchar || '.' ||
+    case when event_id % 5 < 2
+           then 'spam' || (event_id % 3)::varchar || '.example.com'
+         when event_id % 5 = 2
+           then 'good' || (event_id % 17)::varchar || '.co.uk'
+         when event_id % 5 = 3
+           then 'u' || (event_id % 29)::varchar || '.github.io'
+         else 'example' || (event_id % 13)::varchar || '.org' end
+    || '/p/' || event_id::varchar as canon_url,
+    event_id as first_id
+  from events
+),
+hosted as (
+  select canon_url, first_id,
+    {_regdomain_sql(f"regexp_extract(canon_url, {_HOST_EXTRACT_SQL})")}
+      as host
+  from fr
+),
+ranked as (
+  select canon_url, host, first_id,
+    row_number() over (partition by host
+                       order by first_id % 64, md5(canon_url), canon_url)
+      as pick_rank
+  from hosted
+)
+select canon_url, host, first_id, pick_rank
+from ranked where pick_rank <= 25
+""")
 def q104_domain_budget(spark, sf_dir):
     """Per-REGISTERED-DOMAIN crawl budget — the subdomain-spam
     counter: a spam site fanning its frontier across 41 subdomains of
@@ -3692,6 +5786,49 @@ def q104_domain_budget(spark, sf_dir):
     )
 
 
+def _q105_oracle_sql() -> str:
+    """DuckDB twin of q105 — BOM ladder / shared meta regex /
+    content heuristic / -sig-normalized mismatch flag."""
+    from ai_pdf_extraction_spark.operators.text_analysis import (
+        CHARSET_META_RE,
+    )
+
+    return f"""
+with pages as (
+  select doc_id,
+    case when doc_id % 5 = 0 then 'EFBBBF78'
+         when doc_id % 5 = 1 then 'FFFE7800' else '78' end as raw_hex,
+    (case when doc_id % 5 in (0, 1)
+            then '<head><meta charset="UTF-8"></head>'
+          when doc_id % 5 = 2
+            then '<head><meta charset="ISO-8859-1"></head>'
+          else '<head></head>' end)
+    || (case when doc_id % 5 = 3 then '<body>café</body>'
+             else '<body>plain ascii</body>' end) as html
+  from documents
+),
+s as (
+  select doc_id,
+    case when upper(raw_hex) like 'EFBBBF%' then 'utf-8-sig'
+         when upper(raw_hex) like 'FFFE%' then 'utf-16le'
+         when upper(raw_hex) like 'FEFF%' then 'utf-16be' end
+      as bom_charset,
+    nullif(lower(regexp_extract(html, '{CHARSET_META_RE}', 1)), '')
+      as declared_charset,
+    case when regexp_matches(html, '[^\\x00-\\x7F]') then 'utf-8'
+         else 'us-ascii' end as heur
+  from pages
+)
+select doc_id, bom_charset, declared_charset,
+  coalesce(bom_charset, declared_charset, heur) as detected_charset,
+  (bom_charset is not null and declared_charset is not null
+   and replace(bom_charset, '-sig', '') != declared_charset)
+    as declared_mismatch
+from s
+"""
+
+
+@contract(_q105_oracle_sql)
 def q105_charset_sniff(spark, sf_dir):
     """Encoding detection over five injected classes: utf-8 BOM +
     matching declaration (no mismatch — the -sig normalization),
@@ -3734,6 +5871,61 @@ def q105_charset_sniff(spark, sf_dir):
     )
 
 
+def _q106_oracle_sql() -> str:
+    """DuckDB twin of q106 — the q102 canonical-guard chain over
+    coarse /c/<id%7> keys, collapsed by effective url."""
+    from ai_pdf_extraction_spark.operators.links import CANONICAL_RE
+
+    host_canon = f"regexp_extract(canon_abs, {_HOST_EXTRACT_SQL})"
+    host_page = f"regexp_extract(url, {_HOST_EXTRACT_SQL})"
+    return f"""
+with pages as (
+  select doc_id,
+    'http://www.site' || (doc_id % 13)::varchar
+      || '.example.co.uk/p/' || doc_id::varchar as url,
+    '<head><title>D</title>'
+    || case when doc_id % 3 = 0
+         then '<link rel="canonical" href="/c/'
+              || (doc_id % 7)::varchar || '">'
+       when doc_id % 3 = 1
+         then '<link rel="canonical" href="http://mirror.example.org/c/'
+              || doc_id::varchar || '">'
+       else '' end
+    || '</head>' as html
+  from documents
+),
+ext as (
+  select doc_id, url,
+    nullif({_dec5_sql(f"regexp_extract(html, '{CANONICAL_RE}', 1)")},
+           '') as canonical_href
+  from pages
+),
+resv as (select *,
+         {_resolve_href_sql("url", "canonical_href")} as canon_abs
+         from ext),
+acc as (select *,
+    (canon_abs is not null
+     and {_regdomain_sql(host_canon)} = {_regdomain_sql(host_page)})
+      as canonical_accepted
+  from resv),
+eff as (select *,
+        case when canonical_accepted then canon_abs else url end as eraw
+        from acc),
+raw as (select distinct 0::bigint as event_id, eraw as raw_url from eff),
+{_URL_CANON_CHAIN_SQL},
+cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5),
+j as (select e.doc_id, e.canonical_accepted,
+             c.canon_url as effective_url
+      from eff e join cmap c on e.eraw = c.raw_url)
+select effective_url, count(*)::bigint as n_pages,
+  min(doc_id) as first_doc,
+  sum(case when canonical_accepted then 1 else 0 end)::bigint
+    as n_canonical
+from j group by effective_url
+"""
+
+
+@contract(_q106_oracle_sql)
 def q106_canonical_collapse(spark, sf_dir):
     """Canonical-url dedup collapse — the url-level twin of content
     dedup: pages whose (guarded) rel=canonical resolves to the same
@@ -3787,6 +5979,29 @@ def q106_canonical_collapse(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_q99_outlink_ctes()},
+newl as (
+  select (regexp_extract(src_url, '/dir/([0-9]+)\\.html', 1))::bigint
+           as doc_id,
+         dst_url
+  from olinks
+),
+grp as (
+  select dst_url as canon_url, min(doc_id) as first_id,
+         count(*) as n_discovered
+  from newl group by dst_url
+),
+seen as (
+  select distinct 'http://www.site' || (doc_id % 13)::varchar
+    || '.example.co.uk/cat/' || (doc_id % 97)::varchar as canon_url
+  from documents where doc_id % 2 = 0
+)
+select g.canon_url, g.first_id, g.n_discovered,
+  (s.canon_url is not null) as in_seen,
+  (s.canon_url is null) as to_crawl
+from grp g left join seen s using (canon_url)
+""")
 def q107_discovery_frontier(spark, sf_dir):
     """The crawl loop CLOSED from extraction: raw pages → outlinks
     (with the discoverer's doc_id carried through — provenance ON the
@@ -3823,6 +6038,46 @@ def q107_discovery_frontier(spark, sf_dir):
     )
 
 
+@contract(lambda: r"""
+with r as (
+  select id, 'host' || id::varchar || '.example.org' as host,
+    case when id % 4 = 0 then
+        'Sitemap: https://host' || id::varchar
+        || '.example.org/sitemap.xml' || chr(10)
+        || 'Sitemap: https://host' || id::varchar
+        || '.example.org/s2.xml # primary' || chr(10)
+        || 'User-agent: *' || chr(10) || 'Disallow: /p/'
+      when id % 4 = 1 then
+        'User-agent: BadBot' || chr(10) || 'Disallow: /' || chr(10)
+        || 'Sitemap: https://host' || id::varchar
+        || '.example.org/inside.xml'
+      when id % 4 = 2 then
+        'sitemap:https://host' || id::varchar
+        || '.example.org/a.xml' || chr(10)
+        || 'SITEMAP:  https://cdn.example.net/shared.xml  ' || chr(10)
+        || 'Sitemap: /relative-junk' || chr(10)
+        || 'Sitemap: https://host' || id::varchar
+        || '.example.org/a.xml'
+      else 'User-agent: *' || chr(10) || 'Disallow: /' end
+      as robots_txt
+  from range(19) t(id)
+),
+l as (
+  select host,
+    regexp_replace(regexp_replace(
+      unnest(string_split(robots_txt, chr(10))), '#.*$', '', 'g'),
+      '^[ \t\r]+|[ \t\r]+$', '', 'g') as l
+  from r
+),
+sm as (
+  select host,
+    regexp_replace(regexp_extract(l, '(?i)^sitemap[ \t]*:[ \t]*([^\r\n]*)', 1),
+                   '^[ \t\r]+|[ \t\r]+$', '', 'g') as sitemap_url
+  from l where regexp_matches(l, '(?i)^sitemap[ \t]*:')
+)
+select distinct host, sitemap_url from sm
+where regexp_matches(sitemap_url, '(?i)^https?://')
+""")
 def q108_robots_sitemaps(spark, sf_dir):
     """``Sitemap:`` directive discovery across hostile placements:
     before any group, INSIDE a foreign BadBot group (binds anyway —
@@ -3898,6 +6153,17 @@ def _scratch_shard_dir(tag: str, sf_dir: str) -> str:
     return f"{base}_{_os.getpid()}"
 
 
+# q109: the oracle computes (url, md5, BYTE length) straight
+# from the generator — the Spark side must reproduce it from
+# bytes that round-tripped through WET shards on disk.
+# DuckDB strlen() is bytes (length() is chars).
+@contract(lambda: """
+select 'http://w' || (doc_id % 13)::varchar || '.example.com/doc/'
+         || doc_id::varchar as url,
+  md5(text) as text_md5,
+  strlen(text)::bigint as n_bytes
+from documents
+""")
 def q109_wet_roundtrip(spark, sf_dir):
     """WET export → re-read round trip over the REAL document texts
     (multi-line, multi-lingual — the hostile payload set): the corpus
@@ -3930,6 +6196,69 @@ def q109_wet_roundtrip(spark, sf_dir):
     )
 
 
+def _q110_oracle_sql() -> str:
+    """DuckDB twin of q110, REBUILT from the operator's own constants
+    (terminal regex, drop markers, thresholds) — the _regdomain_sql
+    discipline: editing C4_DROP_MARKERS cannot silently leave the
+    oracle on old rules."""
+    from ai_pdf_extraction_spark.operators.text_analysis import (
+        C4_DROP_MARKERS,
+        C4_MIN_LINES,
+        C4_MIN_WORDS,
+        C4_TERMINAL_RE,
+    )
+
+    marker_preds = "\n     ".join(
+        f"and not contains(lower(l), '{m.replace(chr(39), chr(39) * 2)}')"
+        for m in C4_DROP_MARKERS
+    )
+    return f"""
+with aug as (
+  select doc_id,
+    case when doc_id % 7 = 0 then
+      'Enable javascript now' || chr(10)
+      || 'Read our cookie policy here today ok.' || chr(10)
+      || 'short one.' || chr(10)
+      || 'no terminal punctuation in this line at all'
+    else
+      'This page uses a cookie banner everywhere.' || chr(10)
+      || 'Tiny line.' || chr(10)
+      || 'This line is long enough and ends properly.' || chr(10)
+      || 'She replied with a firm "final answer."' || chr(10)
+      || 'this long line has no terminal punctuation at all' || chr(10)
+      || case when doc_id % 3 = 0 then
+           'Closing sentence number ' || (doc_id % 11)::varchar
+           || ' finishes the document properly.' || chr(10)
+         else '' end
+      || text
+    end as text
+  from documents
+),
+l as (
+  select doc_id,
+    generate_subscripts(regexp_split_to_array(text, '\r?\n'), 1)
+      as pos,
+    unnest(regexp_split_to_array(text, '\r?\n')) as l
+  from aug
+),
+k as (
+  select doc_id, pos, l,
+    (regexp_matches(l, '{C4_TERMINAL_RE}')
+     and len(regexp_extract_all(l, '[^ \t]+')) >= {C4_MIN_WORDS}
+     {marker_preds}) as keep
+  from l
+)
+select doc_id,
+  coalesce(string_agg(case when keep then l end, chr(10) order by pos),
+           '') as clean_text,
+  count(*)::bigint as n_lines_raw,
+  sum(keep::int)::bigint as n_lines_kept,
+  (sum(keep::int) >= {C4_MIN_LINES}) as kept
+from k group by doc_id
+"""
+
+
+@contract(_q110_oracle_sql)
 def q110_c4_line_clean(spark, sf_dir):
     """C4 line-level cleaning over augmented docs: a cookie-notice
     line (terminal punct + enough words but marker-dropped), a short
@@ -3978,6 +6307,39 @@ def q110_c4_line_clean(spark, sf_dir):
     return c4_line_clean(aug)
 
 
+def _q111_oracle_sql() -> str:
+    """DuckDB twin of q111: title and outlink fan-out computed
+    DIRECTLY from the generator — the Spark side must reproduce them
+    from fields that round-tripped through WAT shards + json."""
+    from ai_pdf_extraction_spark.operators.links import TITLE_RE
+
+    title_clean = (
+        "trim(regexp_replace("
+        + _dec5_sql(
+            f"regexp_replace(regexp_extract(html2, '{TITLE_RE}', 1), "
+            "'<[^>]*>', '', 'g')"
+        )
+        + r", '[ \t\r\n\f]+', ' ', 'g'))"
+    )
+    return f"""
+with {_q99_outlink_ctes()},
+p2 as (
+  select url,
+    '<head><title> Page ' || (doc_id % 50)::varchar
+      || ' </title></head>' || html as html2
+  from pages
+),
+cnt as (
+  select src_url, count(*)::bigint as n_outlinks
+  from olinks group by src_url
+),
+t as (select url, {title_clean} as title from p2)
+select t.url, t.title, coalesce(c.n_outlinks, 0)::bigint as n_outlinks
+from t left join cnt c on t.url = c.src_url
+"""
+
+
+@contract(_q111_oracle_sql)
 def q111_wat_roundtrip(spark, sf_dir):
     """WAT tier round trip — the middle Common Crawl artifact: the
     q99 corpus gains a ``<title>`` head, per-page metadata (title) and
@@ -4040,6 +6402,25 @@ def q111_wat_roundtrip(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_SCORED_CTE},
+hosts as (
+  select doc_id, {_Q101_HOST_SQL} as host from documents
+),
+rd as (select doc_id, {_regdomain_sql("host")} as site from hosts),
+qs as (
+  select s.doc_id, r.site, s.quality,
+    cast(round(s.quality * 10000) as bigint) as qsc
+  from scored s join rd r using (doc_id)
+),
+site as (
+  select site, (sum(qsc) // count(1))::bigint as host_q_scaled
+  from qs group by site
+)
+select q.doc_id, q.site, q.quality, h.host_q_scaled,
+  h.host_q_scaled >= 6700 as keep
+from qs q join site h using (site)
+""")
 def q112_domain_quality_filter(spark, sf_dir):
     """The host-reputation gate re-keyed on REGISTERED DOMAIN — the
     q104 politeness lesson applied to the reputation stage: a spam
@@ -4067,6 +6448,10 @@ def q112_domain_quality_filter(spark, sf_dir):
     )
 
 
+@contract(lambda: f"""
+with {_q113_resolution_ctes()}
+select start_url, final_url, n_hops, status from res
+""")
 def q113_redirect_resolution(spark, sf_dir):
     """Redirect-chain resolution over a synthesized fetch log: 499
     urls, the %5==1 class redirects via (3n+1)%499 (mostly 1-hop,
@@ -4096,6 +6481,14 @@ def q113_redirect_resolution(spark, sf_dir):
     return resolve_redirects(starts, red)
 
 
+@contract(lambda: f"""
+with {_q113_resolution_ctes()}
+select final_url, count(*)::bigint as n_entry_urls,
+  min(start_url) as first_entry,
+  sum(case when n_hops > 0 then 1 else 0 end)::bigint
+    as n_redirect_entries
+from res where status = 'ok' group by final_url
+""")
 def q114_final_url_collapse(spark, sf_dir):
     """Why redirect resolution exists: entry urls collapse onto their
     FINAL url (a redirect source and its target's direct url are ONE
@@ -4117,6 +6510,34 @@ def q114_final_url_collapse(spark, sf_dir):
     )
 
 
+@contract(lambda: r"""
+with log as (
+  select case
+    when event_id % 4 = 0 then
+      'http://cal.example.com/cal/' || (event_id % 997)::varchar
+      || '/' || (event_id % 31)::varchar
+    when event_id % 4 = 1 then
+      'http://shop.example.com/item?sid=' || md5((event_id)::varchar)
+    else 'http://h' || (event_id % 7)::varchar || '.example.com/p/'
+         || (event_id % 37)::varchar
+  end as url
+  from events
+),
+t as (
+  select
+    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
+      as host,
+    regexp_replace(regexp_replace(
+      regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''),
+      '(?i)[0-9a-f]{8,}', '{h}', 'g'),
+      '[0-9]+', '{d}', 'g') as template,
+    url
+  from log
+)
+select host, template, count(distinct url)::bigint as n_urls,
+  count(distinct url) >= 50 as is_trap
+from t group by host, template
+""")
 def q115_trap_templates(spark, sf_dir):
     """Crawler-trap mining over a synthesized fetch log: a calendar
     host whose (day, archive) pair space fans ~500 distinct urls into
@@ -4157,6 +6578,21 @@ def q115_trap_templates(spark, sf_dir):
     return url_templates(e.select(url.alias("url")), min_urls=50)
 
 
+@contract(lambda: """
+with log as (
+  select 'h' || (event_id % 11)::varchar || '.example.com' as host,
+    case when event_id % 11 = 9 then 503
+         when event_id % 11 in (2, 5) and event_id % 3 = 0 then 503
+         when event_id % 7 = 0 then 404
+         else 200 end as status
+  from events
+)
+select host, count(*)::bigint as n_fetches,
+  sum((status >= 500)::int)::bigint as n_errors,
+  ((30 * (count(*) - sum((status >= 500)::int))) // count(*))::bigint
+    as cap
+from log group by host
+""")
 def q116_error_backoff_caps(spark, sf_dir):
     """Per-host 5xx backoff: host 9 answers nothing but 503 (cap 0 —
     skipped for the cycle), hosts 2 and 5 fail every third fetch
@@ -4183,6 +6619,64 @@ def q116_error_backoff_caps(spark, sf_dir):
     return host_error_backoff(log, base_cap=30)
 
 
+@contract(lambda: r"""
+with log as (
+  select case
+    when event_id % 4 = 0 then
+      'http://cal.example.com/cal/' || (event_id % 997)::varchar
+      || '/' || (event_id % 31)::varchar
+    when event_id % 4 = 1 then
+      'http://shop.example.com/item?sid=' || md5((event_id)::varchar)
+    else 'http://h' || (event_id % 7)::varchar || '.example.com/p/'
+         || (event_id % 37)::varchar
+  end as url
+  from events
+),
+tl as (
+  select
+    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
+      as host,
+    regexp_replace(regexp_replace(
+      regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''),
+      '(?i)[0-9a-f]{8,}', '{h}', 'g'),
+      '[0-9]+', '{d}', 'g') as template,
+    url
+  from log
+),
+traps as (
+  select host, template from tl
+  group by host, template having count(distinct url) >= 50
+),
+fr as (
+  select distinct case
+    when (event_id + 1) % 4 = 0 then
+      'http://cal.example.com/cal/' || ((event_id + 1) % 997)::varchar
+      || '/' || ((event_id + 1) % 31)::varchar
+    when (event_id + 1) % 4 = 1 then
+      'http://shop.example.com/item?sid='
+      || md5((event_id + 1)::varchar)
+    else 'http://h' || ((event_id + 1) % 7)::varchar
+         || '.example.com/p/' || ((event_id + 1) % 37)::varchar
+  end as canon_url,
+    min(event_id) as first_id
+  from events group by 1
+),
+ft as (
+  select canon_url, first_id,
+    regexp_extract(canon_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
+      as host,
+    regexp_replace(regexp_replace(
+      regexp_replace(canon_url,
+                     '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''),
+      '(?i)[0-9a-f]{8,}', '{h}', 'g'),
+      '[0-9]+', '{d}', 'g') as template
+  from fr
+)
+select f.canon_url, f.first_id,
+  (t.host is not null) as trap_hit
+from ft f left join traps t
+  on f.host = t.host and f.template = t.template
+""")
 def q117_trap_filtered_frontier(spark, sf_dir):
     """The trap loop closed: templates mined from the q115 fetch log
     gate the NEXT cycle's frontier — calendar and session-id urls are
@@ -4240,136 +6734,16 @@ def q117_trap_filtered_frontier(spark, sf_dir):
     return trap_filter(frontier, traps)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_filtered_revenue": q02_filtered_revenue,
-        "q03_region_nation_rollup": q03_region_nation_rollup,
-        "q04_order_priority_counts": q04_order_priority_counts,
-        "q05_customers_without_orders": q05_customers_without_orders,
-        "q06_supplier_big_items": q06_supplier_big_items,
-        "q07_top_orders_per_customer": q07_top_orders_per_customer,
-        "q08_active_minus_urgent": q08_active_minus_urgent,
-        "q09_order_lineitem_stats": q09_order_lineitem_stats,
-        "q10_latest_orders": q10_latest_orders,
-        "q11_status_rollup": q11_status_rollup,
-        "q12_sha_bucketing": q12_sha_bucketing,
-        "q13_scalar_normalizers": q13_scalar_normalizers,
-        "q14_order_total_rule": q14_order_total_rule,
-        "q15_csv_export_rows": q15_csv_export_rows,
-        "q16_token_counts": q16_token_counts,
-        "q17_lang_marker_profile": q17_lang_marker_profile,
-        "q18_quality_scores": q18_quality_scores,
-        "q19_fingerprints": q19_fingerprints,
-        "q20_exact_dedup": q20_exact_dedup,
-        "q21_ngram_jaccard_pairs": q21_ngram_jaccard_pairs,
-        "q22_minhash_lsh_pairs": q22_minhash_lsh_pairs,
-        "q23_simhash_sketch": q23_simhash_sketch,
-        "q24_embedding_near_dup": q24_embedding_near_dup,
-        "q25_ann_topk": q25_ann_topk,
-        "q26_ivf_topk": q26_ivf_topk,
-        "q27_hourly_event_counts": q27_hourly_event_counts,
-        "q28_event_type_stats": q28_event_type_stats,
-        "q29_chunk_merge": q29_chunk_merge,
-        "q30_token_counts_bpe": q30_token_counts_bpe,
-        "q31_winnowing_fingerprints": q31_winnowing_fingerprints,
-        "q32_user_sessions": q32_user_sessions,
-        "q33_json_props": q33_json_props,
-        "q34_extract_pages": q34_extract_pages,
-        "q35_simhash16": q35_simhash16,
-        "q36_curated_corpus": q36_curated_corpus,
-        "q37_url_canonicalize": q37_url_canonicalize,
-        "q38_lsh_topk": q38_lsh_topk,
-        "q39_field_confidences": q39_field_confidences,
-        "q40_base64_payload": q40_base64_payload,
-        "q41_pii_scrub": q41_pii_scrub,
-        "q42_repetition_signals": q42_repetition_signals,
-        "q43_stratified_sample": q43_stratified_sample,
-        "q44_token_budget": q44_token_budget,
-        "q45_neardup_clusters": q45_neardup_clusters,
-        "q46_table_rows": q46_table_rows,
-        "q47_currency_codes": q47_currency_codes,
-        "q48_table_field_rollup": q48_table_field_rollup,
-        "q49_media_metadata": q49_media_metadata,
-        "q50_representative_sample": q50_representative_sample,
-        "q51_warc_extract": q51_warc_extract,
-        "q52_lang_detect_wide": q52_lang_detect_wide,
-        "q53_media_decode": q53_media_decode,
-        "q54_granule_dedup": q54_granule_dedup,
-        "q55_contamination": q55_contamination,
-        "q56_pq_topk": q56_pq_topk,
-        "q57_curated_corpus_v2": q57_curated_corpus_v2,
-        "q58_ivfpq_topk": q58_ivfpq_topk,
-        "q59_lang_trigram": q59_lang_trigram,
-        "q60_gopher_quality": q60_gopher_quality,
-        "q61_ivfpq_residual_topk": q61_ivfpq_residual_topk,
-        "q62_salted_host_counts": q62_salted_host_counts,
-        "q63_schema_registry_apply": q63_schema_registry_apply,
-        "q64_embedding_near_dup_lsh": q64_embedding_near_dup_lsh,
-        "q65_curated_corpus_v3": q65_curated_corpus_v3,
-        "q66_exact_dedup_delta": q66_exact_dedup_delta,
-        "q67_span_dedup": q67_span_dedup,
-        "q68_bpe_token_counts": q68_bpe_token_counts,
-        "q69_lang_trained": q69_lang_trained,
-        "q70_span_decontaminate": q70_span_decontaminate,
-        "q71_minhash_lsh_delta": q71_minhash_lsh_delta,
-        "q72_token_budget_bpe": q72_token_budget_bpe,
-        "q73_curated_corpus_v4": q73_curated_corpus_v4,
-        "q74_sequence_pack": q74_sequence_pack,
-        "q75_embedding_near_dup_delta": q75_embedding_near_dup_delta,
-        "q76_lm_perplexity": q76_lm_perplexity,
-        "q77_mixture_sample": q77_mixture_sample,
-        "q78_bpe_pair_counts": q78_bpe_pair_counts,
-        "q79_curated_corpus_v5": q79_curated_corpus_v5,
-        "q80_url_frontier_delta": q80_url_frontier_delta,
-        "q81_cluster_balanced_sample": q81_cluster_balanced_sample,
-        "q82_corpus_profile": q82_corpus_profile,
-        "q83_frontier_host_cap": q83_frontier_host_cap,
-        "q84_host_pagerank": q84_host_pagerank,
-        "q85_link_degree_stats": q85_link_degree_stats,
-        "q86_robots_filter": q86_robots_filter,
-        "q87_url_prefilter": q87_url_prefilter,
-        "q88_frontier_politeness": q88_frontier_politeness,
-        "q89_distinctive_terms": q89_distinctive_terms,
-        "q90_sitemap_discovery": q90_sitemap_discovery,
-        "q91_priority_frontier": q91_priority_frontier,
-        "q92_crawl_delay_caps": q92_crawl_delay_caps,
-        "q93_sitemap_recrawl": q93_sitemap_recrawl,
-        "q94_boilerplate_lines": q94_boilerplate_lines,
-        "q95_capture_delta": q95_capture_delta,
-        "q96_host_quality_filter": q96_host_quality_filter,
-        "q97_paragraph_lang_mix": q97_paragraph_lang_mix,
-        "q98_normalize_text": q98_normalize_text,
-        "q99_outlink_extraction": q99_outlink_extraction,
-        "q100_anchor_stats": q100_anchor_stats,
-        "q101_registered_domains": q101_registered_domains,
-        "q102_page_metadata": q102_page_metadata,
-        "q103_extracted_pagerank": q103_extracted_pagerank,
-        "q104_domain_budget": q104_domain_budget,
-        "q105_charset_sniff": q105_charset_sniff,
-        "q106_canonical_collapse": q106_canonical_collapse,
-        "q107_discovery_frontier": q107_discovery_frontier,
-        "q108_robots_sitemaps": q108_robots_sitemaps,
-        "q109_wet_roundtrip": q109_wet_roundtrip,
-        "q110_c4_line_clean": q110_c4_line_clean,
-        "q111_wat_roundtrip": q111_wat_roundtrip,
-        "q112_domain_quality_filter": q112_domain_quality_filter,
-        "q113_redirect_resolution": q113_redirect_resolution,
-        "q114_final_url_collapse": q114_final_url_collapse,
-        "q115_trap_templates": q115_trap_templates,
-        "q116_error_backoff_caps": q116_error_backoff_caps,
-        "q117_trap_filtered_frontier": q117_trap_filtered_frontier,
-    }
-
-
 # ---------------------------------------------------------------------------
-# DuckDB oracles — keep column names/rounding in lockstep with queries()
+# DuckDB oracle fragments shared by several queries' oracles — keep
+# column names/rounding in lockstep with the queries
 # ---------------------------------------------------------------------------
 
 # Mirrors operators/dedup.py: the shingle universe is DF-capped (drop
 # shingles in more than DEFAULT_MAX_SHINGLE_DF docs) BEFORE sizes and
 # the self-join, so Jaccard numerator/denominator share one universe.
 from ai_pdf_extraction_spark.operators.dedup import DEFAULT_MAX_SHINGLE_DF
+from ai_pdf_extraction_spark.operators.urls import _ASSET_EXT_RE
 
 _SHINGLES_CTE = f"""
 sh_all as (
@@ -4425,6 +6799,8 @@ _SCORED_CTE = r"""scored as (
           from documents)
   )
 )"""
+_QUALITY_SQL = f"with {_SCORED_CTE} select doc_id, quality from scored"
+_FINGERPRINT_EXPR = "md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))"
 
 _COS_EXPR = (
     "round(list_sum(list_transform(list_zip(a.embedding, b.embedding),"
@@ -4450,197 +6826,6 @@ def _d2_dlist_sql(centroids: list) -> str:
     return ",\n    ".join(dist(c) for c in centroids)
 
 
-def _ivf_sql(centroids: list, k: int = 5) -> str:
-    """q26 oracle: the SAME trained centroid literals as the Spark
-    plan, assignment = first-index argmin of rounded squared-L2
-    (list_position mirrors array_position's first-match rule), then
-    in-cluster cosine top-k."""
-    dlist = _d2_dlist_sql(centroids)
-    return f"""
-with darr as (
-  select vec_id, embedding, [{dlist}] as dl from embeddings
-),
-assign as (
-  select vec_id, embedding, list_position(dl, list_min(dl)) - 1 as cluster
-  from darr
-),
-scored as (
-  select b.vec_id as query_id, a.vec_id as neighbor_id,
-    {_COS_EXPR.format(r=6)} as cos
-  from assign a
-  join assign b on b.vec_id < 5 and a.vec_id != b.vec_id
-                and a.cluster = b.cluster
-)
-select query_id, neighbor_id, cos, rank from (
-  select *, row_number() over (partition by query_id
-                               order by cos desc, neighbor_id asc) as rank
-  from scored
-) where rank <= {k}
-"""
-
-
-def _pq_sql(codebooks: list, k: int = 5) -> str:
-    """q56 oracle: the SAME trained codebook literals as the Spark
-    plan — per-subspace distance arrays double as the encode argmin
-    (list_position first-match, the ivf rule) and the query-side ADC
-    lookup tables, exactly like ``_sql_d2_array`` on the Spark
-    side."""
-    m, sub = len(codebooks), len(codebooks[0][0])
-
-    def dist(slice_expr: str, c: list) -> str:
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        return (
-            f"round(list_sum(list_transform(list_zip({slice_expr}, {lit}), "
-            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
-        )
-
-    cols = ["vec_id"]
-    for s, book in enumerate(codebooks):
-        sl = f"embedding[{s * sub + 1}:{(s + 1) * sub}]"
-        dlist = ", ".join(dist(sl, c) for c in book)
-        cols.append(f"[{dlist}] as dl{s}")
-        cols.append(f"list_position(dl{s}, list_min(dl{s})) - 1 as code{s}")
-    enc_cols = ",\n    ".join(cols)
-    approx = " + ".join(f"b.dl{s}[a.code{s} + 1]" for s in range(m))
-    return f"""
-with enc as (
-  select {enc_cols}
-  from embeddings
-),
-scored as (
-  select b.vec_id as query_id, a.vec_id as neighbor_id,
-    round({approx}, 6) as approx_d2
-  from enc a
-  join enc b on b.vec_id < 5 and a.vec_id != b.vec_id
-)
-select query_id, neighbor_id, approx_d2, rank from (
-  select *, row_number() over (partition by query_id
-                               order by approx_d2 asc, neighbor_id asc) as rank
-  from scored
-) where rank <= {k}
-"""
-
-
-def _ivfpq_sql(centroids: list, codebooks: list, k: int = 5) -> str:
-    """q58 oracle: the q26 cluster-argmin CTE composed with the q56
-    code/LUT CTE — at nprobe=1 the probe set is the query's own
-    cluster, so the join predicate is plain cluster equality."""
-    m, sub = len(codebooks), len(codebooks[0][0])
-
-    def cdist(c: list) -> str:
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        return (
-            "round(list_sum(list_transform(list_zip(embedding, " + lit + "), "
-            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
-        )
-
-    def sdist(slice_expr: str, c: list) -> str:
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        return (
-            f"round(list_sum(list_transform(list_zip({slice_expr}, {lit}), "
-            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
-        )
-
-    cols = ["vec_id", "[" + ", ".join(cdist(c) for c in centroids) + "] as cdl",
-            "list_position(cdl, list_min(cdl)) - 1 as cluster"]
-    for s, book in enumerate(codebooks):
-        sl = f"embedding[{s * sub + 1}:{(s + 1) * sub}]"
-        dlist = ", ".join(sdist(sl, c) for c in book)
-        cols.append(f"[{dlist}] as dl{s}")
-        cols.append(f"list_position(dl{s}, list_min(dl{s})) - 1 as code{s}")
-    enc_cols = ",\n    ".join(cols)
-    approx = " + ".join(f"b.dl{s}[a.code{s} + 1]" for s in range(m))
-    return f"""
-with enc as (
-  select {enc_cols}
-  from embeddings
-),
-scored as (
-  select b.vec_id as query_id, a.vec_id as neighbor_id,
-    round({approx}, 6) as approx_d2
-  from enc a
-  join enc b on b.vec_id < 5 and a.vec_id != b.vec_id
-            and a.cluster = b.cluster
-)
-select query_id, neighbor_id, approx_d2, rank from (
-  select *, row_number() over (partition by query_id
-                               order by approx_d2 asc, neighbor_id asc) as rank
-  from scored
-) where rank <= {k}
-"""
-
-
-def _ivfpq_residual_sql(centroids: list, codebooks: list, k: int = 5) -> str:
-    """q61 oracle: the q58 shape with RESIDUAL encoding — each vector's
-    residual against its own cluster's centroid (nested-list literal
-    indexed by the cluster argmin) feeds both the code argmin and the
-    query-side LUTs; at nprobe=1 the probed cluster IS the query's own,
-    so cluster equality keeps LUT and codes referring to the same
-    centroid."""
-    m, sub = len(codebooks), len(codebooks[0][0])
-
-    def cdist(c: list) -> str:
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        return (
-            "round(list_sum(list_transform(list_zip(embedding, " + lit + "), "
-            "x -> (x[1]::DOUBLE - x[2]) * (x[1]::DOUBLE - x[2]))), 6)"
-        )
-
-    def sdist(slice_expr: str, c: list) -> str:
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        return (
-            f"round(list_sum(list_transform(list_zip({slice_expr}, {lit}), "
-            "x -> (x[1] - x[2]) * (x[1] - x[2]))), 6)"
-        )
-
-    cents_lit = (
-        "[" + ", ".join("[" + ", ".join(repr(x) for x in c) + "]" for c in centroids) + "]"
-    )
-    enc_cols = []
-    for s, book in enumerate(codebooks):
-        sl = f"r[{s * sub + 1}:{(s + 1) * sub}]"
-        dlist = ", ".join(sdist(sl, c) for c in book)
-        enc_cols.append(f"[{dlist}] as dl{s}")
-        enc_cols.append(f"list_position(dl{s}, list_min(dl{s})) - 1 as code{s}")
-    enc_sql = ",\n    ".join(enc_cols)
-    approx = " + ".join(f"b.dl{s}[a.code{s} + 1]" for s in range(m))
-    return f"""
-with darr as (
-  select vec_id, embedding,
-    [{", ".join(cdist(c) for c in centroids)}] as cdl
-  from embeddings
-),
-assign as (
-  select vec_id, embedding,
-    list_position(cdl, list_min(cdl)) - 1 as cluster
-  from darr
-),
-res as (
-  select vec_id, cluster,
-    list_transform(list_zip(embedding, ({cents_lit})[cluster + 1]),
-                   x -> x[1]::DOUBLE - x[2]) as r
-  from assign
-),
-enc as (
-  select vec_id, cluster,
-    {enc_sql}
-  from res
-),
-scored as (
-  select b.vec_id as query_id, a.vec_id as neighbor_id,
-    round({approx}, 6) as approx_d2
-  from enc a
-  join enc b on b.vec_id < 5 and a.vec_id != b.vec_id
-            and a.cluster = b.cluster
-)
-select query_id, neighbor_id, approx_d2, rank from (
-  select *, row_number() over (partition by query_id
-                               order by approx_d2 asc, neighbor_id asc) as rank
-  from scored
-) where rank <= {k}
-"""
-
-
 def _lsh_bucket_duck() -> str:
     """Sign-LSH bucket expression over the ``embedding`` column for
     DuckDB, generated from the IDENTICAL deterministic plane literals
@@ -4658,23 +6843,6 @@ def _lsh_bucket_duck() -> str:
             f"x -> x[1]::DOUBLE * x[2])) > 0 then {1 << i} else 0 end)"
         )
     return "(" + " + ".join(terms) + ")"
-
-
-def _q64_oracle_sql() -> str:
-    """q64 oracle: the q24 all-pairs cosine restricted to same
-    sign-LSH bucket; cosine/rounding shared via ``_COS_EXPR``."""
-    bucket = _lsh_bucket_duck()
-    return f"""
-with bucketed as (
-  select vec_id, embedding, {bucket} as bucket from embeddings
-)
-select * from (
-  select a.vec_id as id_a, b.vec_id as id_b,
-    {_COS_EXPR.format(r=4)} as cos
-  from bucketed a join bucketed b
-    on a.vec_id < b.vec_id and a.bucket = b.bucket
-) where cos >= 0.45
-"""
 
 
 def _lm_agg_ctes(source_rel: str) -> tuple[str, str, str]:
@@ -4710,214 +6878,6 @@ lm_agg as (
     return ctes, str(int(payload["cut_head_q"])), str(int(payload["cut_mid_q"]))
 
 
-def _q76_oracle_sql() -> str:
-    """q76 oracle: the bigram-LM scoring pipeline in pure DuckDB SQL
-    over the committed model exported to parquet — tokenization
-    (ascii runs, per-token lower), predecessor pairing (list_zip with
-    a '<s>' prepend), two model joins, one group-by, and the same
-    no-division integer bucket comparison as the Spark plan."""
-    ctes, cut_head, cut_mid = _lm_agg_ctes("documents")
-    return f"""
-with {ctes}
-select d.doc_id,
-  coalesce(a.n_tokens, 0)::bigint as n_tokens,
-  coalesce(a.lm_q_sum, 0)::bigint as lm_q_sum,
-  case when a.doc_id is null then 'empty'
-       when a.lm_q_sum >= {cut_head} * a.n_tokens then 'head'
-       when a.lm_q_sum >= {cut_mid} * a.n_tokens then 'middle'
-       else 'tail' end as ppl_bucket
-from documents d left join lm_agg a using (doc_id)
-"""
-
-
-def _q77_oracle_sql() -> str:
-    """q77 oracle: the full mixture pipeline relationally in DuckDB —
-    q16 whitespace token counts, integer targets embedded from the
-    SAME driver-side `budget*w div sum(w)` arithmetic the operator
-    uses, ceil-division epoch counts, epoch-keyed md5 permutation, and
-    one per-source running-sum window whose ORDER (epoch, shard, hash,
-    id) equals the Spark plan's sharded two-phase global order."""
-    sum_w = sum(MIXTURE_WEIGHTS.values())
-    values = ", ".join(
-        f"('{s}', {(MIXTURE_BUDGET * w) // sum_w})"
-        for s, w in sorted(MIXTURE_WEIGHTS.items())
-    )
-    return f"""
-with d as (
-  select doc_id, source,
-    case when length(trim(text)) = 0 then 0
-         else len(regexp_split_to_array(trim(text), '\\s+')) end as n_tokens
-  from documents
-),
-d2 as (
-  select * from d
-  where n_tokens > 0 and source in (select src from (values {values}) t(src, tgt))
-),
-ep as (
-  select a.source, t.tgt as target_q,
-         least({MIXTURE_MAX_EPOCHS}, (t.tgt + a.avail - 1) // a.avail)::bigint
-           as n_epochs
-  from (select source, sum(n_tokens) as avail from d2 group by source) a
-  join (values {values}) t(src, tgt) on t.src = a.source
-  where (t.tgt + a.avail - 1) // a.avail > 0
-),
-rep as (
-  select d2.doc_id, d2.source, d2.n_tokens, ep.target_q,
-         unnest(generate_series(0::bigint, ep.n_epochs - 1)) as epoch
-  from d2 join ep using (source)
-),
-c as (
-  select *,
-    sum(n_tokens) over (
-      partition by source
-      order by epoch, doc_id % 64,
-               md5(cast(epoch as varchar) || ':' || cast(doc_id as varchar)),
-               doc_id
-      rows between unbounded preceding and current row) as cum
-  from rep
-)
-select doc_id, source, epoch, n_tokens::bigint as n_tokens,
-       cum::bigint as cum_source_tokens
-from c where cum <= target_q
-"""
-
-
-def _q75_oracle_sql() -> str:
-    """q75 oracle: same-bucket all-pairs cosine over old ∪ new (the
-    embedding delta split), restricted to new-touching pairs; bucket
-    and cosine expressions shared with the q64/q65 generators."""
-    bucket = _lsh_bucket_duck()
-    return f"""
-with eold as (select vec_id, embedding from embeddings where vec_id % 4 != 0),
-enew as (
-  select vec_id, embedding from embeddings where vec_id % 4 = 0
-  union all
-  select vec_id + {_DELTA_ID_OFFSET} as vec_id, embedding
-  from (select * from eold where vec_id % 10 = 1)
-),
-allb as (
-  select vec_id, embedding, false as is_new from eold
-  union all
-  select vec_id, embedding, true as is_new from enew
-),
-bucketed as (
-  select vec_id, embedding, is_new, {bucket} as bucket from allb
-)
-select * from (
-  select a.vec_id as id_a, b.vec_id as id_b,
-    {_COS_EXPR.format(r=4)} as cos
-  from bucketed a join bucketed b
-    on a.vec_id < b.vec_id and a.bucket = b.bucket
-  where a.is_new or b.is_new
-) where cos >= 0.45
-"""
-
-
-def _q61_oracle_sql() -> str:
-    """q61 oracle with the q26/q56 degradation contract."""
-    try:
-        sf = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-        return _ivfpq_residual_sql(
-            _ivf_centroids(sf), _pq_codebooks_residual(sf)
-        )
-    except Exception:
-        return (
-            "select * from read_parquet("
-            "'/nonexistent/q61_residual_training_failed')"
-        )
-
-
-def _q58_oracle_sql() -> str:
-    """q58 oracle with the q26/q56 degradation contract."""
-    try:
-        sf = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-        return _ivfpq_sql(_ivf_centroids(sf), _pq_codebooks(sf))
-    except Exception:
-        return (
-            "select * from read_parquet("
-            "'/nonexistent/q58_ivfpq_training_failed')"
-        )
-
-
-def _q56_oracle_sql() -> str:
-    """q56 oracle with the q26 degradation contract: codebook-training
-    failure breaks only q56, loudly, at execution."""
-    try:
-        return _pq_sql(
-            _pq_codebooks(
-                os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-            )
-        )
-    except Exception:
-        return (
-            "select * from read_parquet("
-            "'/nonexistent/q56_pq_codebook_training_failed')"
-        )
-
-
-def _q26_oracle_sql() -> str:
-    """q26 oracle, degrading per-query like the other golden-backed
-    oracles: if centroid training fails (missing embeddings.parquet,
-    bad env dir), only q26 errors loudly at execution — the rest of
-    the oracle dict stays usable."""
-    try:
-        return _ivf_sql(
-            _ivf_centroids(
-                os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-            )
-        )
-    except Exception:
-        return (
-            "select * from read_parquet("
-            "'/nonexistent/q26_ivf_centroid_training_failed')"
-        )
-
-
-def _cluster_sample_sql(centroids: list, per_cluster: int) -> str:
-    """q81 oracle: same centroid literals, first-match argmin, then a
-    per-cluster row_number in the operator's deterministic global
-    order (shard = id % 64, md5 of the decimal id, id) — DuckDB runs
-    the single-window form; the Spark plan's two-phase sharded rank
-    must equal it exactly."""
-    dlist = _d2_dlist_sql(centroids)
-    return f"""
-with darr as (
-  select vec_id, [{dlist}] as dl from embeddings
-),
-assign as (
-  select vec_id, (list_position(dl, list_min(dl)) - 1)::int as cluster
-  from darr
-),
-ranked as (
-  select vec_id, cluster,
-    row_number() over (partition by cluster
-                       order by vec_id % 64, md5(vec_id::varchar), vec_id)
-      as pick_rank,
-    count(*) over (partition by cluster) as cluster_size
-  from assign
-)
-select vec_id, cluster, pick_rank::bigint as pick_rank,
-       cluster_size::bigint as cluster_size
-from ranked where pick_rank <= {per_cluster}
-"""
-
-
-def _q81_oracle_sql() -> str:
-    """Degrades per-query like _q26_oracle_sql if training fails."""
-    try:
-        return _cluster_sample_sql(
-            _ivf_centroids(
-                os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-            ),
-            per_cluster=40,
-        )
-    except Exception:
-        return (
-            "select * from read_parquet("
-            "'/nonexistent/q81_ivf_centroid_training_failed')"
-        )
-
-
 def _minhash_cte(k: int = 12, bands: int = 4) -> str:
     """Shingles + MinHash signature + banded LSH candidate CTEs, ending
     with ``cand(id_a, id_b)`` — shared by q22 and q45."""
@@ -4939,83 +6899,6 @@ cand as (
   from stacked a join stacked b using (bucket)
   where a.doc_id < b.doc_id
 )"""
-
-
-def _minhash_sql(k: int = 12, bands: int = 4) -> str:
-    return f"""
-with {_minhash_cte(k, bands)}
-select cand.id_a, cand.id_b, jacc.jaccard
-from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
-where jacc.jaccard >= 0.8
-"""
-
-
-def _minhash_delta_sql(k: int = 12, bands: int = 4) -> str:
-    """q71 oracle: banded LSH over old ∪ new under the FROZEN universe
-    (hot shingles = DF over the OLD corpus only > cap — the index-build
-    rule in ``dedup_index.hot_shingles``), candidates restricted to
-    pairs touching a new id. Batch equivalence makes this exactly the
-    delta's result (pinned independently in ``tests/test_dedup_index``
-    for the uncapped case; this oracle covers the frozen-capped one)."""
-    r = k // bands
-    hashes = ", ".join(f"min(md5('{i}:' || shingle)) as h{i}" for i in range(k))
-    band_exprs = ", ".join(
-        "md5(" + " || '|' || ".join(f"h{b * r + j}" for j in range(r)) + f") as band{b}"
-        for b in range(bands)
-    )
-    bucket_list = ", ".join(f"'{b}#' || band{b}" for b in range(bands))
-    return f"""
-with {_DELTA_SPLIT_CTE},
-allb as (
-  select doc_id, text, false as is_new from old
-  union all
-  select doc_id, text, true as is_new from new
-),
-sh_all as (
-  select doc_id,
-         unnest(list_distinct([array_to_string(words[i:i+2], ' ')
-                               for i in range(1, len(words) - 1)])) as shingle
-  from (select doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') as words
-        from allb)
-),
-hot as (
-  select shingle from sh_all
-  join (select doc_id from allb where not is_new) using (doc_id)
-  group by shingle having count(*) > {DEFAULT_MAX_SHINGLE_DF}
-),
-sh as (
-  select doc_id, shingle from sh_all
-  where shingle not in (select shingle from hot)
-),
-sig as (select doc_id, {hashes} from sh group by doc_id),
-banded as (select doc_id, {band_exprs} from sig),
-stacked as (select doc_id, unnest([{bucket_list}]) as bucket from banded),
-newids as (select doc_id from allb where is_new),
-cand as (
-  select distinct a.doc_id as id_a, b.doc_id as id_b
-  from stacked a join stacked b using (bucket)
-  where a.doc_id < b.doc_id
-    and (a.doc_id in (select doc_id from newids)
-         or b.doc_id in (select doc_id from newids))
-),
-sizes as (select doc_id, count(*) as n from sh group by 1),
-shared as (
-  select sh_a.doc_id as id_a, sh_b.doc_id as id_b, count(*) as shared
-  from sh sh_a join sh sh_b using (shingle)
-  where sh_a.doc_id < sh_b.doc_id
-  group by 1, 2
-),
-jacc as (
-  select id_a, id_b,
-         round(shared * 1.0 / (sa.n + sb.n - shared), 4) as jaccard
-  from shared
-  join sizes sa on sa.doc_id = id_a
-  join sizes sb on sb.doc_id = id_b
-)
-select cand.id_a, cand.id_b, jacc.jaccard
-from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
-where jacc.jaccard >= 0.8
-"""
 
 
 def _span_sql(marked_cte: str) -> str:
@@ -5113,37 +6996,6 @@ from v3 join sp on v3.doc_id = sp.doc_id
 """
 
 
-def _curate_v5_sql(fingerprint_expr: str) -> str:
-    """q79 oracle: the v4 template's final select becomes a ``v4``
-    CTE, the q76 LM chain (``_lm_agg_ctes`` — literally the same SQL
-    text) runs over docs2 restricted to v4 survivors, and the final
-    select keeps head/middle only; docs2 is re-rooted on the RAW
-    documents (see q79_curated_corpus_v5's vacuity note). Same
-    composition as ``plans.curate.curated_corpus_v5``."""
-    v4sql = _curate_v4_sql(fingerprint_expr).replace(
-        _q73_docs_cte().strip(),
-        "docs2 as (\n  select doc_id, lang, text from documents\n)",
-    )
-    head, sep, tail = v4sql.rpartition("\nselect v3.doc_id")
-    assert sep, "v4 template final-select shape changed"
-    ctes = head.strip()
-    assert ctes.startswith("with ")
-    lm_ctes, cut_head, cut_mid = _lm_agg_ctes(
-        "(select d2.doc_id, d2.text from docs2 d2 "
-        "join v4 on v4.doc_id = d2.doc_id)"
-    )
-    return f"""
-{ctes},
-v4 as (select v3.doc_id{tail.rstrip()}),
-{lm_ctes}
-select v4.*,
-  case when a.lm_q_sum >= {cut_head} * a.n_tokens then 'head'
-       else 'middle' end as ppl_bucket
-from v4 join lm_agg a using (doc_id)
-where a.lm_q_sum >= {cut_mid} * a.n_tokens
-"""
-
-
 _SPAN_DEDUP_MARKED = """
 firsts as (select g, min(doc_id) as fdoc from occ group by g),
 firsts2 as (
@@ -5155,114 +7007,6 @@ marked as (
   select occ.doc_id, occ.start from occ join firsts2 on occ.g = firsts2.g
   where occ.doc_id != firsts2.fdoc or occ.start != firsts2.fstart
 )"""
-
-_SPAN_DECON_MARKED = """
-bench as (select distinct g from occ where doc_id % 50 = 0),
-marked as (select doc_id, start from occ where g in (select g from bench))"""
-
-
-def _neardup_clusters_sql() -> str:
-    """q45 oracle: LSH-verified pairs → symmetric edge list → recursive
-    transitive closure (UNION dedups, so it terminates) → per-node min
-    label = connected component id."""
-    return f"""
-with recursive {_minhash_cte()},
-vpairs as (
-  select cand.id_a, cand.id_b
-  from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
-  where jacc.jaccard >= 0.8
-),
-edges as (
-  select id_a as src, id_b as dst from vpairs
-  union all
-  select id_b as src, id_a as dst from vpairs
-),
-reach(node, lab) as (
-  select doc_id, doc_id from documents
-  union
-  select e.dst, r.lab from edges e join reach r on r.node = e.src
-),
-lab as (select node, min(lab) as cluster_id from reach group by node),
-sz as (select cluster_id, count(*) as cluster_size from lab group by cluster_id)
-select node as doc_id, cluster_id, cluster_size,
-       node = cluster_id as is_canonical
-from lab join sz using (cluster_id)
-"""
-
-
-def _pii_scrub_sql() -> str:
-    """q41 oracle, built by placeholder substitution (the regexes carry
-    ``{m,n}`` quantifiers that fight f-strings). DuckDB regexp_replace
-    needs the explicit 'g' flag Spark applies implicitly; counts use
-    len(regexp_extract_all) — DuckDB has no regexp_count."""
-    from ai_pdf_extraction_spark.operators.scrub import EMAIL_RE, IP_RE, PHONE_RE
-
-    sql = """
-with seeded as (
-  select doc_id,
-    text || ' contact: user' || doc_id || '@example.com or +1 555-01'
-         || lpad((doc_id % 100)::varchar, 2, '0')
-         || ' from 10.0.' || (doc_id % 256)::varchar || '.7' as text
-  from documents
-), e_scrubbed as (
-  select doc_id,
-    regexp_replace(text, '@EMAIL@', '<EMAIL>', 'g') as e_text,
-    len(regexp_extract_all(text, '@EMAIL@')) as n_emails
-  from seeded
-), partial as (
-  -- each class counted with all EARLIER scrub steps applied (disjoint
-  -- classes) — mirrors operators/scrub.pii_counts' fold over the steps
-  select doc_id, n_emails,
-    regexp_replace(e_text, '@IP@', '<IP>', 'g') as ei_scrubbed,
-    len(regexp_extract_all(e_text, '@IP@')) as n_ips
-  from e_scrubbed
-)
-select doc_id,
-  md5(regexp_replace(ei_scrubbed, '@PHONE@', '<PHONE>', 'g')) as scrubbed_md5,
-  n_emails, n_ips,
-  len(regexp_extract_all(ei_scrubbed, '@PHONE@')) as n_phones
-from partial
-"""
-    return (
-        sql.replace("@EMAIL@", EMAIL_RE)
-        .replace("@IP@", IP_RE)
-        .replace("@PHONE@", PHONE_RE)
-    )
-
-
-_REPETITION_SQL = r"""
-with words as (
-  select doc_id,
-    case when length(trim(text)) = 0 then []::varchar[]
-         else regexp_split_to_array(lower(trim(text)), '\s+') end as w
-  from documents
-), per_row as (
-  select doc_id, len(w) as n_words, len(list_distinct(w)) as n_distinct from words
-), bigrams as (
-  select doc_id,
-    unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) as bigram
-  from words
-), counts as (
-  select doc_id, bigram, count(*) as cnt from bigrams group by 1, 2
-), shares as (
-  select doc_id, max(cnt) * 1.0 / sum(cnt) as share from counts group by 1
-)
-select p.doc_id,
-  round(case when n_words > 1 then 1.0 - n_distinct * 1.0 / n_words
-             else 0.0 end, 4) as dup_word_ratio,
-  round(coalesce(share, 0.0), 4) as top_bigram_share
-from per_row p left join shares using (doc_id)
-"""
-
-_STRATIFIED_SAMPLE_SQL = """
-select doc_id, lang from documents
-where ('0x' || substr(md5(coalesce(lang, '__null__') || ':' || doc_id), 1, 4))::int
-        / 65536.0
-      < case when lang = 'de' then 1.0
-             when lang = 'en' then 0.5
-             else 0.1 end
-"""
-
 
 def _emb_losers_cte(threshold: float = 0.45) -> str:
     """Bucketed embedding near-dup losers (the q64 composition) as a
@@ -5460,137 +7204,6 @@ olinks as (select k.src_url, c.canon_url as dst_url, k.anchor
 _HOST_EXTRACT_SQL = "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1"
 
 
-def _q102_oracle_sql() -> str:
-    """DuckDB twin of q102: head-metadata regexes shared with
-    ``operators.links``, the canonical href resolved and gated on
-    registered-domain equality, the winner canonicalized through the
-    shared chain."""
-    from ai_pdf_extraction_spark.operators.links import (
-        CANONICAL_RE,
-        META_DESC_RE,
-        OG_TITLE_RE,
-        TITLE_RE,
-    )
-
-    title_clean = (
-        "trim(regexp_replace("
-        + _dec5_sql(
-            f"regexp_replace(regexp_extract(html, '{TITLE_RE}', 1), "
-            "'<[^>]*>', '', 'g')"
-        )
-        + r", '[ \t\r\n\f]+', ' ', 'g'))"
-    )
-    host_canon = f"regexp_extract(canon_abs, {_HOST_EXTRACT_SQL})"
-    host_page = f"regexp_extract(url, {_HOST_EXTRACT_SQL})"
-    return f"""
-with pages as (
-  select doc_id,
-    'http://www.site' || (doc_id % 13)::varchar
-      || '.example.co.uk/p/' || doc_id::varchar as url,
-    '<head><title> Doc &amp; ' || doc_id::varchar || ' </title>'
-    || case when doc_id % 2 = 0
-         then '<meta name="description" content="Desc &quot;'
-              || (doc_id % 7)::varchar || '&quot;">' else '' end
-    || case when doc_id % 4 = 0
-         then '<meta property="og:title" content="OG '
-              || (doc_id % 5)::varchar || '">' else '' end
-    || case when doc_id % 6 = 0
-         then '<link rel="canonical" href="http://amp.site'
-              || (doc_id % 13)::varchar || '.example.co.uk/canon/'
-              || (doc_id % 211)::varchar || '">'
-       when doc_id % 3 = 0
-         then '<link rel="canonical" href="/canon/'
-              || (doc_id % 211)::varchar || '">'
-       when doc_id % 3 = 1
-         then '<link rel="canonical" href="http://mirror'
-              || (doc_id % 5)::varchar || '.example.org/c/'
-              || doc_id::varchar || '">'
-       else '' end
-    || '</head><body><p>x</p></body>' as html
-  from documents
-),
-ext as (
-  select doc_id, url,
-    {title_clean} as title,
-    nullif({_dec5_sql(f"regexp_extract(html, '{META_DESC_RE}', 1)")},
-           '') as meta_desc,
-    nullif({_dec5_sql(f"regexp_extract(html, '{OG_TITLE_RE}', 1)")},
-           '') as og_title,
-    nullif({_dec5_sql(f"regexp_extract(html, '{CANONICAL_RE}', 1)")},
-           '') as canonical_href
-  from pages
-),
-resv as (select *,
-         {_resolve_href_sql("url", "canonical_href")} as canon_abs
-         from ext),
-acc as (select *,
-    (canon_abs is not null
-     and {_regdomain_sql(host_canon)} = {_regdomain_sql(host_page)})
-      as canonical_accepted
-  from resv),
-eff as (select *,
-        case when canonical_accepted then canon_abs else url end as eraw
-        from acc),
-raw as (select distinct 0::bigint as event_id, eraw as raw_url from eff),
-{_URL_CANON_CHAIN_SQL},
-cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5)
-select e.doc_id, e.title, e.meta_desc, e.og_title, e.canonical_href,
-  e.canonical_accepted, c.canon_url as effective_url
-from eff e join cmap c on e.eraw = c.raw_url
-"""
-
-
-def _q103_oracle_sql() -> str:
-    """q99's extracted olinks collapsed to the host graph, fed through
-    the SAME chained-CTE integer-PageRank algebra as q84."""
-    graph = (
-        _q99_outlink_ctes()
-        + f""",
-hl as (select regexp_extract(src_url, {_HOST_EXTRACT_SQL}) as src,
-              regexp_extract(dst_url, {_HOST_EXTRACT_SQL}) as dst
-       from olinks),
-edges as (select src, dst, count(*)::bigint as weight from hl
-          where src <> dst group by src, dst)"""
-    )
-    return (
-        "with "
-        + _q84_pagerank_ctes(3, graph_ctes=graph)
-        + '\nselect host, r as "rank" from r3'
-    )
-
-
-
-def _q111_oracle_sql() -> str:
-    """DuckDB twin of q111: title and outlink fan-out computed
-    DIRECTLY from the generator — the Spark side must reproduce them
-    from fields that round-tripped through WAT shards + json."""
-    from ai_pdf_extraction_spark.operators.links import TITLE_RE
-
-    title_clean = (
-        "trim(regexp_replace("
-        + _dec5_sql(
-            f"regexp_replace(regexp_extract(html2, '{TITLE_RE}', 1), "
-            "'<[^>]*>', '', 'g')"
-        )
-        + r", '[ \t\r\n\f]+', ' ', 'g'))"
-    )
-    return f"""
-with {_q99_outlink_ctes()},
-p2 as (
-  select url,
-    '<head><title> Page ' || (doc_id % 50)::varchar
-      || ' </title></head>' || html as html2
-  from pages
-),
-cnt as (
-  select src_url, count(*)::bigint as n_outlinks
-  from olinks group by src_url
-),
-t as (select url, {title_clean} as title from p2)
-select t.url, t.title, coalesce(c.n_outlinks, 0)::bigint as n_outlinks
-from t left join cnt c on t.url = c.src_url
-"""
-
 
 def _q113_resolution_ctes(max_hops: int = 5) -> str:
     """The q113 oracle as reusable CTE text: the synthesized fetch
@@ -5620,1702 +7233,3 @@ def _q113_resolution_ctes(max_hops: int = 5) -> str:
         + "fin as (\n  select h.start_url, h.cur as final_url, h.hops as n_hops, h.looped,\n    (r.dst is not null) as pending\n  from h5 h left join red r on h.cur = r.src\n),\nres as (\n  select f.start_url, f.final_url, f.n_hops,\n  case when f.looped then 'loop'\n       when f.pending then 'too_many_hops'\n       when f.n_hops > 0 and s.url is null then 'dangling'\n       else 'ok' end as status\nfrom fin f left join starts s on f.final_url = s.url\n)".replace("from h5 h", f"from h{max_hops} h")
     )
 
-
-def _q110_oracle_sql() -> str:
-    """DuckDB twin of q110, REBUILT from the operator's own constants
-    (terminal regex, drop markers, thresholds) — the _regdomain_sql
-    discipline: editing C4_DROP_MARKERS cannot silently leave the
-    oracle on old rules."""
-    from ai_pdf_extraction_spark.operators.text_analysis import (
-        C4_DROP_MARKERS,
-        C4_MIN_LINES,
-        C4_MIN_WORDS,
-        C4_TERMINAL_RE,
-    )
-
-    marker_preds = "\n     ".join(
-        f"and not contains(lower(l), '{m.replace(chr(39), chr(39) * 2)}')"
-        for m in C4_DROP_MARKERS
-    )
-    return f"""
-with aug as (
-  select doc_id,
-    case when doc_id % 7 = 0 then
-      'Enable javascript now' || chr(10)
-      || 'Read our cookie policy here today ok.' || chr(10)
-      || 'short one.' || chr(10)
-      || 'no terminal punctuation in this line at all'
-    else
-      'This page uses a cookie banner everywhere.' || chr(10)
-      || 'Tiny line.' || chr(10)
-      || 'This line is long enough and ends properly.' || chr(10)
-      || 'She replied with a firm "final answer."' || chr(10)
-      || 'this long line has no terminal punctuation at all' || chr(10)
-      || case when doc_id % 3 = 0 then
-           'Closing sentence number ' || (doc_id % 11)::varchar
-           || ' finishes the document properly.' || chr(10)
-         else '' end
-      || text
-    end as text
-  from documents
-),
-l as (
-  select doc_id,
-    generate_subscripts(regexp_split_to_array(text, '\r?\n'), 1)
-      as pos,
-    unnest(regexp_split_to_array(text, '\r?\n')) as l
-  from aug
-),
-k as (
-  select doc_id, pos, l,
-    (regexp_matches(l, '{C4_TERMINAL_RE}')
-     and len(regexp_extract_all(l, '[^ \t]+')) >= {C4_MIN_WORDS}
-     {marker_preds}) as keep
-  from l
-)
-select doc_id,
-  coalesce(string_agg(case when keep then l end, chr(10) order by pos),
-           '') as clean_text,
-  count(*)::bigint as n_lines_raw,
-  sum(keep::int)::bigint as n_lines_kept,
-  (sum(keep::int) >= {C4_MIN_LINES}) as kept
-from k group by doc_id
-"""
-
-
-def _q105_oracle_sql() -> str:
-    """DuckDB twin of q105 — BOM ladder / shared meta regex /
-    content heuristic / -sig-normalized mismatch flag."""
-    from ai_pdf_extraction_spark.operators.text_analysis import (
-        CHARSET_META_RE,
-    )
-
-    return f"""
-with pages as (
-  select doc_id,
-    case when doc_id % 5 = 0 then 'EFBBBF78'
-         when doc_id % 5 = 1 then 'FFFE7800' else '78' end as raw_hex,
-    (case when doc_id % 5 in (0, 1)
-            then '<head><meta charset="UTF-8"></head>'
-          when doc_id % 5 = 2
-            then '<head><meta charset="ISO-8859-1"></head>'
-          else '<head></head>' end)
-    || (case when doc_id % 5 = 3 then '<body>café</body>'
-             else '<body>plain ascii</body>' end) as html
-  from documents
-),
-s as (
-  select doc_id,
-    case when upper(raw_hex) like 'EFBBBF%' then 'utf-8-sig'
-         when upper(raw_hex) like 'FFFE%' then 'utf-16le'
-         when upper(raw_hex) like 'FEFF%' then 'utf-16be' end
-      as bom_charset,
-    nullif(lower(regexp_extract(html, '{CHARSET_META_RE}', 1)), '')
-      as declared_charset,
-    case when regexp_matches(html, '[^\\x00-\\x7F]') then 'utf-8'
-         else 'us-ascii' end as heur
-  from pages
-)
-select doc_id, bom_charset, declared_charset,
-  coalesce(bom_charset, declared_charset, heur) as detected_charset,
-  (bom_charset is not null and declared_charset is not null
-   and replace(bom_charset, '-sig', '') != declared_charset)
-    as declared_mismatch
-from s
-"""
-
-
-def _q106_oracle_sql() -> str:
-    """DuckDB twin of q106 — the q102 canonical-guard chain over
-    coarse /c/<id%7> keys, collapsed by effective url."""
-    from ai_pdf_extraction_spark.operators.links import CANONICAL_RE
-
-    host_canon = f"regexp_extract(canon_abs, {_HOST_EXTRACT_SQL})"
-    host_page = f"regexp_extract(url, {_HOST_EXTRACT_SQL})"
-    return f"""
-with pages as (
-  select doc_id,
-    'http://www.site' || (doc_id % 13)::varchar
-      || '.example.co.uk/p/' || doc_id::varchar as url,
-    '<head><title>D</title>'
-    || case when doc_id % 3 = 0
-         then '<link rel="canonical" href="/c/'
-              || (doc_id % 7)::varchar || '">'
-       when doc_id % 3 = 1
-         then '<link rel="canonical" href="http://mirror.example.org/c/'
-              || doc_id::varchar || '">'
-       else '' end
-    || '</head>' as html
-  from documents
-),
-ext as (
-  select doc_id, url,
-    nullif({_dec5_sql(f"regexp_extract(html, '{CANONICAL_RE}', 1)")},
-           '') as canonical_href
-  from pages
-),
-resv as (select *,
-         {_resolve_href_sql("url", "canonical_href")} as canon_abs
-         from ext),
-acc as (select *,
-    (canon_abs is not null
-     and {_regdomain_sql(host_canon)} = {_regdomain_sql(host_page)})
-      as canonical_accepted
-  from resv),
-eff as (select *,
-        case when canonical_accepted then canon_abs else url end as eraw
-        from acc),
-raw as (select distinct 0::bigint as event_id, eraw as raw_url from eff),
-{_URL_CANON_CHAIN_SQL},
-cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5),
-j as (select e.doc_id, e.canonical_accepted,
-             c.canon_url as effective_url
-      from eff e join cmap c on e.eraw = c.raw_url)
-select effective_url, count(*)::bigint as n_pages,
-  min(doc_id) as first_doc,
-  sum(case when canonical_accepted then 1 else 0 end)::bigint
-    as n_canonical
-from j group by effective_url
-"""
-
-
-def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per query key.
-
-    CONTRACT: two oracles are sf-dependent at build time — q23 embeds
-    a golden-parquet path materialized from the documents table in
-    ``$SPARK_GRAFT_CONTRACT_SF`` (default ``/root/testdata/sf0.01``,
-    the driver's compare scale), and q26 embeds k-means centroids
-    trained from that dir's embeddings table — both resolved at the
-    moment this function is called. A driver comparing at any OTHER sf
-    dir must export ``SPARK_GRAFT_CONTRACT_SF=<sf_dir>`` *before*
-    calling ``oracle_sql()`` (``tools/check_contract.py`` does) —
-    otherwise q23/q26 compare against artifacts built from the wrong
-    tables and mismatch loudly. (The q34/q39/q46/q48 goldens are
-    sf-independent: they derive from the fixed 600-doc fixture corpus,
-    keyed on CORPUS_VERSION + KERNEL_VERSION.)"""
-    quality_sql = f"with {_SCORED_CTE} select doc_id, quality from scored"
-    from ai_pdf_extraction_spark.operators.urls import _ASSET_EXT_RE
-
-    lang_score = (
-        lambda m: f"cast((length(padded) - length(replace(padded, '{m}', ''))) / {len(m)} as bigint)"
-    )
-    markers = {
-        "en": (" the ", " and ", " of ", " to "),
-        "de": (" der ", " die ", " und ", " das "),
-        "fr": (" le ", " la ", " et ", " les "),
-        "es": (" el ", " los ", " que ", " y "),
-    }
-    score_exprs = {
-        lang: " + ".join(lang_score(m) for m in ms) for lang, ms in markers.items()
-    }
-    lang_sql = f"""
-with scored as (
-  select doc_id,
-    {score_exprs['en']} as score_en,
-    {score_exprs['de']} as score_de,
-    {score_exprs['fr']} as score_fr,
-    {score_exprs['es']} as score_es
-  from (select doc_id, ' ' || lower(text) || ' ' as padded from documents)
-)
-select doc_id, score_en, score_de, score_fr, score_es,
-  case when greatest(score_en, score_de, score_fr, score_es) = 0 then 'und'
-       when score_en = greatest(score_en, score_de, score_fr, score_es) then 'en'
-       when score_de = greatest(score_en, score_de, score_fr, score_es) then 'de'
-       when score_fr = greatest(score_en, score_de, score_fr, score_es) then 'fr'
-       else 'es' end as lang_guess
-from scored
-"""
-    fingerprint_expr = "md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))"
-    return {
-        "q01_pricing_summary": """
-select l_returnflag, l_linestatus,
-  sum(cast(l_quantity as decimal(18,6)))::double as sum_qty,
-  sum(cast(l_extendedprice as decimal(18,6)))::double as sum_base_price,
-  sum(cast(l_extendedprice * (1 - l_discount) as decimal(18,6)))::double
-    as sum_disc_price,
-  round(avg(l_quantity), 4) as avg_qty,
-  round(avg(l_discount), 4) as avg_disc,
-  count(*) as count_order
-from lineitem
-where l_shipdate <= timestamp '1998-09-02'
-group by l_returnflag, l_linestatus
-""",
-        "q02_filtered_revenue": """
-select sum(cast(l_extendedprice * l_discount as decimal(18,6)))::double as revenue
-from lineitem
-where l_shipdate >= timestamp '1995-01-01'
-  and l_shipdate < timestamp '1996-01-01'
-  and l_discount between 0.05 and 0.07
-  and l_quantity < 24
-""",
-        "q03_region_nation_rollup": """
-select r.r_name as region, n.n_name as nation,
-  count(*) as n_customers, round(sum(c.c_acctbal), 2) as sum_acctbal
-from customer c
-join nation n on c.c_nationkey = n.n_nationkey
-join region r on n.n_regionkey = r.r_regionkey
-group by 1, 2
-""",
-        "q04_order_priority_counts": """
-select o_orderpriority, count(*) as order_count
-from orders
-where o_orderdate >= timestamp '1996-01-01'
-  and o_orderdate < timestamp '1997-01-01'
-group by o_orderpriority
-""",
-        "q05_customers_without_orders": """
-select c_custkey, c_name, c_mktsegment
-from customer
-where c_custkey not in
-  (select o_custkey from orders where o_orderpriority = '1-URGENT')
-""",
-        "q06_supplier_big_items": """
-select n.n_name as nation, count(*) as n_suppliers
-from supplier s
-join nation n on s.s_nationkey = n.n_nationkey
-where exists (select 1 from lineitem li
-              where li.l_suppkey = s.s_suppkey and li.l_quantity >= 48)
-group by 1
-""",
-        "q07_top_orders_per_customer": """
-select o_custkey, o_orderkey, round(o_totalprice, 2) as totalprice, rn
-from (
-  select o_custkey, o_orderkey, o_totalprice,
-    row_number() over (partition by o_custkey
-                       order by o_totalprice desc, o_orderkey asc) as rn
-  from orders
-)
-where rn <= 3
-""",
-        "q08_active_minus_urgent": """
-select distinct o_custkey as custkey from orders
-except
-select distinct o_custkey as custkey from orders where o_orderpriority = '1-URGENT'
-""",
-        "q09_order_lineitem_stats": """
-select o_orderstatus,
-  count(*) as n_items,
-  round(avg(l_extendedprice), 4) as avg_price,
-  sum(cast(l_quantity * (1 - l_discount) as decimal(18,6)))::double as eff_qty
-from orders join lineitem on o_orderkey = l_orderkey
-group by o_orderstatus
-""",
-        "q10_latest_orders": """
-select o_orderkey, o_orderdate, round(o_totalprice, 2) as totalprice
-from orders
-order by o_orderdate desc, o_orderkey asc
-limit 50
-""",
-        "q11_status_rollup": """
-select count(*) as total,
-  sum(case when o_orderstatus = 'F' then 1 else 0 end)::bigint as n_finished,
-  sum(case when o_orderstatus = 'O' then 1 else 0 end)::bigint as n_open,
-  sum(case when o_orderstatus = 'P' then 1 else 0 end)::bigint as n_pending,
-  sum(cast(case when o_orderstatus = 'F' then o_totalprice else 0.0 end
-           as decimal(18,6)))::double as finished_value
-from orders
-""",
-        "q12_sha_bucketing": """
-select substr(sha256(text), 1, 1) as bucket, count(*) as n_docs
-from documents group by 1
-""",
-        "q13_scalar_normalizers": """
-select o_orderkey,
-  try_strptime(strftime(o_orderdate, '%m/%d/%Y'), '%m/%d/%Y')::date as order_date,
-  case when o_orderstatus = 'O' then true
-       when o_orderstatus = 'F' then false
-       else null end as is_open,
-  try_cast(replace(cast(cast(round(o_totalprice / 1000.0, 0) as int) as varchar)
-                   || '%', '%', '') as double) as kprice_pct
-from orders
-""",
-        "q14_order_total_rule": """
-with sums as (
-  select l_orderkey,
-    sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) as gross_sum
-  from lineitem group by 1
-)
-select o_orderkey,
-  abs(o_totalprice - gross_sum)
-    <= greatest(0.01 * abs(o_totalprice), 0.01 * abs(gross_sum), 0.02) as rule_ok
-from orders join sums on o_orderkey = l_orderkey
-""",
-        "q15_csv_export_rows": """
-select o_custkey,
-  replace(array_to_string(list_sort(list(o_orderpriority)), ' | '), ',', '; ')
-    as priorities_csv,
-  count(*) as n_orders
-from orders group by o_custkey
-""",
-        "q16_token_counts": """
-select doc_id,
-  case when length(trim(text)) = 0 then 0
-       else len(regexp_split_to_array(trim(text), '\\s+')) end as n_tokens
-from documents
-""",
-        "q17_lang_marker_profile": lang_sql,
-        "q52_lang_detect_wide": _q52_oracle_sql(),
-        "q53_media_decode": f"""
-select media_id, format, decode_ok, width, height, n_decoded, payload_md5
-from read_parquet('{_decode_golden_path()}')
-""",
-        "q54_granule_dedup": """
-with base as (
-  select doc_id,
-    string_split('Boiler notice ' || (doc_id % 7) || '. ' || text
-                 || '. Footer text common', '. ') as arr
-  from documents
-),
-g as (
-  select doc_id,
-    unnest(arr) as granule,
-    unnest(range(1, len(arr) + 1)) as pos
-  from base
-),
-gn as (select * from g where length(granule) > 0),
-kept as (
-  select doc_id, granule, pos,
-    row_number() over (partition by granule order by doc_id, pos) as rn
-  from gn
-),
-per_doc as (
-  -- from the ARRAY side, not the exploded side: docs with zero
-  -- non-empty granules must stay in the output (n_granules = 0)
-  select doc_id, len(list_filter(arr, x -> length(x) > 0)) as n_granules
-  from base
-),
-survivors as (
-  select doc_id, count(*) as n_kept,
-    md5(string_agg(granule, '. ' order by pos)) as dedup_md5
-  from kept where rn = 1 group by doc_id
-)
-select p.doc_id, p.n_granules,
-  coalesce(s.n_kept, 0) as n_kept,
-  coalesce(s.dedup_md5, md5('')) as dedup_md5
-from per_doc p left join survivors s using (doc_id)
-""",
-        "q55_contamination": """
-with w as (
-  select doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') as words
-  from documents
-),
-doc_sh as (
-  select doc_id,
-    unnest(list_distinct([array_to_string(words[i:i+2], ' ')
-                          for i in range(1, len(words) - 1)])) as shingle
-  from w
-),
-bench_sh as (select distinct shingle from doc_sh where doc_id % 50 = 0),
-hits as (
-  select d.doc_id, count(*) as n_hits
-  from doc_sh d join bench_sh using (shingle)
-  group by d.doc_id
-)
-select doc_id,
-  coalesce(n_hits, 0) as n_hits,
-  coalesce(n_hits, 0) >= 1 as contaminated
-from documents left join hits using (doc_id)
-""",
-        "q18_quality_scores": quality_sql,
-        "q19_fingerprints": f"select doc_id, {fingerprint_expr} as fingerprint from documents",
-        "q20_exact_dedup": f"""
-with fp as (select doc_id, coalesce({fingerprint_expr}, 'null-text') as fp
-            from documents),
-groups as (select fp, min(doc_id) as canonical_id, count(*) as group_size
-           from fp group by fp)
-select doc_id, canonical_id, group_size, doc_id != canonical_id as is_dup
-from fp join groups using (fp)
-""",
-        "q21_ngram_jaccard_pairs": f"""
-with {_SHINGLES_CTE}
-select id_a, id_b, jaccard from jacc where jaccard >= 0.8
-""",
-        "q22_minhash_lsh_pairs": _minhash_sql(),
-        # q23: xxhash64 has no DuckDB twin — oracle is a golden parquet
-        # from an independent pure-Python XXH64+SimHash (oracle/xxh64.py)
-        "q23_simhash_sketch": f"""
-select doc_id, simhash, band0, band1, band2, band3
-from read_parquet('{_q23_golden_path()}')
-""",
-        "q34_extract_pages": f"""
-select url, content_type, parse_ok, confidence, n_chars, n_spans,
-  md5(extracted_text) as text_md5,
-  coalesce(array_to_string(list_transform(spans,
-    s -> s['start']::varchar || ':' || s['end']::varchar || ':' || s['kind']),
-    ';'), '') as spans_sig,
-  coalesce(array_to_string(warnings, '|'), '') as warnings_sig,
-  fc_sig, n_pages, n_tables, tables_sig
-from read_parquet('{_q34_golden_path()}')
-""",
-        "q46_table_rows": f"""
-select url, t_idx, r_idx, key, value
-from read_parquet('{_q46_golden_path()}')
-""",
-        "q51_warc_extract": f"""
-select url, content_type, parse_ok, confidence, n_chars, n_spans,
-  md5(extracted_text) as text_md5,
-  coalesce(array_to_string(list_transform(spans,
-    s -> s['start']::varchar || ':' || s['end']::varchar || ':' || s['kind']),
-    ';'), '') as spans_sig,
-  coalesce(array_to_string(warnings, '|'), '') as warnings_sig,
-  fc_sig, n_pages, n_tables, tables_sig
-from read_parquet('{_q34_golden_path()}')
-""",
-        "q50_representative_sample": """
-with urls as (select distinct 'doc://' || lpad(doc_id::varchar, 8, '0') as url
-              from documents),
-nn as (select count(*) as n from urls),
-params as (select greatest(((select n from nn) - 4) // 48, 1) as stride),
-firsts as (select url from urls order by url limit 2),
-lasts as (select url from urls order by url desc limit 2),
-ends as (select url from firsts union all select url from lasts),
-mids as (select url
-         from (select url, ('0x' || substr(md5(url), 1, 8))::bigint as h
-               from urls
-               where url not in (select url from ends))
-         where h % (select stride from params) = 0
-         order by h, url
-         limit 12)
-select url from urls where (select n from nn) <= 16
-union
-select url from (
-  select url from firsts
-  union all select url from lasts
-  union all select url from mids
-) where (select n from nn) > 16
-""",
-        "q49_media_metadata": f"""
-select media_id, media_type, format, n_bytes, width, height, duration_ms
-from read_parquet('{_ensure_media_fixtures()[1]}')
-""",
-        "q48_table_field_rollup": f"""
-select url, count(*) as n_rows,
-  cast(sum(try_cast(regexp_replace(value, '[^0-9.]', '', 'g') as double))
-       as bigint) as total_units
-from read_parquet('{_q46_golden_path()}')
-where key = 'amount'
-group by url
-""",
-        "q47_currency_codes": """
-with base as (
-  select doc_id, doc_id % 10 as m,
-    (doc_id % 900 + 100) as i,
-    (doc_id % 900 + 100)::varchar as istr,
-    lpad((doc_id % 100)::varchar, 2, '0') as cc,
-    (doc_id % 100) / 100.0 as frac
-  from documents
-)
-select doc_id,
-  case m when 0 then '$' || istr || '.' || cc
-         when 1 then '€' || istr || ',' || cc
-         when 2 then '£' || istr
-         when 3 then istr || ' USD'
-         when 4 then 'US$ ' || istr
-         when 5 then istr || ',' || cc || ' €'
-         when 6 then '¥' || istr
-         when 7 then 'R$ ' || istr || ',' || cc
-         when 8 then istr || '.' || cc
-         else '1.' || istr || ',' || cc || ' EUR' end as raw,
-  case m when 0 then '$' when 1 then '€' when 2 then '£'
-         when 3 then 'USD' when 4 then 'US$' when 5 then '€'
-         when 6 then '¥' when 7 then 'R$' when 8 then null
-         else 'EUR' end as token,
-  case m when 0 then 'USD' when 1 then 'EUR' when 2 then 'GBP'
-         when 3 then 'USD' when 4 then 'USD' when 5 then 'EUR'
-         when 6 then 'JPY' when 7 then 'BRL' when 8 then null
-         else 'EUR' end as code,
-  round(case m when 0 then i + frac when 1 then i + frac
-               when 2 then i + 0.0 when 3 then i + 0.0
-               when 4 then i + 0.0 when 5 then i + frac
-               when 6 then i + 0.0 when 7 then i + frac
-               when 8 then i + frac
-               else 1000 + i + frac end, 2) as amount
-from base
-""",
-        "q39_field_confidences": f"""
-select url, conf_title, conf_paragraph, conf_list_item, conf_table_text
-from read_parquet('{_q34_golden_path()}')
-""",
-        "q40_base64_payload": """
-select doc_id,
-  md5(to_base64(encode(text))) as b64_md5,
-  length(to_base64(encode(text))) as b64_len,
-  from_base64(to_base64(encode(text))) = encode(text) as roundtrip_ok
-from documents
-""",
-        "q41_pii_scrub": _pii_scrub_sql(),
-        "q45_neardup_clusters": _neardup_clusters_sql(),
-        "q42_repetition_signals": _REPETITION_SQL,
-        "q43_stratified_sample": _STRATIFIED_SAMPLE_SQL,
-        "q44_token_budget": f"""
-with {_SCORED_CTE},
-c as (
-  select doc_id, lang, quality, n_tokens,
-    (sum(n_tokens) over (partition by lang order by quality desc, doc_id
-                         rows unbounded preceding))::bigint as cum_tokens
-  from scored
-)
-select doc_id, lang, quality, n_tokens, cum_tokens from c
-where cum_tokens <= 3000
-""",
-        "q24_embedding_near_dup": f"""
-select * from (
-  select a.vec_id as id_a, b.vec_id as id_b,
-    {_COS_EXPR.format(r=4)} as cos
-  from embeddings a join embeddings b on a.vec_id < b.vec_id
-) where cos >= 0.45
-""",
-        "q25_ann_topk": f"""
-with scored as (
-  select b.vec_id as query_id, a.vec_id as neighbor_id,
-    {_COS_EXPR.format(r=6)} as cos
-  from embeddings a
-  join embeddings b on b.vec_id < 5 and a.vec_id != b.vec_id
-)
-select query_id, neighbor_id, cos, rank from (
-  select *, row_number() over (partition by query_id
-                               order by cos desc, neighbor_id asc) as rank
-  from scored
-) where rank <= 5
-""",
-        "q26_ivf_topk": _q26_oracle_sql(),
-        "q56_pq_topk": _q56_oracle_sql(),
-        "q58_ivfpq_topk": _q58_oracle_sql(),
-        "q61_ivfpq_residual_topk": _q61_oracle_sql(),
-        "q64_embedding_near_dup_lsh": _q64_oracle_sql(),
-        "q63_schema_registry_apply": """
-select o_orderkey,
-  'INV-' || o_orderkey::varchar as invoice_number,
-  round(o_totalprice, 2) as total,
-  o_orderdate::date as issued_on,
-  (o_orderstatus = 'F') as paid,
-  (o_orderkey % 50)::double as discount_pct,
-  case when o_orderkey % 3 = 0 then 'PO-' || o_custkey::varchar end as po_reference,
-  case when o_orderkey % 7 = 0 then null
-       else 'c' || o_custkey::varchar || '@example.com' end as contact_email,
-  'invoice' as schema_name,
-  2 as schema_version,
-  case when o_orderkey % 3 = 1
-       then 'Required field ''po_reference'' is empty'
-       else '' end as schema_warnings
-from orders
-""",
-        "q62_salted_host_counts": """
-select case when doc_id % 10 < 3 then 'hot.example.com'
-            else 'host-' || (doc_id % 97)::VARCHAR || '.example.org' end as host,
-       count(*) as n_docs
-from documents
-group by 1
-""",
-        "q59_lang_trigram": _q59_oracle_sql(),
-        "q60_gopher_quality": _q60_oracle_sql(),
-        "q27_hourly_event_counts": """
-select date_trunc('hour', ts) as hour, event_type,
-  count(*) as n_events, round(sum(value), 2) as sum_value
-from events group by 1, 2
-""",
-        "q29_chunk_merge": """
-with chunks as (
-  select source, doc_id, text, (n_chars % 100) / 100.0 as conf
-  from documents
-)
-select source,
-  substr(string_agg(text, ' ' order by doc_id), 1, 80) as merged_text_prefix,
-  substr(arg_min(text, doc_id), 1, 20) as first_text_prefix,
-  round(avg(conf), 3) as mean_conf,
-  round(least(1.0, exp(avg(greatest(ln(greatest(conf, 1e-12)), -10.0)))), 3)
-    as geo_conf,
-  count(*) as n_chunks
-from chunks group by source
-""",
-        "q30_token_counts_bpe": r"""
-select doc_id,
-  case when length(trim(text)) = 0 then 0
-       else len(regexp_split_to_array(trim(text), '\s+')) end as n_tokens_ws,
-  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))
-    as n_tokens_bpe
-from documents
-""",
-        "q31_winnowing_fingerprints": """
-with g as (
-  select doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') as norm
-  from documents
-), h as (
-  select doc_id,
-    case when length(norm) < 8 then []
-         else [md5(substr(norm, i, 8))
-               for i in range(1, greatest(length(norm) - 7, 1) + 1)]
-    end as hashes
-  from g
-), w as (
-  select doc_id,
-    case when len(hashes) = 0 then []
-         else list_sort(list_distinct(
-                [list_min(hashes[i:i+3])
-                 for i in range(1, greatest(len(hashes) - 3, 1) + 1)]))
-    end as fps
-  from h
-)
-select doc_id, len(fps) as n_fp, md5(array_to_string(fps, '')) as sketch
-from w
-""",
-        "q33_json_props": """
-select event_id,
-  array_to_string(list_sort(json_keys(props)), ',') as prop_keys,
-  try_cast(json_extract_string(props, '$.k') as bigint) as k_value,
-  len(json_keys(props)) as n_props
-from events
-""",
-        "q36_curated_corpus": f"""
-with {_minhash_cte()},
-fp as (select doc_id, {fingerprint_expr} as fp from documents),
-canon as (
-  select doc_id from (
-    select doc_id, min(doc_id) over (partition by fp) as canonical_id from fp
-  ) where doc_id = canonical_id
-),
-near_losers as (
-  select distinct cand.id_b as doc_id
-  from cand join jacc on cand.id_a = jacc.id_a and cand.id_b = jacc.id_b
-  where jacc.jaccard >= 0.8
-),
-{_SCORED_CTE}
-select s.doc_id, s.lang, s.quality, s.n_tokens
-from scored s
-join canon using (doc_id)
-where s.doc_id not in (select doc_id from near_losers)
-  and s.quality >= 0.5
-""",
-        "q57_curated_corpus_v2": _curate_v2_sql(fingerprint_expr),
-        "q65_curated_corpus_v3": _curate_v2_sql(
-            fingerprint_expr,
-            extra_cte=_emb_losers_cte(),
-            extra_where="  and s.doc_id not in (select id_b from emb_losers)\n",
-        ),
-        "q66_exact_dedup_delta": f"""
-with {_DELTA_SPLIT_CTE},
-fpo as (select doc_id, coalesce({fingerprint_expr}, 'null-text') as fp from old),
-fpn as (select doc_id, coalesce({fingerprint_expr}, 'null-text') as fp from new),
-groups as (
-  select fp, min(doc_id) as canonical_id, count(*) as group_size
-  from (select * from fpo union all select * from fpn) group by fp
-),
-idx as (select distinct fp from fpo)
-select f.doc_id, g.canonical_id, g.group_size,
-       f.doc_id != g.canonical_id as is_dup,
-       exists (select 1 from idx where idx.fp = f.fp) as in_index
-from fpn f join groups g using (fp)
-""",
-        "q67_span_dedup": _span_sql(_SPAN_DEDUP_MARKED),
-        "q68_bpe_token_counts": f"""
-select doc_id, n_tokens_bpe from read_parquet('{_q68_golden_path()}')
-""",
-        "q69_lang_trained": f"""
-select doc_id, lang_pred from read_parquet('{_q69_golden_path()}')
-""",
-        "q70_span_decontaminate": _span_sql(_SPAN_DECON_MARKED),
-        "q71_minhash_lsh_delta": _minhash_delta_sql(),
-        "q76_lm_perplexity": _q76_oracle_sql(),
-        "q77_mixture_sample": _q77_oracle_sql(),
-        "q78_bpe_pair_counts": r"""
-with words as (
-  select unnest(regexp_extract_all(text,
-                '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) as word
-  from documents where text is not null
-),
-freqs as (select word, count(*) as freq from words group by word),
-pairs as (
-  select substr(word, i, 1) as left_sym, substr(word, i + 1, 1) as right_sym,
-         freq
-  from freqs, unnest(generate_series(1::bigint, length(word) - 1)) g(i)
-),
-counted as (
-  select left_sym, right_sym, sum(freq)::bigint as pair_count
-  from pairs group by 1, 2 having sum(freq) >= 2
-)
-select left_sym, right_sym, pair_count,
-  row_number() over (order by pair_count desc, left_sym, right_sym) as rnk
-from counted
-""",
-        "q73_curated_corpus_v4": _curate_v4_sql(fingerprint_expr),
-        "q79_curated_corpus_v5": _curate_v5_sql(fingerprint_expr),
-        "q75_embedding_near_dup_delta": _q75_oracle_sql(),
-        "q74_sequence_pack": f"""
-with toks as (
-  select doc_id, doc_id % 64 as shard, n_tokens_bpe
-  from read_parquet('{_q68_golden_path()}')
-),
-c as (
-  select doc_id, n_tokens_bpe,
-         sum(n_tokens_bpe) over (order by shard, doc_id
-                                 rows unbounded preceding) as end_offset
-  from toks
-)
-select doc_id, n_tokens_bpe as n_tokens,
-       (end_offset - n_tokens_bpe)::bigint as start_offset,
-       end_offset::bigint as end_offset,
-       ((end_offset - n_tokens_bpe) // 256)::bigint as first_seq,
-       (case when n_tokens_bpe > 0 then (end_offset - 1) // 256
-             else (end_offset - n_tokens_bpe) // 256 end)::bigint as last_seq,
-       (case when n_tokens_bpe > 0
-             then (end_offset - 1) // 256
-                  - (end_offset - n_tokens_bpe) // 256 + 1
-             else 0 end)::bigint as n_seqs
-from c
-""",
-        "q72_token_budget_bpe": f"""
-with {_SCORED_CTE},
-bpe as (select doc_id, n_tokens_bpe
-        from read_parquet('{_q68_golden_path()}')),
-j as (select s.doc_id, s.lang, s.quality, b.n_tokens_bpe as n_tokens
-      from scored s join bpe b using (doc_id)),
-c as (
-  select doc_id, lang, quality, n_tokens,
-    (sum(n_tokens) over (partition by lang order by quality desc, doc_id
-                         rows unbounded preceding))::bigint as cum_tokens
-  from j
-)
-select doc_id, lang, quality, n_tokens, cum_tokens from c
-where cum_tokens <= 3000
-""",
-        "q37_url_canonicalize": r"""
-with raw as (
-  select event_id,
-    case (event_id % 23)
-""" + "".join(
-            f"      when {i} then '{u}'\n" for i, u in enumerate(_URL_SAMPLES)
-        ) + r"""      else
-    'HTTPS://Src' || (event_id % 20) || '.Example.COM:443/Path//' || event_id ||
-    (case when event_id % 3 = 0 then '/?utm_source=x&q=1'
-          when event_id % 3 = 1 then '/#frag' else '/' end)
-    end as raw_url
-  from events
-), """ + _URL_CANON_CHAIN_SQL + f"""
-select event_id, raw_url,
-  {_URL_CANON_FINAL_SQL} as canonical_url
-from s5
-""",
-        "q80_url_frontier_delta": f"""
-with {_q80_frontier_ctes()}
-select canon_url, first_id, n_discovered, in_seen, to_crawl from fr
-""",
-        "q83_frontier_host_cap": f"""
-with {_q80_frontier_ctes()},
-hosted as (
-  select canon_url, first_id,
-    regexp_extract(canon_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-      as host
-  from fr where to_crawl
-),
-ranked as (
-  select canon_url, host, first_id,
-    row_number() over (partition by host
-                       order by first_id % 64, md5(canon_url), canon_url)
-      as pick_rank
-  from hosted
-)
-select canon_url, host, first_id, pick_rank::bigint as pick_rank
-from ranked where pick_rank <= 20
-""",
-        "q84_host_pagerank": _q84_pagerank_sql(3),
-        "q85_link_degree_stats": f"""
-with {_q84_graph_ctes()},
-outs as (
-  select src as host, count(*)::bigint as out_hosts,
-    sum(weight)::bigint as out_weight
-  from edges group by src
-),
-ins as (
-  select dst as host, count(*)::bigint as in_hosts,
-    sum(weight)::bigint as in_weight
-  from edges group by dst
-)
-select coalesce(o.host, i.host) as host,
-  coalesce(o.out_hosts, 0) as out_hosts,
-  coalesce(o.out_weight, 0) as out_weight,
-  coalesce(i.in_hosts, 0) as in_hosts,
-  coalesce(i.in_weight, 0) as in_weight
-from outs o full outer join ins i on o.host = i.host
-""",
-        # q87: the asset-extension regex is injected verbatim from
-        # operators/urls._ASSET_EXT_RE (plain alternation — identical
-        # semantics in Java regex and RE2); regexp_replace needs the
-        # explicit 'g' flag in DuckDB (Spark replaces all by default)
-        "q87_url_prefilter": """
-with raw as (
-  select 'http://'
-    || case when event_id % 2 = 0 then 'www.' else '' end
-    || 'host' || (event_id % 13)::varchar || '.example.com'
-    || case
-         when event_id % 5 = 0
-           then '/img/' || event_id::varchar || '.jpg'
-         when event_id % 5 = 1
-           then '/session/' || (event_id * 987654321)::varchar
-         when event_id % 5 = 2
-           then '/l/' || repeat('x', (event_id % 90)::int)
-         else '/article/x' || (event_id % 50)::varchar
-       end as url
-  from events
-),
-u as (
-  select url,
-    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host,
-    regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') as after
-  from (select distinct url from raw)
-),
-p as (
-  select url, host,
-    case when instr(after, '?') > 0
-      then substr(after, 1, instr(after, '?') - 1) else after end as path0
-  from u
-),
-f as (
-  select url, host,
-    case when path0 = '' then '/' else path0 end as path,
-    list_transform(
-      range(1, len(string_split(host, '.')) + 1),
-      i -> array_to_string(string_split(host, '.')[i:], '.')
-    ) as sufs
-  from p
-)
-select url, host,
-  regexp_matches(lower(path), '{asset_re}') as is_asset,
-  (2 * length(regexp_replace(path, '[^0-9]', '', 'g')) > length(path))
-    as digit_heavy,
-  (length(url) > 60) as too_long,
-  list_has_any(sufs, ['host3.example.com', 'spam.test'])
-    as blocked_domain,
-  not (regexp_matches(lower(path), '{asset_re}')
-       or (2 * length(regexp_replace(path, '[^0-9]', '', 'g'))
-           > length(path))
-       or (length(url) > 60)
-       or list_has_any(sufs, ['host3.example.com', 'spam.test']))
-    as keep
-from f
-""".replace("{asset_re}", _ASSET_EXT_RE),
-        # q88: q80 frontier → prefilter → robots → host cap, one chain.
-        # The robots match target is path+QUERY (tgt), the prefilter's
-        # asset/digit tests use the query-stripped path — keep both in
-        # lockstep with url_prefilter/robots_filter.
-        "q88_frontier_politeness": f"""
-with {_q80_frontier_ctes()},
-pfu as (
-  select fr.*,
-    regexp_extract(canon_url,
-                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host,
-    regexp_replace(canon_url,
-                   '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') as after
-  from fr
-),
-pff as (
-  select *,
-    case when after = '' then '/' else after end as tgt,
-    case when instr(after, '?') > 0
-      then (case when substr(after, 1, instr(after, '?') - 1) = ''
-              then '/' else substr(after, 1, instr(after, '?') - 1) end)
-      else (case when after = '' then '/' else after end)
-    end as path,
-    list_transform(
-      range(1, len(string_split(host, '.')) + 1),
-      i -> array_to_string(string_split(host, '.')[i:], '.')
-    ) as sufs
-  from pfu
-),
-pf as (
-  select canon_url, first_id, to_crawl, host, tgt,
-    (regexp_matches(lower(path), '{{asset_re}}')
-     or (5 * length(regexp_replace(path, '[^0-9]', '', 'g'))
-         > 3 * length(path))
-     or (length(canon_url) > 32)
-     or list_has_any(sufs, ['host5.example.com'])) as filtered
-  from pff
-),
-robots as (
-  select 'host' || i::varchar || '.example.com' as host,
-    case when i % 2 = 0
-      then 'User-agent: *' || chr(10) || 'Disallow: /u/' || chr(10)
-           || 'Allow: /u/2'
-      else 'User-agent: OtherBot' || chr(10) || 'Disallow: /'
-           || chr(10) || chr(10) || 'User-agent: *' || chr(10)
-           || 'Disallow: /p/9'
-    end as txt
-  from generate_series(0, 6) t(i)
-),
-{_robots_parse_ctes()},
-rj as (
-  select pf.canon_url, pf.first_id, pf.host, pf.to_crawl, pf.filtered,
-    r.is_allow, r.prefix_len,
-    (r.prefix is not null
-     and substr(pf.tgt, 1, r.prefix_len::int) = r.prefix) as hit
-  from pf left join rules2 r using (host)
-),
-rag as (
-  select canon_url, first_id, host, to_crawl, filtered,
-    coalesce(max(case when is_allow and hit then prefix_len end), -1)
-      as al,
-    coalesce(max(case when not is_allow and hit then prefix_len end), -1)
-      as dl
-  from rj
-  group by canon_url, first_id, host, to_crawl, filtered
-),
-decided as (
-  select canon_url, first_id, host from rag
-  where to_crawl and not filtered and al >= dl
-),
-ranked as (
-  select canon_url, host, first_id,
-    row_number() over (partition by host
-                       order by first_id % 64, md5(canon_url), canon_url)
-      as pick_rank
-  from decided
-)
-select canon_url, host, first_id, pick_rank::bigint as pick_rank
-from ranked where pick_rank <= 10
-""".replace("{asset_re}", _ASSET_EXT_RE),
-        # q86: robots parse (windows partition by host) + longest-match
-        # apply (conditional maxes) — keep in lockstep with
-        # operators/robots.py
-        "q86_robots_filter": f"""
-with lurls as (
-  select 'http://host' || (event_id % 13)::varchar || '.example.com/p/'
-           || event_id::varchar as url
-  from events
-  union
-  select 'http://host' || (case when event_id % 2 = 0
-             then (event_id * 7 + 3) % 13
-             else event_id % 3 end)::varchar
-           || '.example.com/q/' || (event_id % 211)::varchar
-  from events
-),
-robots as (
-  select 'host' || i::varchar || '.example.com' as host,
-    case when i % 3 = 0
-      then 'User-agent: *' || chr(10) || 'Disallow: /p/' || chr(10)
-           || 'Allow: /p/1'
-      else 'User-agent: BadBot' || chr(10) || 'Disallow: /' || chr(10)
-           || chr(10) || 'User-agent: *' || chr(10) || 'Disallow: /q/'
-    end as txt
-  from generate_series(0, 12) t(i) where i % 3 != 2
-),
-{_robots_parse_ctes()},
-u as (
-  select url,
-    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host,
-    case when regexp_replace(url,
-            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') = '' then '/'
-      else regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '')
-    end as tgt
-  from (select distinct url from lurls)
-),
-j as (
-  select u.url, u.host, r.prefix, r.is_allow, r.prefix_len,
-    (r.prefix is not null
-     and substr(u.tgt, 1, r.prefix_len::int) = r.prefix) as hit
-  from u left join rules2 r using (host)
-),
-agg as (
-  select url, host,
-    coalesce(max(case when is_allow and hit then prefix_len end), -1)
-      ::bigint as robots_allow_len,
-    coalesce(max(case when not is_allow and hit then prefix_len end), -1)
-      ::bigint as robots_dis_len
-  from j group by url, host
-)
-select url, host, robots_allow_len, robots_dis_len,
-  (robots_allow_len >= robots_dis_len) as robots_allowed
-from agg
-""",
-        "q89_distinctive_terms": """
-with tok as (
-  select doc_id,
-    unnest(string_split_regex(lower(text), '[^a-z0-9]+')) as term
-  from documents
-),
-tf as (
-  select doc_id, term, count(*)::bigint as tf
-  from tok where term != '' group by doc_id, term
-),
-df as (select term, count(*)::bigint as df from tf group by term),
-ranked as (
-  select tf.doc_id, tf.term, tf.tf, df.df,
-    row_number() over (partition by tf.doc_id
-                       order by (tf.tf::double / df.df) desc, tf.term)
-      as pick_rank
-  from tf join df using (term)
-)
-select doc_id, term, tf, df, pick_rank::bigint as pick_rank
-from ranked where pick_rank <= 5
-""",
-        # q90: sitemap parse (regexp_extract_all + entity decode) →
-        # canon chain (distinct raw urls, joined back) → seen probe
-        "q90_sitemap_discovery": f"""
-with ent as (
-  select (event_id % 7) as hid,
-    '<url><loc> https://Host' || (event_id % 7)::varchar
-      || '.example.com/s/' || (event_id % 509)::varchar
-      || case when event_id % 4 = 0
-           then '?x=1&amp;utm_source=z' else '' end
-      || ' </loc></url>' as entry
-  from events
-),
-xml as (
-  select hid,
-    '<urlset>' || string_agg(entry, '' order by entry) || '</urlset>'
-      as sitemap_xml
-  from ent group by hid
-),
-sm as (
-  select 'host' || hid::varchar || '.example.com' as host, sitemap_xml
-  from xml
-),
-locs as (
-  select host,
-    unnest(regexp_extract_all(sitemap_xml, '<loc>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</loc>', 1))
-      as loc_url
-  from sm
-),
-dec as (
-  select host, dec_url from (
-    select host,
-      replace(replace(replace(replace(replace(loc_url,
-        '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', chr(39)),
-        '&amp;', '&') as dec_url
-    from locs
-  ) where dec_url != ''
-),
-raw as (select distinct 0::bigint as event_id, dec_url as raw_url from dec),
-{_URL_CANON_CHAIN_SQL},
-cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5),
-canon as (
-  select distinct d.host, c.canon_url
-  from dec d join cmap c on d.dec_url = c.raw_url
-),
-seen as (
-  select distinct 'https://host' || (event_id % 7)::varchar
-    || '.example.com/s/' || (event_id % 509)::varchar as canon_url
-  from events where event_id % 3 != 0
-)
-select c.host, c.canon_url,
-  (s.canon_url is not null) as in_seen,
-  (s.canon_url is null) as to_crawl
-from canon c left join seen s using (canon_url)
-""",
-        # q91: q80 frontier ⋈ q84 ranks, global top-budget in the
-        # exact total order (set compare — the driver sorts rows)
-        "q91_priority_frontier": f"""
-with {_q80_frontier_ctes()},
-{_q84_pagerank_ctes(3)},
-f as (
-  select canon_url,
-    regexp_extract(canon_url,
-                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) as host
-  from fr where to_crawl
-),
-j as (
-  select f.canon_url, f.host, coalesce(r.r, 0)::bigint as host_rank
-  from f left join r3 r on r.host = f.host
-)
-select canon_url, host, host_rank from j
-order by host_rank desc, md5(canon_url), canon_url
-limit 150
-""",
-        # q92: group front half + crawl-delay tail; caps override the
-        # scalar 15 via coalesce
-        "q92_crawl_delay_caps": f"""
-with {_q80_frontier_ctes()},
-robots as (
-  select 'host' || i::varchar || '.example.com' as host,
-    case when i % 2 = 0
-      then 'User-agent: *' || chr(10) || 'Crawl-delay: '
-           || (i + 2)::varchar || chr(10) || 'Disallow: /u/9'
-      else 'User-agent: BadBot' || chr(10) || 'Crawl-delay: 1'
-           || chr(10) || chr(10) || 'User-agent: *' || chr(10)
-           || 'Crawl-delay: fast'
-    end as txt
-  from generate_series(0, 6) t(i)
-),
-{_robots_group_ctes()},
-dvals as (
-  select g.host,
-    regexp_replace(
-      regexp_extract(g.l, '(?i)^crawl-delay[ \t]*:([^\r\n]*)', 1),
-      '^[ \t\r]+|[ \t\r]+$', '', 'g') as v
-  from grouped g join star s using (host, grp)
-  where regexp_matches(g.l, '(?i)^crawl-delay[ \t]*:') and g.grp > 0
-),
-delays as (
-  select host, max(try_cast(v as bigint)) as crawl_delay
-  from dvals
-  where regexp_matches(v, '^[0-9]+$')
-    and try_cast(v as bigint) is not null
-  group by host
-),
-caps as (
-  select host,
-    least(25, case when crawl_delay > 0 then 60 // crawl_delay
-                   else 25 end)::bigint as cap
-  from delays
-),
-hosted as (
-  select canon_url, first_id,
-    regexp_extract(canon_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-      as host
-  from fr where to_crawl
-),
-ranked as (
-  select canon_url, host, first_id,
-    row_number() over (partition by host
-                       order by first_id % 64, md5(canon_url), canon_url)
-      as pick_rank
-  from hosted
-)
-select r.canon_url, r.host, r.first_id, r.pick_rank::bigint as pick_rank
-from ranked r left join caps c using (host)
-where r.pick_rank <= coalesce(c.cap, 15)
-""",
-        # q93: block-scoped sitemap entries (loc paired with ITS
-        # lastmod) → canon → crawl-history probe; ISO text dates
-        "q93_sitemap_recrawl": f"""
-with ent0 as (
-  select (event_id % 7) as hid,
-    '<url>' || chr(10) || '  <loc>https://Host'
-      || (event_id % 7)::varchar || '.example.com/s/'
-      || (event_id % 509)::varchar || '</loc>' || chr(10) || '  '
-      || case when (event_id % 509) % 4 != 0
-           then '<lastmod>2026-01-'
-                || lpad(((event_id % 28) + 1)::varchar, 2, '0')
-                || '</lastmod>'
-           else '' end
-      || chr(10) || '</url>' as entry
-  from events
-),
-xml as (
-  select hid,
-    '<urlset>' || string_agg(entry, '' order by entry) || '</urlset>'
-      as sitemap_xml
-  from ent0 group by hid
-),
-sm as (
-  select 'host' || hid::varchar || '.example.com' as host, sitemap_xml
-  from xml
-),
-blocks as (
-  select host,
-    unnest(regexp_extract_all(sitemap_xml, '(?s)<url>(.*?)</url>', 1))
-      as b
-  from sm
-),
-parsed as (
-  select host,
-    replace(replace(replace(replace(replace(
-      regexp_extract(b, '(?s)<loc>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</loc>', 1),
-      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', chr(39)),
-      '&amp;', '&') as raw_url,
-    nullif(regexp_extract(b, '(?s)<lastmod>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</lastmod>', 1),
-           '') as lastmod
-  from blocks
-  where regexp_extract(b, '(?s)<loc>[ \t\r\n\f]*(.*?)[ \t\r\n\f]*</loc>', 1) != ''
-),
-raw as (select distinct 0::bigint as event_id, raw_url from parsed),
-{_URL_CANON_CHAIN_SQL},
-cmap as (select raw_url, {_URL_CANON_FINAL_SQL} as canon_url from s5),
-canon as (
-  select p.host, c.canon_url, max(p.lastmod) as lastmod
-  from parsed p join cmap c using (raw_url)
-  group by p.host, c.canon_url
-),
-crawled as (
-  select distinct 'https://host' || (event_id % 7)::varchar
-      || '.example.com/s/' || (event_id % 509)::varchar as canon_url,
-    '2026-01-15' as crawled_at
-  from events where event_id % 3 = 0
-)
-select c.host, c.canon_url, c.lastmod, h.crawled_at,
-  (h.crawled_at is null
-   or (c.lastmod is not null and c.lastmod > h.crawled_at))
-    as needs_fetch
-from canon c left join crawled h using (canon_url)
-""",
-        "q81_cluster_balanced_sample": _q81_oracle_sql(),
-        # q94: per-site boilerplate line removal — line identity is
-        # the [ \t\r]-stripped form; blank lines never boilerplate;
-        # reassembly ordered by original position
-        "q94_boilerplate_lines": """
-with aug as (
-  select doc_id, source,
-    'NAV ' || source || ' HOME | ABOUT' || chr(10)
-      || 'PROMO ' || (doc_id % 97)::varchar || chr(10) || text
-      || case when doc_id % 3 != 0
-           then chr(10) || 'COPYRIGHT ' || source else '' end as text
-  from documents
-),
-lines as (
-  select doc_id, source,
-    generate_subscripts(l, 1) as pos, unnest(l) as line
-  from (select doc_id, source, string_split(text, chr(10)) as l from aug)
-),
-t as (
-  select doc_id, source, pos, line,
-    regexp_replace(line, '^[ \t\r]+|[ \t\r]+$', '', 'g') as lt
-  from lines
-),
-freq as (
-  select source, lt, count(distinct doc_id) as line_docs
-  from t where lt != '' group by source, lt
-),
-fl as (
-  select t.doc_id, t.source, t.pos, t.line,
-    coalesce(f.line_docs >= 5, false) as bp
-  from t left join freq f on t.source = f.source and t.lt = f.lt
-)
-select doc_id, source,
-  coalesce(string_agg(case when not bp then line end, chr(10)
-                      order by pos), '') as clean_text,
-  count(*)::bigint as n_lines,
-  sum(bp::int)::bigint as n_removed
-from fl group by doc_id, source
-""",
-        # q95: revisit collapse — latest capture per url + changed-
-        # vs-previous digest; (ts desc, id desc) total order
-        "q95_capture_delta": """
-with caps as (
-  select event_id, ts,
-    'http://h' || (k % 13)::varchar || '.example.com/p/' || k::varchar
-      as canon_url,
-    md5('c' || (event_id % 3)::varchar || '-' || k::varchar) as digest
-  from (
-    select event_id, ts,
-      case when event_id % 11 = 0 then event_id + 100000
-           else event_id % 997 end as k
-    from events
-  )
-),
-w as (
-  select canon_url, ts, event_id, digest,
-    row_number() over (partition by canon_url
-                       order by ts desc, event_id desc) as rn,
-    lead(digest) over (partition by canon_url
-                       order by ts desc, event_id desc) as prev_digest,
-    count(*) over (partition by canon_url) as n_captures
-  from caps
-)
-select canon_url, n_captures::bigint as n_captures, ts as latest_ts,
-  event_id as latest_id, digest, prev_digest,
-  (prev_digest is null or digest != prev_digest) as changed
-from w where rn = 1
-""",
-        # q96: host-reputation gate — scaled-int mean quality per
-        # source (exact at any parallelism), threshold 0.67
-        "q96_host_quality_filter": f"""
-with {_SCORED_CTE},
-qs as (
-  select s.doc_id, d.source, s.quality,
-    cast(round(s.quality * 10000) as bigint) as qsc
-  from scored s join documents d using (doc_id)
-),
-host as (
-  select source, (sum(qsc) // count(1))::bigint as host_q_scaled
-  from qs group by source
-)
-select q.doc_id, q.source, q.quality, h.host_q_scaled,
-  h.host_q_scaled >= 6700 as keep
-from qs q join host h using (source)
-""",
-        # q97: blank-line paragraph explode → per-paragraph wide
-        # detector (shared SQL parts with q52) → exact argmax per doc
-        "q97_paragraph_lang_mix": _q97_oracle_sql(),
-        # q98: DuckDB's nfc_normalize is an INDEPENDENT Unicode NFC
-        # implementation — a genuine cross-check of the Arrow UDF;
-        # regex steps mirror the operator byte for byte
-        "q98_normalize_text": r"""
-with aug as (
-  select doc_id,
-    case (doc_id % 5)
-      when 0 then 'Cafe' || chr(769) || ': ' || text
-      when 1 then 'A' || chr(8203) || 'B' || chr(65279) || ' ' || text
-      when 2 then chr(7) || 'bell ' || chr(31) || text
-      when 3 then 'line one  ' || chr(13) || chr(10) || 'line two'
-               || chr(13) || chr(10) || text
-      else text end as text
-  from documents
-),
-cleaned as (
-  select doc_id, text,
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(nfc_normalize(text),
-                  '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g'),
-                '\r\n', chr(10), 'g'),
-              '\r', chr(10), 'g'),
-            '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-          '[ \t]+\n', chr(10), 'g'),
-        '[ \t]+\z', '', 'g'),
-      '\n{3,}', chr(10) || chr(10), 'g') as clean_text
-  from aug
-)
-select doc_id, clean_text,
-  length(text)::bigint as n_chars_raw,
-  length(clean_text)::bigint as n_chars_clean,
-  (clean_text != text) as changed
-from cleaned
-""",
-        "q99_outlink_extraction": f"""
-with {_q99_outlink_ctes()}
-select src_url, dst_url, anchor from olinks
-""",
-        "q100_anchor_stats": f"""
-with {_q99_outlink_ctes()},
-pa as (select dst_url, anchor, count(*)::bigint as n
-       from olinks group by dst_url, anchor),
-ranked as (select dst_url, anchor, n,
-    row_number() over (partition by dst_url
-                       order by n desc, anchor) as rn,
-    sum(n) over (partition by dst_url) as tot from pa),
-srcs as (select dst_url, count(distinct src_url)::bigint as n_srcs
-         from olinks group by dst_url)
-select r.dst_url, r.tot::bigint as n_links, s.n_srcs,
-  r.anchor as top_anchor, r.n as top_anchor_links
-from ranked r join srcs s using (dst_url) where r.rn = 1
-""",
-        "q101_registered_domains": f"""
-with hosts as (
-  select doc_id, {_Q101_HOST_SQL} as host from documents
-),
-rd as (select host, {_regdomain_sql("host")} as registered_domain
-       from hosts)
-select registered_domain, count(distinct host)::bigint as n_hosts,
-  count(*)::bigint as n_docs
-from rd group by registered_domain
-""",
-        "q102_page_metadata": _q102_oracle_sql(),
-        "q103_extracted_pagerank": _q103_oracle_sql(),
-        "q104_domain_budget": f"""
-with fr as (
-  select
-    'http://s' || (event_id % 41)::varchar || '.' ||
-    case when event_id % 5 < 2
-           then 'spam' || (event_id % 3)::varchar || '.example.com'
-         when event_id % 5 = 2
-           then 'good' || (event_id % 17)::varchar || '.co.uk'
-         when event_id % 5 = 3
-           then 'u' || (event_id % 29)::varchar || '.github.io'
-         else 'example' || (event_id % 13)::varchar || '.org' end
-    || '/p/' || event_id::varchar as canon_url,
-    event_id as first_id
-  from events
-),
-hosted as (
-  select canon_url, first_id,
-    {_regdomain_sql(f"regexp_extract(canon_url, {_HOST_EXTRACT_SQL})")}
-      as host
-  from fr
-),
-ranked as (
-  select canon_url, host, first_id,
-    row_number() over (partition by host
-                       order by first_id % 64, md5(canon_url), canon_url)
-      as pick_rank
-  from hosted
-)
-select canon_url, host, first_id, pick_rank
-from ranked where pick_rank <= 25
-""",
-        "q105_charset_sniff": _q105_oracle_sql(),
-        "q106_canonical_collapse": _q106_oracle_sql(),
-        "q107_discovery_frontier": f"""
-with {_q99_outlink_ctes()},
-newl as (
-  select (regexp_extract(src_url, '/dir/([0-9]+)\\.html', 1))::bigint
-           as doc_id,
-         dst_url
-  from olinks
-),
-grp as (
-  select dst_url as canon_url, min(doc_id) as first_id,
-         count(*) as n_discovered
-  from newl group by dst_url
-),
-seen as (
-  select distinct 'http://www.site' || (doc_id % 13)::varchar
-    || '.example.co.uk/cat/' || (doc_id % 97)::varchar as canon_url
-  from documents where doc_id % 2 = 0
-)
-select g.canon_url, g.first_id, g.n_discovered,
-  (s.canon_url is not null) as in_seen,
-  (s.canon_url is null) as to_crawl
-from grp g left join seen s using (canon_url)
-""",
-        "q108_robots_sitemaps": r"""
-with r as (
-  select id, 'host' || id::varchar || '.example.org' as host,
-    case when id % 4 = 0 then
-        'Sitemap: https://host' || id::varchar
-        || '.example.org/sitemap.xml' || chr(10)
-        || 'Sitemap: https://host' || id::varchar
-        || '.example.org/s2.xml # primary' || chr(10)
-        || 'User-agent: *' || chr(10) || 'Disallow: /p/'
-      when id % 4 = 1 then
-        'User-agent: BadBot' || chr(10) || 'Disallow: /' || chr(10)
-        || 'Sitemap: https://host' || id::varchar
-        || '.example.org/inside.xml'
-      when id % 4 = 2 then
-        'sitemap:https://host' || id::varchar
-        || '.example.org/a.xml' || chr(10)
-        || 'SITEMAP:  https://cdn.example.net/shared.xml  ' || chr(10)
-        || 'Sitemap: /relative-junk' || chr(10)
-        || 'Sitemap: https://host' || id::varchar
-        || '.example.org/a.xml'
-      else 'User-agent: *' || chr(10) || 'Disallow: /' end
-      as robots_txt
-  from range(19) t(id)
-),
-l as (
-  select host,
-    regexp_replace(regexp_replace(
-      unnest(string_split(robots_txt, chr(10))), '#.*$', '', 'g'),
-      '^[ \t\r]+|[ \t\r]+$', '', 'g') as l
-  from r
-),
-sm as (
-  select host,
-    regexp_replace(regexp_extract(l, '(?i)^sitemap[ \t]*:[ \t]*([^\r\n]*)', 1),
-                   '^[ \t\r]+|[ \t\r]+$', '', 'g') as sitemap_url
-  from l where regexp_matches(l, '(?i)^sitemap[ \t]*:')
-)
-select distinct host, sitemap_url from sm
-where regexp_matches(sitemap_url, '(?i)^https?://')
-""",
-        # q109: the oracle computes (url, md5, BYTE length) straight
-        # from the generator — the Spark side must reproduce it from
-        # bytes that round-tripped through WET shards on disk.
-        # DuckDB strlen() is bytes (length() is chars).
-        "q109_wet_roundtrip": """
-select 'http://w' || (doc_id % 13)::varchar || '.example.com/doc/'
-         || doc_id::varchar as url,
-  md5(text) as text_md5,
-  strlen(text)::bigint as n_bytes
-from documents
-""",
-        "q110_c4_line_clean": _q110_oracle_sql(),
-        "q111_wat_roundtrip": _q111_oracle_sql(),
-        "q113_redirect_resolution": f"""
-with {_q113_resolution_ctes()}
-select start_url, final_url, n_hops, status from res
-""",
-        "q114_final_url_collapse": f"""
-with {_q113_resolution_ctes()}
-select final_url, count(*)::bigint as n_entry_urls,
-  min(start_url) as first_entry,
-  sum(case when n_hops > 0 then 1 else 0 end)::bigint
-    as n_redirect_entries
-from res where status = 'ok' group by final_url
-""",
-        "q115_trap_templates": r"""
-with log as (
-  select case
-    when event_id % 4 = 0 then
-      'http://cal.example.com/cal/' || (event_id % 997)::varchar
-      || '/' || (event_id % 31)::varchar
-    when event_id % 4 = 1 then
-      'http://shop.example.com/item?sid=' || md5((event_id)::varchar)
-    else 'http://h' || (event_id % 7)::varchar || '.example.com/p/'
-         || (event_id % 37)::varchar
-  end as url
-  from events
-),
-t as (
-  select
-    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-      as host,
-    regexp_replace(regexp_replace(
-      regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''),
-      '(?i)[0-9a-f]{8,}', '{h}', 'g'),
-      '[0-9]+', '{d}', 'g') as template,
-    url
-  from log
-)
-select host, template, count(distinct url)::bigint as n_urls,
-  count(distinct url) >= 50 as is_trap
-from t group by host, template
-""",
-        "q117_trap_filtered_frontier": r"""
-with log as (
-  select case
-    when event_id % 4 = 0 then
-      'http://cal.example.com/cal/' || (event_id % 997)::varchar
-      || '/' || (event_id % 31)::varchar
-    when event_id % 4 = 1 then
-      'http://shop.example.com/item?sid=' || md5((event_id)::varchar)
-    else 'http://h' || (event_id % 7)::varchar || '.example.com/p/'
-         || (event_id % 37)::varchar
-  end as url
-  from events
-),
-tl as (
-  select
-    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-      as host,
-    regexp_replace(regexp_replace(
-      regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''),
-      '(?i)[0-9a-f]{8,}', '{h}', 'g'),
-      '[0-9]+', '{d}', 'g') as template,
-    url
-  from log
-),
-traps as (
-  select host, template from tl
-  group by host, template having count(distinct url) >= 50
-),
-fr as (
-  select distinct case
-    when (event_id + 1) % 4 = 0 then
-      'http://cal.example.com/cal/' || ((event_id + 1) % 997)::varchar
-      || '/' || ((event_id + 1) % 31)::varchar
-    when (event_id + 1) % 4 = 1 then
-      'http://shop.example.com/item?sid='
-      || md5((event_id + 1)::varchar)
-    else 'http://h' || ((event_id + 1) % 7)::varchar
-         || '.example.com/p/' || ((event_id + 1) % 37)::varchar
-  end as canon_url,
-    min(event_id) as first_id
-  from events group by 1
-),
-ft as (
-  select canon_url, first_id,
-    regexp_extract(canon_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-      as host,
-    regexp_replace(regexp_replace(
-      regexp_replace(canon_url,
-                     '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''),
-      '(?i)[0-9a-f]{8,}', '{h}', 'g'),
-      '[0-9]+', '{d}', 'g') as template
-  from fr
-)
-select f.canon_url, f.first_id,
-  (t.host is not null) as trap_hit
-from ft f left join traps t
-  on f.host = t.host and f.template = t.template
-""",
-        "q116_error_backoff_caps": """
-with log as (
-  select 'h' || (event_id % 11)::varchar || '.example.com' as host,
-    case when event_id % 11 = 9 then 503
-         when event_id % 11 in (2, 5) and event_id % 3 = 0 then 503
-         when event_id % 7 = 0 then 404
-         else 200 end as status
-  from events
-)
-select host, count(*)::bigint as n_fetches,
-  sum((status >= 500)::int)::bigint as n_errors,
-  ((30 * (count(*) - sum((status >= 500)::int))) // count(*))::bigint
-    as cap
-from log group by host
-""",
-        "q112_domain_quality_filter": f"""
-with {_SCORED_CTE},
-hosts as (
-  select doc_id, {_Q101_HOST_SQL} as host from documents
-),
-rd as (select doc_id, {_regdomain_sql("host")} as site from hosts),
-qs as (
-  select s.doc_id, r.site, s.quality,
-    cast(round(s.quality * 10000) as bigint) as qsc
-  from scored s join rd r using (doc_id)
-),
-site as (
-  select site, (sum(qsc) // count(1))::bigint as host_q_scaled
-  from qs group by site
-)
-select q.doc_id, q.site, q.quality, h.host_q_scaled,
-  h.host_q_scaled >= 6700 as keep
-from qs q join site h using (site)
-""",
-        "q82_corpus_profile": """
-select lang, source, grouping(lang, source)::bigint as gid,
-  count(*) as n_docs, sum(n_chars)::bigint as total_chars,
-  round(avg(n_chars), 2) as avg_chars
-from documents group by cube(lang, source)
-""",
-        "q38_lsh_topk": """
-with bucketed as (
-  select vec_id, embedding,
-    ((case when list_sum(list_transform(list_zip(embedding, [1.690526, -0.465937, 0.03282, 0.407516, -0.788923, 0.002066, -0.00089, -1.754724, 1.017658, 0.600499, -0.625429, -0.171548, 0.505299, -0.261356, -0.242749, -1.453241, 0.55458, 0.123881, 0.27446, -1.526525, 1.6507, 0.154336, -0.38714, 2.029072, -0.045386, -1.450679, -0.405228, -2.288315, 1.049397, -0.416474, -0.742554, 1.07247, -1.651076, 0.535429, -2.064415, -0.662159, -1.20422, 1.461976, 1.766161, -0.329414, 0.840733, -0.179986, 0.568062, -0.752837, -1.708339, -1.803099, 0.383122, 2.247595, 0.269412, -0.524605, 1.912019, 0.237302, 0.101434, 0.252578, -0.132377, -0.309476, -1.434963, 0.501624, -0.094775, 1.193086, -0.368818, -1.90637, -0.099611, 1.699537]), x -> x[1]::DOUBLE * x[2])) > 0 then 1 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [-0.383423, -0.889857, -1.193592, -1.050017, -0.300194, -1.179982, 1.497639, -0.282635, 0.108648, 1.43824, 1.503319, -0.212733, 0.331974, 0.735027, -0.192855, -1.778013, 0.654706, 0.894352, 0.415503, -0.923545, -0.196027, -0.59077, -0.299711, 1.296885, 1.52958, 0.669418, 0.548745, 0.676629, -0.012242, -0.075663, -0.673645, -0.055867, 2.259947, 0.869039, -0.342117, -0.471927, -0.86449, 0.37437, 0.391546, -1.443122, 0.486335, -0.569472, 1.426721, 0.156844, 1.71773, -0.458127, -0.287984, 0.299808, 1.055948, 0.565882, -1.233524, 0.182901, 0.022245, -0.429069, -0.648105, 1.747577, -0.390386, -0.845923, 0.637113, 0.130623, -0.075814, 0.781302, 0.488625, 0.36219]), x -> x[1]::DOUBLE * x[2])) > 0 then 2 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [0.9642, 0.283636, -0.616922, -0.362282, -0.520972, 0.209722, -1.077985, -1.832426, 0.088155, -1.336521, -1.951978, 0.373331, -0.711053, 0.496125, -0.530854, -1.121962, -1.243518, -0.514927, -0.273383, -0.82346, -0.281108, -1.536102, 0.014489, -1.793649, -0.193856, 0.697294, 1.091939, 1.71438, -1.556288, 0.758725, 1.206282, 0.980557, -0.929324, 0.411797, 1.860056, -1.497274, 0.476338, 1.11229, -0.696591, 0.58297, -1.070893, -0.812209, -0.81708, 0.192308, -0.090981, 0.954115, -0.940279, -0.131276, 0.961076, 0.560777, -1.324641, 0.665204, -0.478418, 0.385387, 0.30068, 1.219319, 0.11656, -1.853806, -1.36986, 0.731154, -0.258316, 1.137979, 0.273439, -0.749066]), x -> x[1]::DOUBLE * x[2])) > 0 then 4 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [1.082407, -0.807398, -2.052636, 2.063796, -1.910749, 0.636413, 0.938852, 0.147066, -1.683397, 1.015015, -1.441544, -1.343629, -0.361668, 0.788505, 0.300114, 0.810768, -0.443644, -0.172183, -1.137137, -0.316865, 0.593128, -0.299828, 0.47546, -0.573274, -0.592392, 0.039169, -0.194882, 0.592385, 0.17829, 1.740346, -0.219495, -0.227253, -1.040131, 0.022778, 0.682829, -0.740296, -0.049672, 0.718557, -0.126909, -0.519137, 0.973093, 0.09702, 0.396565, 1.171393, 1.145316, -0.347204, -0.52543, 0.284309, -0.132788, -1.899861, 1.275362, 0.019361, 0.736378, -1.172917, 1.288204, -0.588263, -0.107667, -1.401425, -0.16695, -0.229804, -0.185361, 0.438505, 0.060346, 0.975783]), x -> x[1]::DOUBLE * x[2])) > 0 then 8 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [-0.468158, -0.996016, -0.019106, 0.628368, 1.244642, 0.813921, -1.765441, 0.377058, 1.460372, 0.062576, -0.516043, 0.309161, -0.503242, 0.639113, -0.012994, 1.393, 0.499503, -0.723885, 0.604631, 0.936012, -0.568456, -0.425794, -2.305183, 0.903406, -0.587754, -2.122349, -1.768772, -0.22295, 0.76066, -0.089065, 0.471778, -1.1015, -1.341366, 0.885721, 0.492144, -0.030509, 1.282093, -0.95119, -0.420266, 1.026371, 1.837794, 0.008426, 1.679519, -0.602511, 0.32975, -0.173824, -1.588248, 0.257973, 0.93275, -0.148267, -0.070455, 1.392927, -1.249714, -1.497588, -0.654039, -1.196623, 1.346289, 0.309689, -0.864093, -0.614479, 2.861067, -0.61009, -0.762025, 0.304307]), x -> x[1]::DOUBLE * x[2])) > 0 then 16 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [0.638252, 0.221682, -0.908626, -1.159187, 0.596141, -0.05419, -1.641433, 1.171001, 0.775329, -0.240954, -0.260264, 0.23146, -0.687009, -1.348312, 0.322518, -1.439087, 0.390727, -1.441207, -0.099209, -0.135645, 1.782629, -1.064383, -1.414946, -0.646177, -1.123732, -0.589762, 0.420801, 0.771977, 1.659561, -0.736674, 2.638539, 1.982185, -0.203527, -2.29142, -0.083112, 0.072508, -2.299249, 0.073832, -0.200154, -0.785711, 0.626629, 1.005348, -0.486177, 0.22948, -0.654792, -0.786606, 0.079497, 0.523422, -0.563293, -2.21367, 0.585785, -1.596558, 0.121999, 1.779026, -0.01683, -1.18975, -1.461179, 1.170462, -0.016948, 0.539738, 0.926302, -0.049002, -0.308604, -0.947348]), x -> x[1]::DOUBLE * x[2])) > 0 then 32 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [-3.082505, -1.518, -0.069594, -0.175262, 0.40356, -0.126687, 0.159358, 0.787799, -0.885045, -0.287158, -1.607213, 0.972893, 0.038418, 0.489822, 1.542483, 1.079546, -0.060001, 0.787685, -1.431704, 0.433909, 0.13891, -1.618269, 1.33732, -0.704077, 0.683229, -0.419935, 0.993543, 1.312262, -0.830049, -1.530399, -0.13141, 0.848917, -0.371312, -0.613524, 0.488282, -2.761517, -0.664716, -1.383796, 0.294814, -0.736249, -1.115168, -0.353831, -1.468408, -0.013124, -0.682372, -0.377419, -0.717138, 0.912263, -0.108854, 0.524512, 0.479785, -0.806151, 0.569973, 0.349108, 0.313649, -0.398693, -0.426844, 0.785552, 2.18196, -0.830127, 0.534448, -0.366253, 0.784857, 0.438313]), x -> x[1]::DOUBLE * x[2])) > 0 then 64 else 0 end) + (case when list_sum(list_transform(list_zip(embedding, [1.060126, -2.794785, -0.601083, -0.988185, -0.107988, -0.723866, -0.640976, 0.68186, 1.901928, -2.823831, -0.31045, 0.312054, 0.004733, -0.345135, -1.353468, -0.942672, 0.724982, 1.075762, 0.096675, -0.836172, 0.095711, -0.24004, 0.545605, 0.118299, -0.62179, 0.190673, -1.179405, 0.820012, 1.182335, -1.178504, 0.421047, -0.991262, 1.071684, 0.904119, -0.230178, 0.994934, -0.431091, -0.64301, -0.56872, -0.140851, -0.323412, 0.154345, -0.615059, 0.764696, 1.020969, -0.495862, -1.427175, 0.723873, 1.138557, -0.163248, -1.286517, 0.266761, 1.524668, -1.876327, 0.477926, -0.313635, -0.855674, 0.4982, -1.29883, 0.296945, 1.313259, 0.176689, -0.876322, -1.779309]), x -> x[1]::DOUBLE * x[2])) > 0 then 128 else 0 end)) as bucket
-  from embeddings
-), scored as (
-  select b.vec_id as query_id, a.vec_id as neighbor_id,
-    round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                                  x -> x[1]::DOUBLE * x[2]::DOUBLE))
-      / (sqrt(list_sum(list_transform(a.embedding, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(b.embedding, x -> x::DOUBLE * x::DOUBLE)))), 6) as cos
-  from bucketed a
-  join bucketed b on b.vec_id < 5 and a.vec_id != b.vec_id
-                  and a.bucket = b.bucket
-)
-select query_id, neighbor_id, cos, rank from (
-  select *, row_number() over (partition by query_id
-                               order by cos desc, neighbor_id asc) as rank
-  from scored
-) where rank <= 5
-""",
-        "q35_simhash16": """
-with tok as (
-  select doc_id,
-         unnest(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) as w
-  from documents
-), h as (
-  select doc_id, ('0x' || substr(md5(w), 1, 4))::int as hv from tok
-), b as (
-  select doc_id,
-    sum(case when (hv >> 0) & 1 = 1 then 1 else -1 end) as s0,
-    sum(case when (hv >> 1) & 1 = 1 then 1 else -1 end) as s1,
-    sum(case when (hv >> 2) & 1 = 1 then 1 else -1 end) as s2,
-    sum(case when (hv >> 3) & 1 = 1 then 1 else -1 end) as s3,
-    sum(case when (hv >> 4) & 1 = 1 then 1 else -1 end) as s4,
-    sum(case when (hv >> 5) & 1 = 1 then 1 else -1 end) as s5,
-    sum(case when (hv >> 6) & 1 = 1 then 1 else -1 end) as s6,
-    sum(case when (hv >> 7) & 1 = 1 then 1 else -1 end) as s7,
-    sum(case when (hv >> 8) & 1 = 1 then 1 else -1 end) as s8,
-    sum(case when (hv >> 9) & 1 = 1 then 1 else -1 end) as s9,
-    sum(case when (hv >> 10) & 1 = 1 then 1 else -1 end) as s10,
-    sum(case when (hv >> 11) & 1 = 1 then 1 else -1 end) as s11,
-    sum(case when (hv >> 12) & 1 = 1 then 1 else -1 end) as s12,
-    sum(case when (hv >> 13) & 1 = 1 then 1 else -1 end) as s13,
-    sum(case when (hv >> 14) & 1 = 1 then 1 else -1 end) as s14,
-    sum(case when (hv >> 15) & 1 = 1 then 1 else -1 end) as s15
-  from h group by doc_id
-)
-select doc_id, ((case when s0 > 0 then 1 else 0 end) + (case when s1 > 0 then 2 else 0 end) + (case when s2 > 0 then 4 else 0 end) + (case when s3 > 0 then 8 else 0 end) + (case when s4 > 0 then 16 else 0 end) + (case when s5 > 0 then 32 else 0 end) + (case when s6 > 0 then 64 else 0 end) + (case when s7 > 0 then 128 else 0 end) + (case when s8 > 0 then 256 else 0 end) + (case when s9 > 0 then 512 else 0 end) + (case when s10 > 0 then 1024 else 0 end) + (case when s11 > 0 then 2048 else 0 end) + (case when s12 > 0 then 4096 else 0 end) + (case when s13 > 0 then 8192 else 0 end) + (case when s14 > 0 then 16384 else 0 end) + (case when s15 > 0 then 32768 else 0 end))::int as simhash16 from b
-""",
-        "q32_user_sessions": """
-with marked as (
-  select user_id, ts, event_id,
-    case when lag(ts) over (partition by user_id order by ts, event_id) is null
-           or epoch(ts) - epoch(lag(ts) over (partition by user_id
-                                              order by ts, event_id)) > 1800.0
-         then 1 else 0 end as new_session
-  from events
-), sessions as (
-  select user_id, ts,
-    sum(new_session) over (partition by user_id order by ts, event_id
-                           rows unbounded preceding)::bigint as session_id
-  from marked
-)
-select user_id, session_id, count(*) as n_events,
-  min(ts) as session_start,
-  floor(epoch(max(ts)) - epoch(min(ts)))::bigint as session_len_sec
-from sessions group by user_id, session_id
-""",
-        "q28_event_type_stats": """
-select event_type, count(*) as n_events,
-  count(distinct user_id) as n_users,
-  round(avg(value), 4) as avg_value,
-  round(min(value), 4) as min_value,
-  round(max(value), 4) as max_value
-from events group by event_type
-""",
-    }

@@ -744,26 +744,11 @@ def generate_media_rows(n: int, seed: int = 21) -> list[tuple[int, bytes]]:
     return rows
 
 
-def _atomic_write_table(path: str, table) -> None:
-    """Temp+rename parquet write: a concurrent oracle run must never
-    see a partially-written fixture (single definition — the writers
-    below share it)."""
-    import os
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
-
-
-def write_media_fixtures(
-    media_path: str, golden_path: str, rows: list[tuple[int, bytes]]
-) -> None:
-    """Write the media parquet AND its single-process probe golden
-    (atomic temp+rename, pure pyarrow — callable from oracle_sql)."""
+def write_media_table(path: str, rows: list[tuple[int, bytes]]) -> None:
+    """Write the media fixture parquet (pure pyarrow — callable from
+    oracle_sql)."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     media = pa.table(
         {
@@ -771,6 +756,15 @@ def write_media_fixtures(
             "media": pa.array([b for _, b in rows], pa.binary()),
         }
     )
+    pq.write_table(media, path)
+
+
+def write_probe_golden(path: str, rows: list[tuple[int, bytes]]) -> None:
+    """Single-process probe golden for q49 (pure pyarrow): one
+    :func:`probe_media` row per media row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     metas = [probe_media(b) for _, b in rows]
     golden = pa.table(
         {
@@ -783,14 +777,14 @@ def write_media_fixtures(
             "duration_ms": pa.array([m["duration_ms"] for m in metas], pa.int64()),
         }
     )
-    for path, table in ((media_path, media), (golden_path, golden)):
-        _atomic_write_table(path, table)
+    pq.write_table(golden, path)
 
 
 def write_decode_golden(path: str, rows: list[tuple[int, bytes]]) -> None:
-    """Single-process decode golden for q53 (atomic, pure pyarrow):
-    one :func:`decode_payload_summary` row per media row."""
+    """Single-process decode golden for q53 (pure pyarrow): one
+    :func:`decode_payload_summary` row per media row."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     summaries = [decode_payload_summary(b) for _, b in rows]
     table = pa.table(
@@ -810,4 +804,4 @@ def write_decode_golden(path: str, rows: list[tuple[int, bytes]]) -> None:
             ),
         }
     )
-    _atomic_write_table(path, table)
+    pq.write_table(table, path)
