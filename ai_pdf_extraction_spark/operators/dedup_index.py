@@ -36,22 +36,26 @@ and this module is that check at corpus scale, for both families:
 At-rest layout (``write_dedup_index`` / ``append_dedup_index``)::
 
     index_dir/
-      index.json            # version, params, committed batch list
+      _manifests/           # the snapshot chain (snapshot-<seq>.json)
       fingerprints/<batch>/ # (fp, canonical_id, n_docs) per batch
       signatures/<batch>/   # (doc_id, h0..h{k-1}) per batch
       hot_<token>/          # frozen DF-capped hot set (absent if uncapped)
 
-Every build and append writes under FRESH uniquely-named directories
-(``b{i}_{token}``) and then commits by atomically rewriting
-``index.json`` (tmp + ``os.replace``) — a crash at ANY point (append
-or rebuild-over-existing) leaves the previous manifest pointing only
-at intact previous directories; uncommitted orphans are never read,
-the same manifest-is-the-commit-point discipline as
-``SnapshotTable``. Loading
-re-aggregates fingerprints across batches (min canonical, summed
-counts — lossless for the delta semantics above). The manifest pins
-``DEDUP_INDEX_VERSION`` plus the shingle/MinHash params; a version or
-param mismatch fails loud instead of silently mixing universes (the
+The index is a snapshot chain, committed like ``SnapshotTable``. Every
+build and append writes under FRESH uniquely-named directories
+(``b{i}_{token}``) and then commits one snapshot: ``commit_id`` is the
+batch, ``metrics`` its observed ``n_docs``, and a build's
+``properties`` pin ``DEDUP_INDEX_VERSION``, the shingle/MinHash
+``params``, the ``hot_dir`` and ``n_hot_shingles``; a build over an
+existing index ``replaces`` every live batch. Publication is the
+chain's exclusive link: an append that commits while another is still
+writing its batch lands beside it, a commit that loses the race for a
+sequence number raises ``SnapshotConflictError`` instead of overwriting
+the winner, and a crash at ANY point leaves uncommitted orphans that
+are never read. Loading
+reads the live batches and re-aggregates fingerprints across them (min
+canonical, summed counts — lossless for the delta semantics above). A
+version mismatch fails loud instead of silently mixing universes (the
 ``PQ_CODES_VERSION`` discipline from ``similarity.py``).
 
 Scale notes (10^12-doc index, 10^9-doc crawl batch):
@@ -72,8 +76,8 @@ Scale notes (10^12-doc index, 10^9-doc crawl batch):
 
 from __future__ import annotations
 
-import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -89,13 +93,12 @@ from ai_pdf_extraction_spark.operators.dedup import (
 )
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
 from ai_pdf_extraction_spark.plans.persist import persist
+from ai_pdf_extraction_spark.sources.snapshot_table import ManifestChain
 
 # Bump when index semantics change (fingerprint expression, signature
 # hash family, banding, frozen-universe rule): an at-rest index built
 # under different semantics must refuse to serve deltas.
 DEDUP_INDEX_VERSION = 1
-
-_MANIFEST = "index.json"
 
 
 # ---------------------------------------------------------------------------
@@ -317,35 +320,30 @@ def minhash_lsh_delta(
 # ---------------------------------------------------------------------------
 
 
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    """Atomic manifest rewrite — the commit point for build/append."""
-    tmp = os.path.join(index_dir, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(index_dir, _MANIFEST))
-
-
-def _read_manifest(index_dir: str) -> dict:
-    path = os.path.join(index_dir, _MANIFEST)
-    try:
-        with open(path) as f:
-            manifest = json.load(f)
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no dedup index manifest at {path}")
-    if manifest.get("version") != DEDUP_INDEX_VERSION:
+def _open(index_dir: str) -> tuple[ManifestChain, dict]:
+    """The index's chain and its summary (build properties, live
+    ``batches``, summed ``n_docs``); fails loud on a version mismatch."""
+    chain = ManifestChain(index_dir)
+    summary = chain.batch_summary("dedup index")
+    if summary.get("version") != DEDUP_INDEX_VERSION:
         raise ValueError(
             f"dedup index at {index_dir} has version "
-            f"{manifest.get('version')!r}, this build expects "
+            f"{summary.get('version')!r}, this build expects "
             f"{DEDUP_INDEX_VERSION} — rebuild the index (fingerprint/"
             "signature semantics changed; serving deltas across "
             "versions would silently mix universes)"
         )
-    return manifest
+    return chain, summary
+
+
+def _read_hot(spark: SparkSession, root: str, summary: dict) -> DataFrame | None:
+    hot_dir = summary["hot_dir"]
+    return spark.read.parquet(os.path.join(root, hot_dir)) if hot_dir else None
 
 
 def _write_batch(
     docs: DataFrame,
-    index_dir: str,
+    root: str,
     batch: str,
     params: dict,
     hot: DataFrame | None,
@@ -357,9 +355,7 @@ def _write_batch(
     observed = Observation()
     index_fingerprints(docs, params["id_col"], params["text_col"]).observe(
         observed, F.sum("n_docs").alias("n")
-    ).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "fingerprints", batch)
-    )
+    ).write.mode("overwrite").parquet(os.path.join(root, "fingerprints", batch))
     if sigs is None:
         sigs = index_signatures(
             docs,
@@ -369,7 +365,7 @@ def _write_batch(
             k=params["k"],
             hot=hot,
         )
-    sigs.write.mode("overwrite").parquet(os.path.join(index_dir, "signatures", batch))
+    sigs.write.mode("overwrite").parquet(os.path.join(root, "signatures", batch))
     return int(observed.get["n"] or 0)
 
 
@@ -384,12 +380,11 @@ def write_dedup_index(
     bands: int = 4,
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
 ) -> dict:
-    """Build a fresh dedup index over ``docs``; returns the manifest.
+    """Build a fresh dedup index over ``docs``; returns its summary.
     The hot-shingle universe is computed here and FROZEN — appends and
-    deltas reuse it (module doc)."""
-    import uuid
-
-    os.makedirs(index_dir, exist_ok=True)
+    deltas reuse it (module doc). Over an existing index the build
+    snapshot replaces every live batch."""
+    chain = ManifestChain(index_dir)
     params = {
         "id_col": id_col,
         "text_col": text_col,
@@ -398,11 +393,6 @@ def write_dedup_index(
         "bands": bands,
         "max_shingle_df": max_shingle_df,
     }
-    # every build writes under FRESH unique names, manifest-committed
-    # last — so rebuilding over an existing index is crash-safe too: a
-    # death mid-rebuild leaves the OLD manifest pointing at intact OLD
-    # directories, never at half-written new data (append always wrote
-    # fresh dirs; this extends the guarantee to rebuilds)
     token = uuid.uuid4().hex[:8]
     # hot set + signatures off ONE persisted shingle explode
     sigs, hot = live_index_relations(
@@ -411,64 +401,55 @@ def write_dedup_index(
     hot_dir = None
     if hot is not None:
         # persisted for the signature write's frozen-cap anti join; the
-        # manifest stat is observed on this write, which fills the cache
+        # build stat is observed on this write, which fills the cache
         hot = hot.persist()
         hot_dir = f"hot_{token}"
         hot_obs = Observation()
         hot.observe(hot_obs, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
-        ).parquet(os.path.join(index_dir, hot_dir))
+        ).parquet(os.path.join(chain.root, hot_dir))
         n_hot = int(hot_obs.get["n"])
     else:
         n_hot = 0
     batch = f"b0_{token}"
-    n_docs = _write_batch(docs, index_dir, batch, params, hot, sigs=sigs)
+    n_docs = _write_batch(docs, chain.root, batch, params, hot, sigs=sigs)
     if hot is not None:
         hot.unpersist()
-    manifest = {
+    chain.commit_batch(batch, {"n_docs": n_docs}, build={
         "version": DEDUP_INDEX_VERSION,
         "params": params,
-        "batches": [batch],
-        "n_docs": n_docs,
-        "n_hot_shingles": n_hot,
         "hot_dir": hot_dir,
-    }
-    _write_manifest(index_dir, manifest)
-    return manifest
+        "n_hot_shingles": n_hot,
+    })
+    return _open(index_dir)[1]
 
 
 def load_dedup_index(spark: SparkSession, index_dir: str) -> dict:
-    """Load an at-rest index: manifest + live relations. Returns
-    ``{"manifest", "fps", "sigs", "hot"}`` — ``fps`` re-aggregated
-    across batches (min canonical / summed counts: lossless), ``sigs``
-    the batch union, ``hot`` the frozen set or None. Fails loud on a
-    version mismatch (see ``_read_manifest``)."""
-    manifest = _read_manifest(index_dir)
-    fps_parts = [
-        spark.read.parquet(os.path.join(index_dir, "fingerprints", b))
-        for b in manifest["batches"]
-    ]
-    fps = fps_parts[0]
-    for part in fps_parts[1:]:
-        fps = fps.unionByName(part)
-    if len(fps_parts) > 1:
+    """Load an at-rest index: summary + live relations. Returns
+    ``{"manifest", "fps", "sigs", "hot"}`` — ``manifest`` the summary,
+    ``fps`` re-aggregated across batches (min canonical / summed
+    counts: lossless), ``sigs`` the live batches, ``hot`` the frozen
+    set or None. Fails loud on a version mismatch."""
+    chain, summary = _open(index_dir)
+    batches = summary["batches"]
+
+    def read(relation: str) -> DataFrame:
+        return spark.read.parquet(
+            *(os.path.join(chain.root, relation, b) for b in batches)
+        )
+
+    fps = read("fingerprints")
+    if len(batches) > 1:
         fps = fps.groupBy("fp").agg(
             F.min("canonical_id").alias("canonical_id"),
             F.sum("n_docs").alias("n_docs"),
         )
-    sig_parts = [
-        spark.read.parquet(os.path.join(index_dir, "signatures", b))
-        for b in manifest["batches"]
-    ]
-    sigs = sig_parts[0]
-    for part in sig_parts[1:]:
-        sigs = sigs.unionByName(part)
-    hot = (
-        spark.read.parquet(os.path.join(index_dir, manifest["hot_dir"]))
-        if manifest["hot_dir"]
-        else None
-    )
-    return {"manifest": manifest, "fps": fps, "sigs": sigs, "hot": hot}
+    return {
+        "manifest": summary,
+        "fps": fps,
+        "sigs": read("signatures"),
+        "hot": _read_hot(spark, chain.root, summary),
+    }
 
 
 def append_dedup_index(
@@ -476,32 +457,25 @@ def append_dedup_index(
 ) -> dict:
     """Append a new batch to an existing index (the index-append half
     of the crawl loop: delta-dedup the batch, then append its survivors
-    — or the whole batch — so the NEXT crawl sees it). Params come from
-    the manifest (an append cannot change the universe); the new
-    uniquely-named batch directory is invisible until the atomic
-    manifest rewrite commits it, so a crashed append leaves an ignored
+    — or the whole batch — so the NEXT crawl sees it); returns the
+    summary. Params come from the build (an append cannot change the
+    universe); the new uniquely-named batch directory is invisible
+    until its snapshot commits, so a crashed append leaves an ignored
     orphan and a re-run simply writes a fresh one (resume-safe, pinned
     in pytest)."""
-    import uuid
-
-    manifest = _read_manifest(index_dir)
-    params = manifest["params"]
-    hot = (
-        spark.read.parquet(os.path.join(index_dir, manifest["hot_dir"]))
-        if manifest["hot_dir"]
-        else None
+    chain, summary = _open(index_dir)
+    batch = f"b{len(summary['batches'])}_{uuid.uuid4().hex[:8]}"
+    n_new = _write_batch(
+        new_docs, chain.root, batch, summary["params"],
+        _read_hot(spark, chain.root, summary),
     )
-    batch = f"b{len(manifest['batches'])}_{uuid.uuid4().hex[:8]}"
-    n_new = _write_batch(new_docs, index_dir, batch, params, hot)
-    manifest["batches"] = manifest["batches"] + [batch]
-    manifest["n_docs"] += n_new
-    _write_manifest(index_dir, manifest)
-    return manifest
+    chain.commit_batch(batch, {"n_docs": n_new})
+    return _open(index_dir)[1]
 
 
 def exact_delta_from_index(index: dict, new_docs: DataFrame) -> DataFrame:
     """``exact_dedup_delta`` wired from a loaded index (params from the
-    manifest, so a caller can't accidentally mismatch universes)."""
+    build, so a caller can't accidentally mismatch universes)."""
     p = index["manifest"]["params"]
     return exact_dedup_delta(new_docs, index["fps"], p["id_col"], p["text_col"])
 
@@ -513,7 +487,7 @@ def lsh_delta_from_index(
     threshold: float = 0.4,
 ) -> DataFrame:
     """``minhash_lsh_delta`` wired from a loaded index (params from the
-    manifest)."""
+    build)."""
     p = index["manifest"]["params"]
     return minhash_lsh_delta(
         new_docs,

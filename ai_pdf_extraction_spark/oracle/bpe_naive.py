@@ -48,16 +48,11 @@ def naive_tokens(text: str | None, ranks: dict[tuple[str, str], int]) -> list[st
 
 def write_bpe_golden(documents_parquet: str, out_path: str) -> int:
     """(doc_id, n_tokens_bpe) golden for a documents parquet, computed
-    by the naive twin (pure pyarrow, no Spark). Atomic temp + rename —
-    callers treat 'path exists' as cache-valid."""
-    import os
-    import uuid
-
+    by the naive twin (pure pyarrow, no Spark)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     ranks = load_ranks(load_merges_payload())
-    tmp = f"{out_path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     tbl = pq.read_table(documents_parquet, columns=["doc_id", "text"])
     ids = tbl["doc_id"].to_pylist()
     counts = [len(naive_tokens(t, ranks)) for t in tbl["text"].to_pylist()]
@@ -68,7 +63,6 @@ def write_bpe_golden(documents_parquet: str, out_path: str) -> int:
                 "n_tokens_bpe": pa.array(counts, pa.int64()),
             }
         ),
-        tmp,
+        out_path,
     )
-    os.replace(tmp, out_path)
     return len(ids)

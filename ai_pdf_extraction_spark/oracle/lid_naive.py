@@ -55,16 +55,11 @@ def write_lid_golden(
     """(doc_id, lang_pred) golden computed by the naive twin over the
     q69 sample substitution — doc_id % (len(samples)+1) picks a
     snippet, the last residue keeps the doc's real text (the q52/q59
-    cycling rule; the Spark query builds the identical expression).
-    Atomic temp + rename."""
-    import os
-    import uuid
-
+    cycling rule; the Spark query builds the identical expression)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     payload = check_model(load_model_payload())
-    tmp = f"{out_path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     tbl = pq.read_table(documents_parquet, columns=["doc_id", "text"])
     ids = tbl["doc_id"].to_pylist()
     texts = tbl["text"].to_pylist()
@@ -82,7 +77,6 @@ def write_lid_golden(
                 "lang_pred": pa.array(preds, pa.string()),
             }
         ),
-        tmp,
+        out_path,
     )
-    os.replace(tmp, out_path)
     return len(ids)

@@ -74,12 +74,9 @@ def extract_rows(pages: list[dict]) -> list[dict]:
 
 
 def write_golden_parquet(path: str, pages: list[dict]) -> int:
-    """Atomic (temp + rename): callers treat 'path exists' as
-    cache-valid, so an interrupted run must never leave a truncated
-    golden behind."""
-    import os
-    import uuid
-
+    """Write the extraction golden for ``pages`` to ``path`` (a plain
+    write: a cache that must not see a torn file builds it through a
+    temp path, as ``__spark_entry__._build_once`` does)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -122,9 +119,7 @@ def write_golden_parquet(path: str, pages: list[dict]) -> int:
             "tables_sig": pa.array([r["tables_sig"] for r in rows], pa.string()),
         }
     )
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
+    pq.write_table(table, path)
     return len(rows)
 
 
@@ -132,9 +127,6 @@ def write_table_rows_golden(path: str, pages: list[dict]) -> int:
     """Exploded structured-table rows golden: one row per (url, table,
     row, key) — the DuckDB oracle for the q46 array-of-struct query
     reads this flat shape directly (no nested-map surgery in SQL)."""
-    import os
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -162,7 +154,5 @@ def write_table_rows_golden(path: str, pages: list[dict]) -> int:
             "value": pa.array(values, pa.string()),
         }
     )
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
+    pq.write_table(table, path)
     return len(urls)

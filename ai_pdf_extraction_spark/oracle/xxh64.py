@@ -132,15 +132,10 @@ TWIN_VERSION = 3  # v3: ASCII \s tokenization, trim-space/null parity
 
 def write_simhash_golden(documents_parquet: str, out_path: str) -> int:
     """Compute the 64-bit SimHash golden for a documents parquet and
-    write it (pure pyarrow, no Spark). Atomic: temp + rename — callers
-    treat 'path exists' as cache-valid."""
-    import os
-    import uuid
-
+    write it (pure pyarrow, no Spark)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tmp = f"{out_path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     tbl = pq.read_table(documents_parquet, columns=["doc_id", "text"])
     rows = list(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
     golden = simhash64_rows(rows)
@@ -157,7 +152,6 @@ def write_simhash_golden(documents_parquet: str, out_path: str) -> int:
                 },
             }
         ),
-        tmp,
+        out_path,
     )
-    os.replace(tmp, out_path)
     return len(golden)

@@ -5,13 +5,19 @@
 crawl loop the same way ``operators.dedup_index`` closes the dedup
 loop (and with the same commit discipline):
 
-* batches live under uniquely-named ``b{i}_{token}/`` parquet dirs;
-* ``seen.json`` is rewritten atomically (tmp + ``os.replace``) AFTER
-  the batch lands — a crash mid-append leaves an invisible orphan dir
-  and the previous manifest intact (resume = re-run the append);
-* the manifest pins ``SEEN_SET_VERSION``: canonicalization semantics
-  live in :func:`operators.urls.canonicalize_url`, and a set built
-  under different semantics must fail loud, not silently re-crawl or
+* batches live under uniquely-named ``set_dir/b{i}_{token}/`` parquet
+  dirs, and the set is a snapshot chain under ``set_dir/_manifests/``
+  (``snapshot_table.ManifestChain``, the output table's protocol);
+* each build or append commits one snapshot AFTER its batch lands:
+  ``commit_id`` is the batch and ``metrics`` its ``n_urls``, observed
+  on the write; a build over an existing set ``replaces`` every live
+  batch. A crash mid-append leaves an invisible orphan dir (resume =
+  re-run the append), and an append that commits while another is
+  writing lands beside it;
+* the build snapshot's ``properties`` pin ``SEEN_SET_VERSION``:
+  canonicalization semantics live in
+  :func:`operators.urls.canonicalize_url`, and a set built under
+  different semantics must fail loud, not silently re-crawl or
   silently skip (the ``DEDUP_INDEX_VERSION`` discipline).
 
 THE invariant: one row per canonical url across ALL batches. The
@@ -30,82 +36,65 @@ needs the same membership test BEFORE the fetch, at 10^12-url scale.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ai_pdf_extraction_spark.sources.snapshot_table import ManifestChain
 
 SEEN_SET_VERSION = 1
 
-_MANIFEST = "seen.json"
 
-
-def _write_manifest(set_dir: str, manifest: dict) -> None:
-    tmp = os.path.join(set_dir, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(set_dir, _MANIFEST))
-
-
-def _read_manifest(set_dir: str) -> dict:
-    path = os.path.join(set_dir, _MANIFEST)
-    try:
-        with open(path) as f:
-            manifest = json.load(f)
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no seen-set manifest at {path}")
-    if manifest.get("version") != SEEN_SET_VERSION:
+def _open(set_dir: str) -> tuple[ManifestChain, dict]:
+    """The set's chain and its summary (``version``, live ``batches``,
+    summed ``n_urls``); fails loud on a version mismatch."""
+    chain = ManifestChain(set_dir)
+    summary = chain.batch_summary("seen-set")
+    if summary.get("version") != SEEN_SET_VERSION:
         raise ValueError(
             f"seen-set at {set_dir} has version "
-            f"{manifest.get('version')!r}, this build expects "
+            f"{summary.get('version')!r}, this build expects "
             f"{SEEN_SET_VERSION} — rebuild (canonicalization semantics "
             "changed; membership across versions is meaningless)"
         )
-    return manifest
+    return chain, summary
 
 
-def _write_batch(urls: DataFrame, set_dir: str, batch: str) -> int:
-    path = os.path.join(set_dir, batch)
-    urls.select("canon_url").write.mode("overwrite").parquet(path)
-    n = urls.sparkSession.read.parquet(path).count()
-    return int(n)
+def _write_batch(urls: DataFrame, root: str, batch: str) -> int:
+    """Write one batch; returns its url count, observed on the write."""
+    observed = Observation()
+    urls.select("canon_url").observe(
+        observed, F.count(F.lit(1)).alias("n")
+    ).write.mode("overwrite").parquet(os.path.join(root, batch))
+    return int(observed.get["n"])
 
 
 def write_seen_set(
     urls: DataFrame, set_dir: str, url_col: str = "canon_url"
 ) -> dict:
     """Build a fresh seen-set from already-canonical urls; the one
-    ``distinct`` shuffle establishes the one-row-per-url invariant."""
-    os.makedirs(set_dir, exist_ok=True)
+    ``distinct`` shuffle establishes the one-row-per-url invariant.
+    Returns the summary."""
+    chain = ManifestChain(set_dir)
     batch = f"b0_{uuid.uuid4().hex[:8]}"
     n = _write_batch(
         urls.select(F.col(url_col).alias("canon_url")).distinct(),
-        set_dir,
+        chain.root,
         batch,
     )
-    manifest = {
-        "version": SEEN_SET_VERSION,
-        "batches": [batch],
-        "n_urls": n,
-    }
-    _write_manifest(set_dir, manifest)
-    return manifest
+    chain.commit_batch(batch, {"n_urls": n}, build={"version": SEEN_SET_VERSION})
+    return _open(set_dir)[1]
 
 
 def load_seen_set(spark: SparkSession, set_dir: str) -> DataFrame:
     """The seen relation (one row per canonical url — the batch union
     is disjoint by the append invariant, so no distinct on read)."""
-    manifest = _read_manifest(set_dir)
-    parts = [
-        spark.read.parquet(os.path.join(set_dir, b))
-        for b in manifest["batches"]
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    chain, summary = _open(set_dir)
+    return spark.read.parquet(
+        *(os.path.join(chain.root, b) for b in summary["batches"])
+    )
 
 
 def append_seen_set(
@@ -115,15 +104,15 @@ def append_seen_set(
     url_col: str = "canon_url",
     assume_unseen: bool = False,
 ) -> dict:
-    """Append canonical urls after a crawl commits. ``assume_unseen=
-    True`` is the crawl-loop fast path: the appended relation is the
-    frontier's ``to_crawl`` output, already disjoint from the set by
-    the probe that produced it — only a within-batch distinct runs.
-    Otherwise the unseen subset is computed here with the same
-    broadcast semi-probe (historical set scanned map-side, never
-    shuffled). Crash-safe: the fresh batch dir is invisible until the
-    atomic manifest rewrite."""
-    manifest = _read_manifest(set_dir)
+    """Append canonical urls after a crawl commits; returns the
+    summary. ``assume_unseen=True`` is the crawl-loop fast path: the
+    appended relation is the frontier's ``to_crawl`` output, already
+    disjoint from the set by the probe that produced it — only a
+    within-batch distinct runs. Otherwise the unseen subset is computed
+    here with the same broadcast semi-probe (historical set scanned
+    map-side, never shuffled). Crash-safe: the fresh batch dir is
+    invisible until its snapshot commits."""
+    chain, summary = _open(set_dir)
     batch_urls = (
         urls.select(F.col(url_col).alias("canon_url")).distinct()
     )
@@ -133,12 +122,10 @@ def append_seen_set(
             F.broadcast(batch_urls), "canon_url", "leftsemi"
         )
         batch_urls = batch_urls.join(hits, "canon_url", "left_anti")
-    batch = f"b{len(manifest['batches'])}_{uuid.uuid4().hex[:8]}"
-    n = _write_batch(batch_urls, set_dir, batch)
-    manifest["batches"] = manifest["batches"] + [batch]
-    manifest["n_urls"] += n
-    _write_manifest(set_dir, manifest)
-    return manifest
+    batch = f"b{len(summary['batches'])}_{uuid.uuid4().hex[:8]}"
+    n = _write_batch(batch_urls, chain.root, batch)
+    chain.commit_batch(batch, {"n_urls": n})
+    return _open(set_dir)[1]
 
 
 def frontier_from_seen_set(

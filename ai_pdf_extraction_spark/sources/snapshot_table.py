@@ -12,7 +12,9 @@ no Iceberg jar (SURVEY.md §7.4), so this module implements the same
   ``root/_manifests/snapshot-<k>.json`` recording the parent snapshot,
   the buckets committed, and per-bucket metrics — the snapshot chain
   IS the lineage (reference's audit trail analogue,
-  ``models_db.py:288-306``);
+  ``models_db.py:288-306``). That chain half, :class:`ManifestChain`,
+  is the package's one commit protocol for data at rest: the dedup
+  index and the seen-url set are chains over their own roots;
 * :meth:`SnapshotTable.write` is the single writer: it puts a frame
   under a fresh commit id (``data/bucket=<b>/commit_id=<id>/``) and
   returns the id, and nothing else in the package builds those paths;
@@ -123,7 +125,13 @@ class _SnapshotChain:
         ]
 
 
-class SnapshotTable(_SnapshotChain):
+class ManifestChain(_SnapshotChain):
+    """A snapshot chain at rest under ``root/_manifests/``: the one
+    commit protocol of the package's at-rest stores (the output table,
+    the dedup index, the seen-url set). A store writes its data under a
+    fresh commit id, then :meth:`commit` publishes one snapshot naming
+    it; :func:`visible` decides what is live."""
+
     def __init__(self, root: str) -> None:
         # LAZY directory creation (review r5): constructing a handle
         # must not mkdir as a side effect — make_output_table probes
@@ -137,15 +145,10 @@ class SnapshotTable(_SnapshotChain):
         # caller chdir'ed after session start, data and manifests land
         # in DIFFERENT directories. Pin both sides to one path up front.
         self.root = os.path.abspath(root)
-        root = self.root
-        self.data_dir = os.path.join(root, "data")
-        self.manifest_dir = os.path.join(root, "_manifests")
+        self.manifest_dir = os.path.join(self.root, "_manifests")
 
     def _ensure_dirs(self) -> None:
-        os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.manifest_dir, exist_ok=True)
-
-    # -- snapshot chain --------------------------------------------------
 
     def snapshots(self) -> list[dict]:
         if not os.path.isdir(self.manifest_dir):
@@ -173,40 +176,27 @@ class SnapshotTable(_SnapshotChain):
         """Live commit ids (see :func:`visible`)."""
         return set(visible(self.snapshots())[1])
 
-    # -- write path --------------------------------------------------------
+    def batch_summary(self, store: str) -> dict:
+        """For a store that commits one batch per snapshot (the dedup
+        index, the seen-url set): the properties of its last build, the
+        live batch ids in commit order (``batches``) and each metric
+        summed over the live batches. No chain raises
+        ``FileNotFoundError`` naming ``store``."""
+        snaps = self.snapshots()
+        if not snaps:
+            raise FileNotFoundError(f"no {store} snapshot chain at {self.manifest_dir}")
+        totals: dict[str, int] = {}
+        for m in live_metrics(snaps):
+            for k, v in m.items():
+                totals[k] = totals.get(k, 0) + v
+        build = next(s for s in reversed(snaps) if s["properties"])
+        return {**build["properties"], "batches": list(visible(snaps)[1]), **totals}
 
-    def new_commit_id(self) -> str:
-        self._ensure_dirs()
-        return uuid.uuid4().hex
-
-    def write(self, df: DataFrame) -> str:
-        """Write ``df`` (carrying a ``bucket`` column) under a fresh
-        commit id and return the id. The rows stay invisible until
-        :meth:`commit` publishes a snapshot naming that id."""
-        from pyspark.sql import functions as F
-
-        commit_id = self.new_commit_id()
-        (
-            df.withColumn("commit_id", F.lit(commit_id))
-            .write.partitionBy("bucket", "commit_id")
-            .mode("append")
-            .parquet(self.data_dir)
-        )
-        return commit_id
-
-    def append(
-        self,
-        df: DataFrame,
-        buckets: list[int],
-        run_id: str,
-        metrics: list[dict] | None = None,
-    ) -> dict:
-        """Write ``df`` (must carry a ``bucket`` column restricted to
-        ``buckets``) and commit a snapshot manifest atomically.
-        ``metrics`` are the per-bucket counters status sums over the
-        chain; a commit without them adds no docs to it."""
-        commit_id = self.write(df)
-        return self.commit(buckets, run_id, metrics, commit_id=commit_id)
+    def commit_batch(self, batch: str, metrics: dict, build: dict | None = None) -> None:
+        """Commit one written batch of such a store. A build (``build``:
+        its properties) replaces every live batch; an append adds one."""
+        replaces = sorted(self.committed_commit_ids()) if build else None
+        self.commit([], "build" if build else "append", [metrics], batch, replaces, build)
 
     def commit(
         self,
@@ -262,6 +252,51 @@ class SnapshotTable(_SnapshotChain):
             except OSError:
                 pass
         return snap
+
+
+class SnapshotTable(ManifestChain):
+    def __init__(self, root: str) -> None:
+        super().__init__(root)
+        self.data_dir = os.path.join(self.root, "data")
+
+    def _ensure_dirs(self) -> None:
+        os.makedirs(self.data_dir, exist_ok=True)
+        super()._ensure_dirs()
+
+    # -- write path --------------------------------------------------------
+
+    def new_commit_id(self) -> str:
+        self._ensure_dirs()
+        return uuid.uuid4().hex
+
+    def write(self, df: DataFrame) -> str:
+        """Write ``df`` (carrying a ``bucket`` column) under a fresh
+        commit id and return the id. The rows stay invisible until
+        :meth:`commit` publishes a snapshot naming that id."""
+        from pyspark.sql import functions as F
+
+        commit_id = self.new_commit_id()
+        (
+            df.withColumn("commit_id", F.lit(commit_id))
+            .write.partitionBy("bucket", "commit_id")
+            .mode("append")
+            .parquet(self.data_dir)
+        )
+        return commit_id
+
+    def append(
+        self,
+        df: DataFrame,
+        buckets: list[int],
+        run_id: str,
+        metrics: list[dict] | None = None,
+    ) -> dict:
+        """Write ``df`` (must carry a ``bucket`` column restricted to
+        ``buckets``) and commit a snapshot manifest atomically.
+        ``metrics`` are the per-bucket counters status sums over the
+        chain; a commit without them adds no docs to it."""
+        commit_id = self.write(df)
+        return self.commit(buckets, run_id, metrics, commit_id=commit_id)
 
     # -- read path -----------------------------------------------------
 

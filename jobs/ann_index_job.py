@@ -52,6 +52,9 @@ def build_ann_index(
     clustered corpora; the manifest records the flag so
     ``load_ann_index`` consumers query with the matching
     ``ivfpq_topk(residual=...)`` path."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from ai_pdf_extraction_spark.operators.similarity import (
         PQ_CODES_VERSION,
         load_embedding_sample,
@@ -69,16 +72,19 @@ def build_ann_index(
     )
     emb = spark.read.parquet(input_path)
     codes_path = os.path.join(output_dir, "codes.parquet")
+    # vectors counted while the codes are written, not by a read after
+    observed = Observation()
     pq_codes(
         emb, books, id_col=id_col, vec_col=vec_col, centroids=cents,
         residual=residual,
-    ).write.mode("overwrite").parquet(codes_path)
-    n = spark.read.parquet(codes_path).count()
+    ).observe(observed, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(codes_path)
     manifest = {
         "version": PQ_CODES_VERSION,
         "input": input_path,
         "codes": "codes.parquet",
-        "n_vectors": n,
+        "n_vectors": int(observed.get["n"]),
         "m": m,
         "n_codes": n_codes,
         "n_clusters": n_clusters,

@@ -22,8 +22,8 @@ Usage::
 ``delta`` writes two relations under ``--output``: ``exact/`` (per new
 doc: canonical_id, group_size, is_dup, in_index) and ``pairs/``
 (near-dup pairs touching the batch, verified Jaccard). ``--append``
-commits the batch into the index afterwards (atomic manifest rewrite —
-a killed job leaves the index unchanged).
+commits the batch into the index afterwards (one snapshot on the
+index's chain — a killed job leaves the index unchanged).
 
 Same contract as the other jobs: public package API only, submits
 unchanged to a real cluster.

@@ -33,7 +33,7 @@ seen-set delta, then the pre-fetch URL quality gate (``url_prefilter``
 ``--robots`` is given, then the per-host cap. It writes the capped
 frontier (canon_url, host, first_id, pick_rank) under ``--output``
 and, unless ``--no-append``, appends the DECIDED urls to the seen-set
-(atomic manifest rewrite — a killed job leaves the set unchanged and
+(one snapshot on the set's chain — a killed job leaves the set unchanged and
 the re-run probe is idempotent). Decided = scheduled ∪ asset-flagged:
 only url-INTRINSIC rejections are remembered for good (an asset url
 never stops being an asset). Blocklist/length/digit-ratio rejections

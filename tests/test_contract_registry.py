@@ -144,3 +144,46 @@ def test_build_once_publishes_only_finished_builds(tmp_path, make_dir):
     assert open(target).read() == "done"
     assert e._build_once(target, failing) == target  # built once: no rewrite
     assert os.listdir(tmp_path) == ["golden"]
+
+
+@pytest.mark.parametrize(
+    "writer", ["simhash", "bpe", "lid", "extraction", "table_rows"]
+)
+def test_golden_writers_leave_the_rename_to_build_once(tmp_path, monkeypatch, writer):
+    """A golden writer writes its path in place: the temp name and the
+    one rename belong to ``_build_once``, so no writer renames."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ai_pdf_extraction_spark.corpus.generate import generate_pages
+    from ai_pdf_extraction_spark.oracle import bpe_naive, lid_naive, run_reference, xxh64
+
+    docs = str(tmp_path / "documents.parquet")
+    texts = ["alpha bravo charlie delta echo", "le chat est sur la table"]
+    pq.write_table(pa.table({"doc_id": pa.array([1, 2], pa.int64()), "text": texts}), docs)
+    out = str(tmp_path / "golden.parquet")
+    write = {
+        "simhash": lambda: xxh64.write_simhash_golden(docs, out),
+        "bpe": lambda: bpe_naive.write_bpe_golden(docs, out),
+        "lid": lambda: lid_naive.write_lid_golden(docs, ["guten tag"], out),
+        "extraction": lambda: run_reference.write_golden_parquet(
+            out, generate_pages(3, seed=1)
+        ),
+        "table_rows": lambda: run_reference.write_table_rows_golden(
+            out, generate_pages(3, seed=1)
+        ),
+    }[writer]
+    renames = []
+    for name in ("replace", "rename"):
+        real = getattr(os, name)
+
+        def record(src, dst, *args, _real=real, **kwargs):
+            renames.append((src, dst))
+            return _real(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(os, name, record)
+    write()
+    monkeypatch.undo()
+    assert renames == []
+    assert sorted(os.listdir(tmp_path)) == ["documents.parquet", "golden.parquet"]
+    pq.read_table(out)

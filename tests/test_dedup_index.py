@@ -164,12 +164,21 @@ def test_index_roundtrip_append_delta_and_orphan_resume(spark, tmp_path):
 
 
 def test_index_writes_count_while_they_run(spark, tmp_path, monkeypatch):
-    """The manifest's doc and hot-shingle counts are observed on the
-    index writes: a job group opened after the last parquet write of a
-    build or an append sees no job (no read-back of what was written)."""
+    """The committed doc, hot-shingle and url counts are observed on the
+    writes of the index and of the seen-url set: a job group opened
+    after the last parquet write of a build or an append sees no job
+    (no read-back of what was written)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from ai_pdf_extraction_spark.sources.seen_urls import (
+        append_seen_set,
+        write_seen_set,
+    )
+
     old, new, _ = _corpus(spark)
+    urls = spark.createDataFrame([("u1",), ("u2",), ("u2",)], "canon_url string")
+    more = spark.createDataFrame([("u2",), ("u3",)], "canon_url string")
+    seen_dir = str(tmp_path / "seen")
     n_hot = hot_shingles(old, max_shingle_df=1).count()
     idx_dir = str(tmp_path / "idx")
     sc = spark.sparkContext
@@ -187,6 +196,10 @@ def test_index_writes_count_while_they_run(spark, tmp_path, monkeypatch):
         assert sc.statusTracker().getJobIdsForGroup(groups[-1]) == []
         m1 = append_dedup_index(spark, idx_dir, new)
         assert sc.statusTracker().getJobIdsForGroup(groups[-1]) == []
+        s0 = write_seen_set(urls, seen_dir)
+        assert sc.statusTracker().getJobIdsForGroup(groups[-1]) == []
+        s1 = append_seen_set(spark, seen_dir, more)
+        assert sc.statusTracker().getJobIdsForGroup(groups[-1]) == []
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(prop, None)
@@ -194,22 +207,84 @@ def test_index_writes_count_while_they_run(spark, tmp_path, monkeypatch):
     assert n_hot > 0 and m0["n_hot_shingles"] == n_hot
     assert m0["n_docs"] == old.count()
     assert m1["n_docs"] == old.count() + new.count()
+    assert s0["n_urls"] == 2 and s1["n_urls"] == 3
+
+
+def _set_build_version(store_dir: str, version: int) -> None:
+    """Rewrite the version the build snapshot of a store pinned."""
+    path = os.path.join(store_dir, "_manifests", "snapshot-000000.json")
+    with open(path) as f:
+        snap = json.load(f)
+    snap["properties"]["version"] = version
+    with open(path, "w") as f:
+        json.dump(snap, f)
 
 
 def test_version_mismatch_fails_loud(spark, tmp_path):
     old, _, _ = _corpus(spark)
     idx_dir = str(tmp_path / "idx")
     write_dedup_index(spark, old, idx_dir)
-    path = os.path.join(idx_dir, "index.json")
-    with open(path) as f:
-        manifest = json.load(f)
-    manifest["version"] = DEDUP_INDEX_VERSION + 1
-    with open(path, "w") as f:
-        json.dump(manifest, f)
+    _set_build_version(idx_dir, DEDUP_INDEX_VERSION + 1)
     with pytest.raises(ValueError, match="version"):
         load_dedup_index(spark, idx_dir)
     with pytest.raises(ValueError, match="version"):
         append_dedup_index(spark, idx_dir, old)
+    with pytest.raises(FileNotFoundError):
+        load_dedup_index(spark, str(tmp_path / "no_index"))
+
+
+@pytest.mark.parametrize("store", ["dedup_index", "seen_set"])
+def test_append_during_another_append_is_kept(spark, tmp_path, monkeypatch, store):
+    """An append that runs to completion while another append is
+    writing its batch stays live: both batches are committed and the
+    summed count is exact (a manifest rewritten from the first append's
+    stale read dropped the second)."""
+    import ai_pdf_extraction_spark.operators.dedup_index as index_mod
+    import ai_pdf_extraction_spark.sources.seen_urls as seen_mod
+
+    d = str(tmp_path / store)
+    if store == "dedup_index":
+        mod, key = index_mod, "n_docs"
+        old, first, second = _corpus(spark)
+        write_dedup_index(spark, old, d, max_shingle_df=None)
+        expect = old.count() + first.count() + second.count()
+
+        def append(rows):
+            return append_dedup_index(spark, d, rows)
+
+        def stored():
+            return load_dedup_index(spark, d)["fps"].agg(F.sum("n_docs")).first()[0]
+    else:
+        mod, key = seen_mod, "n_urls"
+
+        def urls(*us):
+            return spark.createDataFrame([(u,) for u in us], "canon_url string")
+
+        first, second = urls("http://b/1", "http://b/2"), urls("http://c/1")
+        seen_mod.write_seen_set(urls("http://a/1"), d)
+        expect = 4
+
+        def append(rows):
+            return seen_mod.append_seen_set(spark, d, rows)
+
+        def stored():
+            return seen_mod.load_seen_set(spark, d).count()
+
+    write = mod._write_batch
+    raced = []
+
+    def write_then_race(*args, **kwargs):
+        n = write(*args, **kwargs)
+        if not raced:
+            raced.append(None)  # the second append's write runs unraced
+            raced[0] = append(second)
+        return n
+
+    monkeypatch.setattr(mod, "_write_batch", write_then_race)
+    summary = append(first)
+    assert raced[0]["batches"][1] in summary["batches"]
+    assert [b[:3] for b in summary["batches"]] == ["b0_", "b1_", "b1_"]
+    assert summary[key] == expect and stored() == expect
 
 
 def test_frozen_universe_excludes_index_hot_shingles(spark):
@@ -303,9 +378,6 @@ def test_seen_set_roundtrip_append_and_crawl_loop(spark, tmp_path):
 
 
 def test_seen_set_version_mismatch_fails_loud(spark, tmp_path):
-    import json
-    import os
-
     import pytest as _pytest
 
     from ai_pdf_extraction_spark.sources.seen_urls import (
@@ -317,9 +389,6 @@ def test_seen_set_version_mismatch_fails_loud(spark, tmp_path):
     write_seen_set(
         spark.createDataFrame([("u",)], "canon_url string"), d
     )
-    p = os.path.join(d, "seen.json")
-    m = json.load(open(p))
-    m["version"] = 999
-    json.dump(m, open(p, "w"))
+    _set_build_version(d, 999)
     with _pytest.raises(ValueError, match="version"):
         load_seen_set(spark, d)

@@ -516,11 +516,14 @@ def test_pq_codes_at_rest_parity(spark, tmp_path):
     assert inline2 == rest2
 
 
-def test_ann_index_job_end_to_end(spark, tmp_path):
+def test_ann_index_job_end_to_end(spark, tmp_path, monkeypatch):
     """The ANN-index job: build writes codes parquet + quantizer JSON,
     load feeds pq_topk/ivfpq_topk via codes=, and the results equal
     the inline-encode path (the at-rest parity contract, now through
-    the job surface)."""
+    the job surface). ``n_vectors`` is observed on the codes write: a
+    job group opened after it sees no job."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from ai_pdf_extraction_spark.operators.similarity import (
         ivfpq_topk,
         pq_topk,
@@ -532,7 +535,21 @@ def test_ann_index_job_end_to_end(spark, tmp_path):
     import os
 
     os.makedirs(out, exist_ok=True)
-    manifest = build_ann_index(spark, src, out, m=8, n_codes=16, n_clusters=4)
+    sc = spark.sparkContext
+    write = DataFrameWriter.parquet
+
+    def write_then_mark(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        sc.setJobGroup("after_codes_write", "nothing may run here")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_mark)
+    try:
+        manifest = build_ann_index(spark, src, out, m=8, n_codes=16, n_clusters=4)
+        assert sc.statusTracker().getJobIdsForGroup("after_codes_write") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    monkeypatch.undo()
     assert manifest["n_vectors"] == spark.read.parquet(src).count()
 
     codes, cents, books, mf = load_ann_index(spark, out)
